@@ -31,7 +31,10 @@ class QuerySpec:
 
 
 # Runtime confs a *foreign* SparkSession (the driver's) needs before our
-# queries run. Everything here is runtime-settable (no JVM restart).
+# queries run. Everything here is runtime-settable (no JVM restart). Static
+# confs cannot follow: a foreign session keeps Spark's 100-entry codegen
+# class cache (``spark.sql.codegen.cache.maxEntries``, sized in
+# ``session.get_session``) and recompiles once its queries generate more.
 _RUNTIME_CONFS = {
     "spark.sql.session.timeZone": "UTC",
     # Hive NULL-on-error semantics (div/0, bad casts) vs Spark 4 ANSI default
@@ -51,8 +54,6 @@ _RUNTIME_CONFS = {
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
 }
 
-_FUNCS_REGISTERED: set[int] = set()
-
 
 def spool_sort(df: DataFrame, *cols) -> DataFrame:
     """Terminal bare ORDER BY (no LIMIT) over an expensive child pays the
@@ -60,10 +61,18 @@ def spool_sort(df: DataFrame, *cols) -> DataFrame:
     child RDD once before the real pass (shuffle stages below are reused
     by the DAG scheduler, but reduce-side compute — final aggregates,
     windows, Python stages, un-shuffled scan chains — re-runs). Spooling
-    the finished rows through a lazy localCheckpoint lets the sampler
+    the finished rows through a localCheckpoint lets the sampler
     and the range shuffle both read the spool, so everything upstream
     runs exactly once (guide §1.2 "don't compute things you throw away",
     §3.3 "materialising an intermediate truncates the plan").
+
+    The checkpoint is not lazy under AQE, despite ``eager=False``:
+    ``localCheckpoint`` builds its RDD from the executed physical plan,
+    and an adaptive plan only settles after it has materialised every
+    upstream shuffle stage, so all upstream shuffle jobs run before this
+    function returns. They belong to the query but land outside the
+    final action's plan and metrics (text_tfidf_topk: 5 of the 10
+    build-time jobs of a traced perfbench interactive_sf0.01 pass).
 
     Measured r10 (interleaved, sf1 tier): text_tfidf_topk 1.98 -> 0.51s,
     events_session 1.34 -> 0.70s, mm_features 1.20 -> 0.81s,
@@ -96,12 +105,9 @@ def ensure_engine(spark: SparkSession) -> None:
             spark.conf.set(k, v)
         except Exception:
             pass
-    key = id(spark)
-    if key not in _FUNCS_REGISTERED:
-        from hive_spark.functions import register_all
+    from hive_spark.session import register_functions
 
-        register_all(spark)
-        _FUNCS_REGISTERED.add(key)
+    register_functions(spark)
 
 
 _VIEWS_CACHE: dict[tuple[int, str], dict[str, DataFrame]] = {}
