@@ -11,6 +11,13 @@ single derivation, no self-join.
 Interleaved best-of-N, row-identity checked (collected rows must be
 exactly equal — the rewrite is algebraically the same rep attachment).
 
+No longer reproduces its A/B: the window rewrite has since landed in
+``dedup_minhash_lsh`` itself, so the "base" arm now runs the rewrite too
+and the script compares the rewrite with itself. The recorded sf0.1
+0.75 -> 0.57 s (OPTIMIZATION_r10.md) was measured before the rewrite
+landed, against the self-join arm, and git history does not hold that
+arm in a runnable form. What still holds is the row-identity check.
+
 Usage: python bench_artifacts/dedup_ab_r10.py [sf_dir] [reps]
 """
 import os

@@ -14,7 +14,8 @@ Scale design:
 - The rewrite is a single join keyed on the merge condition — broadcast when
   the source is small, shuffle otherwise; Catalyst chooses.
 - `overwrite_table(..., partition_cols, dynamic=True)` enables *dynamic
-  partition overwrite* (spark.sql.sources.partitionOverwriteMode=dynamic):
+  partition overwrite* for that one write (the writer option
+  partitionOverwriteMode=dynamic, so the session conf is left alone):
   only partitions containing touched rows are rewritten — the 100 TB path,
   where rewriting the whole table per UPDATE is unacceptable.
 - Cardinality check: Hive raises on >1 source row per target row
@@ -46,6 +47,8 @@ import shutil
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hive_spark.session import read_parquet
+
 
 def overwrite_table(
     df: DataFrame,
@@ -55,12 +58,11 @@ def overwrite_table(
 ) -> None:
     """Copy-on-write table write (Hive FileSinkOperator + MoveTask analog,
     ref ql/.../exec/FileSinkOperator.java:110, MoveTask.java)."""
-    spark = df.sparkSession
     writer = df.write.mode("overwrite")
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
         if dynamic:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+            writer = writer.option("partitionOverwriteMode", "dynamic")
     writer.parquet(path)
 
 
@@ -89,7 +91,7 @@ def update_where(
     """UPDATE t SET col=expr WHERE cond (ref: UpdateSemanticAnalyzer.java) —
     computed as one projection with CASE per assigned column."""
     _rewrite(
-        update_frame(spark.read.format(fmt).load(path), condition, assignments),
+        update_frame(_read_target(spark, path, fmt), condition, assignments),
         path,
         fmt,
     )
@@ -106,7 +108,7 @@ def delete_where(
 ) -> None:
     """DELETE FROM t WHERE cond (ref: DeleteSemanticAnalyzer.java); at
     scale pair with partition pruning on the condition."""
-    _rewrite(delete_frame(spark.read.format(fmt).load(path), condition), path, fmt)
+    _rewrite(delete_frame(_read_target(spark, path, fmt), condition), path, fmt)
 
 
 def merge_into(
@@ -134,7 +136,7 @@ def merge_into(
     nullable columns never misclassify a row.
     """
     out = merge_frame(
-        spark.read.format(fmt).load(target_path),
+        _read_target(spark, target_path, fmt),
         source,
         on,
         matched_update,
@@ -234,6 +236,14 @@ def multi_insert(
     finally:
         if cache:
             df.unpersist()
+
+
+def _read_target(spark: SparkSession, path: str, fmt: str) -> DataFrame:
+    """The DML target as the rewrite reads it; parquet the engine wrote
+    takes its schema from the file footers (session.read_parquet)."""
+    if fmt == "parquet":
+        return read_parquet(spark, path)
+    return spark.read.format(fmt).load(path)
 
 
 def _rewrite(df: DataFrame, path: str, fmt: str = "parquet") -> None:

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from hive_spark import dml
 from hive_spark.operators import QuerySpec, views
+from hive_spark.session import read_parquet
 
 _SCRATCH = f"/tmp/hive_spark_dml_{os.getpid()}"  # pid-unique: concurrent sessions must not collide
 
@@ -27,7 +28,7 @@ def _copy(spark: SparkSession, sf_dir: str, table: str, name: str) -> str:
     """Fresh scratch copy of a testdata table (idempotent per call)."""
     dst = os.path.join(_SCRATCH, f"{name}_{os.path.basename(sf_dir.rstrip('/'))}")
     shutil.rmtree(dst, ignore_errors=True)
-    spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet")).write.parquet(dst)
+    views(spark, sf_dir)[table].write.parquet(dst)
     return dst
 
 
@@ -42,7 +43,7 @@ def dml_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         {"c_acctbal": (F.col("c_acctbal").cast("decimal(18,2)") + 100).cast("double")},
     )
     return (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .select("c_custkey", F.col("c_acctbal").cast("decimal(18,2)").alias("c_acctbal"))
         .orderBy("c_custkey")
     )
@@ -62,7 +63,7 @@ def dml_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     views(spark, sf_dir)
     path = _copy(spark, sf_dir, "customer", "del")
     dml.delete_where(spark, path, F.col("c_acctbal") < 0)
-    return spark.read.parquet(path).select("c_custkey", "c_nationkey").orderBy("c_custkey")
+    return read_parquet(spark, path).select("c_custkey", "c_nationkey").orderBy("c_custkey")
 
 
 _DELETE_SQL = """
@@ -104,7 +105,7 @@ def dml_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
     )
     return (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .select(
             "c_custkey",
             "c_name",
@@ -152,8 +153,8 @@ def dml_multi_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
         line,
         [(F.col("price") >= 50000, hi), (F.col("price") < 50000, lo)],
     )
-    hi_df = spark.read.parquet(hi).select(F.lit("hi").alias("sink"), "price")
-    lo_df = spark.read.parquet(lo).select(F.lit("lo").alias("sink"), "price")
+    hi_df = read_parquet(spark, hi).select(F.lit("hi").alias("sink"), "price")
+    lo_df = read_parquet(spark, lo).select(F.lit("lo").alias("sink"), "price")
     return (
         hi_df.unionAll(lo_df)
         .groupBy("sink")
@@ -197,7 +198,7 @@ def dml_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFra
     )
     dml.overwrite_table(patch, path, partition_cols=["o_year"], dynamic=True)
     return (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .groupBy(F.col("o_year").cast("bigint").alias("o_year"))
         .agg(
             F.count(F.lit(1)).alias("n"),

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from hive_spark.operators import QuerySpec, spool_sort, views
 
 from hive_spark.scratch import scratch_dir
+from hive_spark.session import read_parquet
 
 _SCRATCH = scratch_dir(f"pipeline_{os.getpid()}")  # pid-unique: concurrent sessions must not collide
 
@@ -116,7 +117,7 @@ def training_data_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     LAST_TIMINGS["write_sec"] = round(time.perf_counter() - t0, 3)
 
     summary = (
-        spark.read.parquet(out)
+        read_parquet(spark, out)
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_spark.operators import QuerySpec, views
+from hive_spark.session import read_parquet
 
 
 def sketch_hll_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -57,7 +58,7 @@ def sketch_hll_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(path)
     )
-    stored = spark.read.parquet(path)
+    stored = read_parquet(spark, path)
     est = stored.selectExpr(
         "l_returnflag", "hll_sketch_estimate(sk) AS est"
     ).unionAll(
@@ -338,7 +339,7 @@ def sketch_theta_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"hive_spark_theta_{os.path.basename(sf_dir.rstrip('/'))}",
     )
     sk.write.mode("overwrite").parquet(path)
-    stored = spark.read.parquet(path)
+    stored = read_parquet(spark, path)
 
     per_group = stored.select(
         F.col("g").alias("l_returnflag"),
@@ -454,7 +455,7 @@ def sketch_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"hive_spark_kll_{os.path.basename(sf_dir.rstrip('/'))}",
     )
     sk.write.mode("overwrite").parquet(path)
-    stored = spark.read.parquet(path)
+    stored = read_parquet(spark, path)
 
     # merge ALL stored sketches into '~TOTAL' (the ds_kll merge path):
     # bottom-k of the concatenated pair sets, counts added
@@ -710,7 +711,7 @@ def sketch_cpc_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"hive_spark_cpc_{os.path.basename(sf_dir.rstrip('/'))}",
     )
     sk.write.mode("overwrite").parquet(path)
-    stored = spark.read.parquet(path)
+    stored = read_parquet(spark, path)
 
     per_group = stored.selectExpr(
         "l_returnflag", "cpc_estimate(size(coupons)) AS est"

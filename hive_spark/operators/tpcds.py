@@ -58,6 +58,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from hive_spark.operators import QuerySpec, views
+from hive_spark.session import read_parquet
 
 _NCUST = "(SELECT max(c_custkey) FROM customer)"
 _NSTORE = "(SELECT CAST(least(count(*), 25) AS INT) FROM supplier)"
@@ -572,7 +573,7 @@ def _register_star(spark: SparkSession, sf_dir: str) -> None:
                 # the direct exchange.
                 df = df.repartitionByRange(datecol).sortWithinPartitions(datecol)
             df.write.mode("overwrite").parquet(out)
-            spark.read.parquet(out).createOrReplaceTempView(name)
+            read_parquet(spark, out).createOrReplaceTempView(name)
             return name
 
         # default 8 measured >= 4 workers at BOTH local[32] (tie within
@@ -623,7 +624,7 @@ def _register_star(spark: SparkSession, sf_dir: str) -> None:
         LAST_BUILD_SEC = round(_time.perf_counter() - t0, 3)
         TOTAL_BUILD_SEC = round(TOTAL_BUILD_SEC + LAST_BUILD_SEC, 3)
     for name, _sql in sqls:
-        spark.read.parquet(os.path.join(dst, name)).createOrReplaceTempView(name)
+        read_parquet(spark, os.path.join(dst, name)).createOrReplaceTempView(name)
     _ACTIVE_STAR[id(spark)] = sf_dir
 
 

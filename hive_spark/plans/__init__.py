@@ -33,6 +33,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hive_spark.session import read_parquet
+
 _EXPR_ID = re.compile(r"#\d+L?")
 
 
@@ -80,7 +82,7 @@ class ResultsCache:
     def lookup(self, df: DataFrame) -> DataFrame | None:
         p = self._path(plan_fingerprint(df))
         if os.path.exists(os.path.join(p, "_SUCCESS")):
-            return self.spark.read.parquet(p)
+            return read_parquet(self.spark, p)
         return None
 
     def get_or_compute(self, df: DataFrame) -> tuple[DataFrame, bool]:
@@ -90,7 +92,7 @@ class ResultsCache:
             return hit, True
         p = self._path(plan_fingerprint(df))
         df.write.mode("overwrite").parquet(p)
-        return self.spark.read.parquet(p), False
+        return read_parquet(self.spark, p), False
 
     def clear(self) -> None:
         shutil.rmtree(self.root, ignore_errors=True)
@@ -153,20 +155,24 @@ class MaterializedViews:
         col = self._part_col[name]
         path = os.path.join(self.root, name)
         patch = df.filter(F.col(col).isin(values))
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        patch.write.mode("overwrite").partitionBy(col).parquet(path)
+        (
+            patch.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(col)
+            .parquet(path)
+        )
         # the stored relation now reflects the defining query again
         self._by_fp[plan_fingerprint(df)] = path
 
     def table(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.root, name))
+        return read_parquet(self.spark, os.path.join(self.root, name))
 
     def rewrite(self, df: DataFrame) -> tuple[DataFrame, bool]:
         """Returns (possibly-rewritten df, used_mv)."""
         path = self._by_fp.get(plan_fingerprint(df))
         if path is None:
             return df, False
-        return self.spark.read.parquet(path), True
+        return read_parquet(self.spark, path), True
 
 
 class AggregateMV:
@@ -274,7 +280,7 @@ class AggregateMV:
             )
             aggs.append(expr.alias(out))
         delta = appended_df.groupBy(*self.group_keys).agg(*aggs)
-        stored = self.spark.read.parquet(self.path)
+        stored = read_parquet(self.spark, self.path)
         merged_aggs = [
             getattr(F, self._MERGE[fn])(out).alias(out)
             for out, (fn, col) in self.measures.items()
@@ -408,7 +414,7 @@ class AggregateMV:
         ``where`` must reference group keys only (validated)."""
         if not self.can_answer(group_by, aggs):
             raise ValueError("query is not contained in this MV")
-        mv = self.spark.read.parquet(self.path)
+        mv = read_parquet(self.spark, self.path)
         if where is not None:
             refs = {
                 t for t in re.findall(r"'?([A-Za-z_][A-Za-z0-9_]*)'?", str(where._jc))

@@ -53,6 +53,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hive_spark.session import read_parquet
+
 _MERGE = {"sum": "sum", "count": "sum", "min": "min", "max": "max"}
 _FN_MAP = {"Sum": "sum", "Count": "count", "Min": "min", "Max": "max",
            "Average": "avg"}
@@ -386,7 +388,7 @@ class StarJoinMV:
             out_cols.append(F.col(ne.name()))
 
         # ---- build the answer ------------------------------------------
-        out = self.spark.read.parquet(self.path)
+        out = read_parquet(self.spark, self.path)
         for c in mv_filters:
             out = out.filter(F.expr(_strip_qualifiers(c.sql())))
         from pyspark.sql import DataFrame as PyDF

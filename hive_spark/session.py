@@ -22,6 +22,15 @@ Scale notes (100 TB design intent):
   planning-time and the in-task compiles. ``bench.py``'s best-of-2 loop
   cannot show the problem: it runs each query twice back to back, and
   one query's 4-40 classes are still cached for the second run.
+- Spark spends one job per schema-less parquet read: its schema
+  inference (``SchemaMergeUtils.mergeSchemasInParallel``) reads a footer
+  inside a distributed job, ~65-70 ms of a warm session on 4 cores. Hive
+  plans from the metastore's schema and opens no data file.
+  ``read_parquet`` reads the same footer key on the driver for output
+  the engine wrote: O(files) footer reads, ~0.1 ms per page-cached file
+  on the same host (the 53 files of the sf 0.01 star in 6-7 ms), and
+  no job. Paths that are not local directories (HDFS, object stores)
+  keep Spark's inference job.
 """
 
 from __future__ import annotations
@@ -30,6 +39,7 @@ import os
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Tables the driver materializes at /root/testdata/sf*/ (TESTDATA.md).
 TESTDATA_TABLES = (
@@ -212,6 +222,78 @@ def _ns_timestamp_columns(path: str) -> list[tuple[str, str]]:
         for f in schema
         if pat.is_timestamp(f.type) and f.type.unit == "ns"
     ]
+
+
+# footer key under which Spark's parquet writer stores the row schema
+# as JSON (ParquetReadSupport.SPARK_METADATA_KEY)
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without Spark's schema-inference job
+    when the files carry Spark's own schema (see ``_footer_schema``)."""
+    schema = _footer_schema(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """The schema Spark's inference would return for ``path``, read on
+    the driver, or None when only Spark's own inference can say.
+
+    For a directory Spark wrote, every data file's footer holds the row
+    schema under ``_SPARK_ROW_METADATA``, and Spark's inference
+    (``ParquetFileFormat.readSchemaFromFooter``) returns exactly that
+    string. None unless every file holds the same parseable string: not
+    a local directory, no data files, a summary file, a file without the
+    key, files that disagree.
+    """
+    import json
+
+    import pyarrow.parquet as pq
+
+    try:
+        found = {
+            (pq.read_metadata(f).metadata or {}).get(_SPARK_ROW_METADATA)
+            for f in _parquet_data_files(path)
+        }
+    except (OSError, ValueError):  # unreadable, or not parquet
+        return None
+    if len(found) != 1 or None in found:
+        return None
+    try:
+        return StructType.fromJson(json.loads(found.pop()))
+    except (ValueError, KeyError, TypeError):  # not a schema this Spark reads
+        return None
+
+
+def _parquet_data_files(path: str) -> list[str]:
+    """The files Spark's file index would list under ``path``, or ``[]``
+    when the fast path must not be taken (not a local directory, or a
+    ``_metadata``/``_common_metadata`` summary file, which Spark's
+    inference prefers over the data files). Hidden names are Spark's
+    (``InMemoryFileIndex.shouldFilterOutPathName``): a leading ``.``, a
+    leading ``_`` without ``=``, or a ``._COPYING_`` suffix."""
+    if not os.path.isdir(path):
+        return []
+    files: list[str] = []
+    stack = [path]
+    while stack:
+        with os.scandir(stack.pop()) as it:
+            for e in it:
+                if e.name.startswith(("_metadata", "_common_metadata")):
+                    return []
+                if (
+                    e.name.startswith(".")
+                    or (e.name.startswith("_") and "=" not in e.name)
+                    or e.name.endswith("._COPYING_")
+                ):
+                    continue
+                if e.is_dir():
+                    stack.append(e.path)
+                else:
+                    files.append(e.path)
+    return files
 
 
 def register_views(

@@ -25,6 +25,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hive_spark.session import read_parquet
+
 _PTR = "_latest"
 
 
@@ -64,7 +66,7 @@ def read_table(spark: SparkSession, path: str, version: int | None = None) -> Da
     vd = _vdir(path, v)
     if not os.path.isdir(vd):
         raise FileNotFoundError(f"version {v} of {path} does not exist (expired?)")
-    return spark.read.parquet(vd)
+    return read_parquet(spark, vd)
 
 
 def expire(path: str, keep_last: int = 2) -> list[int]:
@@ -95,7 +97,7 @@ def history(spark: SparkSession, path: str) -> DataFrame:
         mtime = datetime.datetime.fromtimestamp(
             os.stat(vd).st_mtime, tz=datetime.timezone.utc
         ).replace(tzinfo=None)
-        schema = spark.read.parquet(vd).columns
+        schema = read_parquet(spark, vd).columns
         rows.append(
             Row(
                 version=v,
