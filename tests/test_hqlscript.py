@@ -870,3 +870,130 @@ def test_regex_columns_quoted_identifiers_none(spark):
         "SELECT `..` FROM rt;",
     )
     assert out.results[-1].columns == ["ds", "hr"]
+
+
+# One case per error-retry rule: a statement Hive accepts and Spark's
+# analyzer first refuses, the query that shows its effect, and the rows
+# that query returns. Every case runs in database hqretry over `rt`
+# (key INT, value STRING, ts TIMESTAMP; two rows) and the temp view `tv`.
+_RETRY_SETUP = """
+CREATE DATABASE IF NOT EXISTS hqretry; USE hqretry;
+DROP TABLE IF EXISTS rt;
+CREATE TABLE rt USING parquet AS SELECT * FROM VALUES
+ (1, 'a', timestamp'2020-01-01 00:00:00'),
+ (2, 'b', timestamp'2020-01-02 00:00:00') AS t(key, value, ts);
+CREATE OR REPLACE TEMP VIEW tv AS SELECT * FROM rt;
+"""
+
+# (case id, setup, statement, check query or None for the statement's
+# own rows, expected rows in any order)
+_RETRY_CASES = [
+    ("view_without_alias", "DROP VIEW IF EXISTS v_wa",
+     "CREATE VIEW v_wa AS WITH c AS (SELECT key FROM rt)"
+     " SELECT key + 1 FROM c",
+     "SELECT _c0 FROM v_wa", [(2,), (3,)]),
+    ("view_duplicate_literals", "DROP VIEW IF EXISTS v_dup",
+     "CREATE VIEW v_dup AS SELECT '12', '12' FROM rt",
+     "SELECT _c0, _c1 FROM v_dup", [("12", "12"), ("12", "12")]),
+    ("view_over_temp_view", "DROP VIEW IF EXISTS v_tmp",
+     "CREATE VIEW v_tmp AS SELECT key FROM tv",
+     "SELECT * FROM v_tmp", [(1,), (2,)]),
+    ("tuple_in", "",
+     "SELECT key FROM rt WHERE (key, value) IN (('1','a'), (2.0,'b'))",
+     None, [(1,), (2,)]),
+    ("greatest_mixed_categories", "",
+     "SELECT greatest(key, ts) AS g FROM rt",
+     None, [("2020-01-01 00:00:00",), ("2020-01-02 00:00:00",)]),
+    ("variance_of_timestamp", "", "SELECT variance(ts) AS v FROM rt",
+     None, [(43200.0 ** 2,)]),
+    ("group_by_position_aggregate", "",
+     "SELECT count(*) AS c FROM rt GROUP BY 1", None, [(2,)]),
+    ("group_by_position_out_of_range", "",
+     "SELECT key, count(*) AS c FROM rt GROUP BY key, 3",
+     None, [(1, 1), (2, 1)]),
+    ("grouping_id_argument_order", "",
+     "SELECT key, value, grouping_id(value, key) AS g FROM rt"
+     " GROUP BY key, value WITH ROLLUP",
+     None, [(1, "a", 0), (2, "b", 0), (1, None, 2), (2, None, 2),
+            (None, None, 3)]),
+    ("order_by_map", "", "SELECT map('a', key) AS m FROM rt ORDER BY m",
+     None, [({"a": 1},), ({"a": 2},)]),
+    ("map_equality", "",
+     "SELECT key FROM rt WHERE map('a', key) = map('a', 1)", None, [(1,)]),
+    ("grouping_under_plain_group_by", "",
+     "SELECT key, grouping(key) AS g FROM rt GROUP BY key",
+     None, [(1, 0), (2, 0)]),
+    ("partial_cte_column_aliases", "",
+     "WITH c(a) AS (SELECT key, value FROM rt) SELECT a, value FROM c",
+     None, [(1, "a"), (2, "b")]),
+    ("literal_filter", "", "SELECT key FROM rt WHERE 'foo'",
+     None, [(1,), (2,)]),
+    ("window_over_lateral_alias", "",
+     "SELECT value, max(key) mk, rank() OVER (ORDER BY mk) AS r FROM rt"
+     " GROUP BY value",
+     None, [("a", 1, 1), ("b", 2, 2)]),
+    ("window_over_shadowing_alias", "",
+     "SELECT value, max(key) AS key, rank() OVER (ORDER BY key) AS r"
+     " FROM rt GROUP BY value",
+     None, [("a", 1, 1), ("b", 2, 2)]),
+    ("order_by_hidden_grouping_column", "",
+     "SELECT key FROM rt GROUP BY key, value"
+     " GROUPING SETS ((key, value), key) ORDER BY value LIMIT 10",
+     None, [(1,), (1,), (2,), (2,)]),
+    ("decimal_literal_over_38_digits", "",
+     "SELECT 10000000000000000000000000000000000000000.5 AS d",
+     None, [(1e40,)]),
+    ("year_of_interval", "",
+     "SELECT year(INTERVAL '1-2' YEAR TO MONTH) AS y", None, [(1,)]),
+    ("varchar_truncated_on_insert",
+     "DROP TABLE IF EXISTS vc; CREATE TABLE vc (v VARCHAR(3)) USING parquet",
+     "INSERT INTO vc VALUES ('abcdef')", "SELECT v FROM vc", [("abc",)]),
+    ("timestamp_compared_with_number", "",
+     "SELECT key FROM rt WHERE ts > 0", None, [(1,), (2,)]),
+    ("numeric_range_frame_over_string", "",
+     "SELECT value, sum(key) OVER (ORDER BY value"
+     " RANGE BETWEEN 1 PRECEDING AND CURRENT ROW) AS s FROM rt",
+     None, [("a", 1), ("b", 2)]),
+    ("numeric_range_frame_over_timestamp", "",
+     "SELECT key, sum(key) OVER (ORDER BY ts"
+     " RANGE BETWEEN 10 PRECEDING AND CURRENT ROW) AS s FROM rt",
+     None, [(1, 1), (2, 2)]),
+    ("values_with_mixed_types",
+     "DROP TABLE IF EXISTS ins;"
+     " CREATE TABLE ins (a INT, s STRING) USING parquet",
+     "INSERT INTO ins VALUES (1,'x'), ('2', 3)",
+     "SELECT a, s FROM ins", [(1, "x"), (2, "3")]),
+    ("ctas_repeated_expression", "DROP TABLE IF EXISTS ctas_rep",
+     "CREATE TABLE ctas_rep USING parquet AS"
+     " SELECT key + 1, key + 1 FROM rt",
+     "SELECT _c0, _c1 FROM ctas_rep", [(2, 2), (3, 3)]),
+    ("insert_overwrite_self_read",
+     "DROP TABLE IF EXISTS selfo;"
+     " CREATE TABLE selfo USING parquet AS SELECT key FROM rt",
+     "INSERT OVERWRITE TABLE selfo SELECT key + 10 FROM selfo",
+     "SELECT key FROM selfo", [(11,), (12,)]),
+]
+
+
+@pytest.fixture(scope="module")
+def retry_db(spark):
+    run_script(spark, _RETRY_SETUP + "USE default;")
+    yield
+    run_script(spark, "DROP DATABASE IF EXISTS hqretry CASCADE;")
+
+
+@pytest.mark.parametrize(
+    "setup,stmt,check,expected",
+    [c[1:] for c in _RETRY_CASES],
+    ids=[c[0] for c in _RETRY_CASES],
+)
+def test_error_retry_rule(spark, retry_db, setup, stmt, check, expected):
+    """Each Hive-legal statement Spark first refuses runs to Hive's
+    result through run_script's error retries."""
+    script = "; ".join(filter(None, ["USE hqretry", setup, stmt, check]))
+    try:
+        out = run_script(spark, script + ";")
+    finally:
+        run_script(spark, "USE default;")
+    got = [tuple(r) for r in out.results[-1].collect()]
+    assert sorted(got, key=repr) == sorted(expected, key=repr)
