@@ -17,6 +17,21 @@ def test_split_respects_quotes_and_comments():
     assert stmts == ["SELECT 'a;b' AS x", 'SELECT "c;d" AS y']
 
 
+@pytest.mark.parametrize("call", [
+    "f('a\\'b)', x)",   # backslash-escaped quote inside a string
+    "f('a'')', x)",     # doubled quote inside a string
+    "f(`a)`, x)",       # parenthesis inside a backticked identifier
+    "f(`a,b`, x)",      # comma inside a backticked identifier
+])
+def test_call_folding_skips_quoted_parens(call):
+    """Call folding finds the closing parenthesis and the argument
+    commas outside strings and backticked identifiers."""
+    from hive_spark.hqlscript import _fold_calls
+
+    out = _fold_calls(f"SELECT {call} FROM t", "f", lambda a: f"g[{len(a)}]")
+    assert out == "SELECT g[2] FROM t"
+
+
 def test_representative_hive_script(spark, sf_dir):
     views(spark, sf_dir)
     script = """
@@ -885,89 +900,92 @@ CREATE TABLE rt USING parquet AS SELECT * FROM VALUES
 CREATE OR REPLACE TEMP VIEW tv AS SELECT * FROM rt;
 """
 
-# (case id, setup, statement, check query or None for the statement's
-# own rows, expected rows in any order)
+# (case id, the _RETRIES fixer that must fire, setup, statement, check
+# query or None for the statement's own rows, expected rows in any order)
 _RETRY_CASES = [
-    ("view_without_alias", "DROP VIEW IF EXISTS v_wa",
+    ("view_without_alias", "view_autoalias", "DROP VIEW IF EXISTS v_wa",
      "CREATE VIEW v_wa AS WITH c AS (SELECT key FROM rt)"
      " SELECT key + 1 FROM c",
      "SELECT _c0 FROM v_wa", [(2,), (3,)]),
-    ("view_duplicate_literals", "DROP VIEW IF EXISTS v_dup",
-     "CREATE VIEW v_dup AS SELECT '12', '12' FROM rt",
+    ("view_duplicate_literals", "view_autoalias", "DROP VIEW IF EXISTS v_dup",
+     "CREATE VIEW v_dup AS (SELECT '12', '12' FROM rt)",
      "SELECT _c0, _c1 FROM v_dup", [("12", "12"), ("12", "12")]),
-    ("view_over_temp_view", "DROP VIEW IF EXISTS v_tmp",
+    ("view_over_temp_view", "temp_view", "DROP VIEW IF EXISTS v_tmp",
      "CREATE VIEW v_tmp AS SELECT key FROM tv",
      "SELECT * FROM v_tmp", [(1,), (2,)]),
-    ("tuple_in", "",
+    ("tuple_in", "tuple_in", "",
      "SELECT key FROM rt WHERE (key, value) IN (('1','a'), (2.0,'b'))",
      None, [(1,), (2,)]),
-    ("greatest_mixed_categories", "",
+    ("greatest_mixed_categories", "common_category", "",
      "SELECT greatest(key, ts) AS g FROM rt",
      None, [("2020-01-01 00:00:00",), ("2020-01-02 00:00:00",)]),
-    ("variance_of_timestamp", "", "SELECT variance(ts) AS v FROM rt",
+    ("variance_of_timestamp", "ts_numeric_agg",
+     "", "SELECT variance(ts) AS v FROM rt",
      None, [(43200.0 ** 2,)]),
-    ("group_by_position_aggregate", "",
+    ("group_by_position_aggregate", "group_by_literal", "",
      "SELECT count(*) AS c FROM rt GROUP BY 1", None, [(2,)]),
-    ("group_by_position_out_of_range", "",
+    ("group_by_position_out_of_range", "group_by_literal", "",
      "SELECT key, count(*) AS c FROM rt GROUP BY key, 3",
      None, [(1, 1), (2, 1)]),
-    ("grouping_id_argument_order", "",
+    ("grouping_id_argument_order", "grouping_id_order", "",
      "SELECT key, value, grouping_id(value, key) AS g FROM rt"
      " GROUP BY key, value WITH ROLLUP",
      None, [(1, "a", 0), (2, "b", 0), (1, None, 2), (2, None, 2),
             (None, None, 3)]),
-    ("order_by_map", "", "SELECT map('a', key) AS m FROM rt ORDER BY m",
+    ("order_by_map", "unorderable_orderby",
+     "", "SELECT map('a', key) AS m FROM rt ORDER BY m",
      None, [({"a": 1},), ({"a": 2},)]),
-    ("map_equality", "",
+    ("map_equality", "map_comparison", "",
      "SELECT key FROM rt WHERE map('a', key) = map('a', 1)", None, [(1,)]),
-    ("grouping_under_plain_group_by", "",
+    ("grouping_under_plain_group_by", "grouping_under_group_by", "",
      "SELECT key, grouping(key) AS g FROM rt GROUP BY key",
      None, [(1, 0), (2, 0)]),
-    ("partial_cte_column_aliases", "",
+    ("partial_cte_column_aliases", "partial_cte_aliases", "",
      "WITH c(a) AS (SELECT key, value FROM rt) SELECT a, value FROM c",
      None, [(1, "a"), (2, "b")]),
-    ("literal_filter", "", "SELECT key FROM rt WHERE 'foo'",
+    ("literal_filter", "literal_filter", "", "SELECT key FROM rt WHERE 'foo'",
      None, [(1,), (2,)]),
-    ("window_over_lateral_alias", "",
+    ("window_over_lateral_alias", "window_agg_alias", "",
      "SELECT value, max(key) mk, rank() OVER (ORDER BY mk) AS r FROM rt"
      " GROUP BY value",
      None, [("a", 1, 1), ("b", 2, 2)]),
-    ("window_over_shadowing_alias", "",
+    ("window_over_shadowing_alias", "window_agg_alias", "",
      "SELECT value, max(key) AS key, rank() OVER (ORDER BY key) AS r"
      " FROM rt GROUP BY value",
      None, [("a", 1, 1), ("b", 2, 2)]),
-    ("order_by_hidden_grouping_column", "",
+    ("order_by_hidden_grouping_column", "orderby_hidden_grouping_col", "",
      "SELECT key FROM rt GROUP BY key, value"
      " GROUPING SETS ((key, value), key) ORDER BY value LIMIT 10",
      None, [(1,), (1,), (2,), (2,)]),
-    ("decimal_literal_over_38_digits", "",
+    ("decimal_literal_over_38_digits", "wide_decimal_literal", "",
      "SELECT 10000000000000000000000000000000000000000.5 AS d",
      None, [(1e40,)]),
-    ("year_of_interval", "",
+    ("year_of_interval", "interval_extract", "",
      "SELECT year(INTERVAL '1-2' YEAR TO MONTH) AS y", None, [(1,)]),
-    ("varchar_truncated_on_insert",
+    ("varchar_truncated_on_insert", "truncate_charvarchar",
      "DROP TABLE IF EXISTS vc; CREATE TABLE vc (v VARCHAR(3)) USING parquet",
      "INSERT INTO vc VALUES ('abcdef')", "SELECT v FROM vc", [("abc",)]),
-    ("timestamp_compared_with_number", "",
+    ("timestamp_compared_with_number", "binop_coercion", "",
      "SELECT key FROM rt WHERE ts > 0", None, [(1,), (2,)]),
-    ("numeric_range_frame_over_string", "",
+    ("numeric_range_frame_over_string", "string_range_frame", "",
      "SELECT value, sum(key) OVER (ORDER BY value"
      " RANGE BETWEEN 1 PRECEDING AND CURRENT ROW) AS s FROM rt",
      None, [("a", 1), ("b", 2)]),
-    ("numeric_range_frame_over_timestamp", "",
+    ("numeric_range_frame_over_timestamp", "time_range_frame", "",
      "SELECT key, sum(key) OVER (ORDER BY ts"
      " RANGE BETWEEN 10 PRECEDING AND CURRENT ROW) AS s FROM rt",
      None, [(1, 1), (2, 2)]),
-    ("values_with_mixed_types",
+    ("values_with_mixed_types", "inline_values",
      "DROP TABLE IF EXISTS ins;"
      " CREATE TABLE ins (a INT, s STRING) USING parquet",
      "INSERT INTO ins VALUES (1,'x'), ('2', 3)",
      "SELECT a, s FROM ins", [(1, "x"), (2, "3")]),
-    ("ctas_repeated_expression", "DROP TABLE IF EXISTS ctas_rep",
+    ("ctas_repeated_expression", "ctas_autoalias",
+     "DROP TABLE IF EXISTS ctas_rep",
      "CREATE TABLE ctas_rep USING parquet AS"
      " SELECT key + 1, key + 1 FROM rt",
      "SELECT _c0, _c1 FROM ctas_rep", [(2, 2), (3, 3)]),
-    ("insert_overwrite_self_read",
+    ("insert_overwrite_self_read", "insert_overwrite_selfread",
      "DROP TABLE IF EXISTS selfo;"
      " CREATE TABLE selfo USING parquet AS SELECT key FROM rt",
      "INSERT OVERWRITE TABLE selfo SELECT key + 10 FROM selfo",
@@ -983,17 +1001,51 @@ def retry_db(spark):
 
 
 @pytest.mark.parametrize(
-    "setup,stmt,check,expected",
+    "rule,setup,stmt,check,expected",
     [c[1:] for c in _RETRY_CASES],
     ids=[c[0] for c in _RETRY_CASES],
 )
-def test_error_retry_rule(spark, retry_db, setup, stmt, check, expected):
+def test_error_retry_rule(spark, retry_db, rule, setup, stmt, check,
+                          expected):
     """Each Hive-legal statement Spark first refuses runs to Hive's
-    result through run_script's error retries."""
-    script = "; ".join(filter(None, ["USE hqretry", setup, stmt, check]))
+    result through run_script's error retries, and the trace names the
+    rule that fixed it."""
+    head = "; ".join(filter(None, ["USE hqretry", setup])) + ";"
     try:
-        out = run_script(spark, script + ";")
+        out = run_script(
+            spark, "; ".join(filter(None, [head, stmt, check])) + ";"
+        )
     finally:
         run_script(spark, "USE default;")
     got = [tuple(r) for r in out.results[-1].collect()]
     assert sorted(got, key=repr) == sorted(expected, key=repr)
+    assert out.retries == [(len(split_statements(head)), rule)]
+
+
+def test_every_retry_rule_has_a_case():
+    """A rule added to _RETRIES without a case in _RETRY_CASES fails
+    here, as does a case naming a rule that no longer exists."""
+    from hive_spark.hqlscript import _RETRIES
+
+    assert {fix.__name__.lstrip("_") for _, fix in _RETRIES} == {
+        c[1] for c in _RETRY_CASES
+    }
+
+
+def test_execute_retries_like_an_inline_statement(spark, retry_db):
+    """A prepared statement gets the same error retries as the same
+    statement run inline."""
+    try:
+        out = run_script(
+            spark,
+            "USE hqretry;"
+            " PREPARE p1 FROM SELECT key FROM rt WHERE 'foo';"
+            " EXECUTE p1;"
+            " PREPARE p2 FROM SELECT count(*) AS c FROM rt GROUP BY 1;"
+            " EXECUTE p2;",
+        )
+    finally:
+        run_script(spark, "USE default;")
+    assert sorted(r.key for r in out.results[0].collect()) == [1, 2]
+    assert [r.c for r in out.results[1].collect()] == [2]
+    assert out.retries == [(2, "literal_filter"), (4, "group_by_literal")]
