@@ -4368,14 +4368,12 @@ def _rewrite_tuple_in(stmt: str) -> str:
         i = lhs_open + len(repl)
 
 
-# --- error retries ----------------------------------------------------------
-# Hive accepts statements Spark's analyzer refuses. Each fixer below takes
-# (spark, stmt, err) for a PySparkException `err` that spark.sql(stmt)
-# raised, and returns the rewritten statement, or None when it does not
-# apply. Only the two fixers that must wrap the re-run itself
-# (_group_by_literal, _insert_overwrite_selfread) return a DataFrame.
-# Whatever a fixer needs beyond the condition comes from the error's
-# message parameters, never from its message text.
+# --- error retries (see the module docstring) ------------------------------
+# A fixer takes (spark, stmt, err) for the PySparkException `err` that
+# spark.sql(stmt) raised, and returns the rewritten statement, or None
+# when it does not apply. Only _group_by_literal and
+# _insert_overwrite_selfread, which must wrap the re-run itself, return a
+# DataFrame.
 
 
 def _param(err, key: str) -> str:
@@ -4766,42 +4764,38 @@ def _unorderable_orderby(spark, stmt: str, err):
     return head + pat.sub(rf"\1to_json({item})", tail, count=1)
 
 
+def _range_bounds(stmt: str, err, bound):
+    """Replace each numeric `N PRECEDING|FOLLOWING` bound of the RANGE
+    frame in the window the error's query context points at with
+    bound(N, direction). Only that window is rewritten: the frame text
+    alone can't tell it apart from a valid window sharing it. None when
+    the context points elsewhere (into a view's text)."""
+    ctx = next(iter(err.getQueryContext()), None)
+    if ctx is None:
+        return None
+    a, b = ctx.startIndex(), ctx.stopIndex() + 1
+    frame = re.search(r"(?i)\brange\b", stmt[a:b])
+    if stmt[a:b] != ctx.fragment() or frame is None:
+        return None
+    a += frame.end()
+    return stmt[:a] + re.sub(
+        r"(?i)\b(\d+)\s+(preceding|following)\b",
+        lambda m: bound(m.group(1), m.group(2).upper()),
+        stmt[a:b],
+    ) + stmt[b:]
+
+
 def _string_range_frame(spark, stmt: str, err):
     """RANGE frame with a numeric offset over a STRING sort key: Hive's
     StringValueBoundaryScanner (ref: ql/.../PTFRowContainer /
     ValueBoundaryScanner.java) treats ANY unequal key as exceeding any
     amount, so the frame degenerates to the current row's PEER GROUP —
     numeric bounds become CURRENT ROW, UNBOUNDED sides keep their reach.
-    Spark refuses the numeric offset outright. Only the window the
-    error's query context points at is rewritten: the frame text alone
-    can't tell it apart from a valid numeric-keyed window sharing it."""
+    Spark refuses the numeric offset outright."""
     if not re.match(r"(STRING|VARCHAR|CHAR|BOOLEAN|BINARY)",
                     _param(err, "exprType")):
         return None
-    ctx = next(iter(err.getQueryContext()), None)
-    if ctx is None:
-        return None
-    a, b = ctx.startIndex(), ctx.stopIndex() + 1
-    if stmt[a:b] != ctx.fragment():
-        return None  # the window lives in a view, not in this statement
-
-    def _bound(x: str) -> str:
-        x = " ".join(x.upper().split())
-        return x if x.startswith("UNBOUNDED") else "CURRENT ROW"
-
-    bound = r"(\d+\s+\w+|current\s+row|unbounded\s+\w+)"
-    span = re.sub(
-        rf"(?i)\brange\s+between\s+{bound}\s+and\s+{bound}",
-        lambda m: (
-            f"RANGE BETWEEN {_bound(m.group(1))} AND {_bound(m.group(2))}"
-        ),
-        stmt[a:b],
-    )
-    # Hive frame shorthand: `range N preceding` = BETWEEN N PRECEDING
-    # AND CURRENT ROW
-    span = re.sub(r"(?i)\brange\s+\d+\s+preceding\b",
-                  "RANGE BETWEEN CURRENT ROW AND CURRENT ROW", span)
-    return stmt[:a] + span + stmt[b:]
+    return _range_bounds(stmt, err, lambda n, side: "CURRENT ROW")
 
 
 _MAP_CMP_OPND = r"(map\((?:[^()]|\([^()]*\))*\)|\w+(?:\.\w+)*)"
@@ -5155,61 +5149,8 @@ def _time_range_frame(spark, stmt: str, err):
     if not key_type.startswith(("TIMESTAMP", "DATE")):
         return None
     unit = "SECOND" if key_type.startswith("TIMESTAMP") else "DAY"
-    fixed = re.sub(
-        r"(?i)\brange\s+between\s+(\d+)\s+"
-        r"(preceding|following)\s+and\s+"
-        r"(\d+\s+|current\s+)(preceding|following|row)",
-        lambda m: (
-            f"RANGE BETWEEN INTERVAL '{m.group(1)}'"
-            f" {unit} {m.group(2).upper()} AND "
-            + (
-                "CURRENT ROW"
-                if m.group(3).strip().upper() == "CURRENT"
-                else (
-                    f"INTERVAL '{m.group(3).strip()}'"
-                    f" {unit} {m.group(4).upper()}"
-                )
-            )
-        ),
-        stmt,
-    )
-    fixed = re.sub(
-        r"(?i)\brange\s+between\s+current\s+row\s+and\s+"
-        r"(\d+)\s+(preceding|following)",
-        lambda m: (
-            "RANGE BETWEEN CURRENT ROW AND INTERVAL"
-            f" '{m.group(1)}' {unit} {m.group(2).upper()}"
-        ),
-        fixed,
-    )
-    fixed = re.sub(
-        r"(?i)\brange\s+between\s+unbounded\s+preceding"
-        r"\s+and\s+(\d+)\s+(preceding|following)",
-        lambda m: (
-            "RANGE BETWEEN UNBOUNDED PRECEDING AND "
-            f"INTERVAL '{m.group(1)}' {unit} {m.group(2).upper()}"
-        ),
-        fixed,
-    )
-    fixed = re.sub(
-        r"(?i)\brange\s+between\s+(\d+)\s+"
-        r"(preceding|following)\s+and\s+unbounded"
-        r"\s+following",
-        lambda m: (
-            f"RANGE BETWEEN INTERVAL '{m.group(1)}' "
-            f"{unit} {m.group(2).upper()} AND UNBOUNDED FOLLOWING"
-        ),
-        fixed,
-    )
-    # Hive frame shorthand: `range N preceding` =
-    # BETWEEN N PRECEDING AND CURRENT ROW
-    return re.sub(
-        r"(?i)\brange\s+(\d+)\s+preceding(?!\s+and\b)",
-        lambda m: (
-            f"RANGE BETWEEN INTERVAL '{m.group(1)}' "
-            f"{unit} PRECEDING AND CURRENT ROW"
-        ),
-        fixed,
+    return _range_bounds(
+        stmt, err, lambda n, side: f"INTERVAL '{n}' {unit} {side}"
     )
 
 
