@@ -82,6 +82,7 @@ import os
 import re
 from dataclasses import dataclass, field
 
+from pyspark.errors import PySparkException, PySparkNotImplementedError
 from pyspark.sql import DataFrame, SparkSession
 
 from hive_spark.plans.cte_spool import _scan_parens, _skip_noncode
@@ -4551,7 +4552,6 @@ def _truncate_charvarchar(spark, stmt: str, err):
     write — serde2/io/HiveBaseCharWritable.java); Spark raises
     EXCEED_LIMIT_LENGTH. Re-select the insert's source with each value
     bound for such a column wrapped in substring(., 1, n)."""
-    from pyspark.errors import PySparkException
     from pyspark.sql.types import _parse_datatype_string
 
     m = _INSERT_HEAD_ANY.match(stmt)
@@ -5211,8 +5211,6 @@ def _sql_with_retries(spark, stmt: str, args=None):
     unchanged does not apply. Any other error propagates as is.
     Returns (DataFrame, name of the rule that fired or None). The two
     fixers that re-run the statement themselves do so without `args`."""
-    from pyspark.errors import PySparkException
-
     rules, fired = _RETRIES, None
     for _ in range(_RETRY_ROUNDS):
         try:
@@ -5462,7 +5460,7 @@ def _bucket_spec(spark: SparkSession, table: str):
 def _rewrite_table_inplace(spark: SparkSession, table: str, out) -> None:
     """Two-phase CoW swap: stage `out` to parquet, drop + recreate the
     table from the stage (MoveTask-style, same staging idea as
-    _retry_insert_overwrite_selfread), preserving partition columns and
+    _insert_overwrite_selfread), preserving partition columns and
     bucketing (plain files under a bucketed catalog entry make later
     reads die INVALID_BUCKET_FILE)."""
     import shutil
@@ -7761,8 +7759,6 @@ def run_script(spark: SparkSession, text: str) -> ScriptResult:
                         spark.createDataFrame(df.collect(), df.schema)
                     )
                 except Exception as e:
-                    from pyspark.errors import PySparkNotImplementedError
-
                     msg = str(e)
                     retriable = (
                         isinstance(e, (ValueError, OverflowError))

@@ -1010,7 +1010,7 @@ def test_error_retry_rule(spark, retry_db, rule, setup, stmt, check,
     """Each Hive-legal statement Spark first refuses runs to Hive's
     result through run_script's error retries, and the trace names the
     rule that fixed it."""
-    head = "; ".join(filter(None, ["USE hqretry", setup])) + ";"
+    head = "; ".join(filter(None, ["USE hqretry", setup]))
     try:
         out = run_script(
             spark, "; ".join(filter(None, [head, stmt, check])) + ";"
