@@ -68,12 +68,14 @@ CTE column list, ...): `_RETRIES` is an ordered table of (error
 condition, fixer) rows. `_sql_with_retries` runs the statement and, on a
 PySparkException, applies the first row whose condition matches
 ``getCondition()`` (in full or by its class) and whose fixer applies,
-then re-runs the rewritten statement. Fixers read anything else they
-need from ``getMessageParameters()``, never from the message text.
-run_script and EXECUTE share the loop, and ``ScriptResult.retries``
-records (statement index, rule name) for every rule that fired. Adding
-a rule means one `_RETRIES` row plus one case in
-tests/test_hqlscript.py's ``_RETRY_CASES``.
+then re-runs the rewritten statement. When no row fits the error
+itself, the Spark errors in its Java cause chain are tried, since a
+failure inside a task can reach the driver wrapped in a job abort.
+Fixers read anything else they need from ``getMessageParameters()``,
+never from the message text. run_script and EXECUTE share the loop,
+and ``ScriptResult.retries`` records (statement index, rule name) for
+every rule that fired. Adding a rule means one `_RETRIES` row plus one
+case in tests/test_hqlscript.py's ``_RETRY_CASES``.
 """
 
 from __future__ import annotations
@@ -82,7 +84,11 @@ import os
 import re
 from dataclasses import dataclass, field
 
+from py4j.java_gateway import is_instance_of
+from py4j.protocol import Py4JJavaError
+from pyspark import SparkContext
 from pyspark.errors import PySparkException, PySparkNotImplementedError
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession
 
 from hive_spark.plans.cte_spool import _scan_parens, _skip_noncode
@@ -118,7 +124,7 @@ def _match_merge(stmt: str):
         return None
     i = m.end()
     if i < len(stmt) and stmt[i] == "(":
-        close = _scan_parens(stmt, i) - 1
+        close = _close_paren(stmt, i)
         src_text, rest = stmt[i : close + 1], stmt[close + 1 :]
     else:
         m2 = re.match(r"(?:`[^`]+`|[\w.])+", stmt[i:])
@@ -617,6 +623,17 @@ def _rewrite_time_travel(spark: SparkSession, stmt: str) -> str:
 
 # -- HiveQL-only call folding ------------------------------------------------
 
+def _close_paren(s: str, i: int) -> int:
+    """Index of the ')' closing the '(' at s[i] (strings, backticked
+    identifiers and comments skipped); ValueError when none closes it."""
+    # _scan_parens returns len(text) both for a ')' that ends the text
+    # and for no ')' at all; one byte of padding tells the two apart
+    end = _scan_parens(s + " ", i)
+    if end > len(s):
+        raise ValueError(f"unbalanced parens in {s[i:i + 60]!r}")
+    return end - 1
+
+
 def _publish_dml(spark: SparkSession, res, name: str, path: str, build) -> None:
     """Apply `build(latest_df) -> df` to a VERSIONED table: inside an
     open transaction the new version goes through the txn (so ROLLBACK
@@ -887,35 +904,24 @@ def _refresh_catalog_entry(spark: SparkSession, name: str) -> None:
 
 
 def _split_args(s: str) -> list[str]:
-    """Split a call's argument list on top-level commas (aware of quotes
-    and backticked identifiers)."""
-    out, buf, depth, quote, esc = [], [], 0, None, False
-    for ch in s:
-        if quote:
-            buf.append(ch)
-            if esc:
-                esc = False
-            elif ch == "\\" and quote != "`":
-                esc = True
-            elif ch == quote:
-                quote = None
+    """Split a call's argument list on top-level commas (strings,
+    backticked identifiers and comments skipped)."""
+    out, depth, start, i = [], 0, 0, 0
+    while i < len(s):
+        j = _skip_noncode(s, i)
+        if j != i:
+            i = j
             continue
-        if ch in "'\"`":
-            quote = ch
-            buf.append(ch)
-        elif ch == "(":
+        if s[i] == "(":
             depth += 1
-            buf.append(ch)
-        elif ch == ")":
+        elif s[i] == ")":
             depth -= 1
-            buf.append(ch)
-        elif ch == "," and depth == 0:
-            out.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(ch)
-    if buf:
-        out.append("".join(buf).strip())
+        elif s[i] == "," and depth == 0:
+            out.append(s[start:i].strip())
+            start = i + 1
+        i += 1
+    if start < len(s):
+        out.append(s[start:].strip())
     return out
 
 
@@ -928,7 +934,7 @@ def _fold_calls(stmt: str, fname: str, fold) -> str:
         if m is None:
             return stmt
         open_i = stmt.index("(", m.start())
-        close_i = _scan_parens(stmt, open_i) - 1
+        close_i = _close_paren(stmt, open_i)
         args = _split_args(stmt[open_i + 1 : close_i])
         stmt = stmt[: m.start()] + fold(args) + stmt[close_i + 1 :]
 
@@ -1592,7 +1598,7 @@ def _expand_window_refs(stmt: str) -> str:
                     ("PARENIZE", i + dm.start(2), i + dm.end(2))
                 ]
             open_at = i + dm.end() - 1
-            close = _scan_parens(s, open_at) - 1
+            close = _close_paren(s, open_at)
             out.append((dm.group(1).lower(), open_at, close))
             j = close + 1
             cm = re.match(r"\s*,", s[j:])
@@ -2186,7 +2192,7 @@ def _fold_gap_calls(stmt: str, name: str, fold) -> str:
             pos = m.end()
             continue
         open_i = stmt.index("(", m.start())
-        close_i = _scan_parens(stmt, open_i) - 1
+        close_i = _close_paren(stmt, open_i)
         args = _split_args(stmt[open_i + 1 : close_i])
         stmt = stmt[: m.start()] + fold(args) + stmt[close_i + 1 :]
         pos = 0
@@ -2445,7 +2451,7 @@ def _rewrite_gap_fns(stmt: str) -> str:
         if m is None:
             break
         open_i = m.end() - 1
-        close_i = _scan_parens(stmt, open_i) - 1
+        close_i = _close_paren(stmt, open_i)
         inner = stmt[open_i + 1 : close_i].strip()
         if not re.match(r"(?i)VALUES\b", inner):
             break
@@ -2511,7 +2517,7 @@ def _expand_regex_columns(spark: SparkSession, stmt: str) -> str:
     for m in re.finditer(r"(?i)\b(?:FROM|JOIN)\s+", stmt):
         i = m.end()
         if i < len(stmt) and stmt[i] == "(":
-            close = _scan_parens(stmt, i) - 1
+            close = _close_paren(stmt, i)
             src = ("subq", stmt[i + 1 : close])
             am = re.match(r"\s*(?:AS\s+)?(\w+)", stmt[close + 1 :], re.I)
         else:
@@ -2620,7 +2626,7 @@ def _rewrite_quantified_cmp(stmt: str) -> str:
         op = {"==": "=", "!=": "<>"}.get(m.group(1), m.group(1))
         kind = m.group(2).upper()
         open_i = m.end() - 1
-        close_i = _scan_parens(stmt, open_i) - 1
+        close_i = _close_paren(stmt, open_i)
         q = stmt[open_i + 1 : close_i]
         xs = _left_operand_start(stmt, m.start())
         x = stmt[xs : m.start()].strip()
@@ -3186,13 +3192,13 @@ def _rewrite_distinct_windows(stmt: str) -> str:
         fn = m.group(1).lower()
         s = pos + m.start()
         open_i = stmt.index("(", s)
-        close_i = _scan_parens(stmt, open_i) - 1
+        close_i = _close_paren(stmt, open_i)
         om = re.match(r"(?is)\s*OVER\s*\(", stmt[close_i + 1 :])
         if om is None:
             pos = close_i + 1
             continue
         ospan_open = close_i + 1 + om.end() - 1
-        ospan_close = _scan_parens(stmt, ospan_open) - 1
+        ospan_close = _close_paren(stmt, ospan_open)
         arg = re.sub(
             r"(?is)^\s*distinct\b", "", stmt[open_i + 1 : close_i]
         ).strip()
@@ -3418,7 +3424,7 @@ def _rewrite_lateral_table_values(stmt: str) -> str:
         if not m:
             return stmt
         open_i = stmt.index("(", m.start())
-        close_i = _scan_parens(stmt, open_i) - 1
+        close_i = _close_paren(stmt, open_i)
         inner = stmt[open_i + 1: close_i]
         vals = re.sub(r"(?is)^\s*VALUES\s*", "", inner)
         # each top-level (..) tuple becomes a STRUCT(..)
@@ -3476,7 +3482,7 @@ def _rewrite_uniquejoin(stmt: str) -> str:
         if im is None:
             break
         open_i = pos + im.end() - 1
-        close_i = _scan_parens(stmt, open_i) - 1
+        close_i = _close_paren(stmt, open_i)
         items.append((
             bool(im.group(1)), im.group(2), im.group(3),
             [k.strip()
@@ -3569,7 +3575,7 @@ def _paren_in_boolean_test(stmt: str) -> str:
         if m is None:
             return stmt
         open_i = pos + m.end() - 1
-        close_i = _scan_parens(stmt, open_i) - 1
+        close_i = _close_paren(stmt, open_i)
         follow = stmt[close_i + 1 :]
         if not re.match(
             r"(?i)\s*(?:IS\s+(?:NOT\s+)?(?:TRUE|FALSE)\b"
@@ -4890,7 +4896,7 @@ def _window_agg_alias(spark, stmt: str, err):
         aliases[m.group(2).lower()] = m.group(1)
     out = stmt
     for om in re.finditer(r"(?i)\bOVER\s*\(", stmt):
-        span = stmt[om.end(): _scan_parens(stmt, om.end() - 1) - 1]
+        span = stmt[om.end(): _close_paren(stmt, om.end() - 1)]
         new_span = span
         for al, expr in aliases.items():
             new_span = re.sub(rf"(?i)\b{al}\b", expr, new_span)
@@ -5027,7 +5033,7 @@ def _partial_cte_aliases(spark, stmt: str, err):
     edits = []
     for m in re.finditer(r"(?i)\b(\w+)\s*\(([\w\s,`]+)\)\s+AS\s*\(", stmt):
         open_i = m.end() - 1
-        body = stmt[open_i + 1: _scan_parens(stmt, open_i) - 1]
+        body = stmt[open_i + 1: _close_paren(stmt, open_i)]
         try:
             cols = spark.sql(f"SELECT * FROM ({body}) __cte_probe LIMIT 0").columns
         except Exception:
@@ -5203,6 +5209,34 @@ _RETRIES = (
 _RETRY_ROUNDS = 64  # re-applications of one rule to one statement
 
 
+def _first_fix(spark, stmt: str, rules, top):
+    """(rule, fixer output) for the first of `rules` that fits the error
+    `top`, or else a SparkThrowable in its Java cause chain: a failure
+    inside a task can reach the driver wrapped (in a job abort, which
+    pyspark raises as a bare Py4JJavaError, or in TASK_WRITE_FAILED)
+    around the condition a rule keys on. None when no rule fits."""
+    chain, j = [top], getattr(top, "_origin", None)
+    if isinstance(top, Py4JJavaError):
+        chain, j = [], top.java_exception
+    elif j is not None:
+        j = j.getCause()
+    while j is not None:
+        if is_instance_of(SparkContext._gateway, j,
+                          "org.apache.spark.SparkThrowable"):
+            chain.append(j)
+        j = j.getCause()
+    for err in chain:
+        if not isinstance(err, PySparkException):
+            err = CapturedException(origin=err)
+        cond = err.getCondition() or ""
+        for rule in rules:
+            if rule[0] in (cond, cond.split(".", 1)[0]):
+                out = rule[1](spark, stmt, err)
+                if out is not None and out != stmt:
+                    return rule, out
+    return None
+
+
 def _sql_with_retries(spark, stmt: str, args=None):
     """spark.sql(stmt, args) with Hive's leniency: when Spark refuses the
     statement, apply the first _RETRIES rule that fits and re-run; while
@@ -5215,15 +5249,11 @@ def _sql_with_retries(spark, stmt: str, args=None):
     for _ in range(_RETRY_ROUNDS):
         try:
             return spark.sql(stmt, args=args or None), fired
-        except PySparkException as err:
-            cond = err.getCondition() or ""
-            for rule in rules:
-                if rule[0] in (cond, cond.split(".", 1)[0]):
-                    out = rule[1](spark, stmt, err)
-                    if out is not None and out != stmt:
-                        break
-            else:
+        except (PySparkException, Py4JJavaError) as top:
+            hit = _first_fix(spark, stmt, rules, top)
+            if hit is None:
                 raise
+        rule, out = hit
         rules, fired = (rule,), rule[1].__name__.lstrip("_")
         if isinstance(out, DataFrame):
             return out, fired
@@ -6347,7 +6377,7 @@ def _exec_matchpath_ptf(spark: SparkSession, stmt: str, names: set) -> str:
             if not m:
                 break
             open_i = stmt.index("(", m.start())
-            close_i = _scan_parens(stmt, open_i) - 1
+            close_i = _close_paren(stmt, open_i)
             body = stmt[open_i + 1: close_i]
             view = _run_matchpath(spark, body)
             stmt = (
@@ -6369,7 +6399,7 @@ def _run_matchpath(spark: SparkSession, body: str) -> str:
     rest = body[bm.end():]
     if rest.lstrip().startswith("("):
         o = rest.index("(")
-        c = _scan_parens(rest, o) - 1
+        c = _close_paren(rest, o)
         rel_sql = rest[o + 1: c]
         rest = re.sub(r"^\s*\w+", "", rest[c + 1:], count=1)  # drop alias
         rel = spark.sql(rewrite_statement(spark, rel_sql))
@@ -6393,7 +6423,7 @@ def _run_matchpath(spark: SparkSession, body: str) -> str:
     # argN(...) in order
     args = []
     for am in re.finditer(r"(?i)\barg\d+\s*\(", rest):
-        c = _scan_parens(rest, am.end() - 1) - 1
+        c = _close_paren(rest, am.end() - 1)
         args.append(rest[am.end(): c].strip())
     pattern, result_list = args[0].strip("'\""), args[-1].strip("'\"")
     symbols = {}

@@ -22,6 +22,7 @@ def test_split_respects_quotes_and_comments():
     "f('a'')', x)",     # doubled quote inside a string
     "f(`a)`, x)",       # parenthesis inside a backticked identifier
     "f(`a,b`, x)",      # comma inside a backticked identifier
+    "f(a /* , */, x)",  # comma inside a comment
 ])
 def test_call_folding_skips_quoted_parens(call):
     """Call folding finds the closing parenthesis and the argument
@@ -30,6 +31,20 @@ def test_call_folding_skips_quoted_parens(call):
 
     out = _fold_calls(f"SELECT {call} FROM t", "f", lambda a: f"g[{len(a)}]")
     assert out == "SELECT g[2] FROM t"
+
+
+@pytest.mark.parametrize("stmt", [
+    "SELECT f(a, b FROM t",     # no ')' at all
+    "SELECT f(a, g(b)",         # the last ')' closes g, not f
+    "SELECT f(a, ')' FROM t",   # the only ')' is inside a string
+])
+def test_call_folding_rejects_unbalanced_calls(stmt):
+    """An unclosed call raises instead of being folded into a
+    statement the user never wrote."""
+    from hive_spark.hqlscript import _fold_calls
+
+    with pytest.raises(ValueError, match="unbalanced parens"):
+        _fold_calls(stmt, "f", lambda a: "g")
 
 
 def test_representative_hive_script(spark, sf_dir):
@@ -965,6 +980,12 @@ _RETRY_CASES = [
     ("varchar_truncated_on_insert", "truncate_charvarchar",
      "DROP TABLE IF EXISTS vc; CREATE TABLE vc (v VARCHAR(3)) USING parquet",
      "INSERT INTO vc VALUES ('abcdef')", "SELECT v FROM vc", [("abc",)]),
+    # the length check fails inside the write task, not on the driver
+    ("varchar_truncated_from_table_column", "truncate_charvarchar",
+     "DROP TABLE IF EXISTS vct;"
+     " CREATE TABLE vct (v VARCHAR(3)) USING parquet",
+     "INSERT INTO vct SELECT concat(value, 'xxxxx') FROM rt",
+     "SELECT v FROM vct", [("axx",), ("bxx",)]),
     ("timestamp_compared_with_number", "binop_coercion", "",
      "SELECT key FROM rt WHERE ts > 0", None, [(1,), (2,)]),
     ("numeric_range_frame_over_string", "string_range_frame", "",
@@ -1049,3 +1070,48 @@ def test_execute_retries_like_an_inline_statement(spark, retry_db):
     assert sorted(r.key for r in out.results[0].collect()) == [1, 2]
     assert [r.c for r in out.results[1].collect()] == [2]
     assert out.retries == [(2, "literal_filter"), (4, "group_by_literal")]
+
+
+def test_retry_finds_the_condition_under_a_job_abort(spark, retry_db):
+    """A failure inside a task can reach pyspark as a generic job abort,
+    which it raises as a bare Py4JJavaError with Spark's error as the
+    cause; the retry still finds EXCEED_LIMIT_LENGTH there."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import PySparkException
+
+    from hive_spark.hqlscript import _sql_with_retries
+
+    stmt = "INSERT INTO vcj SELECT concat(value, 'xxxxx') FROM rt"
+    run_script(
+        spark,
+        "USE hqretry; DROP TABLE IF EXISTS vcj;"
+        " CREATE TABLE vcj (v VARCHAR(3)) USING parquet;",
+    )
+    try:
+        with pytest.raises(PySparkException) as failed:
+            spark.sql(stmt)
+        abort = spark._jvm.org.apache.spark.SparkException(
+            "Job aborted due to stage failure", failed.value._origin
+        )
+
+        class FirstRunAborts:
+            """The session, except that its first statement fails with
+            the wrapped error."""
+
+            aborted = False
+
+            def __getattr__(self, name):
+                return getattr(spark, name)
+
+            def sql(self, text, args=None):
+                if not self.aborted:
+                    self.aborted = True
+                    raise Py4JJavaError("job aborted", abort)
+                return spark.sql(text, args=args)
+
+        _, rule = _sql_with_retries(FirstRunAborts(), stmt)
+        got = sorted(r.v for r in spark.sql("SELECT v FROM vcj").collect())
+    finally:
+        run_script(spark, "USE default;")
+    assert rule == "truncate_charvarchar"
+    assert got == ["axx", "bxx"]
