@@ -1,9 +1,11 @@
 """HiveQL script on-ramp: statement splitting, SET/txn/ADD mapping, and
 a representative multi-statement Hive script running unmodified."""
 
+import os
+
 import pytest
 
-from hive_spark.hqlscript import run_script, split_statements
+from hive_spark.hqlscript import QTEST_TMP, run_script, split_statements
 from hive_spark.operators import views
 
 
@@ -1115,3 +1117,498 @@ def test_retry_finds_the_condition_under_a_job_abort(spark, retry_db):
         run_script(spark, "USE default;")
     assert rule == "truncate_charvarchar"
     assert got == ["axx", "bxx"]
+
+
+# One case per statement kind run_script routes to the engine instead of
+# handing it to spark.sql as is. Every case runs in database hqstmt over
+# `st` (key INT, value STRING; two rows) and the files under _STMT_DIR.
+_STMT_DIR = os.path.join(QTEST_TMP, "hqstmt")
+_STMT_SETUP = """
+CREATE DATABASE IF NOT EXISTS hqstmt; USE hqstmt;
+DROP TABLE IF EXISTS st;
+CREATE TABLE st USING parquet AS SELECT * FROM VALUES
+ (1, 'a'), (2, 'b') AS t(key, value);
+"""
+# versioned tables, one per DML case that writes one
+_STMT_VERSIONED = ("hq_vu", "hq_vd", "hq_vm", "hq_vi", "hq_vt")
+_PARTED = (
+    "DROP TABLE IF EXISTS dp;"
+    " CREATE TABLE dp (k INT, ds STRING, hr STRING) USING parquet"
+    " PARTITIONED BY (ds, hr);"
+    " INSERT INTO dp VALUES (1, '1', 'a'), (2, '1', 'b'), (3, '2', 'a')"
+)
+_STAGE = [("STAGE DEPENDENCIES:",), ("  Stage-0 is a root stage",)]
+
+
+def _rows(out):
+    return [tuple(r) for r in out.results[-1].collect()] if out.results else []
+
+
+def _dir_lines(path):
+    return sorted(
+        line
+        for f in os.listdir(path) if not f.startswith((".", "_"))
+        for line in open(os.path.join(path, f)).read().splitlines()
+    )
+
+
+def _explicit_locks(spark):
+    from hive_spark.hqlscript import _EXPLICIT_LOCKS
+
+    return _EXPLICIT_LOCKS.get(id(spark), {})
+
+
+def _session_entry(registry, spark, name):
+    from hive_spark import hqlscript
+
+    return name in getattr(hqlscript, registry).get(id(spark), {})
+
+
+def _scheduled(spark, name):
+    from hive_spark.scheduled import ScheduledQueryRegistry
+
+    return ScheduledQueryRegistry(spark).get(name)
+
+
+# (case id, the statement row that takes it, setup, statement, check query
+# or None for the statement's own rows, expected rows in any order, a
+# predicate over (spark, ScriptResult), or the exception the script raises)
+_STATEMENT_CASES = [
+    ("create_macro", "create_macro", "",
+     "CREATE TEMPORARY MACRO hq_twice(x INT) x * 2",
+     "SELECT hq_twice(21) AS v", [(42,)]),
+    ("drop_macro", "drop_macro", "CREATE TEMPORARY MACRO hq_gone(x INT) x",
+     "DROP TEMPORARY MACRO hq_gone", "DESCRIBE FUNCTION hq_gone",
+     [("Function 'hq_gone' does not exist.",)]),
+    ("prepare", "prepare", "",
+     "PREPARE hq_p FROM SELECT key FROM st WHERE key > ?",
+     "EXECUTE hq_p USING 1", [(2,)]),
+    ("explain_analyze_query", "explain_analyze", "",
+     "EXPLAIN ANALYZE SELECT key FROM st WHERE key > 1", None,
+     lambda spark, out: "rows=1" in _rows(out)[0][0]),
+    ("explain_analyze_dml", "explain_analyze", "",
+     "EXPLAIN ANALYZE UPDATE st SET value = 'z'", None,
+     [("engine metadata operation: UPDATE ...",)]),
+    ("explain_analyze_ctas_creates_nothing", "explain_analyze",
+     "DROP TABLE IF EXISTS ea_t",
+     "EXPLAIN ANALYZE CREATE TABLE ea_t AS SELECT key FROM st", None,
+     lambda spark, out: not spark.catalog.tableExists("hqstmt.ea_t")),
+    ("explain_analyze_show", "explain_analyze", "",
+     "EXPLAIN ANALYZE SHOW TABLES", None,
+     [("side-effect statement (SHOW): plan only",)]),
+    ("execute", "execute",
+     "PREPARE hq_q FROM SELECT value FROM st WHERE key = ?",
+     "EXECUTE hq_q USING 2", None, [("b",)]),
+    ("show_locks", "show_locks", "LOCK TABLE hq_lk SHARED",
+     "SHOW LOCKS hq_lk", None,
+     lambda spark, out: [r[:2] for r in _rows(out)] == [("hq_lk", "SHARED")]),
+    ("create_scheduled_query", "create_scheduled_query",
+     "DROP SCHEDULED QUERY hq_sq",
+     "CREATE SCHEDULED QUERY hq_sq CRON '0 0 * * *' AS SELECT 1", None,
+     lambda spark, out: _scheduled(spark, "hq_sq").sql == "SELECT 1"),
+    ("execute_scheduled_query", "alter_scheduled_query",
+     "CREATE OR REPLACE SCHEDULED QUERY hq_sq2 CRON '0 0 * * *'"
+     " AS SELECT 5 AS five",
+     "ALTER SCHEDULED QUERY hq_sq2 EXECUTE", None, [(5,)]),
+    ("disable_scheduled_query", "alter_scheduled_query",
+     "CREATE OR REPLACE SCHEDULED QUERY hq_sq3 CRON '0 0 * * *' AS SELECT 1",
+     "ALTER SCHEDULED QUERY hq_sq3 DISABLE", None,
+     lambda spark, out: not _scheduled(spark, "hq_sq3").enabled),
+    ("drop_scheduled_query", "drop_scheduled_query",
+     "CREATE OR REPLACE SCHEDULED QUERY hq_sq4 CRON '0 0 * * *' AS SELECT 1",
+     "DROP SCHEDULED QUERY hq_sq4", None,
+     lambda spark, out: _scheduled(spark, "hq_sq4") is None),
+    ("dfs_mkdir", "shell", "", f"dfs -mkdir -p {_STMT_DIR}/mk", None,
+     lambda spark, out: os.path.isdir(f"{_STMT_DIR}/mk")),
+    ("bang_touch", "shell", "", f"!touch {_STMT_DIR}/bang.txt", None,
+     lambda spark, out: os.path.isfile(f"{_STMT_DIR}/bang.txt")),
+    ("bang_other_command_rejected", "shell", "", "!ls /", None, ValueError),
+    ("source", "source", "", f"source {_STMT_DIR}/src.q", None, [(7,)]),
+    ("rename_table_across_databases", "rename_table_across_databases",
+     "CREATE DATABASE IF NOT EXISTS hqstmt2; DROP TABLE IF EXISTS hqstmt2.rn_b;"
+     " DROP TABLE IF EXISTS rn_a;"
+     " CREATE TABLE rn_a USING parquet AS SELECT key FROM st",
+     "ALTER TABLE hqstmt.rn_a RENAME TO hqstmt2.rn_b",
+     "SELECT key FROM hqstmt2.rn_b", [(1,), (2,)]),
+    ("rename_table_within_database", "sql",
+     "DROP TABLE IF EXISTS rn_c; DROP TABLE IF EXISTS rn_d;"
+     " CREATE TABLE rn_c USING parquet AS SELECT key FROM st",
+     "ALTER TABLE hqstmt.rn_c RENAME TO hqstmt.rn_d",
+     "SELECT key FROM rn_d", [(1,), (2,)]),
+    ("rename_view_across_databases", "rename_view_across_databases",
+     "CREATE DATABASE IF NOT EXISTS hqstmt2; DROP VIEW IF EXISTS hqstmt2.rv_b;"
+     " DROP VIEW IF EXISTS rv_a; CREATE VIEW rv_a AS SELECT key FROM hqstmt.st",
+     "ALTER VIEW hqstmt.rv_a RENAME TO hqstmt2.rv_b",
+     "SELECT key FROM hqstmt2.rv_b", [(1,), (2,)]),
+    ("create_table_like_file", "create_table_like_file",
+     "DROP TABLE IF EXISTS lf_t",
+     f"CREATE TABLE lf_t LIKE FILE PARQUET '{_STMT_DIR}/lf/000000_0'",
+     "DESCRIBE lf_t", [("key", "int", None), ("value", "string", None)]),
+    ("drop_partial_partition_spec", "drop_partitions", _PARTED,
+     "ALTER TABLE dp DROP PARTITION (ds='1')", "SHOW PARTITIONS dp",
+     [("ds=2/hr=a",)]),
+    ("drop_two_partition_specs", "drop_partitions", _PARTED,
+     "ALTER TABLE dp DROP PARTITION (ds='1', hr='a'), PARTITION (ds='2', hr='a')",
+     "SHOW PARTITIONS dp", [("ds=1/hr=b",)]),
+    ("drop_full_partition_spec", "sql", _PARTED,
+     "ALTER TABLE dp DROP PARTITION (ds='1', hr='a')", "SHOW PARTITIONS dp",
+     [("ds=1/hr=b",), ("ds=2/hr=a",)]),
+    ("exchange_partition", "exchange_partition",
+     "DROP TABLE IF EXISTS xa; DROP TABLE IF EXISTS xb;"
+     " CREATE TABLE xa (k INT, ds STRING) USING parquet PARTITIONED BY (ds);"
+     " CREATE TABLE xb (k INT, ds STRING) USING parquet PARTITIONED BY (ds);"
+     " INSERT INTO xb VALUES (10, 'x')",
+     "ALTER TABLE xa EXCHANGE PARTITION (ds='x') WITH TABLE xb",
+     "SELECT k, ds FROM xa", [(10, "x")]),
+    ("export", "export", "", f"EXPORT TABLE st TO '{_STMT_DIR}/exp'", None,
+     lambda spark, out: os.path.isfile(f"{_STMT_DIR}/exp/_metadata.json")),
+    ("import", "import",
+     f"DROP TABLE IF EXISTS imp; EXPORT TABLE st TO '{_STMT_DIR}/exp2'",
+     f"IMPORT TABLE imp FROM '{_STMT_DIR}/exp2'", "SELECT key, value FROM imp",
+     [(1, "a"), (2, "b")]),
+    ("add_constraint", "add_constraint", "",
+     "ALTER TABLE st ADD CONSTRAINT hq_pk PRIMARY KEY (key) DISABLE NOVALIDATE",
+     None, lambda spark, out: _session_entry("_CONSTRAINT_NAMES", spark, "hq_pk")),
+    ("drop_constraint", "drop_constraint",
+     "ALTER TABLE st ADD CONSTRAINT hq_uk UNIQUE (value) DISABLE NOVALIDATE",
+     "ALTER TABLE st DROP CONSTRAINT hq_uk", None,
+     lambda spark, out: not _session_entry("_CONSTRAINT_NAMES", spark, "hq_uk")),
+    ("start_transaction", "transaction", "", "START TRANSACTION",
+     "SHOW TRANSACTIONS",
+     lambda spark, out: [r[1] for r in _rows(out)] == ["OPEN"]),
+    ("commit_without_transaction", "transaction", "", "COMMIT", None,
+     ValueError),
+    ("create_role", "authorization", "", "CREATE ROLE hq_role", "SHOW ROLES",
+     lambda spark, out: ("hq_role",) in _rows(out)),
+    ("lock", "lock", "", "LOCK TABLE hq_lk2 EXCLUSIVE", None,
+     lambda spark, out: _explicit_locks(spark)["TABLE:hq_lk2"] == "EXCLUSIVE"),
+    ("unlock", "unlock", "LOCK TABLE hq_lk3 SHARED", "UNLOCK TABLE hq_lk3",
+     None, lambda spark, out: "TABLE:hq_lk3" not in _explicit_locks(spark)),
+    ("compact", "compact", "", "ALTER TABLE st COMPACT 'major'",
+     "SHOW COMPACTIONS",
+     lambda spark, out: _rows(out)[-1][2:6] == ("st", "", "major", "succeeded")),
+    ("alter_view_add_partitions", "alter_view_partitions",
+     "DROP VIEW IF EXISTS vpa; CREATE VIEW vpa AS SELECT key, value FROM st",
+     "ALTER VIEW vpa ADD PARTITION (value='a') PARTITION (value='b')",
+     "SHOW PARTITIONS vpa", [("value=a",), ("value=b",)]),
+    ("alter_view_drop_partition", "alter_view_partitions",
+     "DROP VIEW IF EXISTS vpd; CREATE VIEW vpd AS SELECT key, value FROM st;"
+     " ALTER VIEW vpd ADD PARTITION (value='a') PARTITION (value='b')",
+     "ALTER VIEW vpd DROP PARTITION (value='a')", "SHOW PARTITIONS vpd",
+     [("value=b",)]),
+    ("show_view_partitions", "show_view_partitions",
+     "DROP VIEW IF EXISTS vps; CREATE VIEW vps AS SELECT key, value FROM st;"
+     " ALTER VIEW vps ADD PARTITION (value='a') PARTITION (value='b')",
+     "SHOW PARTITIONS vps PARTITION (value='b')", None, [("value=b",)]),
+    ("show_table_partitions", "sql", _PARTED, "SHOW PARTITIONS dp", None,
+     [("ds=1/hr=a",), ("ds=1/hr=b",), ("ds=2/hr=a",)]),
+    ("show_view_partition_extended", "show_view_partition_extended",
+     "DROP VIEW IF EXISTS vpx; CREATE VIEW vpx AS SELECT key, value FROM st;"
+     " ALTER VIEW vpx ADD PARTITION (value='a')",
+     "SHOW TABLE EXTENDED LIKE vpx PARTITION (value='a')", None,
+     lambda spark, out: [r[1] for r in _rows(out)] == ["vpx"]),
+    ("describe_view_partition", "describe_view_partition",
+     "DROP VIEW IF EXISTS vpe; CREATE VIEW vpe AS SELECT key, value FROM st;"
+     " ALTER VIEW vpe ADD PARTITION (value='a')",
+     "DESCRIBE vpe PARTITION (value='a')", None,
+     [("key", "int", None), ("value", "string", None)]),
+    ("describe_array_element", "describe_nested_column",
+     "DROP TABLE IF EXISTS nx; CREATE TABLE nx"
+     " (a ARRAY<STRUCT<x:INT, y:STRING>>, m MAP<STRING, INT>) USING parquet",
+     "DESCRIBE nx a.$elem$", None,
+     [("x", "int", "from deserializer"), ("y", "string", "from deserializer")]),
+    ("describe_map_value", "describe_nested_column",
+     "DROP TABLE IF EXISTS nx; CREATE TABLE nx"
+     " (a ARRAY<STRUCT<x:INT, y:STRING>>, m MAP<STRING, INT>) USING parquet",
+     "DESCRIBE nx m.$value$", None, [("$value$", "int", "from deserializer")]),
+    ("explain_show_locks", "explain_engine_statement", "",
+     "EXPLAIN SHOW LOCKS", None, _STAGE),
+    ("explain_formatted_show_locks", "explain_engine_statement", "",
+     "EXPLAIN FORMATTED SHOW LOCKS", None,
+     [("engine metadata operation: SHOW ...",)]),
+    ("explain_show_compactions", "explain_engine_statement", "",
+     "EXPLAIN SHOW COMPACTIONS", None, _STAGE),
+    ("explain_create_role", "explain_engine_statement", "",
+     "EXPLAIN CREATE ROLE hq_never", None, _STAGE),
+    ("explain_show_current_roles", "explain_engine_statement", "",
+     "EXPLAIN SHOW CURRENT ROLES", None, _STAGE),
+    ("explain_create_macro", "explain_engine_statement", "",
+     "EXPLAIN CREATE TEMPORARY MACRO hq_never(x INT) x", None, _STAGE),
+    ("explain_show_columns_pattern", "explain_engine_statement", "",
+     "EXPLAIN SHOW COLUMNS FROM st 'k*'", None, _STAGE),
+    ("explain_show_partitions_where", "explain_engine_statement", _PARTED,
+     "EXPLAIN SHOW PARTITIONS dp WHERE ds = '1'", None, _STAGE),
+    ("explain_show_partitions", "explain_engine_statement", _PARTED,
+     "EXPLAIN SHOW PARTITIONS dp", None,
+     [("engine metadata operation: SHOW ...",)]),
+    ("explain_lock", "explain_engine_statement", "",
+     "EXPLAIN LOCK TABLE st SHARED", None,
+     [("engine metadata operation: LOCK ...",)]),
+    ("explain_cbo_update", "explain_engine_statement", "",
+     "EXPLAIN CBO UPDATE st SET value = 'z'", None,
+     [("engine metadata operation: UPDATE ...",)]),
+    ("explain_extended_show_create_database", "explain_engine_statement", "",
+     "EXPLAIN EXTENDED SHOW CREATE DATABASE hqstmt", None,
+     [("engine metadata operation: SHOW ...",)]),
+    ("explain_metadata_noop", "explain_engine_statement", "",
+     "EXPLAIN ALTER TABLE st SET SERDEPROPERTIES ('a'='b')", None,
+     [("engine metadata operation: ALTER ...",)]),
+    ("explain_execute", "explain_engine_statement", "",
+     "EXPLAIN EXECUTE hq_p", None,
+     [("engine metadata operation: EXECUTE ...",)]),
+    ("explain_query", "sql", "", "EXPLAIN SELECT key FROM st", None,
+     lambda spark, out: "== Physical Plan ==" in _rows(out)[0][0]),
+    ("show_columns_pattern", "show_columns_matching", "",
+     "SHOW COLUMNS FROM st 'v*|k*'", None, [("key",), ("value",)]),
+    ("show_sorted_columns", "show_columns_matching", "",
+     "SHOW SORTED COLUMNS IN st", None, [("key",), ("value",)]),
+    ("show_columns", "sql", "", "SHOW COLUMNS IN st", None,
+     [("key",), ("value",)]),
+    ("show_partitions_filtered", "show_partitions_filtered", _PARTED,
+     "SHOW PARTITIONS dp WHERE hr = 'a' ORDER BY ds DESC LIMIT 1", None,
+     [("ds=2/hr=a",)]),
+    ("show_partitions_of_spec", "show_partitions_filtered", _PARTED,
+     "SHOW PARTITIONS dp PARTITION (ds='1')", None,
+     [("ds=1/hr=a",), ("ds=1/hr=b",)]),
+    ("show_compactions", "show_compactions",
+     "ALTER TABLE st COMPACT 'minor'", "SHOW COMPACTIONS", None,
+     lambda spark, out: _rows(out)[-1][2:6] == ("st", "", "minor", "succeeded")),
+    ("show_transactions", "show_transactions", "", "SHOW TRANSACTIONS", None,
+     []),
+    ("add_jar", "add_resource", "", "ADD JAR /nonexistent/hq.jar", None,
+     lambda spark, out: out.skipped == ["ADD JAR /nonexistent/hq.jar"]),
+    ("add_file", "add_resource", "", f"ADD FILE {_STMT_DIR}/src.q", None,
+     lambda spark, out: _session_entry("_ADDED_FILES", spark, "src.q")),
+    ("metadata_noop", "metadata_noop", "",
+     "ALTER TABLE st SET SERDEPROPERTIES ('a'='b')", None,
+     lambda spark, out: out.skipped
+     == ["ALTER TABLE st SET SERDEPROPERTIES ('a'='b')"]),
+    ("explain_locks", "explain_special", "",
+     "EXPLAIN LOCKS SELECT * FROM st", None, [("st", "SHARED_READ")]),
+    ("create_materialized_view", "create_materialized_view",
+     "DROP MATERIALIZED VIEW IF EXISTS mv1",
+     "CREATE MATERIALIZED VIEW mv1 AS SELECT key FROM st",
+     "SELECT key FROM mv1", [(1,), (2,)]),
+    ("drop_materialized_view", "drop_materialized_view",
+     "CREATE MATERIALIZED VIEW IF NOT EXISTS mv2 AS SELECT key FROM st",
+     "DROP MATERIALIZED VIEW mv2", None,
+     lambda spark, out: not spark.catalog.tableExists("hqstmt.mv2")),
+    ("show_materialized_views", "show_materialized_views",
+     "CREATE MATERIALIZED VIEW IF NOT EXISTS mv3 AS SELECT key FROM st",
+     "SHOW MATERIALIZED VIEWS", None,
+     lambda spark, out: ("mv3", "Yes", "Manual refresh") in _rows(out)),
+    ("rebuild_materialized_view", "rebuild_materialized_view",
+     "DROP MATERIALIZED VIEW IF EXISTS mv4; DROP TABLE IF EXISTS mvb;"
+     " CREATE TABLE mvb USING parquet AS SELECT 1 AS k;"
+     " CREATE MATERIALIZED VIEW mv4 AS SELECT k FROM mvb;"
+     " INSERT INTO mvb VALUES (2)",
+     "ALTER MATERIALIZED VIEW mv4 REBUILD", "SELECT k FROM mv4",
+     [(1,), (2,)]),
+    ("create_external_complex_text", "create_external_complex_text", "",
+     "CREATE EXTERNAL TABLE ext_c (id INT, tags ARRAY<STRING>)"
+     f" ROW FORMAT DELIMITED STORED AS TEXTFILE LOCATION '{_STMT_DIR}/ext'",
+     "SELECT id, size(tags) AS n FROM ext_c", [(1, 2)]),
+    ("create_external_primitive_text", "sql", "DROP TABLE IF EXISTS ext_p",
+     "CREATE EXTERNAL TABLE ext_p (id INT, s STRING) ROW FORMAT DELIMITED"
+     " FIELDS TERMINATED BY ',' STORED AS TEXTFILE"
+     f" LOCATION '{_STMT_DIR}/extp'",
+     "SELECT id, s FROM ext_p", [(1, "a"), (2, "b")]),
+    ("insert_directory", "insert_directory", "",
+     f"INSERT OVERWRITE DIRECTORY '{_STMT_DIR}/out1' SELECT key, value FROM st",
+     None, lambda spark, out: _dir_lines(f"{_STMT_DIR}/out1")
+     == ["1\x01a", "2\x01b"]),
+    ("multi_insert_with_directory", "multi_insert_with_directories",
+     "DROP TABLE IF EXISTS mi_t; CREATE TABLE mi_t (key INT) USING parquet",
+     f"FROM st INSERT OVERWRITE DIRECTORY '{_STMT_DIR}/out2'"
+     " SELECT key WHERE key = 1"
+     " INSERT OVERWRITE TABLE mi_t SELECT key WHERE key = 2",
+     "SELECT key FROM mi_t",
+     lambda spark, out: _rows(out) == [(2,)]
+     and _dir_lines(f"{_STMT_DIR}/out2") == ["1"]),
+    ("update_columns", "update_columns", "",
+     "ALTER TABLE st UPDATE COLUMNS CASCADE", "SELECT key, value FROM st",
+     [(1, "a"), (2, "b")]),
+    ("drop_column", "alter_columns",
+     "DROP TABLE IF EXISTS ac; CREATE TABLE ac USING parquet AS SELECT * FROM st",
+     "ALTER TABLE ac DROP COLUMN value", "SELECT * FROM ac", [(1,), (2,)]),
+    ("alter_table_properties", "sql",
+     "DROP TABLE IF EXISTS ac2;"
+     " CREATE TABLE ac2 USING parquet AS SELECT * FROM st",
+     "ALTER TABLE ac2 SET TBLPROPERTIES ('hq'='1')",
+     "SHOW TBLPROPERTIES ac2 ('hq')", [("hq", "1")]),
+    ("truncate_columns", "truncate_columns",
+     "DROP TABLE IF EXISTS tc; CREATE TABLE tc USING parquet AS SELECT * FROM st",
+     "TRUNCATE TABLE tc COLUMNS (value)", "SELECT key, value FROM tc",
+     [(1, None), (2, None)]),
+    ("show_create_database", "show_create_database", "",
+     "SHOW CREATE DATABASE hqstmt", None,
+     lambda spark, out: _rows(out)[0][0].startswith(
+         "CREATE DATABASE `hqstmt`\nLOCATION\n  'file:")),
+    ("reset_key", "reset", "SET hq.reset.key=1", "RESET hq.reset.key", None,
+     lambda spark, out: "hq.reset.key" not in out.set_commands),
+    ("set", "set", "", "SET hq.set.key=5", "SET hq.set.key",
+     [("hq.set.key", "5")]),
+    ("load_data", "load_data",
+     "DROP TABLE IF EXISTS ld;"
+     " CREATE TABLE ld (k INT, v STRING) ROW FORMAT DELIMITED"
+     " STORED AS TEXTFILE",
+     f"LOAD DATA LOCAL INPATH '{_STMT_DIR}/load.txt' INTO TABLE ld",
+     "SELECT k, v FROM ld", [(1, "a")]),
+    ("default_storage_handler", "sql", "DROP TABLE IF EXISTS dsh",
+     "CREATE TABLE dsh (k INT) STORED BY"
+     " 'org.apache.hadoop.hive.ql.metadata.DefaultStorageHandler'",
+     "SELECT count(*) FROM dsh", [(0,)]),
+    ("register_dboutput", "register_dboutput", "",
+     "CREATE TEMPORARY FUNCTION dboutput AS"
+     " 'org.apache.hadoop.hive.contrib.genericudf.example.GenericUDFDBOutput'",
+     None, lambda spark, out: len(out.skipped) == 1),
+    ("describe_folded_function", "describe_folded_function", "",
+     "DESCRIBE FUNCTION likeany", None,
+     [("likeany is an engine-folded function (rewritten inline at parse time)",)]),
+    ("describe_missing_function", "describe_missing_function", "",
+     "DESC FUNCTION EXTENDED hq_nope", None,
+     [("Function 'hq_nope' does not exist.",)]),
+    ("describe_catalog_function", "sql", "", "DESCRIBE FUNCTION upper", None,
+     lambda spark, out: _rows(out)[0][0] == "Function: upper"),
+    ("create_matchpath_alias", "create_matchpath_alias", "",
+     "CREATE TEMPORARY FUNCTION hq_mp AS"
+     " 'org.apache.hadoop.hive.ql.udf.ptf.MatchPath'", None,
+     lambda spark, out: _session_entry("_MATCHPATH_FNS", spark, "hq_mp")),
+    ("create_folded_function", "create_folded_function", "",
+     "CREATE TEMPORARY FUNCTION hq_len AS"
+     " 'org.apache.hadoop.hive.ql.udf.UDFTestLength'",
+     "SELECT hq_len('abc') AS n", [(3,)]),
+    ("drop_folded_function", "drop_folded_function",
+     "CREATE TEMPORARY FUNCTION hq_len2 AS"
+     " 'org.apache.hadoop.hive.ql.udf.UDFTestLength'",
+     "DROP TEMPORARY FUNCTION hq_len2", None,
+     lambda spark, out: not _session_entry("_FUNC_FOLDS", spark, "hq_len2")),
+    ("drop_matchpath_alias", "drop_matchpath_alias",
+     "CREATE TEMPORARY FUNCTION hq_mp2 AS"
+     " 'org.apache.hadoop.hive.ql.udf.ptf.MatchPath'",
+     "DROP TEMPORARY FUNCTION hq_mp2", None,
+     lambda spark, out: not _session_entry("_MATCHPATH_FNS", spark, "hq_mp2")),
+    ("update_path_table", "update",
+     "DROP TABLE IF EXISTS up; CREATE TABLE up USING parquet AS SELECT * FROM st",
+     "UPDATE up SET value = 'z' WHERE key = 1", "SELECT key, value FROM up",
+     [(1, "z"), (2, "b")]),
+    ("update_bucketed_table", "update",
+     "DROP TABLE IF EXISTS ub; CREATE TABLE ub (key INT, value STRING)"
+     " USING parquet CLUSTERED BY (key) INTO 2 BUCKETS;"
+     " INSERT INTO ub SELECT * FROM st",
+     "UPDATE ub SET value = 'z' WHERE key = 1", "SELECT key, value FROM ub",
+     [(1, "z"), (2, "b")]),
+    ("update_versioned_table", "update", "",
+     "UPDATE hq_vu SET value = 'z' WHERE key = 1",
+     "SELECT key, value FROM hq_vu", [(1, "z"), (2, "b")]),
+    ("delete_path_table", "delete",
+     "DROP TABLE IF EXISTS dl; CREATE TABLE dl USING parquet AS SELECT * FROM st",
+     "DELETE FROM dl WHERE key = 1", "SELECT key, value FROM dl",
+     [(2, "b")]),
+    ("delete_bucketed_table", "delete",
+     "DROP TABLE IF EXISTS db; CREATE TABLE db (key INT, value STRING)"
+     " USING parquet CLUSTERED BY (key) INTO 2 BUCKETS;"
+     " INSERT INTO db SELECT * FROM st",
+     "DELETE FROM db WHERE key = 1", "SELECT key, value FROM db", [(2, "b")]),
+    ("delete_versioned_table", "delete", "", "DELETE FROM hq_vd WHERE key = 2",
+     "SELECT key, value FROM hq_vd", [(1, "a")]),
+    ("insert_versioned_table", "insert_versioned", "",
+     "INSERT INTO hq_vi SELECT 3, 'c'", "SELECT key, value FROM hq_vi",
+     [(1, "a"), (2, "b"), (3, "c")]),
+    ("truncate_versioned_table", "truncate_versioned", "",
+     "TRUNCATE TABLE hq_vt", "SELECT count(*) FROM hq_vt", [(0,)]),
+    ("merge_path_table", "merge",
+     "DROP TABLE IF EXISTS mg; CREATE TABLE mg USING parquet AS SELECT * FROM st",
+     "MERGE INTO mg t USING (SELECT 2 AS k, 'y' AS v UNION ALL"
+     " SELECT 3, 'c') s ON t.key = s.k"
+     " WHEN MATCHED THEN UPDATE SET value = s.v"
+     " WHEN NOT MATCHED THEN INSERT VALUES (s.k, s.v)",
+     "SELECT key, value FROM mg", [(1, "a"), (2, "y"), (3, "c")]),
+    ("merge_bucketed_table", "merge",
+     "DROP TABLE IF EXISTS mb; CREATE TABLE mb (key INT, value STRING)"
+     " USING parquet CLUSTERED BY (key) INTO 2 BUCKETS;"
+     " INSERT INTO mb SELECT * FROM st",
+     "MERGE INTO mb t USING st s ON t.key = s.key"
+     " WHEN MATCHED AND s.key = 1 THEN DELETE",
+     "SELECT key, value FROM mb", [(2, "b")]),
+    ("merge_versioned_table", "merge", "",
+     "MERGE INTO hq_vm t USING st s ON t.key = s.key + 1"
+     " WHEN MATCHED THEN UPDATE SET value = 'm'"
+     " WHEN NOT MATCHED THEN INSERT VALUES (s.key + 1, 'n')",
+     "SELECT key, value FROM hq_vm", [(1, "a"), (2, "m"), (3, "n")]),
+    ("select", "sql", "", "SELECT key FROM st WHERE key > 1", None, [(2,)]),
+    ("matchpath", "sql", "",
+     "SELECT key, n FROM matchpath(on st sort by key arg1('A+'), arg2('A'),"
+     " arg3(key > 0), arg4('key, size(tpath) AS n'))", None,
+     [(1, 2), (2, 1)]),
+    ("dynamic_partition_overwrite", "sql",
+     "DROP TABLE IF EXISTS dyn;"
+     " CREATE TABLE dyn (k INT, ds STRING) USING parquet PARTITIONED BY (ds);"
+     " INSERT INTO dyn VALUES (1, 'a'), (2, 'b')",
+     "INSERT OVERWRITE TABLE dyn PARTITION (ds) SELECT 9, 'a'",
+     "SELECT k, ds FROM dyn",
+     lambda spark, out: sorted(_rows(out)) == [(2, "b"), (9, "a")]
+     and spark.conf.get("spark.sql.sources.partitionOverwriteMode").upper()
+     == "STATIC"),
+]
+
+
+@pytest.fixture(scope="module")
+def stmt_db(spark):
+    import shutil
+
+    from hive_spark import snapshots
+    from hive_spark.hqlscript import VERSIONED_TABLES, register_versioned
+
+    shutil.rmtree(_STMT_DIR, ignore_errors=True)
+    for sub in ("lf", "ext", "extp"):
+        os.makedirs(os.path.join(_STMT_DIR, sub))
+    with open(os.path.join(_STMT_DIR, "src.q"), "w") as f:
+        f.write("SELECT 7 AS seven;\n")
+    with open(os.path.join(_STMT_DIR, "load.txt"), "w") as f:
+        f.write("1\x01a\n")
+    with open(os.path.join(_STMT_DIR, "ext", "data.txt"), "w") as f:
+        f.write("1\x01a\x02b\n")
+    with open(os.path.join(_STMT_DIR, "extp", "data.txt"), "w") as f:
+        f.write("1,a\n2,b\n")
+    rows = spark.createDataFrame([(1, "a"), (2, "b")], "key int, value string")
+    rows.write.mode("overwrite").parquet(os.path.join(_STMT_DIR, "lf"))
+    for name in _STMT_VERSIONED:
+        path = os.path.join(_STMT_DIR, name)
+        snapshots.write_version(rows, path)
+        register_versioned(name, path)
+    run_script(spark, _STMT_SETUP + "USE default;")
+    yield
+    for name in _STMT_VERSIONED:
+        VERSIONED_TABLES.pop(name, None)
+        spark.catalog.dropTempView(name)
+    run_script(
+        spark,
+        "DROP DATABASE IF EXISTS hqstmt CASCADE;"
+        " DROP DATABASE IF EXISTS hqstmt2 CASCADE;",
+    )
+    shutil.rmtree(_STMT_DIR, ignore_errors=True)
+
+
+@pytest.mark.parametrize(
+    "row,setup,stmt,check,expected",
+    [c[1:] for c in _STATEMENT_CASES],
+    ids=[c[0] for c in _STATEMENT_CASES],
+)
+def test_statement_row(spark, stmt_db, row, setup, stmt, check, expected):
+    """Each statement kind the engine runs itself gives Hive's rows or
+    effect."""
+    head = "; ".join(filter(None, ["USE hqstmt", setup]))
+    script = "; ".join(filter(None, [head, stmt, check])) + ";"
+    try:
+        if isinstance(expected, type):
+            with pytest.raises(expected):
+                run_script(spark, script)
+            return
+        out = run_script(spark, script)
+    finally:
+        run_script(spark, "USE default;")
+    if callable(expected):
+        assert expected(spark, out)
+    else:
+        assert sorted(_rows(out), key=repr) == sorted(expected, key=repr)
