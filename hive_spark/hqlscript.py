@@ -8,38 +8,23 @@ scripts a direct on-ramp: split statements the way CliDriver does
 (semicolons outside quotes/comments), map the non-SQL command surface,
 and hand everything else to `spark.sql`.
 
-Command mapping:
-- ``SET key=value``      -> spark.conf.set (Hive-only keys are accepted
-                            and recorded, not errors — scripts set
-                            hive.exec.* flags that have no Spark meaning)
-- ``SET key``            -> echo the conf value
-- txn statements         -> REAL over versioned tables: START
-                            TRANSACTION/BEGIN opens a hive_spark.txn
-                            Transaction spanning every registered
-                            versioned table (write locks + pinned-at-
-                            BEGIN read views = repeatable reads);
-                            COMMIT keeps the new versions, ROLLBACK
-                            flips every pointer back; a script ending
-                            with an open txn aborts it. Plain Spark
-                            tables stay outside txn scope (no multi-
-                            stmt txn in Spark itself — boundary
-                            documented in txn.py)
-- ACID DML statements    -> ``UPDATE t SET ... [WHERE]``,
-                            ``DELETE FROM t [WHERE]``, ``MERGE INTO t
-                            USING s ON ... WHEN [NOT] MATCHED ...``
-                            (ref: ql/.../parse/UpdateDeleteSemantic-
-                            Analyzer.java, MergeSemanticAnalyzer.java)
-                            resolve the target table to its storage
-                            path (versioned registry ->
-                            `register_table_path` -> catalog location)
-                            and run the dml.py copy-on-write rewrites;
-                            VERSIONED targets publish a new snapshot
-                            version and participate in open
-                            BEGIN/COMMIT/ROLLBACK transactions
-- ``ADD JAR/FILE``       -> recorded no-op (cluster-level concern)
-- ``!shell`` / ``dfs``   -> rejected (side effects a query engine
-                            should not silently run)
-- everything else        -> spark.sql(stmt); SELECT results returned
+Statement dispatch: `_STATEMENTS` is an ordered table of (name, pattern,
+handler, explain) rows, one per statement kind the engine runs itself
+instead of handing it to spark.sql as is — SET/RESET, ADD JAR/FILE and
+the metadata-only ALTERs (recorded, not errors), the confined subset of
+``dfs`` and ``!`` file commands (any other shell command raises),
+BEGIN/COMMIT/ROLLBACK over versioned tables (hive_spark.txn), UPDATE/
+DELETE/MERGE copy-on-write (dml.py), LOCK and COMPACT, view partitions,
+macros, PREPARE/EXECUTE, materialized views, EXPORT/IMPORT, LOAD DATA,
+directory sinks and more. run_script tries the rows in order; the first
+whose pattern matches and whose handler does not decline takes the
+statement, and the last row, ``sql``, runs everything else through the
+rewrites below and spark.sql. A row's ``explain`` column says how
+EXPLAIN [mode] and EXPLAIN ANALYZE of that statement are answered, so
+the EXPLAIN routes read the same table the statements run from.
+``ScriptResult.handled`` records (statement index, row name) for every
+statement. Adding a statement kind means one `_STATEMENTS` row plus one
+case in tests/test_hqlscript.py's ``_STATEMENT_CASES``.
 
 Statement rewrites applied before spark.sql (the HiveQL-only surface):
 - ``t FOR SYSTEM_VERSION AS OF n`` / ``FOR SYSTEM_TIME AS OF 'ts'``
@@ -91,11 +76,13 @@ from pyspark.errors import PySparkException, PySparkNotImplementedError
 from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession
 
+from hive_spark import authz
 from hive_spark.plans.cte_spool import _scan_parens, _skip_noncode
 
 _TXN = re.compile(r"^\s*(START\s+TRANSACTION|BEGIN|COMMIT|ROLLBACK)\b", re.I)
 _UPDATE_STMT = re.compile(
-    r"^\s*UPDATE\s+([\w.]+)\s+SET\s+(.+?)(?:\s+WHERE\s+(.+))?\s*$",
+    r"^\s*UPDATE\s+(?!STATISTICS\b)([\w.]+)\s+SET\s+(.+?)"
+    r"(?:\s+WHERE\s+(.+))?\s*$",
     re.I | re.S,
 )
 _DELETE_STMT = re.compile(
@@ -675,220 +662,198 @@ def _column_defaults(spark: SparkSession, table: str) -> dict[str, str]:
     return out
 
 
-def _exec_dml(spark: SparkSession, res, stmt: str) -> bool:
-    """SQL-text UPDATE / DELETE / MERGE (Hive ACID DML statements, ref:
-    ql/.../parse/UpdateDeleteSemanticAnalyzer + MergeSemanticAnalyzer) —
-    rewritten onto the dml.py copy-on-write primitives. Returns True if
-    the statement was a DML statement (handled)."""
+def _land_dml(spark: SparkSession, res, name: str, target, frame, *args,
+              **kwargs) -> None:
+    """Write `frame(table, *args, **kwargs)` (dml.update_frame,
+    delete_frame or merge_frame) back over the DML target `name`, whose
+    (path, is_versioned) is `target`: a versioned table publishes a new
+    version, a bucketed catalog table swaps through the catalog
+    (path-level CoW would drop the bucket file naming), and any other
+    table is rewritten copy-on-write at its path."""
+    from hive_spark import dml
+
+    path, versioned = target
+
+    def build(t):
+        return frame(t, *args, **kwargs)
+
+    if versioned:
+        _publish_dml(spark, res, name, path, build)
+    elif _bucket_spec(spark, name):
+        _rewrite_table_inplace(spark, name, build(spark.table(name)))
+    else:
+        fmt = TABLE_FORMATS.get(path, "parquet")
+        dml._rewrite(build(dml._read_target(spark, path, fmt)), path, fmt)
+        _refresh_catalog_entry(spark, name)
+
+
+# SQL-text UPDATE / DELETE / MERGE (Hive ACID DML statements, ref:
+# ql/.../parse/UpdateDeleteSemanticAnalyzer + MergeSemanticAnalyzer),
+# rewritten onto the dml.py copy-on-write frames; INSERT and TRUNCATE
+# of a VERSIONED table publish a new snapshot version (plain catalog
+# tables are Spark's)
+def _exec_update(spark, res, m, stmt):
     from pyspark.sql import functions as F
 
     from hive_spark import dml
 
-    m = _UPDATE_STMT.match(stmt)
-    if m and not re.match(r"^\s*UPDATE\s+STATISTICS\b", stmt, re.I):
-        name, set_text, where = m.group(1), m.group(2), m.group(3)
-        path, versioned = _resolve_dml_target(spark, name)
-        defaults = (
-            _column_defaults(spark, name)
-            if re.search(r"(?i)=\s*default\b", set_text) else {}
-        )
-        assigns = {}
-        for pair in _split_args(set_text):
-            pm = re.match(r"\s*([\w.]+)\s*=\s*(.+?)\s*$", pair, re.S)
-            col = pm.group(1).split(".")[-1]
-            val = pm.group(2)
-            if val.strip().lower() == "default":
-                # SET col = DEFAULT: the declared default, else NULL
-                val = defaults.get(col.lower(), "NULL")
-            assigns[col] = F.expr(_rewrite_virtual_columns(val))
-        cond = (
-            F.expr(_rewrite_virtual_columns(where)) if where else F.lit(True)
-        )
-        if versioned:
-            _publish_dml(
-                spark, res, name, path,
-                lambda t: dml.update_frame(t, cond, assigns),
-            )
-        elif _bucket_spec(spark, name):
-            # bucketed catalog target: path-level CoW would drop bucket
-            # file naming — swap through the catalog instead
-            _rewrite_table_inplace(
-                spark, name, dml.update_frame(spark.table(name), cond, assigns)
-            )
-        else:
-            dml.update_where(
-                spark, path, cond, assigns,
-                fmt=TABLE_FORMATS.get(path, "parquet"),
-            )
-            _refresh_catalog_entry(spark, name)
-        return True
-    m = _DELETE_STMT.match(stmt)
-    if m:
-        name, where = m.group(1), m.group(2)
-        path, versioned = _resolve_dml_target(spark, name)
-        cond = (
-            F.expr(_rewrite_virtual_columns(where)) if where else F.lit(True)
-        )
-        if versioned:
-            _publish_dml(
-                spark, res, name, path, lambda t: dml.delete_frame(t, cond)
-            )
-        elif _bucket_spec(spark, name):
-            _rewrite_table_inplace(
-                spark, name, dml.delete_frame(spark.table(name), cond)
-            )
-        else:
-            dml.delete_where(
-                spark, path, cond, fmt=TABLE_FORMATS.get(path, "parquet")
-            )
-            _refresh_catalog_entry(spark, name)
-        return True
-    m = _INSERT_STMT.match(stmt)
-    if m and m.group(2).lower() in VERSIONED_TABLES:
-        # INSERT over a VERSIONED table: append/replace as a new snapshot
-        # version (plain catalog tables fall through to native spark.sql)
-        mode, name, query = m.group(1).upper(), m.group(2), m.group(3)
-        path = VERSIONED_TABLES[name.lower()]
-        rows = spark.sql(rewrite_statement(spark, query))
-        _publish_dml(
-            spark, res, name, path,
-            (lambda t: rows.toDF(*t.columns))  # positional, like Hive
-            if mode == "OVERWRITE"
-            else (lambda t: t.unionByName(rows.toDF(*t.columns))),
-        )
-        return True
-    m = _TRUNCATE_STMT.match(stmt)
-    if m and m.group(1).lower() in VERSIONED_TABLES:
-        name = m.group(1)
-        path = VERSIONED_TABLES[name.lower()]
-        _publish_dml(spark, res, name, path, lambda t: t.limit(0))
-        return True
+    name, set_text, where = m.group(1), m.group(2), m.group(3)
+    target = _resolve_dml_target(spark, name)
+    defaults = (
+        _column_defaults(spark, name)
+        if re.search(r"(?i)=\s*default\b", set_text) else {}
+    )
+    assigns = {}
+    for pair in _split_args(set_text):
+        pm = re.match(r"\s*([\w.]+)\s*=\s*(.+?)\s*$", pair, re.S)
+        col = pm.group(1).split(".")[-1]
+        val = pm.group(2)
+        if val.strip().lower() == "default":
+            # SET col = DEFAULT: the declared default, else NULL
+            val = defaults.get(col.lower(), "NULL")
+        assigns[col] = F.expr(_rewrite_virtual_columns(val))
+    cond = F.expr(_rewrite_virtual_columns(where)) if where else F.lit(True)
+    _land_dml(spark, res, name, target, dml.update_frame, cond, assigns)
+
+
+def _exec_delete(spark, res, m, stmt):
+    from pyspark.sql import functions as F
+
+    from hive_spark import dml
+
+    name, where = m.group(1), m.group(2)
+    target = _resolve_dml_target(spark, name)
+    cond = F.expr(_rewrite_virtual_columns(where)) if where else F.lit(True)
+    _land_dml(spark, res, name, target, dml.delete_frame, cond)
+
+
+def _exec_insert_versioned(spark, res, m, stmt):
+    mode, name, query = m.group(1).upper(), m.group(2), m.group(3)
+    path = VERSIONED_TABLES.get(name.lower())
+    if path is None:
+        return _DECLINE
+    rows = spark.sql(rewrite_statement(spark, query))
+    _publish_dml(
+        spark, res, name, path,
+        (lambda t: rows.toDF(*t.columns))  # positional, like Hive
+        if mode == "OVERWRITE"
+        else (lambda t: t.unionByName(rows.toDF(*t.columns))),
+    )
+    return None
+
+
+def _exec_truncate_versioned(spark, res, m, stmt):
+    path = VERSIONED_TABLES.get(m.group(1).lower())
+    if path is None:
+        return _DECLINE
+    _publish_dml(spark, res, m.group(1), path, lambda t: t.limit(0))
+    return None
+
+
+def _exec_merge(spark, res, m, stmt):
+    from pyspark.sql import functions as F
+
+    from hive_spark import dml
+
     mg = _match_merge(stmt)
-    if mg:
-        name, talias, src_text, salias, on_text, when_text = mg
-        name = name.replace("`", "")
-        talias = talias or name.split(".")[-1]
-        salias = salias or (
-            src_text.split(".")[-1] if not src_text.startswith("(") else "s"
-        )
-        path, versioned = _resolve_dml_target(spark, name)
-        source = (
-            spark.sql(rewrite_statement(spark, src_text[1:-1].strip()))
-            if src_text.startswith("(")
-            else spark.table(src_text)
-        )
+    if mg is None:
+        return _DECLINE
+    name, talias, src_text, salias, on_text, when_text = mg
+    name = name.replace("`", "")
+    talias = talias or name.split(".")[-1]
+    salias = salias or (
+        src_text.split(".")[-1] if not src_text.startswith("(") else "s"
+    )
+    target = path, versioned = _resolve_dml_target(spark, name)
+    source = (
+        spark.sql(rewrite_statement(spark, src_text[1:-1].strip()))
+        if src_text.startswith("(")
+        else spark.table(src_text)
+    )
 
-        def _alias_pat(alias: str) -> str:
-            # \b can't anchor before a backtick (both sides non-word)
-            if alias.startswith("`"):
-                return re.escape(alias) + r"\."
-            return rf"\b{re.escape(alias)}\."
+    def _alias_pat(alias: str) -> str:
+        # \b can't anchor before a backtick (both sides non-word)
+        if alias.startswith("`"):
+            return re.escape(alias) + r"\."
+        return rf"\b{re.escape(alias)}\."
 
-        def rw(e: str) -> str:
-            # user aliases -> the t/s aliases merge_frame joins under
-            # (both the quoted and unquoted spellings of each)
-            e = _rewrite_virtual_columns(e)
-            for a in {talias, talias.replace("`", "").split(".")[-1],
-                      f"`{talias}`"}:
-                if a and a != "``":
-                    e = re.sub(_alias_pat(a), "t.", e, flags=re.I)
-            for a in {salias, salias.replace("`", "").split(".")[-1],
-                      f"`{salias}`"}:
-                if a and a != "``":
-                    e = re.sub(_alias_pat(a), "s.", e, flags=re.I)
-            return e
+    def rw(e: str) -> str:
+        # user aliases -> the t/s aliases merge_frame joins under
+        # (both the quoted and unquoted spellings of each)
+        e = _rewrite_virtual_columns(e)
+        for a in {talias, talias.replace("`", "").split(".")[-1],
+                  f"`{talias}`"}:
+            if a and a != "``":
+                e = re.sub(_alias_pat(a), "t.", e, flags=re.I)
+        for a in {salias, salias.replace("`", "").split(".")[-1],
+                  f"`{salias}`"}:
+            if a and a != "``":
+                e = re.sub(_alias_pat(a), "s.", e, flags=re.I)
+        return e
 
-        matched_update = None
-        matched_delete = None
-        not_matched_insert = None
-        for wm in _WHEN_MATCHED.finditer(when_text):
-            and_cond, action, set_text = wm.group(1), wm.group(2), wm.group(3)
-            if action.upper().startswith("DELETE"):
-                matched_delete = (
-                    F.expr(rw(and_cond)) if and_cond else F.lit(True)
-                )
-                continue
-            matched_update = {}
-            for pair in _split_args(set_text):
-                pm = re.match(
-                    r"\s*((?:`[^`]+`|[\w.])+)\s*=\s*(.+?)\s*$", pair, re.S
-                )
-                col = pm.group(1).replace("`", "").split(".")[-1]
-                expr = rw(pm.group(2))
-                if expr.strip().lower() == "default":
-                    expr = _column_defaults(spark, name).get(
-                        col.lower(), "NULL"
-                    )
-                if and_cond:
-                    expr = (
-                        f"CASE WHEN {rw(and_cond)} THEN ({expr})"
-                        f" ELSE t.`{col}` END"
-                    )
-                matched_update[col] = F.expr(expr)
-        not_matched_cond = None
-        for wm in _WHEN_NOT_MATCHED.finditer(when_text):
-            if wm.group(1):
-                # Hive folds WHEN NOT MATCHED AND <cond> into the
-                # insert branch's source filter
-                # (MergeSemanticAnalyzer.java:85-102)
-                not_matched_cond = F.expr(rw(wm.group(1)))
-            vals = [rw(v) for v in _split_args(wm.group(3))]
-            if wm.group(2):
-                cols = [
-                    c.strip().replace("`", "").split(".")[-1]
-                    for c in wm.group(2).split(",")
-                ]
-            else:
-                from hive_spark import snapshots
-
-                cols = (
-                    snapshots.read_table(spark, path).columns
-                    if versioned
-                    else spark.read.format(
-                        TABLE_FORMATS.get(path, "parquet")
-                    ).load(path).columns
-                )
-            mdefs = (
-                _column_defaults(spark, name)
-                if any(v.strip().lower() == "default" for v in vals)
-                else {}
+    matched_update = None
+    matched_delete = None
+    not_matched_insert = None
+    for wm in _WHEN_MATCHED.finditer(when_text):
+        and_cond, action, set_text = wm.group(1), wm.group(2), wm.group(3)
+        if action.upper().startswith("DELETE"):
+            matched_delete = F.expr(rw(and_cond)) if and_cond else F.lit(True)
+            continue
+        matched_update = {}
+        for pair in _split_args(set_text):
+            pm = re.match(
+                r"\s*((?:`[^`]+`|[\w.])+)\s*=\s*(.+?)\s*$", pair, re.S
             )
-            not_matched_insert = {
-                c: F.expr(
-                    mdefs.get(c.lower(), "NULL")
-                    if v.strip().lower() == "default" else v
+            col = pm.group(1).replace("`", "").split(".")[-1]
+            expr = rw(pm.group(2))
+            if expr.strip().lower() == "default":
+                expr = _column_defaults(spark, name).get(col.lower(), "NULL")
+            if and_cond:
+                expr = (
+                    f"CASE WHEN {rw(and_cond)} THEN ({expr})"
+                    f" ELSE t.`{col}` END"
                 )
-                for c, v in zip(cols, vals)
-            }
-        on = F.expr(rw(on_text))
-        if versioned:
-            _publish_dml(
-                spark, res, name, path,
-                lambda t: dml.merge_frame(
-                    t, source, on, matched_update, matched_delete,
-                    not_matched_insert,
-                    not_matched_cond=not_matched_cond,
-                ),
-            )
-        elif _bucket_spec(spark, name):
-            _rewrite_table_inplace(
-                spark, name,
-                dml.merge_frame(
-                    spark.table(name), source, on, matched_update,
-                    matched_delete, not_matched_insert,
-                    not_matched_cond=not_matched_cond,
-                ),
-            )
+            matched_update[col] = F.expr(expr)
+    not_matched_cond = None
+    for wm in _WHEN_NOT_MATCHED.finditer(when_text):
+        if wm.group(1):
+            # Hive folds WHEN NOT MATCHED AND <cond> into the insert
+            # branch's source filter (MergeSemanticAnalyzer.java:85-102)
+            not_matched_cond = F.expr(rw(wm.group(1)))
+        vals = [rw(v) for v in _split_args(wm.group(3))]
+        if wm.group(2):
+            cols = [
+                c.strip().replace("`", "").split(".")[-1]
+                for c in wm.group(2).split(",")
+            ]
         else:
-            dml.merge_into(
-                spark, path, source, on, matched_update, matched_delete,
-                not_matched_insert,
-                fmt=TABLE_FORMATS.get(path, "parquet"),
-                not_matched_cond=not_matched_cond,
+            from hive_spark import snapshots
+
+            cols = (
+                snapshots.read_table(spark, path).columns
+                if versioned
+                else spark.read.format(
+                    TABLE_FORMATS.get(path, "parquet")
+                ).load(path).columns
             )
-            _refresh_catalog_entry(spark, name)
-        return True
-    return False
+        mdefs = (
+            _column_defaults(spark, name)
+            if any(v.strip().lower() == "default" for v in vals)
+            else {}
+        )
+        not_matched_insert = {
+            c: F.expr(
+                mdefs.get(c.lower(), "NULL")
+                if v.strip().lower() == "default" else v
+            )
+            for c, v in zip(cols, vals)
+        }
+    _land_dml(
+        spark, res, name, target, dml.merge_frame, source, F.expr(rw(on_text)),
+        matched_update, matched_delete, not_matched_insert,
+        not_matched_cond=not_matched_cond,
+    )
+    return None
 
 
 def _refresh_catalog_entry(spark: SparkSession, name: str) -> None:
@@ -1859,7 +1824,7 @@ def _sniff_file_format(path: str) -> str | None:
     return None
 
 
-def _exec_load_data(spark: SparkSession, m: re.Match) -> None:
+def _exec_load_data(spark, res, m, stmt):
     """SQL-text LOAD DATA: parse the delimited file with the table's
     remembered separator, cast by position to the table schema, append
     (or overwrite). ref: ql/.../parse/LoadSemanticAnalyzer.java."""
@@ -4379,8 +4344,9 @@ def _rewrite_tuple_in(stmt: str) -> str:
 # A fixer takes (spark, stmt, err) for the PySparkException `err` that
 # spark.sql(stmt) raised, and returns the rewritten statement, or None
 # when it does not apply. Only _group_by_literal and
-# _insert_overwrite_selfread, which must wrap the re-run itself, return a
-# DataFrame.
+# _insert_overwrite_selfread, which must wrap the re-run itself, return
+# instead a runner, run(args) -> DataFrame, which the retry loop calls
+# with the statement's USING arguments.
 
 
 def _param(err, key: str) -> str:
@@ -4412,20 +4378,24 @@ def _insert_overwrite_selfread(spark, stmt: str, err):
     if m is None:
         return None
     head, query = m.group(1), m.group(2)
-    stage = os.path.join(
-        tempfile.gettempdir(), f"hive_spark_stage_{uuid.uuid4().hex}"
-    )
-    spark.sql(query).write.parquet(stage)
-    view = f"__stage_{uuid.uuid4().hex[:8]}"
-    try:
-        spark.read.parquet(stage).createOrReplaceTempView(view)
-        # re-run the SAME insert head (partition spec and all) over the
-        # staged rows — Spark's own partitioned-insert path, minus the
-        # self-read the staging removed
-        return spark.sql(f"{head} SELECT * FROM {view}")
-    finally:
-        spark.catalog.dropTempView(view)
-        shutil.rmtree(stage, ignore_errors=True)
+
+    def run(args):
+        stage = os.path.join(
+            tempfile.gettempdir(), f"hive_spark_stage_{uuid.uuid4().hex}"
+        )
+        spark.sql(query, args=args).write.parquet(stage)
+        view = f"__stage_{uuid.uuid4().hex[:8]}"
+        try:
+            spark.read.parquet(stage).createOrReplaceTempView(view)
+            # re-run the SAME insert head (partition spec and all) over
+            # the staged rows — Spark's own partitioned-insert path,
+            # minus the self-read the staging removed
+            return spark.sql(f"{head} SELECT * FROM {view}")
+        finally:
+            spark.catalog.dropTempView(view)
+            shutil.rmtree(stage, ignore_errors=True)
+
+    return run
 
 
 _BINOP_SPLIT = re.compile(
@@ -5083,12 +5053,15 @@ def _tuple_in(spark, stmt: str, err):
 def _group_by_literal(spark, stmt: str, err):
     """Hive defaults hive.groupby.position.alias=false: GROUP BY 1 is the
     LITERAL 1, not an ordinal. Re-run with Spark's ordinals off."""
-    prev = spark.conf.get("spark.sql.groupByOrdinal", "true")
-    spark.conf.set("spark.sql.groupByOrdinal", "false")
-    try:
-        return spark.sql(stmt)
-    finally:
-        spark.conf.set("spark.sql.groupByOrdinal", prev)
+    def run(args):
+        prev = spark.conf.get("spark.sql.groupByOrdinal", "true")
+        spark.conf.set("spark.sql.groupByOrdinal", "false")
+        try:
+            return spark.sql(stmt, args=args)
+        finally:
+            spark.conf.set("spark.sql.groupByOrdinal", prev)
+
+    return run
 
 
 def _grouping_id_order(spark, stmt: str, err):
@@ -5243,8 +5216,7 @@ def _sql_with_retries(spark, stmt: str, args=None):
     the re-run fails on that rule's condition, apply it again (one
     comparison or frame per round). A fixer that returns the statement
     unchanged does not apply. Any other error propagates as is.
-    Returns (DataFrame, name of the rule that fired or None). The two
-    fixers that re-run the statement themselves do so without `args`."""
+    Returns (DataFrame, name of the rule that fired or None)."""
     rules, fired = _RETRIES, None
     for _ in range(_RETRY_ROUNDS):
         try:
@@ -5255,8 +5227,8 @@ def _sql_with_retries(spark, stmt: str, args=None):
                 raise
         rule, out = hit
         rules, fired = (rule,), rule[1].__name__.lstrip("_")
-        if isinstance(out, DataFrame):
-            return out, fired
+        if callable(out):
+            return out(args or None), fired
         stmt = out
     return spark.sql(stmt, args=args or None), fired
 
@@ -5575,77 +5547,80 @@ def _rewrite_table_inplace(spark: SparkSession, table: str, out) -> None:
 
 _ALTER_UPDATE_COLS = re.compile(
     r"^\s*ALTER\s+TABLE\s+`?([\w.]+)`?"
-    r"(\s+PARTITION\s*\([^)]*\))?\s+UPDATE\s+COLUMNS\s*$",
+    r"(\s+PARTITION\s*\([^)]*\))?\s+UPDATE\s+COLUMNS"
+    r"(?:\s+(?:CASCADE|RESTRICT))?\s*$",
     re.I,
 )
 
 
-def _exec_alter_columns(spark: SparkSession, stmt: str) -> bool:
+def _exec_update_columns(spark, res, m, stmt):
+    # ALTER TABLE ... UPDATE COLUMNS (ref: ql/.../ddl/table/misc/
+    # updatecolumns — re-derive the HMS schema from the serde's
+    # self-described one, i.e. the avro.schema.literal/url props).
+    # A PARTITION-scoped update touches per-partition metadata Hive
+    # keeps separately; the table-wide schema here already reflects
+    # the serde schema, so that variant records as done.
+    from pyspark.sql import functions as F
+
+    table = m.group(1)
+    if m.group(2):
+        return
+    props = {
+        r["key"]: r["value"]
+        for r in spark.sql(
+            f"SHOW TBLPROPERTIES `{table.replace('.', '`.`')}`"
+        ).collect()
+    }
+    raw = props.get("avro.schema.literal")
+    if raw is None and props.get("avro.schema.url"):
+        path = props["avro.schema.url"]
+        if path.startswith("file:"):
+            path = path.split(":", 1)[1]
+        try:
+            raw = open(path).read()
+        except OSError:
+            raw = None
+    if raw is None:
+        return  # nothing self-described to sync from
+    from hive_spark.sources.avro_lite import ddl_from_schema_json
+
+    ddl = ddl_from_schema_json(raw)
+    specs = []
+    for item in _split_generic_args(ddl):
+        toks = item.strip().split(None, 1)
+        if len(toks) == 2:
+            specs.append((toks[0].strip("`"), toks[1]))
+    df = spark.table(table)
+    try:
+        parts = [
+            c.name
+            for c in spark.catalog.listColumns(table)
+            if c.isPartition
+        ]
+    except Exception:
+        parts = []
+    old_cols = [c for c in df.columns if c not in parts]
+    if [
+        (n.lower(), t.replace(" ", "").lower()) for n, t in specs
+    ] == [
+        (c.lower(), t.replace(" ", "").lower())
+        for c, t in df.dtypes
+        if c not in parts
+    ]:
+        return  # already in sync
+    sel = [
+        F.col(old_cols[i]).cast(typ).alias(name)
+        if i < len(old_cols)
+        else F.lit(None).cast(typ).alias(name)
+        for i, (name, typ) in enumerate(specs)
+    ] + [F.col(c) for c in parts]
+    _rewrite_table_inplace(spark, table, df.select(*sel))
+
+
+def _exec_alter_columns(spark, res, m, stmt):
     from pyspark.sql import functions as F
 
     stmt = re.sub(r"(?i)\s+(CASCADE|RESTRICT)\s*$", "", stmt.rstrip())
-    m = _ALTER_UPDATE_COLS.match(stmt)
-    if m:
-        # ALTER TABLE ... UPDATE COLUMNS (ref: ql/.../ddl/table/misc/
-        # updatecolumns — re-derive the HMS schema from the serde's
-        # self-described one, i.e. the avro.schema.literal/url props).
-        # A PARTITION-scoped update touches per-partition metadata Hive
-        # keeps separately; the table-wide schema here already reflects
-        # the serde schema, so that variant records as done.
-        table = m.group(1)
-        if m.group(2):
-            return True
-        props = {
-            r["key"]: r["value"]
-            for r in spark.sql(
-                f"SHOW TBLPROPERTIES `{table.replace('.', '`.`')}`"
-            ).collect()
-        }
-        raw = props.get("avro.schema.literal")
-        if raw is None and props.get("avro.schema.url"):
-            path = props["avro.schema.url"]
-            if path.startswith("file:"):
-                path = path.split(":", 1)[1]
-            try:
-                raw = open(path).read()
-            except OSError:
-                raw = None
-        if raw is None:
-            return True  # nothing self-described to sync from
-        from hive_spark.sources.avro_lite import ddl_from_schema_json
-
-        ddl = ddl_from_schema_json(raw)
-        specs = []
-        for item in _split_generic_args(ddl):
-            toks = item.strip().split(None, 1)
-            if len(toks) == 2:
-                specs.append((toks[0].strip("`"), toks[1]))
-        df = spark.table(table)
-        try:
-            parts = [
-                c.name
-                for c in spark.catalog.listColumns(table)
-                if c.isPartition
-            ]
-        except Exception:
-            parts = []
-        old_cols = [c for c in df.columns if c not in parts]
-        if [
-            (n.lower(), t.replace(" ", "").lower()) for n, t in specs
-        ] == [
-            (c.lower(), t.replace(" ", "").lower())
-            for c, t in df.dtypes
-            if c not in parts
-        ]:
-            return True  # already in sync
-        sel = [
-            F.col(old_cols[i]).cast(typ).alias(name)
-            if i < len(old_cols)
-            else F.lit(None).cast(typ).alias(name)
-            for i, (name, typ) in enumerate(specs)
-        ] + [F.col(c) for c in parts]
-        _rewrite_table_inplace(spark, table, df.select(*sel))
-        return True
     m = _ALTER_PART_CHANGE.match(stmt)
     if m:
         table, spec, old, new, typ = (
@@ -5668,7 +5643,7 @@ def _exec_alter_columns(spark: SparkSession, stmt: str) -> bool:
         # withColumn re-creates by the lowercase key; keep exact order
         out = out.select(*df.columns)
         _rewrite_table_inplace(spark, table, out)
-        return True
+        return None
     # per-partition ADD COLUMNS: the partition schema re-gains columns
     # the table schema already has — metadata-only here (the native
     # store reads every column from the table-level schema)
@@ -5677,7 +5652,7 @@ def _exec_alter_columns(spark: SparkSession, stmt: str) -> bool:
         r"ADD\s+COLUMNS\s*\(",
         stmt,
     ):
-        return True
+        return None
     m = _ALTER_PART_REPLACE.match(stmt)
     if m:
         # per-partition REPLACE COLUMNS: the partition's schema keeps
@@ -5716,7 +5691,7 @@ def _exec_alter_columns(spark: SparkSession, stmt: str) -> bool:
                 conv = F.lit(None).cast(dtypes[c])
             sel.append(F.when(cond, conv).otherwise(F.col(c)).alias(c))
         _rewrite_table_inplace(spark, table, df.select(*sel))
-        return True
+        return None
     m = _ALTER_CHANGE.match(stmt)
     if m:
         table, old, new, typ = (
@@ -5756,7 +5731,7 @@ def _exec_alter_columns(spark: SparkSession, stmt: str) -> bool:
                 f"ALTER TABLE `{table.replace('.', '`.`')}` "
                 f"ALTER COLUMN `{new}` COMMENT '{safe}'"
             )
-        return True
+        return None
     m = re.match(
         r"^\s*ALTER\s+TABLE\s+`?([\w.]+)`?\s+DROP\s+COLUMNS?\s+"
         r"((?:`?\w+`?\s*,?\s*)+)$",
@@ -5773,7 +5748,7 @@ def _exec_alter_columns(spark: SparkSession, stmt: str) -> bool:
         df = spark.table(table)
         keep = [c for c in df.columns if c.lower() not in drop]
         _rewrite_table_inplace(spark, table, df.select(*keep))
-        return True
+        return None
     m = _ALTER_REPLACE_COLS.match(stmt)
     if m:
         table = m.group(1)
@@ -5814,8 +5789,8 @@ def _exec_alter_columns(spark: SparkSession, stmt: str) -> bool:
                 sel.append(F.lit(None).cast(typ).alias(name))
         sel.extend(F.col(c) for c in part_cols)
         _rewrite_table_inplace(spark, table, df.select(*sel))
-        return True
-    return False
+        return None
+    return _DECLINE
 
 
 @dataclass
@@ -5827,6 +5802,8 @@ class ScriptResult:
     txn: object | None = None  # open hive_spark.txn.Transaction, if any
     # (statement index, name) of each error-retry rule that fired
     retries: list[tuple[int, str]] = field(default_factory=list)
+    # (statement index, name) of the _STATEMENTS row that took each one
+    handled: list[tuple[int, str]] = field(default_factory=list)
 
 
 # --- materialized views in SQL text (ref: ql/.../parse/
@@ -5994,7 +5971,7 @@ def _exim_path(p: str) -> str:
     return p
 
 
-def _exec_export(spark: SparkSession, m: re.Match) -> None:
+def _exec_export(spark, res, m, stmt):
     import shutil
 
     from hive_spark import ddl
@@ -6019,7 +5996,7 @@ def _exec_export(spark: SparkSession, m: re.Match) -> None:
                         dirs.remove(d)
 
 
-def _exec_import(spark: SparkSession, m: re.Match) -> None:
+def _exec_import(spark, res, m, stmt):
     import json
 
     from hive_spark import ddl
@@ -6084,7 +6061,7 @@ CONSTRAINTS: dict[int, object] = {}  # id(spark) -> ddl.ConstraintRegistry
 _CONSTRAINT_NAMES: dict[int, dict[str, object]] = {}
 
 
-def _exec_add_constraint(spark: SparkSession, m: re.Match) -> None:
+def _exec_add_constraint(spark, res, m, stmt):
     from hive_spark.ddl import Constraint, ConstraintRegistry
 
     table, cname, kind_txt, inner, tail = m.groups()
@@ -6128,8 +6105,7 @@ _CREATE_EXT_TEXT = re.compile(
 )
 
 
-def _exec_create_external_complex_text(spark: SparkSession,
-                                       m: re.Match) -> bool:
+def _exec_create_external_complex_text(spark, res, m, stmt):
     """EXTERNAL delimited-text table with complex-typed columns: Spark's
     csv source can't hold array/map/struct (UNSUPPORTED_DATA_TYPE_FOR_
     DATASOURCE), but LazySimpleSerDe reads them from nested separators
@@ -6139,12 +6115,13 @@ def _exec_create_external_complex_text(spark: SparkSession,
     from pyspark.sql import functions as F
     from pyspark.sql.types import _parse_datatype_string
 
+    _record_owner(spark, stmt)
     name, col_text, fmt_text, loc = m.groups()
     specs = []
     for item in _split_generic_args(col_text):
         toks = item.strip().split(None, 1)
         if len(toks) != 2:
-            return False
+            return _DECLINE
         typ = re.sub(r"(?i)\s+COMMENT\s+'[^']*'", "", toks[1]).strip()
         if re.search(r"(?i)\bUNIONTYPE\s*<", typ):
             typ = _rewrite_uniontype(typ)  # tagged-struct emulation
@@ -6153,7 +6130,7 @@ def _exec_create_external_complex_text(spark: SparkSession,
         re.match(r"(?i)\s*(array|map|struct|uniontype)\s*<", t)
         for _, t in specs
     ):
-        return False  # primitives only: the csv-table path handles it
+        return _DECLINE  # primitives only: the csv-table path handles it
     sep = "\x01"
     coll, mk = "\x02", "\x03"
     fm = re.search(
@@ -6192,7 +6169,7 @@ def _exec_create_external_complex_text(spark: SparkSession,
         else:
             cols.append(F.col(raw.columns[i]).cast(dt).alias(cname))
     raw.select(*cols).createOrReplaceTempView(name.split(".")[-1])
-    return True
+    return None
 
 
 _INSERT_DIR = re.compile(
@@ -6222,8 +6199,8 @@ def _referenced_tables(spark: SparkSession, sql: str) -> list[str]:
     return out
 
 
-def _exec_explain_special(spark: SparkSession, mode: str, body: str):
-    mode = mode.upper()
+def _exec_explain_special(spark, res, m, stmt):
+    mode, body = m.group(1).upper(), m.group(2)
     tables = _referenced_tables(spark, body)
     is_write = bool(re.match(
         r"(?i)\s*(INSERT|UPDATE|DELETE|MERGE|CREATE|ALTER|TRUNCATE|LOAD)\b",
@@ -6258,8 +6235,6 @@ def _exec_explain_special(spark: SparkSession, mode: str, body: str):
             [(s,) for s in texts] or [("",)], "createtab_stmt string"
         )
     # AUTHORIZATION: inputs / outputs / current user / operation
-    from hive_spark import authz
-
     rows = (
         [("INPUTS", ",".join(tables))]
         + [("OUTPUTS", "")]
@@ -6269,7 +6244,7 @@ def _exec_explain_special(spark: SparkSession, mode: str, body: str):
     return spark.createDataFrame(rows, "section string, value string")
 
 
-def _exec_insert_directory(spark: SparkSession, m: re.Match):
+def _exec_insert_directory(spark, res, m, stmt):
     """INSERT OVERWRITE [LOCAL] DIRECTORY (ref: ql/.../parse/
     SemanticAnalyzer genFileSinkPlan): runs the query and writes the
     rows under the directory — text with Hive's delimiter/\\N null
@@ -6621,9 +6596,10 @@ def _macro_fold(params: list[str], body: str):
         return f"({out})"
 
     return fold
-# EXPLAIN ANALYZE <query> (Hive ExplainSemanticAnalyzer `analyze` mode):
-# re-executes the query and prints actual per-operator row counts
-# EXPLAIN ANALYZE <query> runs the query for actual row counts — but
+
+
+# EXPLAIN ANALYZE <query> (Hive ExplainSemanticAnalyzer `analyze` mode)
+# runs the query for actual per-operator row counts — but
 # `EXPLAIN ANALYZE TABLE ...` is EXPLAIN of an ANALYZE statement
 _EXPLAIN_ANALYZE = re.compile(
     r"^\s*EXPLAIN\s+ANALYZE\s+(?!TABLE\b)(.*)$", re.I | re.S
@@ -6636,6 +6612,1088 @@ def _parse_literals(spark: SparkSession, csv: str) -> list:
     Spark SQL accepts works ('2008-01-01', 3, 1.5, DATE'...')."""
     row = spark.sql(f"SELECT {csv}").collect()[0]
     return list(row)
+
+
+# -- the statements the engine runs itself -----------------------------------
+# Each _STATEMENTS row is (name, pattern, handler, explain). A handler is
+# called as handler(spark, res, m, stmt) with the pattern's match and
+# returns None (handled, no result), a DataFrame (the statement's rows,
+# already buffered on the driver) or _DECLINE (not this row's after all;
+# the loop tries the next row).
+_DECLINE = object()
+
+
+def _note_retry(res, rule) -> None:
+    if rule:
+        # every earlier statement has one `handled` entry, so their count
+        # is the running statement's index
+        res.retries.append((len(res.handled), rule))
+
+
+def _buffered(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """CliDriver semantics: each statement's rows are buffered to the
+    client BEFORE the next statement runs (ref: ql/.../exec/
+    ListSinkOperator.java) — so a later DROP of a source table cannot
+    invalidate an earlier result (qtests routinely SELECT then DROP).
+    Materialize into a local-relation DataFrame with the same schema."""
+    try:
+        return spark.createDataFrame(df.collect(), df.schema)
+    except Exception as e:
+        msg = str(e)
+        retriable = (
+            isinstance(e, (ValueError, OverflowError))
+            and ("out of range" in msg
+                 # proleptic year-0 dates (mask date branch)
+                 # precede Python datetime's ordinal 1
+                 or "ordinal must be" in msg)
+        ) or isinstance(e, PySparkNotImplementedError)
+        if not retriable:
+            raise
+    # Hive prints timestamps past Python's datetime range (year > 9999)
+    # and year-month intervals verbatim; Python's collect() can't hold
+    # either — buffer those columns as their string rendering instead
+    from pyspark.sql import functions as F
+
+    # rename POSITIONALLY first: result frames can carry duplicate
+    # auto-generated names (two casts of the same column), which any
+    # by-name reference refuses
+    tmp = df.toDF(*[f"_qc{i}" for i in range(len(df.columns))])
+    safe = tmp.select(*[
+        (
+            F.col(f"_qc{i}").cast("string")
+            if t.startswith(("timestamp", "date", "interval"))
+            else F.col(f"_qc{i}")
+        ).alias(c)
+        for i, (c, t) in enumerate(df.dtypes)
+    ])
+    return spark.createDataFrame(safe.collect(), safe.schema)
+
+
+_CREATE_VIEW_NAME = re.compile(
+    r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:MATERIALIZED\s+)?"
+    r"VIEW\s+(?:IF\s+NOT\s+EXISTS\s+)?`?([\w.]+)`?",
+    re.I,
+)
+_CREATE_DATABASE_NAME = re.compile(
+    r"^\s*CREATE\s+(?:REMOTE\s+)?(?:DATABASE|SCHEMA)\s+"
+    r"(?:IF\s+NOT\s+EXISTS\s+)?`?(\w+)`?",
+    re.I,
+)
+
+
+def _record_owner(spark: SparkSession, stmt: str) -> None:
+    """The creator owns a new table, view or database (SQLStd: ALTER/
+    DROP need ownership)."""
+    cm = _CREATE_NAME.match(stmt) or _CREATE_VIEW_NAME.match(stmt)
+    if cm:
+        authz.record_owner(spark, cm.group(1))
+    dbm = _CREATE_DATABASE_NAME.match(stmt)
+    if dbm:
+        authz.record_owner(spark, dbm.group(1) + ".")
+
+
+def _create_macro(spark, res, m, stmt):
+    name, sig, body = m.group(1).lower(), m.group(2), m.group(3)
+    params = [p.strip().split()[0] for p in sig.split(",") if p.strip()]
+    _MACROS.setdefault(id(spark), {})[name] = (params, body.strip())
+
+
+def _drop_macro(spark, res, m, stmt):
+    _MACROS.get(id(spark), {}).pop(m.group(1).lower(), None)
+
+
+def _prepare(spark, res, m, stmt):
+    res.prepared[m.group(1).lower()] = m.group(2).strip()
+
+
+def _metadata_plan(spark: SparkSession, stmt: str) -> DataFrame:
+    """EXPLAIN of a statement the engine runs itself: Hive prints a task
+    tree; this one-row descriptor is the analog."""
+    return spark.createDataFrame(
+        [(f"engine metadata operation: {stmt.split()[0].upper()} ...",)],
+        "plan string",
+    )
+
+
+# statements EXPLAIN ANALYZE must not run (CTAS, INSERT, DROP, …): Hive
+# profiles the plan but the effect is NOT committed — explainanalyze_1.q
+# re-creates the same table for real right after
+_SIDE_EFFECT = re.compile(
+    r"(?i)\s*(CREATE|DROP|ALTER|INSERT|LOAD|TRUNCATE|GRANT|REVOKE|SHOW|USE"
+    r"|DESC|DESCRIBE|ANALYZE|MSCK|SET|EXPORT|IMPORT)\b"
+)
+
+
+def _explain_analyze(spark, res, m, stmt):
+    from hive_spark.plans import explain_analyze
+
+    query = m.group(1)
+    side = _SIDE_EFFECT.match(query)
+    if side:
+        # explain the inner query when there is one; never execute the
+        # command. CTAS / CREATE VIEW AS: the query starts after the
+        # defining AS (a bare SELECT search would capture an unbalanced
+        # WITH-body fragment)
+        kind = side.group(1).upper()
+        qm = None
+        if kind == "CREATE":
+            qm = re.search(r"(?is)\bAS\s+((?:WITH|SELECT)\b.*)$", query)
+        elif kind == "INSERT":
+            qm = re.search(r"(?is)\b((?:WITH|SELECT)\b.*)$", query)
+        if qm is None:
+            return spark.createDataFrame(
+                [(f"side-effect statement ({kind}): plan only",)],
+                "plan string",
+            )
+        query = qm.group(1)
+    elif _statement_row(query)[3]:
+        # an engine-run statement (UPDATE/DELETE/MERGE CoW, …) has no
+        # Spark plan to instrument
+        return _metadata_plan(spark, query)
+    plan = explain_analyze(spark.sql(rewrite_statement(spark, query)))
+    return spark.createDataFrame([(plan,)], "plan string")
+
+
+def _execute(spark, res, m, stmt):
+    name = m.group(1).lower()
+    if name not in res.prepared:
+        raise ValueError(f"EXECUTE of unknown prepared statement {name!r}")
+    args = _parse_literals(spark, m.group(2)) if m.group(2) else []
+    df, rule = _sql_with_retries(
+        spark, rewrite_statement(spark, res.prepared[name]), args
+    )
+    _note_retry(res, rule)
+    return _buffered(spark, df) if df.columns else None
+
+
+_SHOW_LOCKS = re.compile(
+    r"^\s*SHOW\s+LOCKS(?:\s+(?:DATABASE\s+)?`?([\w.]+)`?)?"
+    r"(?:\s+PARTITION\s*\([^)]*\))?(?:\s+EXTENDED)?\s*$",
+    re.I,
+)
+
+
+def _show_locks(spark, res, m, stmt):
+    from hive_spark.txn import list_locks
+
+    wanted = (m.group(1) or "").split(".")[-1].lower()
+    rows = [
+        (r["table"], r["path"], r["holder_pid"], r["holder_alive"])
+        for r in list_locks({
+            k: v for k, v in VERSIONED_TABLES.items()
+            if not wanted or k.lower() == wanted
+        })
+    ]
+    # explicit LOCK TABLE/DATABASE session locks
+    for key, mode in sorted(_EXPLICIT_LOCKS.get(id(spark), {}).items()):
+        name = key.split(":", 1)[1]
+        if not wanted or name.split(".")[-1] == wanted:
+            rows.append((name, mode, os.getpid(), True))
+    return spark.createDataFrame(
+        rows, "table string, path string, holder_pid int, holder_alive boolean"
+    )
+
+
+def _create_scheduled_query(spark, res, m, stmt):
+    from hive_spark.scheduled import ScheduledQueryRegistry
+
+    ScheduledQueryRegistry(spark).create(
+        m.group(2), m.group(3), m.group(4), replace=bool(m.group(1))
+    )
+
+
+def _alter_scheduled_query(spark, res, m, stmt):
+    from hive_spark.scheduled import ScheduledQueryRegistry
+
+    reg = ScheduledQueryRegistry(spark)
+    verb = m.group(2).upper()
+    if verb.startswith("ENABLE"):
+        reg.set_enabled(m.group(1), True)
+    elif verb.startswith("DISABLE"):
+        reg.set_enabled(m.group(1), False)
+    else:  # EXECUTE — run now, surface its results
+        res.results.extend(reg.execute(m.group(1)).results)
+
+
+def _drop_scheduled_query(spark, res, m, stmt):
+    from hive_spark.scheduled import ScheduledQueryRegistry
+
+    ScheduledQueryRegistry(spark).drop(m.group(1))
+
+
+_BANG = re.compile(r"^\s*!\s*(mkdir|rm|rmr|cp|mv|touchz?)\s+(.*)$", re.I | re.S)
+
+
+def _shell(spark, res, m, stmt):
+    # CliDriver `!<cmd>`: the confined local-file subset maps onto the
+    # dfs executor (same /tmp guard); any other shell command raises
+    # rather than silently diverging
+    bm = _BANG.match(stmt)
+    if bm:
+        op = {"touch": "touchz"}.get(bm.group(1).lower(), bm.group(1))
+        stmt = f"dfs -{op} {bm.group(2)}"
+    if not _DFS.match(stmt):
+        raise ValueError(
+            f"shell commands are not executed by the engine: {stmt[:60]!r}"
+        )
+    _exec_dfs(stmt, res)
+
+
+_SOURCE = re.compile(r"^\s*source\s+(\S+)\s*;?\s*$", re.I)
+
+
+def _source(spark, res, m, stmt):
+    # CliDriver `source <file>`: run the referenced script in this
+    # session (results surface like inline statements)
+    spath = m.group(1)
+    if not os.path.isabs(spath) or not os.path.exists(spath):
+        for base in LOAD_DATA_BASES:
+            cand = os.path.normpath(os.path.join(base, spath))
+            if os.path.exists(cand):
+                spath = cand
+                break
+    if not os.path.exists(spath):
+        raise FileNotFoundError(f"source: {m.group(1)}")
+    sub = run_script(spark, open(spath).read())
+    res.results.extend(sub.results)
+    res.skipped.extend(sub.skipped)
+
+
+_RENAME = re.compile(
+    r"^\s*ALTER\s+(TABLE|VIEW)\s+`?([\w.]+)`?\s+RENAME\s+TO\s+"
+    r"`?([\w.]+)`?\s*$",
+    re.I,
+)
+
+
+def _rename_across_databases(spark, res, m, stmt):
+    """Hive moves the metastore entry to another database; Spark refuses
+    a cross-database RENAME."""
+    kind, src, dst = m.group(1).upper(), m.group(2), m.group(3)
+    cur = spark.catalog.currentDatabase()
+    sdb, ddb = (n.rsplit(".", 1)[0] if "." in n else cur for n in (src, dst))
+    if sdb.lower() == ddb.lower():
+        return _DECLINE
+    if kind == "VIEW":
+        # alter_view_rename.q: recreate from the stored view text, then drop
+        vtext = next(
+            (r.data_type
+             for r in spark.sql(f"DESCRIBE TABLE EXTENDED {src}").collect()
+             if r.col_name == "View Text"),
+            None,
+        )
+        if vtext is None:
+            raise ValueError(f"{src} is not a view")
+        spark.sql(f"CREATE VIEW {dst} AS {vtext}")
+        spark.sql(f"DROP VIEW {src}")
+        return None
+    # a table moves copy-on-write, keeping its partition columns
+    parts = [c.name for c in spark.catalog.listColumns(src) if c.isPartition]
+    w = spark.table(src).write
+    if parts:
+        w = w.partitionBy(*parts)
+    w.saveAsTable(dst)
+    spark.sql(f"DROP TABLE `{src.replace('.', '`.`')}`")
+
+
+_LIKE_FILE = re.compile(
+    r"(?i)^\s*CREATE\s+(?:EXTERNAL\s+)?TABLE\s+"
+    r"(IF\s+NOT\s+EXISTS\s+)?`?([\w.]+)`?\s+LIKE\s+FILE\s+"
+    r"(PARQUET|ORC)\s+'([^']+)'\s*"
+    r"(?:PARTITIONED\s+BY\s*\(([^)]*)\))?\s*$"
+)
+
+
+def _create_table_like_file(spark, res, m, stmt):
+    # CREATE TABLE ... LIKE FILE <fmt> '<path>' (HIVE-26395, ref: ql/.../
+    # ddl/table/create/like/): derive the schema by reading the file's
+    # footer. Hive names data files 000000_0; this engine writes
+    # part-*.snappy.* — fall back to any data file in the same directory.
+    ine, name, fmt, fpath, parts = m.groups()
+    fpath = re.sub(r"^(?:file|pfile|hdfs):/+", "/", fpath)
+    if not os.path.exists(fpath):
+        d = os.path.dirname(fpath)
+        cands = [
+            os.path.join(d, f)
+            for f in (os.listdir(d) if os.path.isdir(d) else [])
+            if not f.startswith(("_", "."))
+        ]
+        if not cands:
+            raise FileNotFoundError(fpath)
+        fpath = sorted(cands)[0]
+    ddl = spark.read.format(fmt.lower()).load(fpath).schema.toDDL()
+    pclause = f" PARTITIONED BY ({parts})" if parts else ""
+    spark.sql(
+        f"CREATE TABLE {'IF NOT EXISTS ' if ine else ''}"
+        f"`{name.replace('.', '`.`')}` ({ddl})"
+        f" USING {fmt.lower()}{pclause}"
+    )
+
+
+_DROP_PARTITIONS = re.compile(
+    r"^\s*ALTER\s+TABLE\s+`?([\w.]+)`?\s+DROP\s+"
+    r"(IF\s+EXISTS\s+)?"
+    r"((?:PARTITION\s*\((?:[^()]|\([^()]*\))*\)\s*,?\s*)+)"
+    r"(?:PURGE\s*)?$",
+    re.I,
+)
+
+
+def _drop_partitions(spark, res, m, stmt):
+    table, if_exists = m.group(1), bool(m.group(2))
+    specs = re.findall(
+        r"PARTITION\s*\(((?:[^()]|\([^()]*\))*)\)", m.group(3), re.I
+    )
+    if len(specs) == 1:
+        # single spec: the helper expands Hive partial/comparator forms;
+        # a full equality spec is Spark's
+        if not _drop_partial_partitions(spark, table, specs[0], if_exists):
+            return _DECLINE
+        return None
+    # Hive allows DROP PARTITION (...), PARTITION (...)
+    # (AlterTableDropPartitionAnalyzer: one desc per spec); Spark parses
+    # only one clause — expand each
+    for sp in specs:
+        if not _drop_partial_partitions(spark, table, sp, if_exists):
+            spark.sql(
+                f"ALTER TABLE `{table.replace('.', '`.`')}` DROP "
+                f"{m.group(2) or ''}PARTITION ({sp})"
+            )
+
+
+def _exchange_partition(spark, res, m, stmt):
+    # EXCHANGE PARTITION (ref: ql/.../ddl/table/partition/exchange/
+    # AlterTableExchangePartitionAnalyzer.java): the partition MOVES
+    # source -> destination
+    dst, spec, src = m.groups()
+    cond = " AND ".join(
+        "`{}` = {}".format(
+            k.strip().strip("`"),
+            v.strip() if v.strip()[:1] in "'\"" else "'" + v.strip() + "'",
+        )
+        for k, v in (kv.split("=", 1) for kv in spec.split(","))
+    )
+    spark.table(src).where(cond).write.insertInto(dst, overwrite=False)
+    spark.sql(
+        f"ALTER TABLE `{src.replace('.', '`.`')}` "
+        f"DROP IF EXISTS PARTITION ({spec})"
+    )
+
+
+_DROP_CONSTRAINT = re.compile(
+    r"^\s*ALTER\s+TABLE\s+[\w.`]+\s+DROP\s+CONSTRAINT\s+`?(\w+)`?\s*$", re.I
+)
+
+
+def _drop_constraint(spark, res, m, stmt):
+    c = _CONSTRAINT_NAMES.get(id(spark), {}).pop(m.group(1).lower(), None)
+    reg = CONSTRAINTS.get(id(spark))
+    if reg is not None and c is not None:
+        reg.constraints = [x for x in reg.constraints if x is not c]
+
+
+def _transaction(spark, res, m, stmt):
+    from hive_spark.txn import Transaction
+
+    verb = re.sub(r"\s+", " ", m.group(1)).strip().upper()
+    if verb in ("BEGIN", "START TRANSACTION"):
+        if res.txn is not None and res.txn.active:
+            raise ValueError("transaction already open")
+        res.txn = Transaction(spark, dict(VERSIONED_TABLES)).begin()
+        # repeatable reads: pin every versioned table's view at the BEGIN
+        # version until COMMIT/ROLLBACK
+        for name in VERSIONED_TABLES:
+            if res.txn.pinned_version(name) is not None:
+                res.txn.read(name).createOrReplaceTempView(name)
+    elif res.txn is None or not res.txn.active:
+        raise ValueError(f"{verb} without an open transaction")
+    else:
+        if verb == "COMMIT":
+            res.txn.commit()
+        else:
+            res.txn.rollback()
+        _restore_latest_views(spark)
+
+
+# the statements authz.handle may take (roles, grants, SHOW GRANT/ROLES)
+_AUTHZ_STMT = re.compile(
+    r"^\s*(?:(?:CREATE|DROP|SET)\s+ROLE|SHOW\s+(?:ROLES?|CURRENT\s+ROLES"
+    r"|PRINCIPALS|GRANT)|GRANT|REVOKE)\b",
+    re.I,
+)
+
+
+def _authorization(spark, res, m, stmt):
+    auth = authz.handle(spark, stmt)
+    if auth is None:
+        return _DECLINE
+    if auth is not True and auth.columns:
+        return spark.createDataFrame(auth.collect(), auth.schema)
+    return None
+
+
+def _lock(spark, res, m, stmt):
+    kind, name, mode = m.groups()
+    key = f"{kind.upper()}:{name.lower()}"
+    _EXPLICIT_LOCKS.setdefault(id(spark), {})[key] = mode.upper()
+
+
+def _unlock(spark, res, m, stmt):
+    kind, name = m.groups()
+    locks = _EXPLICIT_LOCKS.get(id(spark), {})
+    locks.pop(f"{kind.upper()}:{name.lower()}", None)
+
+
+def _compact(spark, res, m, stmt):
+    tbl, pspec, ctype = m.groups()
+    _COMPACTIONS.setdefault(id(spark), []).append(
+        (tbl.lower(), (pspec or "").strip(), ctype.lower(), "succeeded")
+    )
+
+
+def _alter_view_partitions(spark, res, m, stmt):
+    view, verb, specs_text = m.groups()
+    vparts = _VIEW_PARTS.setdefault(id(spark), {}).setdefault(view.lower(), [])
+    for sp in re.findall(r"PARTITION\s*\(([^)]*)\)", specs_text, re.I):
+        pname = _part_spec_to_name(sp)
+        if verb.upper() == "ADD" and pname not in vparts:
+            vparts.append(pname)
+        elif verb.upper() == "DROP" and pname in vparts:
+            vparts.remove(pname)
+
+
+_SHOW_PARTITIONS = re.compile(
+    r"^\s*SHOW\s+PARTITIONS\s+`?([\w.]+)`?"
+    r"(?:\s+PARTITION\s*\(([^)]*)\))?\s*$",
+    re.I,
+)
+
+
+def _show_view_partitions(spark, res, m, stmt):
+    views = _VIEW_PARTS.get(id(spark), {})
+    if m.group(1).lower() not in views:
+        try:
+            if spark.catalog.getTable(m.group(1)).tableType != "VIEW":
+                return _DECLINE
+        except Exception:
+            return _DECLINE
+    names = views.get(m.group(1).lower(), [])
+    if m.group(2):
+        want = _part_spec_to_name(m.group(2))
+        names = [p for p in names if want in p.split("/") or p == want]
+    return spark.createDataFrame([(p,) for p in names], "partition string")
+
+
+_SHOW_EXTENDED_PARTITION = re.compile(
+    r"^\s*(SHOW\s+TABLE\s+EXTENDED\s+LIKE\s+`?([\w.]+)`?)\s+"
+    r"PARTITION\s*\(([^)]*)\)\s*$",
+    re.I,
+)
+
+
+def _show_view_partition_extended(spark, res, m, stmt):
+    if m.group(2).lower() not in _VIEW_PARTS.get(id(spark), {}):
+        return _DECLINE
+    # metadata-only view partition: the table-level lines
+    return spark.sql(rewrite_statement(spark, m.group(1)))
+
+
+_DESCRIBE_PARTITION = re.compile(
+    r"^\s*(DESCRIBE|DESC)\s+(FORMATTED\s+|EXTENDED\s+)?"
+    r"`?([\w.]+)`?\s+PARTITION\s*\([^)]*\)\s*$",
+    re.I,
+)
+
+
+def _describe_view_partition(spark, res, m, stmt):
+    if m.group(3).lower() not in _VIEW_PARTS.get(id(spark), {}):
+        return _DECLINE
+    # the view's columns (the partition is metadata-only)
+    return spark.sql(f"DESCRIBE {m.group(2) or ''}`{m.group(3)}`")
+
+
+_DESCRIBE_PATH = re.compile(
+    r"^\s*(?:DESCRIBE|DESC)\s+`?([\w.]+)`?\s+"
+    r"([\w$]+(?:\.[\w$]+)+|\w+\.\$\w+\$)\s*$",
+    re.I,
+)
+
+
+def _describe_nested_column(spark, res, m, stmt):
+    # DESCRIBE tbl col.$elem$/.$key$/.$value$[.field...] — Hive xpath-
+    # style type navigation (describe_xpath.q; ref: ql/.../exec/DDLTask
+    # describeTable with a nested column path). Walk the Spark schema
+    # the same way.
+    from pyspark.sql import types as T
+
+    tbl, path = m.group(1), m.group(2)
+    if "$" not in path:
+        return _DECLINE
+    schema = spark.table(tbl).schema
+    toks = path.split(".")
+    dt = schema[[f.name.lower() for f in schema].index(toks[0].lower())].dataType
+    for tok in toks[1:]:
+        if tok == "$elem$":
+            dt = dt.elementType
+        elif tok == "$key$":
+            dt = dt.keyType
+        elif tok == "$value$":
+            dt = dt.valueType
+        else:
+            dt = dt[[f.name.lower() for f in dt.fields].index(tok.lower())].dataType
+    if isinstance(dt, T.StructType):
+        rows = [(f.name, f.dataType.simpleString(), "from deserializer")
+                for f in dt.fields]
+    else:
+        rows = [(toks[-1], dt.simpleString(), "from deserializer")]
+    return spark.createDataFrame(
+        rows, "col_name string, data_type string, comment string"
+    )
+
+
+_EXPLAIN = re.compile(r"^\s*EXPLAIN\s+([\s\S]*)$", re.I)
+# explain-mode tokens: EXPLAIN CBO/COST/FORMATTED/... of an engine
+# statement describes it the same way (Hive explains every statement kind)
+_EXPLAIN_MODE_TOKEN = re.compile(
+    r"(?i)^\s*(?:CBO|COST|JOINCOST|FORMATTED|EXTENDED|CODEGEN|LOGICAL|AST"
+    r"|DETAIL|REOPTIMIZATION|VECTORIZATION|ONLY|SUMMARY|OPERATOR|EXPRESSION"
+    r"|DEBUG|ANALYZE(?!\s+TABLE\b))\s+"
+)
+
+
+def _explain_engine_statement(spark, res, m, stmt):
+    """EXPLAIN [mode...] <statement the engine runs>, described by the
+    statement's row: "stage" rows answer a plain EXPLAIN with Hive's
+    one-stage summary, and every other engine row (and a "stage" row
+    under a mode token) with the metadata-operation descriptor."""
+    inner, moded = m.group(1), False
+    while (stripped := _EXPLAIN_MODE_TOKEN.sub("", inner, count=1)) != inner:
+        inner, moded = stripped, True
+    explain = _statement_row(inner)[3]
+    if explain == "stage" and not moded:
+        return spark.createDataFrame(
+            [("STAGE DEPENDENCIES:",), ("  Stage-0 is a root stage",)],
+            "Explain string",
+        )
+    return _metadata_plan(spark, inner) if explain else _DECLINE
+
+
+# SHOW [SORTED] COLUMNS ... ['pattern'] (Hive ShowColumnsDesc: LIKE
+# keyword optional; *-glob with | alternation, case-insensitive, output
+# sorted — show_columns.q). The lookahead keeps plain, unpatterned SHOW
+# COLUMNS on Spark's native path.
+_SHOW_COLUMNS = re.compile(
+    r"^(?=\s*SHOW\s+SORTED\b|[^'\"]*['\"])"
+    r"\s*SHOW\s+(SORTED\s+)?COLUMNS\s+(?:FROM|IN)\s+`?([\w.]+)`?"
+    r"(?:\s+(?:FROM|IN)\s+`?([\w]+)`?)?"
+    r"(?:\s+(?:LIKE\s+)?['\"]([^'\"]+)['\"])?\s*$",
+    re.I,
+)
+
+
+def _show_columns_matching(spark, res, m, stmt):
+    tbl = f"{m.group(3)}.{m.group(2)}" if m.group(3) else m.group(2)
+    rx = re.compile(".*")
+    if m.group(4):
+        rx = re.compile("|".join(
+            "^" + re.escape(p.replace("*", "%"))
+            .replace("%", ".*").replace("_", ".") + "$"
+            for p in m.group(4).split("|")
+        ), re.I)
+    names = sorted(
+        (c.name,) for c in spark.catalog.listColumns(tbl) if rx.match(c.name)
+    )
+    return spark.createDataFrame(names, "col_name string")
+
+
+_SHOW_PARTITIONS_FILTERED = re.compile(
+    r"^\s*SHOW\s+PARTITIONS\s+`?([\w.]+)`?"
+    r"(?:\s+PARTITION\s*\(([^)]*)\))?"
+    r"(?:\s+WHERE\s+([\s\S]*?))?"
+    r"(?:\s+ORDER\s+BY\s+([\s\S]*?))?"
+    r"(?:\s+LIMIT\s+(\d+))?\s*$",
+    re.I,
+)
+
+
+def _show_partitions_filtered(spark, res, m, stmt):
+    # SHOW PARTITIONS ... [PARTITION(spec)] [WHERE] [ORDER BY] [LIMIT]
+    # (HIVE-22458 filtered listing, show_partitions2.q): evaluate over
+    # the partition list as string columns — numeric predicates coerce
+    # under non-ANSI comparison, and __HIVE_DEFAULT_PARTITION__ compares
+    # as its literal
+    from urllib.parse import unquote
+
+    tbl, spec, where, order, limit = m.groups()
+    if not (spec or where or order or limit):
+        return _DECLINE
+    raw = [
+        r[0] for r in spark.sql(
+            f"SHOW PARTITIONS `{tbl.replace('.', '`.`')}`"
+        ).collect()
+    ]
+    pnames = [c.name for c in spark.catalog.listColumns(tbl) if c.isPartition]
+    rows = [
+        tuple([unquote(kv.split("=", 1)[1]) for kv in r.split("/")] + [r])
+        for r in raw
+    ]
+    schema = ", ".join(f"`{n}` string" for n in pnames) + ", _raw string"
+    spark.createDataFrame(rows, schema).createOrReplaceTempView(
+        "_hqls_show_parts"
+    )
+    conds = []
+    for kv in (spec.split(",") if spec else []):
+        k, v = kv.split("=", 1)
+        conds.append(f"`{k.strip().strip('`')}` = {v.strip()}")
+    if where:
+        conds.append(f"({where})")
+    sql = "SELECT _raw AS `partition` FROM _hqls_show_parts"
+    if conds:
+        sql += " WHERE " + " AND ".join(conds)
+    if order:
+        sql += f" ORDER BY {order}"
+    if limit:
+        sql += f" LIMIT {limit}"
+    return _buffered(spark, spark.sql(sql))
+
+
+def _show_compactions(spark, res, m, stmt):
+    return spark.createDataFrame(
+        [
+            (str(i + 1), "default", t, p, c, s, "")
+            for i, (t, p, c, s) in enumerate(_COMPACTIONS.get(id(spark), []))
+        ],
+        "compactionid string, dbname string, tabname string,"
+        " partname string, type string, state string, workerid string",
+    )
+
+
+def _show_transactions(spark, res, m, stmt):
+    open_txns = []
+    if res.txn is not None and getattr(res.txn, "active", False):
+        open_txns.append(
+            (str(getattr(res.txn, "txn_id", 1)), "OPEN",
+             authz.current_user(), "localhost")
+        )
+    return spark.createDataFrame(
+        open_txns, "txnid string, state string, user string, host string"
+    )
+
+
+def _skip(spark, res, m, stmt):
+    res.skipped.append(stmt)
+
+
+_ADD_FILES = re.compile(r"(?i)^\s*(ADD|DELETE)\s+FILES?\s+(.+?)\s*$")
+
+
+def _add_resource(spark, res, m, stmt):
+    am = _ADD_FILES.match(stmt)
+    if am:
+        # ADD FILE ships a script to executors (ref: ql/ SessionState
+        # add_resource); here the executor IS local, so record basename
+        # -> resolved path and let the TRANSFORM USING rewrite
+        # absolutize commands
+        files = _ADDED_FILES.setdefault(id(spark), {})
+        for p in am.group(2).split():
+            base = os.path.basename(p.rstrip("/"))
+            if am.group(1).upper() == "DELETE":
+                files.pop(base, None)
+                continue
+            cand = p
+            hm = re.match(r"(?i)^hdfs:/+(.*)$", cand)
+            if hm:
+                # qtest "HDFS" absolute paths live under qtest scratch
+                # (same mapping as _exec_dfs), except the /tmp/ subtree
+                # which stays host
+                rest = "/" + hm.group(1)
+                cand = (
+                    rest if rest.startswith("/tmp/")
+                    else os.path.normpath(QTEST_TMP + rest)
+                )
+            if not os.path.isabs(cand) or not os.path.exists(cand):
+                for b in LOAD_DATA_BASES:
+                    c2 = os.path.normpath(os.path.join(b, p))
+                    if os.path.exists(c2):
+                        cand = c2
+                        break
+            if os.path.exists(cand):
+                files[base] = os.path.abspath(cand)
+    res.skipped.append(stmt)
+
+
+def _create_materialized_view(spark, res, m, stmt):
+    _record_owner(spark, stmt)
+    name, query = m.group(1), m.group(3)
+    sql = rewrite_statement(spark, query)
+    if not (re.search(r"(?i)IF\s+NOT\s+EXISTS", stmt)
+            and spark.catalog.tableExists(name)):
+        spark.sql(sql).write.mode("overwrite").saveAsTable(name)
+    _MV_DEFS.setdefault(id(spark), {})[name.lower()] = sql
+
+
+def _drop_materialized_view(spark, res, m, stmt):
+    spark.sql(f"DROP TABLE IF EXISTS `{m.group(1)}`")
+    _MV_DEFS.get(id(spark), {}).pop(m.group(1).lower(), None)
+
+
+def _show_materialized_views(spark, res, m, stmt):
+    names = sorted(_MV_DEFS.get(id(spark), {}))
+    return spark.createDataFrame(
+        [(n, "Yes", "Manual refresh") for n in names],
+        "mv_name string, rewrite_enabled string, mode string",
+    )
+
+
+def _rebuild_materialized_view(spark, res, m, stmt):
+    sql = _MV_DEFS.get(id(spark), {}).get(m.group(1).lower())
+    if sql is None:
+        raise ValueError(f"REBUILD of unknown materialized view {m.group(1)!r}")
+    spark.sql(sql).write.mode("overwrite").saveAsTable(m.group(1))
+
+
+_FROM_INSERT = re.compile(r"(?is)^\s*FROM\s+([\s\S]*?)(\bINSERT\b[\s\S]*)$")
+
+
+def _multi_insert_with_directories(spark, res, m, stmt):
+    # FROM <src> INSERT ... with DIRECTORY sinks mixed in: Spark runs the
+    # TABLE multi-insert natively but refuses Hive-format DIRECTORY
+    # sinks — peel those off and run each through the directory writer
+    # (FROM-first SELECT keeps the shared source)
+    head, tail = m.groups()
+    if not re.search(r"(?i)INSERT\s+OVERWRITE\s+(?:LOCAL\s+)?DIRECTORY", tail):
+        return _DECLINE
+    starts = [s for s, _ in _top_level_spans(tail, r"\bINSERT\b")]
+    kept = []
+    for s, e in zip(starts, starts[1:] + [len(tail)]):
+        cl = tail[s:e].strip()
+        dm = _INSERT_DIR.match(cl)
+        if dm:
+            q = f"FROM {head} {dm.group(5)}"
+            _exec_insert_directory(
+                spark, res, _INSERT_DIR.match(cl[: dm.start(5)] + q) or dm, cl
+            )
+        else:
+            kept.append(cl)
+    if kept:
+        spark.sql(rewrite_statement(spark, f"FROM {head} " + " ".join(kept)))
+    return None
+
+
+# TRUNCATE TABLE t COLUMNS (c1, c2): Hive clears the named columns' data
+# (list-bucketing feature, ref: ql/.../ddl/table/misc/truncate) — CoW
+# null-out of those columns
+_TRUNCATE_COLUMNS = re.compile(
+    r"(?i)^\s*TRUNCATE\s+TABLE\s+`?([\w.]+)`?"
+    r"(?:\s+PARTITION\s*\([^)]*\))?\s+COLUMNS\s*\(([^)]*)\)\s*$"
+)
+
+
+def _truncate_columns(spark, res, m, stmt):
+    from pyspark.sql import functions as F
+
+    table = m.group(1)
+    cols = {c.strip().strip("`").lower() for c in m.group(2).split(",")}
+    df = spark.table(table)
+    _rewrite_table_inplace(spark, table, df.select(*[
+        F.lit(None).cast(dict(df.dtypes)[c]).alias(c)
+        if c.lower() in cols else F.col(c)
+        for c in df.columns
+    ]))
+
+
+# SHOW CREATE DATABASE (Hive DDL Spark lacks): rebuild the statement from
+# the catalog's database metadata
+_SHOW_CREATE_DATABASE = re.compile(
+    r"(?i)^\s*SHOW\s+CREATE\s+(?:DATABASE|SCHEMA)\s+`?([\w]+)`?\s*$"
+)
+
+
+def _show_create_database(spark, res, m, stmt):
+    db = spark.catalog.getDatabase(m.group(1))
+    text = f"CREATE DATABASE `{db.name}`"
+    if db.description:
+        text += f"\nCOMMENT\n  '{db.description}'"
+    text += f"\nLOCATION\n  '{db.locationUri}'"
+    return spark.createDataFrame([(text,)], "createdb_stmt string")
+
+
+_RESET = re.compile(r"(?i)^\s*RESET(?:\s+(-d\s+)?([\w.\s$:]+?))?\s*$")
+
+
+def _reset(spark, res, m, stmt):
+    # Hive RESET / RESET -d key... (SetProcessor): drop the session
+    # overrides; Spark's RESET grammar rejects the -d flag and dotted
+    # hive keys, so handle it here
+    keys = (m.group(2) or "").split()
+    if not keys:
+        # bare RESET restores EVERY overridden conf (Hive SetProcessor),
+        # not just the recorded-key dict — un-apply each conf this
+        # session actually set
+        keys = list(res.set_commands)
+        res.set_commands.clear()
+    for key in keys:
+        res.set_commands.pop(key, None)
+        try:
+            spark.sql(f"RESET `{key}`")
+        except Exception:
+            pass
+
+
+def _set(spark, res, m, stmt):
+    if m.group(2) is None:
+        return _DECLINE  # a bare `SET key` echoes the value: Spark's job
+    key, val = m.group(1), m.group(2).strip()
+    res.set_commands[key] = val
+    # qtests set fs.default.name=invalidscheme:/// to prove metadata-only
+    # ops never touch the FS; Spark propagates session conf into the
+    # Hadoop conf of every file source, so applying it poisons all later
+    # reads in the session. This runtime is always local-FS — record,
+    # don't apply.
+    if key.lower() in ("fs.default.name", "fs.defaultfs"):
+        return None
+    try:
+        spark.conf.set(key, val)
+    except Exception:
+        pass  # hive-only knob: recorded above, nothing to set
+    return None
+
+
+# CREATE TEMPORARY FUNCTION over a class this engine serves natively
+# (dboutput folds at call sites) — registration no-op
+_DBOUTPUT = re.compile(r"(?i)^\s*CREATE\s+TEMPORARY\s+FUNCTION\s+dboutput\s+AS\b")
+_DESCRIBE_FUNCTION = re.compile(
+    r"^\s*DESC(?:RIBE)?\s+FUNCTION\s+(?:EXTENDED\s+)?`?(\w+)`?\s*$", re.I
+)
+
+
+def _describe_folded_function(spark, res, m, stmt):
+    # engine-folded functions aren't in Spark's catalog; answer the way
+    # FunctionRegistry would
+    name = m.group(1).lower()
+    if not (name in _ENGINE_FOLDED_FNS or name in _MACROS.get(id(spark), {})
+            or name in _FUNC_FOLDS.get(id(spark), {})):
+        return _DECLINE
+    return spark.createDataFrame(
+        [(f"{name} is an engine-folded function "
+          f"(rewritten inline at parse time)",)],
+        "tab_name string",
+    )
+
+
+def _describe_missing_function(spark, res, m, stmt):
+    # Hive's DESCRIBE FUNCTION on an unknown name is not an error — it
+    # prints this row and the script continues (ref:
+    # DescFunctionOperation.java, golden udf_stddev_pop.q.out)
+    if spark.catalog.functionExists(m.group(1)):
+        return _DECLINE
+    return spark.createDataFrame(
+        [(f"Function '{m.group(1)}' does not exist.",)], "tab_name string"
+    )
+
+
+def _create_matchpath_alias(spark, res, m, stmt):
+    # a user-registered alias of the MatchPath PTF (ptf_register_tblfn.q)
+    if "MatchPath" not in m.group(2):
+        return _DECLINE
+    _MATCHPATH_FNS.setdefault(id(spark), {"matchpath"}).add(m.group(1).lower())
+    return None
+
+
+def _create_folded_function(spark, res, m, stmt):
+    if m.group(2) not in _FUNCTION_CLASS_FOLDS:
+        return _DECLINE
+    _FUNC_FOLDS.setdefault(id(spark), {})[m.group(1).lower()] = (
+        _FUNCTION_CLASS_FOLDS[m.group(2)]
+    )
+    return None
+
+
+def _drop_folded_function(spark, res, m, stmt):
+    if _FUNC_FOLDS.get(id(spark), {}).pop(m.group(1).lower(), None) is None:
+        return _DECLINE
+    return None
+
+
+def _drop_matchpath_alias(spark, res, m, stmt):
+    names = _MATCHPATH_FNS.get(id(spark), set())
+    if m.group(1).lower() not in names:
+        return _DECLINE
+    names.discard(m.group(1).lower())
+    return None
+
+
+_ANY = re.compile("")
+# DefaultStorageHandler is Hive's no-op handler — the table behaves
+# exactly like a managed table (ref: ql/.../metadata/
+# DefaultStorageHandler.java); the clause is dropped
+_DEFAULT_STORAGE_HANDLER = re.compile(
+    r"(?is)\bSTORED\s+BY\s+'org\.apache\.hadoop\.hive\.ql\."
+    r"metadata\.DefaultStorageHandler'"
+    r"(\s+WITH\s+SERDEPROPERTIES\s*\((?:[^()]|\([^()]*\))*\))?"
+)
+# Hive: dynamic-partition INSERT OVERWRITE replaces only the partitions
+# the query produces (FileSinkOperator with hive.exec.dynamic.partition);
+# Spark's STATIC mode would truncate the whole table first
+_DYNAMIC_OVERWRITE = re.compile(
+    r"(?i)^\s*INSERT\s+OVERWRITE\s+(?:TABLE\s+)?[\w.`]+\s*"
+    r"PARTITION\s*\(([^)]*)\)"
+)
+
+
+def _exec_sql(spark, res, m, stmt):
+    """Every statement no other row takes: the HiveQL rewrites, then
+    spark.sql with the error retries."""
+    from hive_spark.sources import jdbc_handler as _jh
+
+    _record_owner(spark, stmt)
+    stmt = _DEFAULT_STORAGE_HANDLER.sub("", stmt)
+    if re.search(r"STORED\s+BY\b", stmt, re.I) \
+            and _jh.try_create_jdbc_table(spark, stmt):
+        return None
+    if _jh.HANDLER_TABLES and (
+        _jh.try_insert_handler_table(spark, stmt)
+        or _jh.try_alter_handler_table(spark, stmt)
+        or _jh.try_drop_handler_table(spark, stmt)
+    ):
+        return None
+    if (
+        res.set_commands.get("hive.support.quoted.identifiers", "").lower()
+        == "none"
+        and re.search(r"`[^`]+`", stmt)
+    ):
+        stmt = _expand_regex_columns(spark, stmt)
+    mp_names = _MATCHPATH_FNS.get(id(spark), {"matchpath"})
+    if any(re.search(rf"(?i)\b{n}\s*\(\s*on\b", stmt) for n in mp_names):
+        stmt = _exec_matchpath_ptf(spark, stmt, mp_names)
+    rewritten = rewrite_statement(spark, stmt)
+    # hive.optimize.cte.materialize.threshold: spool WITH-CTEs referenced
+    # >= threshold times (ref: TableScanToSpoolRule; default 3 per
+    # HiveConf.java:2686; <= 0 disables)
+    try:
+        cte_thresh = int(res.set_commands.get(
+            "hive.optimize.cte.materialize.threshold", "3"
+        ))
+    except ValueError:
+        cte_thresh = 3
+    if cte_thresh > 0:
+        from hive_spark.plans.cte_spool import spool_ctes
+
+        rewritten = spool_ctes(spark, rewritten, cte_thresh)
+    # scope dynamic partition overwrite to the statement
+    dm = _DYNAMIC_OVERWRITE.match(rewritten)
+    prev_mode = None
+    if dm and any("=" not in kv for kv in dm.group(1).split(",") if kv.strip()):
+        prev_mode = spark.conf.get(
+            "spark.sql.sources.partitionOverwriteMode", "STATIC"
+        )
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    try:
+        df, rule = _sql_with_retries(spark, rewritten)
+        _note_retry(res, rule)
+    finally:
+        if prev_mode is not None:
+            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    # statements with a result shape (SELECT/SHOW/...)
+    return _buffered(spark, df) if df.columns else None
+
+
+# Rows in the order they are tried; the first whose pattern matches and
+# whose handler does not decline takes the statement. `explain` says how
+# EXPLAIN [mode] <statement> and EXPLAIN ANALYZE <statement> describe
+# it: None hands the EXPLAIN to Spark, "metadata" answers with the
+# metadata-operation descriptor, and "stage" answers a plain EXPLAIN with
+# Hive's one-stage summary (and a moded one with the descriptor). Adding
+# a statement kind means one row here plus one case in
+# tests/test_hqlscript.py's _STATEMENT_CASES naming the row.
+_STATEMENTS = (
+    ("create_macro", _CREATE_MACRO, _create_macro, "stage"),
+    ("drop_macro", _DROP_MACRO, _drop_macro, "stage"),
+    ("prepare", _PREPARE, _prepare, "metadata"),
+    ("explain_analyze", _EXPLAIN_ANALYZE, _explain_analyze, None),
+    ("execute", _EXECUTE, _execute, "metadata"),
+    ("show_locks", _SHOW_LOCKS, _show_locks, "stage"),
+    ("create_scheduled_query", _SCHED_CREATE, _create_scheduled_query, None),
+    ("alter_scheduled_query", _SCHED_ALTER, _alter_scheduled_query, None),
+    ("drop_scheduled_query", _SCHED_DROP, _drop_scheduled_query, None),
+    ("shell", _SHELL, _shell, None),
+    ("source", _SOURCE, _source, None),
+    ("rename_across_databases", _RENAME, _rename_across_databases, None),
+    ("create_table_like_file", _LIKE_FILE, _create_table_like_file, None),
+    ("drop_partitions", _DROP_PARTITIONS, _drop_partitions, "metadata"),
+    ("exchange_partition", _EXCHANGE_PARTITION, _exchange_partition,
+     "metadata"),
+    ("export", _EXPORT_STMT, _exec_export, "metadata"),
+    ("import", _IMPORT_STMT, _exec_import, "metadata"),
+    ("add_constraint", _ADD_CONSTRAINT, _exec_add_constraint, "metadata"),
+    ("drop_constraint", _DROP_CONSTRAINT, _drop_constraint, None),
+    ("transaction", _TXN, _transaction, None),
+    ("authorization", _AUTHZ_STMT, _authorization, "stage"),
+    ("lock", _LOCK_STMT, _lock, "metadata"),
+    ("unlock", _UNLOCK_STMT, _unlock, "metadata"),
+    ("compact", _COMPACT_STMT, _compact, "metadata"),
+    ("alter_view_partitions", _ALTER_VIEW_PART, _alter_view_partitions, None),
+    ("show_view_partitions", _SHOW_PARTITIONS, _show_view_partitions,
+     "metadata"),
+    ("show_view_partition_extended", _SHOW_EXTENDED_PARTITION,
+     _show_view_partition_extended, None),
+    ("describe_view_partition", _DESCRIBE_PARTITION, _describe_view_partition,
+     None),
+    ("describe_nested_column", _DESCRIBE_PATH, _describe_nested_column, None),
+    ("explain_engine_statement", _EXPLAIN, _explain_engine_statement, None),
+    ("show_columns_matching", _SHOW_COLUMNS, _show_columns_matching, "stage"),
+    ("show_partitions_filtered", _SHOW_PARTITIONS_FILTERED,
+     _show_partitions_filtered, "stage"),
+    ("show_compactions", re.compile(r"^\s*SHOW\s+COMPACTIONS\b", re.I),
+     _show_compactions, "stage"),
+    ("show_transactions", re.compile(r"^\s*SHOW\s+TRANSACTIONS\s*$", re.I),
+     _show_transactions, "metadata"),
+    ("add_resource", _ADD, _add_resource, None),
+    ("metadata_noop", _METADATA_NOOP, _skip, "metadata"),
+    ("explain_special", _EXPLAIN_SPECIAL, _exec_explain_special, None),
+    ("create_materialized_view", _CREATE_MV, _create_materialized_view, None),
+    ("drop_materialized_view", _DROP_MV, _drop_materialized_view, "metadata"),
+    ("show_materialized_views", _SHOW_MVS, _show_materialized_views, None),
+    ("rebuild_materialized_view", _REBUILD_MV, _rebuild_materialized_view,
+     "metadata"),
+    ("create_external_complex_text", _CREATE_EXT_TEXT,
+     _exec_create_external_complex_text, None),
+    ("insert_directory", _INSERT_DIR, _exec_insert_directory, None),
+    ("multi_insert_with_directories", _FROM_INSERT,
+     _multi_insert_with_directories, None),
+    ("update_columns", _ALTER_UPDATE_COLS, _exec_update_columns, "metadata"),
+    ("alter_columns", re.compile(r"^\s*ALTER\s+TABLE\b", re.I),
+     _exec_alter_columns, None),
+    ("truncate_columns", _TRUNCATE_COLUMNS, _truncate_columns, None),
+    ("show_create_database", _SHOW_CREATE_DATABASE, _show_create_database,
+     "metadata"),
+    ("reset", _RESET, _reset, None),
+    ("set", _SET, _set, None),
+    ("load_data", _LOAD_DATA, _exec_load_data, None),
+    ("register_dboutput", _DBOUTPUT, _skip, None),
+    ("describe_folded_function", _DESCRIBE_FUNCTION, _describe_folded_function,
+     None),
+    ("describe_missing_function", _DESCRIBE_FUNCTION,
+     _describe_missing_function, None),
+    ("create_matchpath_alias", _CREATE_FUNCTION_CLASS, _create_matchpath_alias,
+     None),
+    ("create_folded_function", _CREATE_FUNCTION_CLASS, _create_folded_function,
+     None),
+    ("drop_folded_function", _DROP_FUNCTION, _drop_folded_function, None),
+    ("drop_matchpath_alias", _DROP_FUNCTION, _drop_matchpath_alias, None),
+    ("update", _UPDATE_STMT, _exec_update, "metadata"),
+    ("delete", _DELETE_STMT, _exec_delete, "metadata"),
+    ("insert_versioned", _INSERT_STMT, _exec_insert_versioned, None),
+    ("truncate_versioned", _TRUNCATE_STMT, _exec_truncate_versioned, None),
+    ("merge", _MERGE_HEAD, _exec_merge, "metadata"),
+    ("sql", _ANY, _exec_sql, None),
+)
+
+
+def _statement_row(stmt: str):
+    """The first _STATEMENTS row whose pattern matches `stmt` (the "sql"
+    row when no other does); EXPLAIN reads its `explain` column."""
+    return next(row for row in _STATEMENTS if row[1].match(stmt))
 
 
 def run_script(spark: SparkSession, text: str) -> ScriptResult:
@@ -6662,1164 +7720,22 @@ def run_script(spark: SparkSession, text: str) -> ScriptResult:
             stmt = _substitute_vars(stmt, res)
             # privilege enforcement FIRST (no-op unless
             # hive.security.authorization.enabled=true), before ANY
-            # handler can run the statement — checking later in the
-            # chain let EXPLAIN ANALYZE (which executes), EXECUTE of
-            # prepared statements, partition DDL, EXPORT/IMPORT and
-            # LOAD DATA bypass enforcement (r6 ADVICE; Hive authorizes
-            # at compile time in SQLStdHiveAuthorizationValidator)
-            from hive_spark import authz
-
+            # handler can run the statement — checking later let EXPLAIN
+            # ANALYZE (which executes), EXECUTE of prepared statements,
+            # partition DDL, EXPORT/IMPORT and LOAD DATA bypass
+            # enforcement (r6 ADVICE; Hive authorizes at compile time in
+            # SQLStdHiveAuthorizationValidator)
             authz.check_statement(spark, stmt, prepared=res.prepared)
-            m = _CREATE_MACRO.match(stmt)
-            if m:
-                name, sig, body = m.group(1).lower(), m.group(2), m.group(3)
-                params = [
-                    p.strip().split()[0] for p in sig.split(",") if p.strip()
-                ]
-                _MACROS.setdefault(id(spark), {})[name] = (params, body.strip())
-                continue
-            m = _DROP_MACRO.match(stmt)
-            if m:
-                _MACROS.get(id(spark), {}).pop(m.group(1).lower(), None)
-                continue
-            m = _PREPARE.match(stmt)
-            if m:
-                res.prepared[m.group(1).lower()] = m.group(2).strip()
-                continue
-            m = _EXPLAIN_ANALYZE.match(stmt)
-            if m:
-                inner_stmt = m.group(1)
-                # engine-executed DML (UPDATE/DELETE/MERGE CoW) has no
-                # Spark plan to instrument — same one-row descriptor the
-                # plain-EXPLAIN dialect route emits (Hive ExplainTask
-                # renders a task tree either way)
-                if (
-                    (_UPDATE_STMT.match(inner_stmt)
-                     and not re.match(r"(?i)^\s*UPDATE\s+STATISTICS\b",
-                                      inner_stmt))
-                    or _DELETE_STMT.match(inner_stmt)
-                    or _match_merge(inner_stmt) is not None
-                ):
-                    res.results.append(
-                        spark.createDataFrame(
-                            [(f"engine metadata operation: "
-                              f"{inner_stmt.split()[0].upper()} ...",)],
-                            "plan string",
-                        )
-                    )
+            for name, pattern, handler, _explain in _STATEMENTS:
+                m = pattern.match(stmt)
+                if m is None:
                     continue
-                # statements with side effects (CTAS, INSERT, DROP, …):
-                # Hive's EXPLAIN ANALYZE profiles the plan but the DDL
-                # effect is NOT committed — explainanalyze_1.q re-creates
-                # the same table for real right after. Explain the inner
-                # SELECT when there is one; never execute the command.
-                ddl_m = re.match(
-                    r"(?i)\s*(CREATE|DROP|ALTER|INSERT|LOAD|TRUNCATE"
-                    r"|GRANT|REVOKE|SHOW|USE|DESC|DESCRIBE|ANALYZE"
-                    r"|MSCK|SET|EXPORT|IMPORT)\b",
-                    inner_stmt,
-                )
-                if ddl_m:
-                    kind = ddl_m.group(1).upper()
-                    sel_text = None
-                    if kind == "CREATE":
-                        # CTAS / CREATE VIEW AS: the query starts after
-                        # the defining AS (a bare SELECT search would
-                        # capture an unbalanced WITH-body fragment)
-                        am2 = re.search(
-                            r"(?is)\bAS\s+((?:WITH|SELECT)\b.*)$", inner_stmt
-                        )
-                        sel_text = am2.group(1) if am2 else None
-                    elif kind == "INSERT":
-                        sm2 = re.search(
-                            r"(?is)\b(?:WITH|SELECT)\b.*$", inner_stmt
-                        )
-                        sel_text = sm2.group(0) if sm2 else None
-                    plan_txt = f"side-effect statement ({kind}): plan only"
-                    if sel_text:
-                        from hive_spark.plans import explain_analyze
-
-                        plan_txt = explain_analyze(
-                            spark.sql(rewrite_statement(spark, sel_text))
-                        )
-                    res.results.append(
-                        spark.createDataFrame([(plan_txt,)], "plan string")
-                    )
-                    continue
-                from hive_spark.plans import explain_analyze
-
-                text_plan = explain_analyze(
-                    spark.sql(rewrite_statement(spark, inner_stmt))
-                )
-                res.results.append(
-                    spark.createDataFrame([(text_plan,)], "plan string")
-                )
-                continue
-            m = _EXECUTE.match(stmt)
-            if m:
-                name = m.group(1).lower()
-                if name not in res.prepared:
-                    raise ValueError(f"EXECUTE of unknown prepared statement {name!r}")
-                args = _parse_literals(spark, m.group(2)) if m.group(2) else []
-                df, rule = _sql_with_retries(
-                    spark, rewrite_statement(spark, res.prepared[name]), args
-                )
-                if rule:
-                    res.retries.append((idx, rule))
-                if df.columns:
-                    res.results.append(
-                        spark.createDataFrame(df.collect(), df.schema)
-                    )
-                continue
-            m = re.match(
-                r"^\s*SHOW\s+LOCKS(?:\s+(?:DATABASE\s+)?`?([\w.]+)`?)?"
-                r"(?:\s+PARTITION\s*\([^)]*\))?(?:\s+EXTENDED)?\s*$",
-                stmt,
-                re.I,
-            )
-            if m:
-                from hive_spark.txn import list_locks
-
-                wanted = (m.group(1) or "").split(".")[-1].lower()
-                rows = list_locks(
-                    {
-                        k: v
-                        for k, v in VERSIONED_TABLES.items()
-                        if not wanted or k.lower() == wanted
-                    }
-                    if wanted
-                    else VERSIONED_TABLES
-                )
-                lock_rows = [
-                    (
-                        r["table"],
-                        r["path"],
-                        r["holder_pid"],
-                        r["holder_alive"],
-                    )
-                    for r in rows
-                ]
-                # explicit LOCK TABLE/DATABASE session locks
-                for key, mode in sorted(
-                    _EXPLICIT_LOCKS.get(id(spark), {}).items()
-                ):
-                    _kind, name = key.split(":", 1)
-                    if wanted and name.split(".")[-1] != wanted:
-                        continue
-                    lock_rows.append((name, mode, os.getpid(), True))
-                res.results.append(
-                    spark.createDataFrame(
-                        lock_rows,
-                        "table string, path string, holder_pid int, holder_alive boolean",
-                    )
-                )
-                continue
-            m = _SCHED_CREATE.match(stmt)
-            if m:
-                from hive_spark.scheduled import ScheduledQueryRegistry
-
-                ScheduledQueryRegistry(spark).create(
-                    m.group(2), m.group(3), m.group(4), replace=bool(m.group(1))
-                )
-                continue
-            m = _SCHED_ALTER.match(stmt)
-            if m:
-                from hive_spark.scheduled import ScheduledQueryRegistry
-
-                reg = ScheduledQueryRegistry(spark)
-                verb = m.group(2).upper()
-                if verb.startswith("ENABLE"):
-                    reg.set_enabled(m.group(1), True)
-                elif verb.startswith("DISABLE"):
-                    reg.set_enabled(m.group(1), False)
-                else:  # EXECUTE — run now, surface its results
-                    out = reg.execute(m.group(1))
-                    res.results.extend(out.results)
-                continue
-            m = _SCHED_DROP.match(stmt)
-            if m:
-                from hive_spark.scheduled import ScheduledQueryRegistry
-
-                ScheduledQueryRegistry(spark).drop(m.group(1))
-                continue
-            if _DFS.match(stmt):
-                _exec_dfs(stmt, res)
-                continue
-            m = re.match(r"^\s*source\s+(\S+)\s*;?\s*$", stmt, re.I)
-            if m:
-                # CliDriver `source <file>`: run the referenced script in
-                # this session (results surface like inline statements)
-                spath = m.group(1)
-                if not os.path.isabs(spath) or not os.path.exists(spath):
-                    for base in LOAD_DATA_BASES:
-                        cand = os.path.normpath(os.path.join(base, spath))
-                        if os.path.exists(cand):
-                            spath = cand
-                            break
-                if not os.path.exists(spath):
-                    raise FileNotFoundError(f"source: {m.group(1)}")
-                sub = run_script(spark, open(spath).read())
-                res.results.extend(sub.results)
-                res.skipped.extend(sub.skipped)
-                continue
-            m = re.match(
-                r"^\s*ALTER\s+TABLE\s+`?([\w.]+)`?\s+RENAME\s+TO\s+"
-                r"`?([\w.]+)`?\s*$",
-                stmt,
-                re.I,
-            )
-            if m and "." in m.group(1) + m.group(2):
-                cur = spark.catalog.currentDatabase()
-                sdb = (m.group(1).rsplit(".", 1) + [""])[0] \
-                    if "." in m.group(1) else cur
-                ddb = (m.group(2).rsplit(".", 1) + [""])[0] \
-                    if "." in m.group(2) else cur
-                if sdb.lower() != ddb.lower():
-                    # cross-database RENAME (Hive moves the metastore
-                    # entry; Spark refuses) -> CoW move
-                    src_t, dst_t = m.group(1), m.group(2)
-                    df = spark.table(src_t)
-                    parts = [
-                        c.name
-                        for c in spark.catalog.listColumns(src_t)
-                        if c.isPartition
-                    ]
-                    w = df.write
-                    if parts:
-                        w = w.partitionBy(*parts)
-                    w.saveAsTable(dst_t)
-                    spark.sql(
-                        f"DROP TABLE `{src_t.replace('.', '`.`')}`"
-                    )
-                    continue
-            m = re.match(
-                r"^\s*ALTER\s+VIEW\s+`?([\w.]+)`?\s+RENAME\s+TO\s+"
-                r"`?([\w.]+)`?\s*$",
-                stmt,
-                re.I,
-            )
-            if m and "." in m.group(1) + m.group(2):
-                cur = spark.catalog.currentDatabase()
-                sdb = m.group(1).rsplit(".", 1)[0] if "." in m.group(1) else cur
-                ddb = m.group(2).rsplit(".", 1)[0] if "." in m.group(2) else cur
-                if sdb.lower() != ddb.lower():
-                    # cross-database view RENAME (alter_view_rename.q):
-                    # Hive re-homes the metastore entry; Spark refuses —
-                    # recreate from the stored view text, then drop
-                    src_v, dst_v = m.group(1), m.group(2)
-                    vtext = next(
-                        (r.data_type
-                         for r in spark.sql(
-                             f"DESCRIBE TABLE EXTENDED {src_v}"
-                         ).collect()
-                         if r.col_name == "View Text"),
-                        None,
-                    )
-                    if vtext is None:
-                        raise ValueError(f"{src_v} is not a view")
-                    spark.sql(f"CREATE VIEW {dst_v} AS {vtext}")
-                    spark.sql(f"DROP VIEW {src_v}")
-                    continue
-            m = re.match(
-                r"(?i)^\s*CREATE\s+(?:EXTERNAL\s+)?TABLE\s+"
-                r"(IF\s+NOT\s+EXISTS\s+)?`?([\w.]+)`?\s+LIKE\s+FILE\s+"
-                r"(PARQUET|ORC)\s+'([^']+)'\s*"
-                r"(?:PARTITIONED\s+BY\s*\(([^)]*)\))?\s*$",
-                stmt,
-            )
-            if m:
-                # CREATE TABLE ... LIKE FILE <fmt> '<path>' (HIVE-26395,
-                # ref: ql/.../ddl/table/create/like/): derive the schema
-                # by reading the file's footer. Hive names data files
-                # 000000_0; this engine writes part-*.snappy.* — fall
-                # back to any data file in the same directory.
-                ine, name, fmt, fpath, parts = m.groups()
-                fpath = re.sub(r"^(?:file|pfile|hdfs):/+", "/", fpath)
-                if not os.path.exists(fpath):
-                    d = os.path.dirname(fpath)
-                    cands = [
-                        os.path.join(d, f)
-                        for f in (os.listdir(d) if os.path.isdir(d) else [])
-                        if not f.startswith(("_", "."))
-                    ]
-                    if not cands:
-                        raise FileNotFoundError(fpath)
-                    fpath = sorted(cands)[0]
-                ddl = spark.read.format(fmt.lower()).load(fpath).schema.toDDL()
-                pclause = f" PARTITIONED BY ({parts})" if parts else ""
-                spark.sql(
-                    f"CREATE TABLE {'IF NOT EXISTS ' if ine else ''}"
-                    f"`{name.replace('.', '`.`')}` ({ddl})"
-                    f" USING {fmt.lower()}{pclause}"
-                )
-                continue
-            m = re.match(
-                r"^\s*ALTER\s+TABLE\s+`?([\w.]+)`?\s+DROP\s+"
-                r"(IF\s+EXISTS\s+)?"
-                r"((?:PARTITION\s*\((?:[^()]|\([^()]*\))*\)\s*,?\s*)+)"
-                r"(?:PURGE\s*)?$",
-                stmt,
-                re.I,
-            )
-            if m:
-                specs = re.findall(
-                    r"PARTITION\s*\(((?:[^()]|\([^()]*\))*)\)",
-                    m.group(3), re.I,
-                )
-                if len(specs) == 1:
-                    # single spec: helper expands Hive partial/comparator
-                    # forms; a full equality spec falls through to Spark
-                    if _drop_partial_partitions(
-                        spark, m.group(1), specs[0],
-                        if_exists=bool(m.group(2)),
-                    ):
-                        continue
-                else:
-                    # Hive allows DROP PARTITION (...), PARTITION (...)
-                    # (AlterTableDropPartitionAnalyzer: one desc per
-                    # spec); Spark parses only one clause — expand each
-                    tbl_q = m.group(1).replace(".", "`.`")
-                    for sp in specs:
-                        if not _drop_partial_partitions(
-                            spark, m.group(1), sp,
-                            if_exists=bool(m.group(2)),
-                        ):
-                            spark.sql(
-                                f"ALTER TABLE `{tbl_q}` DROP "
-                                f"{m.group(2) or ''}PARTITION ({sp})"
-                            )
-                    continue
-            m = _EXCHANGE_PARTITION.match(stmt)
-            if m:
-                # EXCHANGE PARTITION (ref: ql/.../ddl/table/partition/
-                # exchange/AlterTableExchangePartitionAnalyzer.java): the
-                # partition MOVES source -> destination
-                dst, spec, src = m.groups()
-                cond = " AND ".join(
-                    "`{}` = {}".format(
-                        k.strip().strip("`"),
-                        v.strip()
-                        if v.strip()[:1] in "'\""
-                        else "'" + v.strip() + "'",
-                    )
-                    for k, v in (
-                        kv.split("=", 1) for kv in spec.split(",")
-                    )
-                )
-                moved = spark.table(src).where(cond)
-                moved.write.insertInto(dst, overwrite=False)
-                spark.sql(
-                    f"ALTER TABLE `{src.replace('.', '`.`')}` "
-                    f"DROP IF EXISTS PARTITION ({spec})"
-                )
-                continue
-            m = _EXPORT_STMT.match(stmt)
-            if m:
-                _exec_export(spark, m)
-                continue
-            m = _IMPORT_STMT.match(stmt)
-            if m:
-                _exec_import(spark, m)
-                continue
-            m = _ADD_CONSTRAINT.match(stmt)
-            if m:
-                _exec_add_constraint(spark, m)
-                continue
-            nm = re.match(
-                r"^\s*ALTER\s+TABLE\s+[\w.`]+\s+DROP\s+CONSTRAINT\s+"
-                r"`?(\w+)`?\s*$",
-                stmt,
-                re.I,
-            )
-            if nm:
-                names = _CONSTRAINT_NAMES.get(id(spark), {})
-                c = names.pop(nm.group(1).lower(), None)
-                reg = CONSTRAINTS.get(id(spark))
-                if reg is not None and c is not None:
-                    reg.constraints = [
-                        x for x in reg.constraints if x is not c
-                    ]
-                continue
-            m = re.match(
-                r"^\s*!\s*(mkdir|rm|rmr|cp|mv|touchz?)\s+(.*)$", stmt,
-                re.I | re.S,
-            )
-            if m:
-                # CliDriver `!<cmd>`: the confined local-file subset maps
-                # onto the dfs executor (same /tmp guard); anything else
-                # below raises rather than silently diverging
-                op = {"touch": "touchz"}.get(m.group(1).lower(), m.group(1))
-                _exec_dfs(f"dfs -{op} {m.group(2)}", res)
-                continue
-            if _SHELL.match(stmt):
-                raise ValueError(
-                    f"shell commands are not executed by the engine: {stmt[:60]!r}"
-                )
-            m = _TXN.match(stmt)
-            if m:
-                verb = re.sub(r"\s+", " ", m.group(1)).strip().upper()
-                from hive_spark.txn import Transaction
-
-                if verb in ("BEGIN", "START TRANSACTION"):
-                    if res.txn is not None and res.txn.active:
-                        raise ValueError("transaction already open")
-                    res.txn = Transaction(spark, dict(VERSIONED_TABLES)).begin()
-                    # repeatable reads: pin every versioned table's view at
-                    # the BEGIN version until COMMIT/ROLLBACK
-                    for name in VERSIONED_TABLES:
-                        if res.txn.pinned_version(name) is not None:
-                            res.txn.read(name).createOrReplaceTempView(name)
-                elif res.txn is None or not res.txn.active:
-                    raise ValueError(f"{verb} without an open transaction")
-                else:
-                    if verb == "COMMIT":
-                        res.txn.commit()
-                    else:
-                        res.txn.rollback()
-                    _restore_latest_views(spark)
-                continue
-            auth = authz.handle(spark, stmt)
-            if auth is not None:
-                if auth is not True and auth.columns:
-                    res.results.append(
-                        spark.createDataFrame(auth.collect(), auth.schema)
-                    )
-                continue
-            cm = _CREATE_NAME.match(stmt) or re.match(
-                r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:MATERIALIZED\s+)?"
-                r"VIEW\s+(?:IF\s+NOT\s+EXISTS\s+)?`?([\w.]+)`?",
-                stmt, re.I,
-            )
-            if cm:
-                authz.record_owner(spark, cm.group(1))
-            dbm = re.match(
-                r"^\s*CREATE\s+(?:REMOTE\s+)?(?:DATABASE|SCHEMA)\s+"
-                r"(?:IF\s+NOT\s+EXISTS\s+)?`?(\w+)`?",
-                stmt, re.I,
-            )
-            if dbm:
-                # database ownership (SQLStd: ALTER/DROP DATABASE need it)
-                authz.record_owner(spark, dbm.group(1) + ".")
-            m = _LOCK_STMT.match(stmt)
-            if m:
-                kind, name, mode = m.groups()
-                key = f"{kind.upper()}:{name.lower()}"
-                _EXPLICIT_LOCKS.setdefault(id(spark), {})[key] = mode.upper()
-                continue
-            m = _UNLOCK_STMT.match(stmt)
-            if m:
-                kind, name = m.groups()
-                _EXPLICIT_LOCKS.get(id(spark), {}).pop(
-                    f"{kind.upper()}:{name.lower()}", None
-                )
-                continue
-            m = _COMPACT_STMT.match(stmt)
-            if m:
-                tbl, pspec, ctype = m.groups()
-                _COMPACTIONS.setdefault(id(spark), []).append(
-                    (tbl.lower(), (pspec or "").strip(), ctype.lower(),
-                     "succeeded")
-                )
-                continue
-            m = _ALTER_VIEW_PART.match(stmt)
-            if m:
-                view, verb, specs_text = m.groups()
-                vparts = _VIEW_PARTS.setdefault(id(spark), {}).setdefault(
-                    view.lower(), []
-                )
-                for sp in re.findall(
-                    r"PARTITION\s*\(([^)]*)\)", specs_text, re.I
-                ):
-                    pname = _part_spec_to_name(sp)
-                    if verb.upper() == "ADD" and pname not in vparts:
-                        vparts.append(pname)
-                    elif verb.upper() == "DROP" and pname in vparts:
-                        vparts.remove(pname)
-                continue
-            m = re.match(
-                r"^\s*SHOW\s+PARTITIONS\s+`?([\w.]+)`?"
-                r"(?:\s+PARTITION\s*\(([^)]*)\))?\s*$",
-                stmt, re.I,
-            )
-            if m:
-                vname = m.group(1).lower()
-                known = vname in _VIEW_PARTS.get(id(spark), {})
-                if not known:
-                    try:
-                        t = spark.catalog.getTable(m.group(1))
-                        known = t.tableType == "VIEW"
-                    except Exception:
-                        known = False
-                if known:
-                    names = _VIEW_PARTS.get(id(spark), {}).get(vname, [])
-                    if m.group(2):
-                        want = _part_spec_to_name(m.group(2))
-                        names = [
-                            p for p in names
-                            if want in p.split("/") or p == want
-                        ]
-                    res.results.append(spark.createDataFrame(
-                        [(p,) for p in names], "partition string",
-                    ))
-                    continue
-            m = re.match(
-                r"^\s*(SHOW\s+TABLE\s+EXTENDED\s+LIKE\s+`?[\w.]+`?)\s+"
-                r"PARTITION\s*\(([^)]*)\)\s*$",
-                stmt, re.I,
-            )
-            if m and re.search(
-                r"`?([\w.]+)`?$", m.group(1)
-            ).group(1).lower() in _VIEW_PARTS.get(id(spark), {}):
-                # metadata-only view partition: the table-level lines
-                res.results.append(
-                    spark.sql(rewrite_statement(spark, m.group(1)))
-                )
-                continue
-            m = re.match(
-                r"^\s*(DESCRIBE|DESC)\s+(FORMATTED\s+|EXTENDED\s+)?"
-                r"`?([\w.]+)`?\s+PARTITION\s*\([^)]*\)\s*$",
-                stmt, re.I,
-            )
-            if m and m.group(3).lower() in _VIEW_PARTS.get(id(spark), {}):
-                # DESCRIBE view PARTITION(...): the view's columns (the
-                # partition is metadata-only)
-                res.results.append(spark.sql(
-                    f"DESCRIBE {m.group(2) or ''}`{m.group(3)}`"
-                ))
-                continue
-            m = re.match(
-                r"^\s*(?:DESCRIBE|DESC)\s+`?([\w.]+)`?\s+"
-                r"([\w$]+(?:\.[\w$]+)+|\w+\.\$\w+\$)\s*$",
-                stmt, re.I,
-            )
-            if m and "$" in m.group(2):
-                # DESCRIBE tbl col.$elem$/.$key$/.$value$[.field...] —
-                # Hive xpath-style type navigation (describe_xpath.q;
-                # ref: ql/.../exec/DDLTask describeTable with a nested
-                # column path). Walk the Spark schema the same way.
-                from pyspark.sql import types as T
-
-                tbl, path = m.group(1), m.group(2)
-                schema = spark.table(tbl).schema
-                toks = path.split(".")
-                dt = schema[[f.name.lower() for f in schema].index(
-                    toks[0].lower())].dataType
-                for tok in toks[1:]:
-                    if tok == "$elem$":
-                        dt = dt.elementType
-                    elif tok == "$key$":
-                        dt = dt.keyType
-                    elif tok == "$value$":
-                        dt = dt.valueType
-                    else:
-                        dt = dt[[f.name.lower() for f in dt.fields].index(
-                            tok.lower())].dataType
-                if isinstance(dt, T.StructType):
-                    rows = [(f.name, f.dataType.simpleString(),
-                             "from deserializer") for f in dt.fields]
-                else:
-                    rows = [(toks[-1], dt.simpleString(),
-                             "from deserializer")]
-                res.results.append(spark.createDataFrame(
-                    rows, "col_name string, data_type string, comment string"
-                ))
-                continue
-            if re.match(
-                r"^\s*EXPLAIN\s+((CREATE|DROP)\s+TEMPORARY\s+MACRO"
-                r"|SHOW\s+GRANT|CREATE\s+ROLE|DROP\s+ROLE|GRANT\s|REVOKE\s"
-                r"|SET\s+ROLE|SHOW\s+CURRENT\s+ROLES|SHOW\s+ROLE"
-                r"|SHOW\s+PRINCIPALS|SHOW\s+LOCKS|SHOW\s+COMPACTIONS)\b",
-                stmt, re.I,
-            ) or re.match(
-                r"^\s*EXPLAIN\s+SHOW\s+(COLUMNS|PARTITIONS)\b[\s\S]*"
-                r"(['\"][^'\"]*['\"]|\bWHERE\b|\bORDER\s+BY\b|\bLIMIT\b)",
-                stmt, re.I,
-            ):
-                # EXPLAIN of the engine-handled SHOW forms: Hive renders
-                # a metadata-op stage; emit the same one-stage summary
-                res.results.append(
-                    spark.createDataFrame(
-                        [("STAGE DEPENDENCIES:",), ("  Stage-0 is a root stage",)],
-                        "Explain string",
-                    )
-                )
-                continue
-            m = re.match(
-                r"^\s*SHOW\s+(SORTED\s+)?COLUMNS\s+(?:FROM|IN)\s+`?([\w.]+)`?"
-                r"(?:\s+(?:FROM|IN)\s+`?([\w]+)`?)?"
-                r"(?:\s+(?:LIKE\s+)?['\"]([^'\"]+)['\"])?\s*$",
-                stmt, re.I,
-            )
-            if m and (m.group(1) or m.group(4)):
-                # SHOW [SORTED] COLUMNS ... ['pattern'] (Hive
-                # ShowColumnsDesc: LIKE keyword optional; *-glob with |
-                # alternation, case-insensitive, output sorted —
-                # show_columns.q). Plain un-patterned SHOW COLUMNS stays
-                # on Spark's native path.
-                tbl = (
-                    f"{m.group(3)}.{m.group(2)}" if m.group(3)
-                    else m.group(2)
-                )
-                if m.group(4):
-                    alts = [
-                        "^" + re.escape(p.replace("*", "%"))
-                        .replace("%", ".*").replace("_", ".") + "$"
-                        for p in m.group(4).split("|")
-                    ]
-                    rx = re.compile("|".join(alts), re.I)
-                else:
-                    rx = re.compile(".*")
-                names = sorted(
-                    (c.name,)
-                    for c in spark.catalog.listColumns(tbl)
-                    if rx.match(c.name)
-                )
-                res.results.append(
-                    spark.createDataFrame(names, "col_name string")
-                )
-                continue
-            m = re.match(
-                r"^\s*SHOW\s+PARTITIONS\s+`?([\w.]+)`?"
-                r"(?:\s+PARTITION\s*\(([^)]*)\))?"
-                r"(?:\s+WHERE\s+([\s\S]*?))?"
-                r"(?:\s+ORDER\s+BY\s+([\s\S]*?))?"
-                r"(?:\s+LIMIT\s+(\d+))?\s*$",
-                stmt, re.I,
-            )
-            if m and (m.group(2) or m.group(3) or m.group(4) or m.group(5)):
-                # SHOW PARTITIONS ... [PARTITION(spec)] [WHERE] [ORDER BY]
-                # [LIMIT] (HIVE-22458 filtered listing, show_partitions2.q):
-                # evaluate over the partition list as string columns —
-                # numeric predicates coerce under non-ANSI comparison,
-                # and __HIVE_DEFAULT_PARTITION__ compares as its literal
-                from urllib.parse import unquote as _unq
-
-                tbl = m.group(1)
-                raw = [
-                    r[0]
-                    for r in spark.sql(
-                        f"SHOW PARTITIONS `{tbl.replace('.', '`.`')}`"
-                    ).collect()
-                ]
-                pnames = [
-                    c.name for c in spark.catalog.listColumns(tbl)
-                    if c.isPartition
-                ]
-                rows2 = [
-                    tuple(
-                        [_unq(kv.split("=", 1)[1]) for kv in r.split("/")]
-                        + [r]
-                    )
-                    for r in raw
-                ]
-                schema = ", ".join(
-                    f"`{n}` string" for n in pnames
-                ) + ", _raw string"
-                pdf = spark.createDataFrame(rows2, schema)
-                pdf.createOrReplaceTempView("_hqls_show_parts")
-                conds = []
-                if m.group(2):
-                    for kv in m.group(2).split(","):
-                        k, v = kv.split("=", 1)
-                        conds.append(f"`{k.strip().strip('`')}` = {v.strip()}")
-                if m.group(3):
-                    conds.append(f"({m.group(3)})")
-                sql = "SELECT _raw AS `partition` FROM _hqls_show_parts"
-                if conds:
-                    sql += " WHERE " + " AND ".join(conds)
-                if m.group(4):
-                    sql += f" ORDER BY {m.group(4)}"
-                if m.group(5):
-                    sql += f" LIMIT {m.group(5)}"
-                out = spark.sql(sql)
-                res.results.append(
-                    spark.createDataFrame(out.collect(), out.schema)
-                )
-                continue
-            if re.match(r"^\s*SHOW\s+COMPACTIONS\b", stmt, re.I):
-                res.results.append(spark.createDataFrame(
-                    [
-                        (str(i + 1), "default", t, p, c, s, "")
-                        for i, (t, p, c, s) in enumerate(
-                            _COMPACTIONS.get(id(spark), [])
-                        )
-                    ],
-                    "compactionid string, dbname string, tabname string,"
-                    " partname string, type string, state string,"
-                    " workerid string",
-                ))
-                continue
-            if re.match(r"^\s*SHOW\s+TRANSACTIONS\s*$", stmt, re.I):
-                open_txns = []
-                if res.txn is not None and getattr(res.txn, "active", False):
-                    open_txns.append(
-                        (str(getattr(res.txn, "txn_id", 1)), "OPEN",
-                         authz.current_user(), "localhost")
-                    )
-                res.results.append(spark.createDataFrame(
-                    open_txns,
-                    "txnid string, state string, user string, host string",
-                ))
-                continue
-            if _ADD.match(stmt) or _METADATA_NOOP.match(stmt):
-                am = re.match(
-                    r"(?i)^\s*(ADD|DELETE)\s+FILES?\s+(.+?)\s*$", stmt
-                )
-                if am:
-                    # ADD FILE ships a script to executors (ref: ql/
-                    # SessionState add_resource); here the executor IS
-                    # local, so record basename -> resolved path and let
-                    # the TRANSFORM USING rewrite absolutize commands
-                    files = _ADDED_FILES.setdefault(id(spark), {})
-                    for p in am.group(2).split():
-                        base = os.path.basename(p.rstrip("/"))
-                        if am.group(1).upper() == "DELETE":
-                            files.pop(base, None)
-                            continue
-                        cand = p
-                        hm = re.match(r"(?i)^hdfs:/+(.*)$", cand)
-                        if hm:
-                            # qtest "HDFS" absolute paths live under
-                            # qtest scratch (same mapping as _exec_dfs),
-                            # except the /tmp/ subtree which stays host
-                            rest = "/" + hm.group(1)
-                            cand = (
-                                rest
-                                if rest.startswith("/tmp/")
-                                else os.path.normpath(QTEST_TMP + rest)
-                            )
-                        if not os.path.isabs(cand) or not os.path.exists(cand):
-                            for b in LOAD_DATA_BASES:
-                                c2 = os.path.normpath(os.path.join(b, p))
-                                if os.path.exists(c2):
-                                    cand = c2
-                                    break
-                        if os.path.exists(cand):
-                            files[base] = os.path.abspath(cand)
-                res.skipped.append(stmt)
-                continue
-            m = _EXPLAIN_SPECIAL.match(stmt)
-            if m:
-                res.results.append(
-                    _exec_explain_special(spark, m.group(1), m.group(2))
-                )
-                continue
-            # EXPLAIN over a statement the engine (not Spark) executes —
-            # metadata ops, MV lifecycle: Hive prints a task tree; the
-            # one-row descriptor is the analog
-            m = re.match(r"^\s*EXPLAIN\s+([\s\S]*)$", stmt, re.I)
-            if m:
-                # strip an explain-mode token so EXPLAIN CBO/COST/
-                # FORMATTED/etc. of an engine-dialect statement still
-                # routes here (Hive explains every statement kind)
-                inner = m.group(1)
-                while True:
-                    stripped = re.sub(
-                        r"(?i)^\s*(?:CBO|COST|JOINCOST|FORMATTED|EXTENDED"
-                        r"|CODEGEN|LOGICAL|AST|DETAIL|REOPTIMIZATION"
-                        r"|VECTORIZATION|ONLY|SUMMARY|OPERATOR|EXPRESSION"
-                        r"|DEBUG|ANALYZE(?!\s+TABLE\b))"
-                        r"\s+",
-                        "", inner, count=1,
-                    )
-                    if stripped == inner:
-                        break
-                    inner = stripped
-            if m and (
-                _METADATA_NOOP.match(inner)
-                or _REBUILD_MV.match(inner)
-                or _DROP_MV.match(inner)
-                or _EXPORT_STMT.match(inner)
-                or _IMPORT_STMT.match(inner)
-                or _ADD_CONSTRAINT.match(inner)
-                or _EXCHANGE_PARTITION.match(inner)
-                or _ALTER_UPDATE_COLS.match(
-                    re.sub(r"(?i)\s+(CASCADE|RESTRICT)\s*$", "",
-                           inner.rstrip())
-                )
-                or (_UPDATE_STMT.match(inner)
-                    and not re.match(r"^\s*UPDATE\s+STATISTICS\b",
-                                     inner, re.I))
-                or _DELETE_STMT.match(inner)
-                or _match_merge(inner) is not None
-                or re.match(
-                    r"(?i)^\s*SHOW\s+CREATE\s+(?:DATABASE|SCHEMA)\b", inner
-                )
-                # comparator / multi-clause DROP PARTITION and SHOW
-                # PARTITIONS are engine-dialect (Spark can't parse them)
-                or re.match(
-                    r"(?i)^\s*ALTER\s+TABLE\s+[\w.`]+\s+DROP\s+"
-                    r"(?:IF\s+EXISTS\s+)?PARTITION\s*\(", inner
-                )
-                or re.match(r"(?i)^\s*SHOW\s+PARTITIONS\b", inner)
-                or re.match(
-                    r"(?i)^\s*SHOW\s+(?:TRANSACTIONS|COMPACTIONS|LOCKS)\b",
-                    inner,
-                )
-                or _LOCK_STMT.match(inner)
-                or _UNLOCK_STMT.match(inner)
-                or _COMPACT_STMT.match(inner)
-                or _PREPARE.match(inner)
-                or _EXECUTE.match(inner)
-            ):
-                res.results.append(
-                    spark.createDataFrame(
-                        [(f"engine metadata operation: "
-                          f"{inner.split()[0].upper()} ...",)],
-                        "plan string",
-                    )
-                )
-                continue
-            m = _CREATE_MV.match(stmt)
-            if m:
-                name, query = m.group(1), m.group(3)
-                sql = rewrite_statement(spark, query)
-                if not (re.search(r"(?i)IF\s+NOT\s+EXISTS", stmt)
-                        and spark.catalog.tableExists(name)):
-                    spark.sql(sql).write.mode("overwrite").saveAsTable(name)
-                _MV_DEFS.setdefault(id(spark), {})[name.lower()] = sql
-                continue
-            m = _DROP_MV.match(stmt)
-            if m:
-                spark.sql(f"DROP TABLE IF EXISTS `{m.group(1)}`")
-                _MV_DEFS.get(id(spark), {}).pop(m.group(1).lower(), None)
-                continue
-            if _SHOW_MVS.match(stmt):
-                res.results.append(
-                    spark.createDataFrame(
-                        [
-                            (n, "Yes", "Manual refresh")
-                            for n in sorted(_MV_DEFS.get(id(spark), {}))
-                        ],
-                        "mv_name string, rewrite_enabled string, mode string",
-                    )
-                )
-                continue
-            m = _REBUILD_MV.match(stmt)
-            if m:
-                sql = _MV_DEFS.get(id(spark), {}).get(m.group(1).lower())
-                if sql is None:
-                    raise ValueError(
-                        f"REBUILD of unknown materialized view {m.group(1)!r}"
-                    )
-                spark.sql(sql).write.mode("overwrite").saveAsTable(m.group(1))
-                continue
-            m = _CREATE_EXT_TEXT.match(stmt)
-            if m and _exec_create_external_complex_text(spark, m):
-                continue
-            m = _INSERT_DIR.match(stmt)
-            if m:
-                _exec_insert_directory(spark, m)
-                continue
-            # FROM <src> INSERT ... with DIRECTORY sinks mixed in: Spark
-            # runs the TABLE multi-insert natively but refuses Hive-format
-            # DIRECTORY sinks — peel those off and run each through the
-            # directory writer (FROM-first SELECT keeps the shared source)
-            fm = re.match(r"(?is)^\s*FROM\s+([\s\S]*?)(\bINSERT\b[\s\S]*)$",
-                          stmt)
-            if fm and re.search(
-                r"(?i)INSERT\s+OVERWRITE\s+(?:LOCAL\s+)?DIRECTORY", fm.group(2)
-            ):
-                head, tail = fm.groups()
-                starts = [s for s, _ in
-                          _top_level_spans(tail, r"\bINSERT\b")]
-                clauses = [
-                    tail[s:e].strip()
-                    for s, e in zip(starts, starts[1:] + [len(tail)])
-                ]
-                kept = []
-                for cl in clauses:
-                    dm = _INSERT_DIR.match(cl)
-                    if dm:
-                        q = f"FROM {head} {dm.group(5)}"
-                        _exec_insert_directory(
-                            spark,
-                            _INSERT_DIR.match(
-                                cl[: dm.start(5)] + q
-                            ) or dm,
-                        )
-                    else:
-                        kept.append(cl)
-                if kept:
-                    spark.sql(rewrite_statement(
-                        spark, f"FROM {head} " + " ".join(kept)
-                    ))
-                continue
-            if _exec_alter_columns(spark, stmt):
-                continue
-            # TRUNCATE TABLE t COLUMNS (c1, c2): Hive clears the named
-            # columns' data (list-bucketing feature, ref: ql/.../ddl/
-            # table/misc/truncate) — CoW null-out of those columns
-            m = re.match(
-                r"(?i)^\s*TRUNCATE\s+TABLE\s+`?([\w.]+)`?"
-                r"(?:\s+PARTITION\s*\([^)]*\))?\s+COLUMNS\s*\(([^)]*)\)\s*$",
-                stmt,
-            )
-            if m:
-                from pyspark.sql import functions as F
-
-                table = m.group(1)
-                cols = {c.strip().strip("`").lower()
-                        for c in m.group(2).split(",")}
-                df = spark.table(table)
-                out = df.select(*[
-                    F.lit(None).cast(dict(df.dtypes)[c]).alias(c)
-                    if c.lower() in cols else F.col(c)
-                    for c in df.columns
-                ])
-                _rewrite_table_inplace(spark, table, out)
-                continue
-            # SHOW CREATE DATABASE (Hive DDL Spark lacks): rebuild the
-            # statement from the catalog's database metadata
-            m = re.match(
-                r"(?i)^\s*SHOW\s+CREATE\s+(?:DATABASE|SCHEMA)\s+"
-                r"`?([\w]+)`?\s*$",
-                stmt,
-            )
-            if m:
-                db = spark.catalog.getDatabase(m.group(1))
-                text_out = f"CREATE DATABASE `{db.name}`"
-                if db.description:
-                    text_out += f"\nCOMMENT\n  '{db.description}'"
-                text_out += f"\nLOCATION\n  '{db.locationUri}'"
-                res.results.append(
-                    spark.createDataFrame(
-                        [(text_out,)], "createdb_stmt string"
-                    )
-                )
-                continue
-            m = re.match(
-                r"(?i)^\s*RESET(?:\s+(-d\s+)?([\w.\s$:]+?))?\s*$", stmt
-            )
-            if m:
-                # Hive RESET / RESET -d key... (SetProcessor): drop the
-                # session overrides; Spark's RESET grammar rejects the
-                # -d flag and dotted hive keys, so handle it here
-                keys = (m.group(2) or "").split()
-                if not keys:
-                    # bare RESET restores EVERY overridden conf (Hive
-                    # SetProcessor), not just the recorded-key dict —
-                    # un-apply each conf this session actually set
-                    keys = list(res.set_commands)
-                    res.set_commands.clear()
-                for key in keys:
-                    res.set_commands.pop(key, None)
-                    try:
-                        spark.sql(f"RESET `{key}`")
-                    except Exception:
-                        pass
-                continue
-            m = _SET.match(stmt)
-            if m and m.group(2) is not None:
-                key, val = m.group(1), m.group(2).strip()
-                res.set_commands[key] = val
-                # qtests set fs.default.name=invalidscheme:/// to prove
-                # metadata-only ops never touch the FS; Spark propagates
-                # session conf into the Hadoop conf of every file source,
-                # so applying it poisons all later reads in the session.
-                # This runtime is always local-FS — record, don't apply.
-                if key.lower() in ("fs.default.name", "fs.defaultfs"):
-                    continue
-                try:
-                    spark.conf.set(key, val)
-                except Exception:
-                    pass  # hive-only knob: recorded above, nothing to set
-                continue
-            m = _LOAD_DATA.match(stmt)
-            if m:
-                _exec_load_data(spark, m)
-                continue
-            from hive_spark.sources import jdbc_handler as _jh
-
-            # DefaultStorageHandler is Hive's no-op handler — the table
-            # behaves exactly like a managed table (ref: ql/.../metadata/
-            # DefaultStorageHandler.java); strip the clause
-            stmt = re.sub(
-                r"(?is)\bSTORED\s+BY\s+'org\.apache\.hadoop\.hive\.ql\."
-                r"metadata\.DefaultStorageHandler'"
-                r"(\s+WITH\s+SERDEPROPERTIES\s*\((?:[^()]|\([^()]*\))*\))?",
-                "",
-                stmt,
-            )
-            if re.search(r"STORED\s+BY\b", stmt, re.I) \
-                    and _jh.try_create_jdbc_table(spark, stmt):
-                continue
-            if _jh.HANDLER_TABLES and (
-                _jh.try_insert_handler_table(spark, stmt)
-                or _jh.try_alter_handler_table(spark, stmt)
-                or _jh.try_drop_handler_table(spark, stmt)
-            ):
-                continue
-            # CREATE TEMPORARY FUNCTION over a class this engine serves
-            # natively (dboutput folds at call sites) — registration noop
-            if re.match(
-                r"(?i)^\s*CREATE\s+TEMPORARY\s+FUNCTION\s+dboutput\s+AS\b",
-                stmt,
-            ):
-                res.skipped.append(stmt)
-                continue
-            m = re.match(
-                r"^\s*DESC(?:RIBE)?\s+FUNCTION\s+(?:EXTENDED\s+)?"
-                r"`?(\w+)`?\s*$",
-                stmt,
-                re.I,
-            )
-            if m and (
-                m.group(1).lower() in _ENGINE_FOLDED_FNS
-                or m.group(1).lower() in _MACROS.get(id(spark), {})
-                or m.group(1).lower() in _FUNC_FOLDS.get(id(spark), {})
-            ):
-                # engine-folded functions aren't in Spark's catalog;
-                # answer the way FunctionRegistry would
-                name = m.group(1).lower()
-                res.results.append(
-                    spark.createDataFrame(
-                        [(f"{name} is an engine-folded function "
-                          f"(rewritten inline at parse time)",)],
-                        "tab_name string",
-                    )
-                )
-                continue
-            if m and not spark.catalog.functionExists(m.group(1)):
-                # Hive's DESCRIBE FUNCTION on an unknown name is not an
-                # error — it prints this row and the script continues
-                # (ref: DescFunctionOperation.java, golden
-                # udf_stddev_pop.q.out)
-                res.results.append(
-                    spark.createDataFrame(
-                        [(f"Function '{m.group(1)}' does not exist.",)],
-                        "tab_name string",
-                    )
-                )
-                continue
-            m = _CREATE_FUNCTION_CLASS.match(stmt)
-            if m and "MatchPath" in m.group(2):
-                # a user-registered alias of the MatchPath PTF
-                # (ptf_register_tblfn.q)
-                _MATCHPATH_FNS.setdefault(id(spark), {"matchpath"}).add(
-                    m.group(1).lower()
-                )
-                continue
-            if m and m.group(2) in _FUNCTION_CLASS_FOLDS:
-                _FUNC_FOLDS.setdefault(id(spark), {})[m.group(1).lower()] = (
-                    _FUNCTION_CLASS_FOLDS[m.group(2)]
-                )
-                continue
-            m = _DROP_FUNCTION.match(stmt)
-            if m and _FUNC_FOLDS.get(id(spark), {}).pop(
-                m.group(1).lower(), None
-            ) is not None:
-                continue
-            if m and m.group(1).lower() in _MATCHPATH_FNS.get(
-                id(spark), set()
-            ):
-                _MATCHPATH_FNS[id(spark)].discard(m.group(1).lower())
-                continue
-            if _exec_dml(spark, res, stmt):
-                continue
-            if (
-                res.set_commands.get(
-                    "hive.support.quoted.identifiers", ""
-                ).lower() == "none"
-                and re.search(r"`[^`]+`", stmt)
-            ):
-                stmt = _expand_regex_columns(spark, stmt)
-            _mp_names = _MATCHPATH_FNS.get(id(spark), {"matchpath"})
-            if any(
-                re.search(rf"(?i)\b{n}\s*\(\s*on\b", stmt) for n in _mp_names
-            ):
-                stmt = _exec_matchpath_ptf(spark, stmt, _mp_names)
-            rewritten = rewrite_statement(spark, stmt)
-            # hive.optimize.cte.materialize.threshold: spool WITH-CTEs
-            # referenced >= threshold times (ref: TableScanToSpoolRule;
-            # default 3 per HiveConf.java:2686; <= 0 disables)
-            try:
-                _cte_thresh = int(
-                    res.set_commands.get(
-                        "hive.optimize.cte.materialize.threshold", "3"
-                    )
-                )
-            except ValueError:
-                _cte_thresh = 3
-            if _cte_thresh > 0:
-                from hive_spark.plans.cte_spool import spool_ctes
-
-                rewritten = spool_ctes(spark, rewritten, _cte_thresh)
-            # Hive: dynamic-partition INSERT OVERWRITE replaces only the
-            # partitions the query produces (FileSinkOperator with
-            # hive.exec.dynamic.partition); Spark's STATIC mode would
-            # truncate the whole table first — scope dynamic mode to the
-            # statement
-            _m_dyn = re.match(
-                r"(?i)^\s*INSERT\s+OVERWRITE\s+(?:TABLE\s+)?[\w.`]+\s*"
-                r"PARTITION\s*\(([^)]*)\)",
-                rewritten,
-            )
-            _prev_mode = None
-            if _m_dyn and any(
-                "=" not in kv
-                for kv in _m_dyn.group(1).split(",")
-                if kv.strip()
-            ):
-                _prev_mode = spark.conf.get(
-                    "spark.sql.sources.partitionOverwriteMode", "STATIC"
-                )
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", "dynamic"
-                )
-            try:
-                df, rule = _sql_with_retries(spark, rewritten)
-                if rule:
-                    res.retries.append((idx, rule))
-            finally:
-                if _prev_mode is not None:
-                    spark.conf.set(
-                        "spark.sql.sources.partitionOverwriteMode",
-                        _prev_mode,
-                    )
-            if df.columns:  # statements with a result shape (SELECT/SHOW/...)
-                # CliDriver semantics: each statement's rows are buffered
-                # to the client BEFORE the next statement runs (ref:
-                # ql/.../exec/ListSinkOperator.java) — so a later DROP of
-                # a source table cannot invalidate an earlier result
-                # (qtests routinely SELECT then DROP). Materialize into a
-                # local-relation DataFrame with the same schema.
-                try:
-                    res.results.append(
-                        spark.createDataFrame(df.collect(), df.schema)
-                    )
-                except Exception as e:
-                    msg = str(e)
-                    retriable = (
-                        isinstance(e, (ValueError, OverflowError))
-                        and ("out of range" in msg
-                             # proleptic year-0 dates (mask date branch)
-                             # precede Python datetime's ordinal 1
-                             or "ordinal must be" in msg)
-                    ) or isinstance(e, PySparkNotImplementedError)
-                    if not retriable:
-                        raise
-                    # Hive prints timestamps past Python's datetime range
-                    # (year > 9999) and year-month intervals verbatim;
-                    # Python's collect() can't hold either — buffer those
-                    # columns as their string rendering instead
-                    from pyspark.sql import functions as F
-
-                    # rename POSITIONALLY first: result frames can carry
-                    # duplicate auto-generated names (two casts of the
-                    # same column), which any by-name reference refuses
-                    tmp = df.toDF(*[f"_qc{i}" for i in range(len(df.columns))])
-                    safe = tmp.select(*[
-                        (
-                            F.col(f"_qc{i}").cast("string")
-                            if t.startswith(("timestamp", "date", "interval"))
-                            else F.col(f"_qc{i}")
-                        ).alias(c)
-                        for i, (c, t) in enumerate(df.dtypes)
-                    ])
-                    res.results.append(
-                        spark.createDataFrame(safe.collect(), safe.schema)
-                    )
+                out = handler(spark, res, m, stmt)
+                if out is not _DECLINE:
+                    res.handled.append((idx, name))
+                    if out is not None:
+                        res.results.append(out)
+                    break
     except BaseException:
         # A failing statement inside BEGIN..COMMIT must not strand the
         # transaction: roll back (releasing the write locks) and restore

@@ -605,27 +605,71 @@ def test_row_format_full_delimited_clauses(spark):
     assert [(r.k, r.nt, r.mx) for r in out.results[-1].collect()] == [(1, 2, 1)]
 
 
-def test_load_data_avro_and_empty_table_dml(spark):
+# the rows of Hive's data/files/doctors.avro, in file order
+_DOCTORS = [
+    (6, "Colin", "Baker"), (3, "Jon", "Pertwee"), (4, "Tom", "Baker"),
+    (5, "Peter", "Davison"), (11, "Matt", "Smith"), (1, "William", "Hartnell"),
+    (7, "Sylvester", "McCoy"), (8, "Paul", "McGann"), (2, "Patrick", "Troughton"),
+    (10, "David", "Tennant"), (9, "Christopher", "Eccleston"),
+]
+
+
+def _write_avro(path, fields, rows):
+    """An Avro object container file (null codec, one block) holding
+    `rows` of a record with `fields`, [(name, "int" | "string")]."""
+    import json
+
+    def varint(n):  # zigzag, then 7 bits per byte
+        n = (n << 1) ^ (n >> 63)
+        out = bytearray()
+        while n > 0x7F:
+            out.append(n & 0x7F | 0x80)
+            n >>= 7
+        return bytes(out + bytes([n]))
+
+    def blob(b):
+        return varint(len(b)) + b
+
+    schema = json.dumps({
+        "type": "record", "name": "doctors",
+        "fields": [{"name": n, "type": t} for n, t in fields],
+    }).encode()
+    sync = bytes(range(16))
+    body = b"".join(
+        varint(v) if t == "int" else blob(v.encode())
+        for row in rows for (_, t), v in zip(fields, row)
+    )
+    with open(path, "wb") as f:
+        f.write(
+            b"Obj\x01" + varint(2) + blob(b"avro.schema") + blob(schema)
+            + blob(b"avro.codec") + blob(b"null") + varint(0) + sync
+            + varint(len(rows)) + varint(len(body)) + body + sync
+        )
+
+
+def test_load_data_avro_and_empty_table_dml(spark, tmp_path):
     """LOAD DATA sniffs self-describing formats (avro via the pure-
     Python container reader — no spark-avro jar in this runtime), and
     CoW DML on a freshly-created empty table seeds schema instead of
     failing UNABLE_TO_INFER_SCHEMA."""
     from hive_spark.sources.avro_lite import ddl_schema, read_container
 
-    fields, rows = read_container(
-        "/root/reference/data/files/doctors.avro"
+    doctors = str(tmp_path / "doctors.avro")
+    _write_avro(
+        doctors,
+        [("number", "int"), ("first_name", "string"), ("last_name", "string")],
+        _DOCTORS,
     )
+    fields, rows = read_container(doctors)
     assert fields == ["number", "first_name", "last_name"]
     assert len(rows) == 11 and rows[0][0] == 6
-    assert "number` int" in ddl_schema(
-        "/root/reference/data/files/doctors.avro"
-    ).replace(" `", "`")
+    assert "number` int" in ddl_schema(doctors).replace(" `", "`")
 
     out = run_script(
         spark,
         "DROP TABLE IF EXISTS avro_doc;"
         " CREATE TABLE avro_doc (number int, first_name string) STORED AS AVRO;"
-        " LOAD DATA LOCAL INPATH '/root/reference/data/files/doctors.avro'"
+        f" LOAD DATA LOCAL INPATH '{doctors}'"
         "   INTO TABLE avro_doc;"
         " SELECT COUNT(*) AS n, MIN(number) AS lo FROM avro_doc;"
         " DROP TABLE avro_doc;",
@@ -1074,6 +1118,33 @@ def test_execute_retries_like_an_inline_statement(spark, retry_db):
     assert out.retries == [(2, "literal_filter"), (4, "group_by_literal")]
 
 
+def test_execute_binds_using_arguments_in_rerunning_rules(spark, retry_db):
+    """The two rules that re-run a statement themselves (GROUP BY
+    position, self-reading INSERT OVERWRITE) bind EXECUTE's USING
+    arguments too."""
+    try:
+        out = run_script(
+            spark,
+            "USE hqretry;"
+            " PREPARE pg FROM SELECT count(*) AS c FROM rt WHERE key > ?"
+            "  GROUP BY 1;"
+            " EXECUTE pg USING 1;"
+            " DROP TABLE IF EXISTS selfx;"
+            " CREATE TABLE selfx USING parquet AS SELECT key FROM rt;"
+            " PREPARE pi FROM INSERT OVERWRITE TABLE selfx"
+            "  SELECT key + ? FROM selfx;"
+            " EXECUTE pi USING 10;"
+            " SELECT key FROM selfx;",
+        )
+    finally:
+        run_script(spark, "USE default;")
+    assert [r.c for r in out.results[0].collect()] == [1]
+    assert sorted(r.key for r in out.results[-1].collect()) == [11, 12]
+    assert out.retries == [
+        (2, "group_by_literal"), (6, "insert_overwrite_selfread"),
+    ]
+
+
 def test_retry_finds_the_condition_under_a_job_abort(spark, retry_db):
     """A failure inside a task can reach pyspark as a generic job abort,
     which it raises as a bare Py4JJavaError with Spark's error as the
@@ -1224,7 +1295,7 @@ _STATEMENT_CASES = [
      lambda spark, out: os.path.isfile(f"{_STMT_DIR}/bang.txt")),
     ("bang_other_command_rejected", "shell", "", "!ls /", None, ValueError),
     ("source", "source", "", f"source {_STMT_DIR}/src.q", None, [(7,)]),
-    ("rename_table_across_databases", "rename_table_across_databases",
+    ("rename_table_across_databases", "rename_across_databases",
      "CREATE DATABASE IF NOT EXISTS hqstmt2; DROP TABLE IF EXISTS hqstmt2.rn_b;"
      " DROP TABLE IF EXISTS rn_a;"
      " CREATE TABLE rn_a USING parquet AS SELECT key FROM st",
@@ -1235,7 +1306,7 @@ _STATEMENT_CASES = [
      " CREATE TABLE rn_c USING parquet AS SELECT key FROM st",
      "ALTER TABLE hqstmt.rn_c RENAME TO hqstmt.rn_d",
      "SELECT key FROM rn_d", [(1,), (2,)]),
-    ("rename_view_across_databases", "rename_view_across_databases",
+    ("rename_view_across_databases", "rename_across_databases",
      "CREATE DATABASE IF NOT EXISTS hqstmt2; DROP VIEW IF EXISTS hqstmt2.rv_b;"
      " DROP VIEW IF EXISTS rv_a; CREATE VIEW rv_a AS SELECT key FROM hqstmt.st",
      "ALTER VIEW hqstmt.rv_a RENAME TO hqstmt2.rv_b",
@@ -1358,6 +1429,8 @@ _STATEMENT_CASES = [
      [("engine metadata operation: EXECUTE ...",)]),
     ("explain_query", "sql", "", "EXPLAIN SELECT key FROM st", None,
      lambda spark, out: "== Physical Plan ==" in _rows(out)[0][0]),
+    ("explain_cbo_query", "sql", "", "EXPLAIN CBO SELECT key FROM st", None,
+     lambda spark, out: "== Optimized Logical Plan ==" in _rows(out)[0][0]),
     ("show_columns_pattern", "show_columns_matching", "",
      "SHOW COLUMNS FROM st 'v*|k*'", None, [("key",), ("value",)]),
     ("show_sorted_columns", "show_columns_matching", "",
@@ -1597,7 +1670,7 @@ def stmt_db(spark):
 )
 def test_statement_row(spark, stmt_db, row, setup, stmt, check, expected):
     """Each statement kind the engine runs itself gives Hive's rows or
-    effect."""
+    effect, and the trace names the row that took it."""
     head = "; ".join(filter(None, ["USE hqstmt", setup]))
     script = "; ".join(filter(None, [head, stmt, check])) + ";"
     try:
@@ -1612,3 +1685,37 @@ def test_statement_row(spark, stmt_db, row, setup, stmt, check, expected):
         assert expected(spark, out)
     else:
         assert sorted(_rows(out), key=repr) == sorted(expected, key=repr)
+    idx = len(split_statements(head))
+    assert out.handled[idx] == (idx, row)
+
+
+def test_explain_reads_the_statement_rows(spark, stmt_db):
+    """EXPLAIN and EXPLAIN ANALYZE describe every statement through its
+    _STATEMENTS row, so forms no hand-kept list named (SHOW ROLES, a
+    moded EXPLAIN of a role or macro statement, EXPLAIN ANALYZE of LOCK)
+    get the descriptor instead of a Spark parse error."""
+    out = run_script(
+        spark,
+        "USE hqstmt;"
+        " EXPLAIN SHOW ROLES;"
+        " EXPLAIN FORMATTED CREATE ROLE hq_never;"
+        " EXPLAIN EXTENDED CREATE TEMPORARY MACRO hq_never(x INT) x;"
+        " EXPLAIN ANALYZE LOCK TABLE st SHARED;"
+        " USE default;",
+    )
+    assert [[tuple(r) for r in df.collect()] for df in out.results] == [
+        _STAGE,
+        [("engine metadata operation: CREATE ...",)],
+        [("engine metadata operation: CREATE ...",)],
+        [("engine metadata operation: LOCK ...",)],
+    ]
+
+
+def test_every_statement_row_has_a_case():
+    """A row added to _STATEMENTS without a case in _STATEMENT_CASES
+    fails here, as does a case naming a row that no longer exists."""
+    from hive_spark.hqlscript import _STATEMENTS
+
+    assert {row[0] for row in _STATEMENTS} == {
+        c[1] for c in _STATEMENT_CASES if not isinstance(c[5], type)
+    }
