@@ -13,13 +13,15 @@ handler, explain) rows, one per statement kind the engine runs itself
 instead of handing it to spark.sql as is — SET/RESET, ADD JAR/FILE and
 the metadata-only ALTERs (recorded, not errors), the confined subset of
 ``dfs`` and ``!`` file commands (any other shell command raises),
-BEGIN/COMMIT/ROLLBACK over versioned tables (hive_spark.txn), UPDATE/
-DELETE/MERGE copy-on-write (dml.py), LOCK and COMPACT, view partitions,
-macros, PREPARE/EXECUTE, materialized views, EXPORT/IMPORT, LOAD DATA,
-directory sinks and more. run_script tries the rows in order; the first
-whose pattern matches and whose handler does not decline takes the
-statement, and the last row, ``sql``, runs everything else through the
-rewrites below and spark.sql. A row's ``explain`` column says how
+BEGIN/COMMIT/ROLLBACK over every registered versioned table
+(hive_spark.txn: reads repeat the BEGIN version, and a script that ends
+inside a transaction rolls it back), UPDATE/DELETE/MERGE copy-on-write
+over versioned, bucketed or path tables (dml.py), LOCK and COMPACT, view
+partitions, macros, PREPARE/EXECUTE, materialized views, EXPORT/IMPORT,
+LOAD DATA, directory sinks and more. run_script tries the rows in order;
+the first whose pattern matches and whose handler does not decline takes
+the statement, and the last row, ``sql``, runs everything else through
+the rewrites below and spark.sql. A row's ``explain`` column says how
 EXPLAIN [mode] and EXPLAIN ANALYZE of that statement are answered, so
 the EXPLAIN routes read the same table the statements run from.
 ``ScriptResult.handled`` records (statement index, row name) for every
