@@ -49,6 +49,226 @@ def test_call_folding_rejects_unbalanced_calls(stmt):
         _fold_calls(stmt, "f", lambda a: "g")
 
 
+class _StubSession:
+    """Answers the two statements _inline_values and
+    _select_item_positions issue: DESCRIBE t gives columns a INT and b
+    STRING, SHOW CREATE TABLE fails (no defaults), and any query has
+    three columns."""
+
+    class _Frame:
+        def __init__(self, rows, columns):
+            self._rows, self.columns = rows, columns
+
+        def collect(self):
+            return self._rows
+
+    def sql(self, text):
+        if text.startswith("DESCRIBE"):
+            return self._Frame([("a", "int"), ("b", "string")], [])
+        if text.startswith("SHOW CREATE"):
+            raise ValueError("no DDL")
+        return self._Frame([], ["c0", "c1", "c2"])
+
+
+class _StubHpl:
+    """The HplInterpreter members _resolve_fn_calls uses: only `wrap` is
+    a user function, arguments evaluate to their own text, and a call
+    returns its arguments joined in brackets."""
+
+    def _find_function(self, pkg, name):
+        return {} if name == "wrap" else None
+
+    def _eval(self, expr):
+        return expr
+
+    def _call_function(self, pkg, name, fn, vals):
+        return "[" + "|".join(vals) + "]"
+
+    def _lit(self, v):
+        return f"'{v}'"
+
+
+def _scanners():
+    """Each scanner entry point by name, as a function of a case's args."""
+    from hive_spark import hqlscript as h
+    from hive_spark.hplsql import HplInterpreter
+    from hive_spark.plans import cte_spool
+
+    def show(args):
+        return "g[" + "|".join(args) + "]"
+
+    return {
+        "close": lambda s: h._close_paren(s, s.index("(")),
+        "scan_parens": lambda s: cte_spool._scan_parens(s, s.index("(")),
+        "split": h._split_args,
+        "split_types": lambda s: [x.strip() for x in h._split_generic_args(s)],
+        "top_level_spans": h._top_level_spans,
+        "fold_calls": lambda s: h._fold_calls(s, "f", show),
+        "rewrite_calls": lambda s: h._rewrite_calls(
+            s, "f", lambda a: show(a) if len(a) == 2 else None),
+        "gap_fns": h._rewrite_gap_fns,
+        "union_fns": h._rewrite_union_fns,
+        "kll_fns": h._rewrite_kll_fns,
+        "compute_stats": h._rewrite_compute_stats,
+        "uniontype": h._rewrite_uniontype,
+        "distinct_orderby_alias": h._rewrite_distinct_orderby_alias,
+        "ptf_noop": h._rewrite_ptf_noop,
+        "orderby_window_to_ordinal": h._orderby_window_to_ordinal,
+        "lateral_table_values": h._rewrite_lateral_table_values,
+        "autoalias": h._autoalias_select_lists,
+        "tuple_in": h._rewrite_tuple_in,
+        "left_operand_start": lambda s: h._left_operand_start(
+            s, s.index(" > ALL")),
+        "inline_values": lambda s: h._inline_values(_StubSession(), s, None),
+        "select_item_positions": lambda s: h._select_item_positions(
+            _StubSession(), s),
+        "resolve_fn_calls": lambda s: HplInterpreter._resolve_fn_calls(
+            _StubHpl(), s),
+    }
+
+
+# Every SQL-text scanner entry point on plain inputs (no quotes, comments
+# or backticks around brackets): (case id, entry point, arguments,
+# expected result).
+_SCAN_CASES = [
+    ("close_nested", "close", ("f(a, (b), c) + 1",), 11),
+    ("close_double", "close", ("((a)) b",), 4),
+    ("scan_parens_cte", "scan_parens", ("WITH x AS (SELECT (1)) SELECT",), 22),
+    ("split_nested_call", "split", ("a, f(b, c), d",), ["a", "f(b, c)", "d"]),
+    ("split_empty", "split", ("",), []),
+    ("split_one", "split", (" x ",), ["x"]),
+    ("split_empty_item", "split", ("a,,b",), ["a", "", "b"]),
+    ("split_trailing_comma", "split", ("a, b,",), ["a", "b"]),
+    ("split_types_nested", "split_types",
+     ("a int, b array<struct<x:int,y:string>>, c decimal(10,2)",),
+     ["a int", "b array<struct<x:int,y:string>>", "c decimal(10,2)"]),
+    ("split_types_map", "split_types",
+     ("m map<string,int>, n int",),
+     ["m map<string,int>", "n int"]),
+    ("spans_from", "top_level_spans",
+     ("SELECT a FROM (SELECT b FROM t) s", r"\bFROM\b"),
+     [(9, 13)]),
+    ("spans_qualify", "top_level_spans",
+     ("SELECT x QUALIFY f(y) > 1", r"\bQUALIFY\b"),
+     [(9, 16)]),
+    ("spans_insert", "top_level_spans",
+     ("INSERT INTO a SELECT 1 INSERT INTO b SELECT (INSERT)", r"\bINSERT\b"),
+     [(0, 6), (23, 29)]),
+    ("fold_nested_arg", "fold_calls",
+     ("SELECT f(a, g(b, c)) FROM t",),
+     "SELECT g[a|g(b, c)] FROM t"),
+    ("fold_nested_same_name", "fold_calls",
+     ("SELECT f(f(x), y)",),
+     "SELECT g[g[x]|y]"),
+    ("fold_no_args", "fold_calls", ("SELECT f(), f (1)",), "SELECT g[], g[1]"),
+    ("rewrite_two_args", "rewrite_calls",
+     ("SELECT f(a, g(b)), f(c), f(d, e) FROM t",),
+     "SELECT g[a|g(b)], f(c), g[d|e] FROM t"),
+    ("gap_mid_index", "gap_fns",
+     ("SELECT mid(s, 2, 3), index(arr, 1), index(a, 1, 2) FROM t",),
+     "SELECT substr(s, 2, 3), (arr)[1], index(a, 1, 2) FROM t"),
+    ("gap_table_named_like_fn", "gap_fns",
+     ("CREATE TABLE mid(a int, b int)",),
+     "CREATE TABLE mid(a int, b int)"),
+    ("gap_table_values", "gap_fns",
+     ("SELECT * FROM TABLE(VALUES (1, 2), (3, 4)) AS t(a, b)",),
+     "SELECT * FROM (VALUES (1, 2), (3, 4)) AS t(a, b)"),
+    ("gap_lateral_values", "gap_fns",
+     ("SELECT * FROM t, LATERAL TABLE(VALUES (1, a), (2, b)) AS v(x, y)",),
+     ("SELECT * FROM t LATERAL VIEW inline(array(named_struct('x', (1), "
+      "'y', (a)), named_struct('x', (2), 'y', (b)))) v AS x, y")),
+    ("union_fns", "union_fns",
+     (("SELECT create_union(0, a, f(b)), extract_union(u, 1), "
+       "extract_union(u) FROM t"),),
+     ("SELECT named_struct('tag', CAST((0) AS INT), 'field0', CASE WHEN "
+      "CAST((0) AS INT) = 0 THEN a END, 'field1', CASE WHEN CAST((0) AS "
+      "INT) = 1 THEN f(b) END), (u).field1, (u) FROM t")),
+    ("kll_fns", "kll_fns",
+     ("SELECT ds_kll_quantile(ds_kll_sketch(x), 0.5), ds_kll_n(s) FROM t",),
+     ("SELECT element_at(array_sort(array_sort(collect_list(CAST((x) AS "
+      "FLOAT)))), greatest(1, CAST(ceil((0.5) * "
+      "size(array_sort(collect_list(CAST((x) AS FLOAT))))) AS INT))), "
+      "CAST(size(s) AS BIGINT) FROM t")),
+    ("compute_stats", "compute_stats",
+     ("SELECT compute_stats(c, 'hll'), compute_stats(d, 'fm') FROM t",),
+     ("SELECT named_struct('count', count(c), 'numnulls', sum(CASE WHEN "
+      "c IS NULL THEN 1 ELSE 0 END), 'ndv', count(DISTINCT c)), "
+      "named_struct('count', count(d), 'numnulls', sum(CASE WHEN d IS "
+      "NULL THEN 1 ELSE 0 END), 'ndv', count(DISTINCT d)) FROM t")),
+    ("uniontype", "uniontype",
+     (("CREATE TABLE u (x UNIONTYPE<int, struct<a:int,b:string>, "
+       "decimal(10,2)>)"),),
+     ("CREATE TABLE u (x STRUCT<tag:INT, field0:int, "
+      "field1:struct<a:int,b:string>, field2:decimal(10,2)>)")),
+    ("distinct_orderby_alias", "distinct_orderby_alias",
+     (("SELECT DISTINCT a + b AS s, f(c, d) AS g FROM t ORDER BY a + b "
+       "DESC, f(c, d) LIMIT 3"),),
+     ("SELECT DISTINCT a + b AS s, f(c, d) AS g FROM t ORDER BY s DESC, "
+      "g LIMIT 3")),
+    ("ptf_noop", "ptf_noop",
+     ("SELECT * FROM noop(on t partition by a order by b) x",),
+     "SELECT * FROM (SELECT * FROM t) x"),
+    ("ptf_noop_subquery", "ptf_noop",
+     (("SELECT * FROM noop(on (SELECT f(a, b) FROM t order by a) "
+       "distribute by a) x"),),
+     "SELECT * FROM (SELECT * FROM (SELECT f(a, b) FROM t order by a)) x"),
+    ("orderby_window_ordinal", "orderby_window_to_ordinal",
+     (("SELECT a, rank() OVER (PARTITION BY a ORDER BY b) AS r FROM t "
+       "ORDER BY rank() OVER (PARTITION BY a ORDER BY b) DESC LIMIT 2"),),
+     ("SELECT a, rank() OVER (PARTITION BY a ORDER BY b) AS r FROM t "
+      "ORDER BY 2 DESC LIMIT 2")),
+    ("lateral_table_values", "lateral_table_values",
+     (("SELECT v.x FROM t, LATERAL TABLE(VALUES (1, f(2)), (3, 4)) AS "
+       "v(x, y)"),),
+     ("SELECT v.x FROM t LATERAL VIEW INLINE(ARRAY(STRUCT(1, f(2)), "
+      "STRUCT(3, 4))) v AS x, y")),
+    ("autoalias", "autoalias",
+     (("SELECT a, b + 1, (SELECT max(c) + 1 FROM u) FROM t WHERE x IN "
+       "(SELECT d + 1 FROM w)"),),
+     ("SELECT a, b + 1 AS _c1 , (SELECT max(c) + 1 AS _c0 FROM u) AS "
+      "_c2 FROM t WHERE x IN (SELECT d + 1 AS _c0 FROM w)")),
+    ("tuple_in", "tuple_in",
+     (("SELECT * FROM t WHERE (a, f(b)) IN ((1, 2), (3, 4)) AND (c, d) "
+       "NOT IN ((5, 6))"),),
+     ("SELECT * FROM t WHERE ((((a) = (1) AND (f(b)) = (2)) OR ((a) = "
+      "(3) AND (f(b)) = (4)))) AND (NOT (((c) = (5) AND (d) = (6))))")),
+    ("tuple_in_single_lhs", "tuple_in",
+     ("SELECT * FROM t WHERE f(a) IN (1, 2)",),
+     "SELECT * FROM t WHERE f(a) IN (1, 2)"),
+    ("left_operand_call", "left_operand_start",
+     ("SELECT x FROM t WHERE f(a, (b)) > ALL (SELECT 1)",),
+     22),
+    ("left_operand_column", "left_operand_start",
+     ("SELECT x FROM t WHERE t.col > ALL (SELECT 1)",),
+     22),
+    ("inline_values", "inline_values",
+     ("INSERT INTO t VALUES (1, f(2)), (DEFAULT, 3)",),
+     ("INSERT INTO t SELECT CAST(1 AS int) AS `a`, CAST(f(2) AS string) "
+      "AS `b` UNION ALL SELECT CAST(NULL AS int) AS `a`, CAST(3 AS "
+      "string) AS `b`")),
+    ("select_item_positions_star", "select_item_positions",
+     ("SELECT *, f(a, b) FROM t",),
+     [0, 2]),
+    ("select_item_positions_no_star", "select_item_positions",
+     ("SELECT a, f(b, c) FROM t",),
+     None),
+    ("resolve_fn_calls", "resolve_fn_calls",
+     ("wrap(a, g(b)) || wrap(c)",),
+     "'[a|g(b)]' || '[c]'"),
+]
+
+
+@pytest.mark.parametrize(
+    "entry,args,expected",
+    [c[1:] for c in _SCAN_CASES],
+    ids=[c[0] for c in _SCAN_CASES],
+)
+def test_scanner_entry_point(entry, args, expected):
+    """Each place the front end scans SQL text for brackets, commas or
+    keywords gives the same result on plain input."""
+    assert _scanners()[entry](*args) == expected
+
+
 def test_representative_hive_script(spark, sf_dir):
     views(spark, sf_dir)
     script = """
