@@ -65,6 +65,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 
 from hive_spark.hqlscript import rewrite_statement, split_statements
+from hive_spark.sqltext import close_bracket, split_top
 
 _DECLARE = re.compile(
     r"^\s*DECLARE\s+(\w+)(?:\s+(?!:=)[A-Za-z0-9_()]+)?\s*(?::=\s*(.*))?$",
@@ -223,10 +224,8 @@ class HplInterpreter:
             json.dump({"name": name.lower(), "params": params, "body": body}, f)
 
     def _exec_call(self, name: str, argstr: str) -> None:
-        from hive_spark.hqlscript import _split_args
-
         proc = self._find_proc(name)
-        args = _split_args(argstr) if argstr.strip() else []
+        args = split_top(argstr) if argstr.strip() else []
         vals = [self._eval(a) for a in args]
         if len(vals) != len(proc["params"]):
             raise HplSignal(
@@ -314,8 +313,6 @@ class HplInterpreter:
         first (argument expressions go back through _eval, which resolves
         nested calls). Only KNOWN function names resolve; SQL built-ins
         and table.column references pass through untouched."""
-        from hive_spark.hqlscript import _split_args
-
         pos = 0
         while True:
             m = _FN_CALL.search(text, pos)
@@ -328,21 +325,13 @@ class HplInterpreter:
             if fn is None:
                 pos = m.end()
                 continue
-            depth, j = 1, m.end()
-            while j < len(text) and depth:
-                if text[j] == "(":
-                    depth += 1
-                elif text[j] == ")":
-                    depth -= 1
-                j += 1
-            if depth:
-                raise ValueError(f"unbalanced call of {fn_name} in {text!r}")
-            argstr = text[m.end():j - 1]
-            args = _split_args(argstr) if argstr.strip() else []
+            close = close_bracket(text, m.end() - 1)
+            argstr = text[m.end():close]
+            args = split_top(argstr) if argstr.strip() else []
             vals = [self._eval(a) for a in args]
-            val = self._call_function(pkg_name, fn_name, fn, vals)
-            text = text[:m.start()] + self._lit(val) + text[j:]
-            pos = m.start() + len(self._lit(val))
+            lit = self._lit(self._call_function(pkg_name, fn_name, fn, vals))
+            text = text[:m.start()] + lit + text[close + 1:]
+            pos = m.start() + len(lit)
 
     # -- packages (CREATE PACKAGE [BODY], pkg.proc calls, pkg.var refs) -----
 
@@ -441,8 +430,6 @@ class HplInterpreter:
         return state
 
     def _exec_pkg_call(self, pkg_name: str, proc_name: str, argstr: str) -> None:
-        from hive_spark.hqlscript import _split_args
-
         pkg = self._find_pkg(pkg_name)
         proc = (pkg or {}).get("procs", {}).get(proc_name.lower())
         if proc is None:
@@ -450,7 +437,7 @@ class HplInterpreter:
                 "sqlexception", f"unknown procedure {pkg_name}.{proc_name}"
             )
         state = self._ensure_pkg_state(pkg_name)
-        args = _split_args(argstr) if argstr.strip() else []
+        args = split_top(argstr) if argstr.strip() else []
         vals = [self._eval(a) for a in args]
         if len(vals) != len(proc["params"]):
             raise HplSignal(
@@ -651,12 +638,10 @@ class HplInterpreter:
     # -- cursors (DECLARE ... CURSOR (params) FOR / OPEN / FETCH / CLOSE) ---
 
     def _open_cursor(self, name: str, argstr: str | None) -> None:
-        from hive_spark.hqlscript import _split_args
-
         cur = self.cursors.get(name.lower())
         if cur is None:
             raise ValueError(f"OPEN of undeclared cursor {name!r}")
-        args = _split_args(argstr) if argstr and argstr.strip() else []
+        args = split_top(argstr) if argstr and argstr.strip() else []
         vals = [self._eval(a) for a in args]
         if len(vals) != len(cur["params"]):
             raise HplSignal(

@@ -63,6 +63,18 @@ never from the message text. run_script and EXECUTE share the loop,
 and ``ScriptResult.retries`` records (statement index, rule name) for
 every rule that fired. Adding a rule means one `_RETRIES` row plus one
 case in tests/test_hqlscript.py's ``_RETRY_CASES``.
+
+SQL-text scanning (where a bracket closes, where a comma splits, whether
+a keyword is at the top level) lives in `hive_spark.sqltext`. Its
+`skip_noncode` is the one lexical rule: '...' and "..." strings with
+backslash and doubled-quote escapes, backticked names, -- and /* */
+comments. `code_positions` walks the code characters with their bracket
+depth, and `close_bracket`, `open_bracket`, `split_top`,
+`top_level_spans` and `rewrite_calls` (the one call rewriter) are built
+on it; cte_spool, hplsql and the JDBC handler use the same helpers.
+tests/test_hqlscript.py fails when a function elsewhere in hive_spark/
+keeps its own bracket depth. `split_statements` keeps the CLI's own
+splitting rules.
 """
 
 from __future__ import annotations
@@ -79,7 +91,14 @@ from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession
 
 from hive_spark import authz
-from hive_spark.plans.cte_spool import _scan_parens, _skip_noncode
+from hive_spark.sqltext import (
+    close_bracket,
+    code_positions,
+    open_bracket,
+    rewrite_calls,
+    split_top,
+    top_level_spans,
+)
 
 _TXN = re.compile(r"^\s*(START\s+TRANSACTION|BEGIN|COMMIT|ROLLBACK)\b", re.I)
 _UPDATE_STMT = re.compile(
@@ -113,7 +132,7 @@ def _match_merge(stmt: str):
         return None
     i = m.end()
     if i < len(stmt) and stmt[i] == "(":
-        close = _close_paren(stmt, i)
+        close = close_bracket(stmt, i)
         src_text, rest = stmt[i : close + 1], stmt[close + 1 :]
     else:
         m2 = re.match(r"(?:`[^`]+`|[\w.])+", stmt[i:])
@@ -612,17 +631,6 @@ def _rewrite_time_travel(spark: SparkSession, stmt: str) -> str:
 
 # -- HiveQL-only call folding ------------------------------------------------
 
-def _close_paren(s: str, i: int) -> int:
-    """Index of the ')' closing the '(' at s[i] (strings, backticked
-    identifiers and comments skipped); ValueError when none closes it."""
-    # _scan_parens returns len(text) both for a ')' that ends the text
-    # and for no ')' at all; one byte of padding tells the two apart
-    end = _scan_parens(s + " ", i)
-    if end > len(s):
-        raise ValueError(f"unbalanced parens in {s[i:i + 60]!r}")
-    return end - 1
-
-
 def _publish_dml(spark: SparkSession, res, name: str, path: str, build) -> None:
     """Apply `build(latest_df) -> df` to a VERSIONED table: inside an
     open transaction the new version goes through the txn (so ROLLBACK
@@ -706,7 +714,7 @@ def _exec_update(spark, res, m, stmt):
         if re.search(r"(?i)=\s*default\b", set_text) else {}
     )
     assigns = {}
-    for pair in _split_args(set_text):
+    for pair in split_top(set_text):
         pm = re.match(r"\s*([\w.]+)\s*=\s*(.+?)\s*$", pair, re.S)
         col = pm.group(1).split(".")[-1]
         val = pm.group(2)
@@ -802,7 +810,7 @@ def _exec_merge(spark, res, m, stmt):
             matched_delete = F.expr(rw(and_cond)) if and_cond else F.lit(True)
             continue
         matched_update = {}
-        for pair in _split_args(set_text):
+        for pair in split_top(set_text):
             pm = re.match(
                 r"\s*((?:`[^`]+`|[\w.])+)\s*=\s*(.+?)\s*$", pair, re.S
             )
@@ -822,7 +830,7 @@ def _exec_merge(spark, res, m, stmt):
             # Hive folds WHEN NOT MATCHED AND <cond> into the insert
             # branch's source filter (MergeSemanticAnalyzer.java:85-102)
             not_matched_cond = F.expr(rw(wm.group(1)))
-        vals = [rw(v) for v in _split_args(wm.group(3))]
+        vals = [rw(v) for v in split_top(wm.group(3))]
         if wm.group(2):
             cols = [
                 c.strip().replace("`", "").split(".")[-1]
@@ -868,42 +876,6 @@ def _refresh_catalog_entry(spark: SparkSession, name: str) -> None:
         spark.catalog.refreshTable(name)
     except Exception:
         pass  # path-registered target with no catalog entry
-
-
-def _split_args(s: str) -> list[str]:
-    """Split a call's argument list on top-level commas (strings,
-    backticked identifiers and comments skipped)."""
-    out, depth, start, i = [], 0, 0, 0
-    while i < len(s):
-        j = _skip_noncode(s, i)
-        if j != i:
-            i = j
-            continue
-        if s[i] == "(":
-            depth += 1
-        elif s[i] == ")":
-            depth -= 1
-        elif s[i] == "," and depth == 0:
-            out.append(s[start:i].strip())
-            start = i + 1
-        i += 1
-    if start < len(s):
-        out.append(s[start:].strip())
-    return out
-
-
-def _fold_calls(stmt: str, fname: str, fold) -> str:
-    """Replace every `fname(args...)` with fold(args) (balanced-paren
-    scan, so nested calls like cast(x AS float) survive)."""
-    pat = re.compile(r"\b" + fname + r"\s*\(", re.I)
-    while True:
-        m = pat.search(stmt)
-        if m is None:
-            return stmt
-        open_i = stmt.index("(", m.start())
-        close_i = _close_paren(stmt, open_i)
-        args = _split_args(stmt[open_i + 1 : close_i])
-        stmt = stmt[: m.start()] + fold(args) + stmt[close_i + 1 :]
 
 
 def _fold_ds_hll(args: list[str]) -> str:
@@ -1255,7 +1227,7 @@ def _rewrite_stored_as(stmt: str) -> str:
         if not m_open:
             return None
         o = nm.end() + m_open.end() - 1
-        return o, _scan_parens(stmt, o)  # (index of '(', index past ')')
+        return o, close_bracket(stmt, o) + 1  # ('(' index, past ')')
 
     span = col_span()
     if span and re.search(
@@ -1283,7 +1255,7 @@ def _rewrite_stored_as(stmt: str) -> str:
             )
             return it.strip()
 
-        items = _split_args(stmt[span[0] + 1 : span[1] - 1])
+        items = split_top(stmt[span[0] + 1 : span[1] - 1])
         kept = [
             _strip_col_constraints(it)
             for it in items
@@ -1319,14 +1291,14 @@ def _rewrite_stored_as(stmt: str) -> str:
     pb = re.search(r"\bPARTITIONED\s+BY\s*\(", stmt, re.I)
     if pb:
         p_open = stmt.index("(", pb.start())
-        p_close = _scan_parens(stmt, p_open)
+        p_close = close_bracket(stmt, p_open) + 1
         p_items = [
             re.sub(
                 r"(?i)\s+(DISABLE|ENABLE|NOVALIDATE|VALIDATE|RELY|NORELY)\b",
                 "",
                 x,
             ).strip()
-            for x in _split_args(stmt[p_open + 1 : p_close - 1])
+            for x in split_top(stmt[p_open + 1 : p_close - 1])
         ]
         if p_items and all(len(x.split()) >= 2 for x in p_items):
             names = ", ".join(x.split()[0] for x in p_items)
@@ -1457,6 +1429,25 @@ def _rewrite_one_window_spec(span: str, before: str = "") -> str:
     return span
 
 
+def _select_items(stmt: str, start: int) -> list[str] | None:
+    """The select items from `start` (just past SELECT [DISTINCT]) to
+    the first top-level FROM; None when no top-level FROM follows."""
+    froms = [a for a, _ in top_level_spans(stmt, r"\bFROM\b") if a >= start]
+    return split_top(stmt[start : froms[0]]) if froms else None
+
+
+def _paren_tuples(text: str) -> list[str] | None:
+    """The inner text of each tuple in a `(..), (..)` list; None when an
+    item is not one parenthesized tuple."""
+    items = split_top(text)
+    if not items or any(
+        not it.startswith("(") or close_bracket(it, 0) != len(it) - 1
+        for it in items
+    ):
+        return None
+    return [it[1:-1] for it in items]
+
+
 def _rewrite_distinct_orderby_alias(stmt: str) -> str:
     """SELECT DISTINCT e AS alias ... ORDER BY e: Hive binds the ORDER
     BY expression to the select item computing it (SemanticAnalyzer
@@ -1473,41 +1464,13 @@ def _rewrite_distinct_orderby_alias(stmt: str) -> str:
     def norm(s: str) -> str:
         return re.sub(r"\s+", " ", s).strip().lower()
 
-    # scan depth-0 tokens: select-list span ends at FROM; note the last
-    # depth-0 ORDER BY
-    i, depth = m.end(), 0
-    items: list[str] = []
-    buf_start = i
-    from_at = order_at = None
-    n = len(stmt)
-    while i < n:
-        j = _skip_noncode(stmt, i)
-        if j != i:
-            i = j
-            continue
-        c = stmt[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0:
-            if c == "," and from_at is None:
-                items.append(stmt[buf_start:i])
-                buf_start = i + 1
-            else:
-                km = re.match(r"(?i)(FROM|ORDER\s+BY)\b", stmt[i:])
-                if km and (i == 0 or not (stmt[i - 1].isalnum()
-                                          or stmt[i - 1] in "_`")):
-                    if km.group(1).upper() == "FROM" and from_at is None:
-                        items.append(stmt[buf_start:i])
-                        from_at = i
-                    elif km.group(1).upper() != "FROM":
-                        order_at = i + km.end()
-                    i += km.end()
-                    continue
-        i += 1
-    if from_at is None or order_at is None:
+    # the select list ends at the first top-level FROM; the statement's
+    # sort is the last top-level ORDER BY
+    items = _select_items(stmt, m.end())
+    orders = top_level_spans(stmt, r"\bORDER\s+BY\b")
+    if items is None or not orders:
         return stmt
+    order_at = orders[-1][1]
     aliases: dict[str, str] = {}
     for it in items:
         am = re.match(
@@ -1522,7 +1485,7 @@ def _rewrite_distinct_orderby_alias(stmt: str) -> str:
     # ORDER BY items run to end (or LIMIT)
     tail_m = re.search(r"(?i)\bLIMIT\b", stmt[order_at:])
     ob_end = order_at + (tail_m.start() if tail_m else len(stmt) - order_at)
-    ob_items = _split_args(stmt[order_at:ob_end])
+    ob_items = split_top(stmt[order_at:ob_end])
     changed = False
     out_items = []
     for it in ob_items:
@@ -1565,7 +1528,7 @@ def _expand_window_refs(stmt: str) -> str:
                     ("PARENIZE", i + dm.start(2), i + dm.end(2))
                 ]
             open_at = i + dm.end() - 1
-            close = _close_paren(s, open_at)
+            close = close_bracket(s, open_at)
             out.append((dm.group(1).lower(), open_at, close))
             j = close + 1
             cm = re.match(r"\s*,", s[j:])
@@ -1627,16 +1590,16 @@ def _rewrite_window_specs(stmt: str) -> str:
             out.append(stmt[i:])
             return "".join(out)
         open_at = m.end() - 1
-        close = _scan_parens(stmt, open_at)
+        close = close_bracket(stmt, open_at)
         out.append(stmt[i : open_at + 1])
         out.append(
             _rewrite_one_window_spec(
-                stmt[open_at + 1 : close - 1],
+                stmt[open_at + 1 : close],
                 stmt[max(0, m.start() - 80) : m.start()],
             )
         )
         out.append(")")
-        i = close
+        i = close + 1
 
 
 # Hive PTF invocation `noop(on <src> [partition by ...] [order by /
@@ -1654,10 +1617,9 @@ _PTF_NOOP_OPEN = re.compile(
     r"\s*\(\s*on\b",
     re.I,
 )
-_PTF_SPEC_KEYWORD = re.compile(
+_PTF_SPEC_KEYWORD = (
     r"\b(?:partition\s+by|order\s+by|sort\s+by|distribute\s+by|"
-    r"cluster\s+by)\b",
-    re.I,
+    r"cluster\s+by)\b"
 )
 
 
@@ -1666,34 +1628,15 @@ def _rewrite_ptf_noop(stmt: str) -> str:
         m = _PTF_NOOP_OPEN.search(stmt)
         if not m:
             return stmt
-        open_at = stmt.index("(", m.start())
-        close = _scan_parens(stmt, open_at)
-        inner = stmt[m.end() : close - 1]
+        close = close_bracket(stmt, stmt.index("(", m.start()))
+        inner = stmt[m.end() : close]
         # source = inner text up to the first TOP-LEVEL spec keyword
-        depth = 0
-        cut = len(inner)
-        i = 0
-        while i < len(inner):
-            j = _skip_noncode(inner, i)
-            if j != i:
-                i = j
-                continue
-            c = inner[i]
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            elif depth == 0:
-                k = _PTF_SPEC_KEYWORD.match(inner, i)
-                if k:
-                    cut = i
-                    break
-            i += 1
-        source = inner[:cut].strip()
+        cuts = top_level_spans(inner, _PTF_SPEC_KEYWORD)
+        source = inner[: cuts[0][0] if cuts else len(inner)].strip()
         stmt = (
             stmt[: m.start()]
             + f"(SELECT * FROM {source})"
-            + stmt[close:]
+            + stmt[close + 1 :]
         )
 
 
@@ -1942,54 +1885,6 @@ def _exec_load_data(spark, res, m, stmt):
         df.write.insertInto(table, overwrite=overwrite)
 
 
-def _top_level_spans(text: str, pattern: str) -> list:
-    """Spans of `pattern` matches at paren-depth 0, outside quotes."""
-    spans = []
-    depth = 0
-    i = 0
-    rx = re.compile(pattern, re.I)
-    while i < len(text):
-        c = text[i]
-        if c in "'\"":
-            q = c
-            i += 1
-            while i < len(text) and text[i] != q:
-                i += 2 if text[i] == "\\" else 1
-            i += 1
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0:
-            m = rx.match(text, i)
-            if m:
-                spans.append((m.start(), m.end()))
-                i = m.end()
-                continue
-        i += 1
-    return spans
-
-
-def _split_generic_args(text: str) -> list[str]:
-    """Split a type-argument list on top-level commas, honoring <> and
-    () nesting (array<struct<a:int,b:string>> stays whole)."""
-    out, cur, depth = [], [], 0
-    for ch in text:
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur))
-    return out
-
-
 def _rewrite_uniontype(stmt: str) -> str:
     """UNIONTYPE<t0, t1, ...> -> STRUCT<tag:INT, field0:t0, ...> (the
     tagged-struct emulation, ref: serde/.../objectinspector/
@@ -2001,77 +1896,34 @@ def _rewrite_uniontype(stmt: str) -> str:
         m = re.search(r"(?i)\bUNIONTYPE\s*<", stmt)
         if not m:
             return stmt
-        i, depth = m.end(), 1
-        start = i
-        while i < len(stmt) and depth:
-            if stmt[i] == "<":
-                depth += 1
-            elif stmt[i] == ">":
-                depth -= 1
-            i += 1
-        alts = _split_generic_args(stmt[start:i - 1])
-        fields = ", ".join(
-            f"field{k}:{t.strip()}" for k, t in enumerate(alts)
-        )
-        stmt = stmt[:m.start()] + f"STRUCT<tag:INT, {fields}>" + stmt[i:]
-
-
-def _find_call(stmt: str, name: str):
-    """Locate the leftmost `name(...)` call in `stmt` (quote- and
-    paren-aware). Returns (call start, args start, index past ')')."""
-    m = re.search(rf"(?i)\b{name}\s*\(", stmt)
-    if m is None:
-        return None
-    i, depth = m.end(), 1
-    while i < len(stmt) and depth:
-        c = stmt[i]
-        if c in "'\"":
-            q = c
-            i += 1
-            while i < len(stmt) and stmt[i] != q:
-                i += 2 if stmt[i] == "\\" else 1
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        i += 1
-    return m.start(), m.end(), i
+        close = close_bracket(stmt, m.end() - 1)
+        alts = split_top(stmt[m.end() : close], "()<>")
+        fields = ", ".join(f"field{k}:{t}" for k, t in enumerate(alts))
+        stmt = (stmt[: m.start()] + f"STRUCT<tag:INT, {fields}>"
+                + stmt[close + 1 :])
 
 
 def _rewrite_union_fns(stmt: str) -> str:
     """create_union(tag, v0, v1, ...) and extract_union(u[, n]) over the
     tagged-struct emulation (see _rewrite_uniontype)."""
-    while True:
-        span = _find_call(stmt, "create_union")
-        if span is None:
-            break
-        s, a, e = span
-        args = [x.strip() for x in _split_args(stmt[a:e - 1])]
+    def create(args: list[str]) -> str:
         tag, vals = args[0], args[1:]
         fields = ", ".join(
             f"'field{k}', CASE WHEN CAST(({tag}) AS INT) = {k}"
             f" THEN {v} END"
             for k, v in enumerate(vals)
         )
-        stmt = (
-            stmt[:s]
-            + f"named_struct('tag', CAST(({tag}) AS INT), {fields})"
-            + stmt[e:]
-        )
-    while True:
-        span = _find_call(stmt, "extract_union")
-        if span is None:
-            break
-        s, a, e = span
-        args = [x.strip() for x in _split_args(stmt[a:e - 1])]
+        return f"named_struct('tag', CAST(({tag}) AS INT), {fields})"
+
+    def extract(args: list[str]) -> str:
         if len(args) == 2 and re.fullmatch(r"\d+", args[1]):
-            repl = f"({args[0]}).field{args[1]}"
-        else:
-            # 1-arg form returns the alternatives struct; the tag rides
-            # along here (schema-free text rewrite) — payload fields match
-            repl = f"({args[0]})"
-        stmt = stmt[:s] + repl + stmt[e:]
-    return stmt
+            return f"({args[0]}).field{args[1]}"
+        # 1-arg form returns the alternatives struct; the tag rides
+        # along here (schema-free text rewrite) — payload fields match
+        return f"({args[0]})"
+
+    stmt = rewrite_calls(stmt, "create_union", create)
+    return rewrite_calls(stmt, "extract_union", extract)
 
 
 def _rewrite_kll_fns(stmt: str) -> str:
@@ -2084,14 +1936,6 @@ def _rewrite_kll_fns(stmt: str) -> str:
     (items < v), getCDF is inclusive (items <= split) with a trailing
     1.0. The registry's sampled-KLL mapInPandas operator
     (operators/sketches.py) remains the at-scale lane."""
-    def _sub(name: str, build) -> bool:
-        span = _find_call(stmt, name)
-        if span is None:
-            return None
-        s, a, e = span
-        args = [x.strip() for x in _split_args(stmt[a:e - 1])]
-        return stmt[:s] + build(args) + stmt[e:]
-
     rules = {
         # drop the optional k parameter: exactness subsumes sketch size
         "ds_kll_sketch": lambda a: (
@@ -2117,14 +1961,8 @@ def _rewrite_kll_fns(stmt: str) -> str:
             f" CAST(size({a[0]}) AS STRING))"
         ),
     }
-    changed = True
-    while changed:
-        changed = False
-        for name, build in rules.items():
-            out = _sub(name, build)
-            if out is not None:
-                stmt = out
-                changed = True
+    for name, build in rules.items():
+        stmt = rewrite_calls(stmt, name, build)
     return stmt
 
 
@@ -2134,35 +1972,6 @@ def _rewrite_kll_fns(stmt: str) -> str:
 # verbatim HiveQL text (ref registrations: ql/.../exec/
 # FunctionRegistry.java:286-662). Each fold maps onto JVM-side builtins.
 # ---------------------------------------------------------------------------
-
-
-def _fold_gap_calls(stmt: str, name: str, fold) -> str:
-    """_fold_calls, but skip call-shaped text that is really a TABLE
-    name followed by a column list (qtests deliberately name tables
-    after the function under test: `create table
-    datetime_legacy_hybrid_calendar(dt date, ...)`)."""
-    pat = re.compile(r"\b" + name + r"\s*\(", re.I)
-    pos = 0
-    while True:
-        m = pat.search(stmt, pos)
-        if m is None:
-            return stmt
-        prefix = stmt[: m.start()].rstrip()
-        if (
-            re.search(r"(?i)\b(table|exists|into|describe|desc)$", prefix)
-            or (
-                re.search(r"(?i)\bview$", prefix)
-                and not re.search(r"(?i)\blateral\s+view$", prefix)
-            )
-            or prefix.endswith(".")
-        ):
-            pos = m.end()
-            continue
-        open_i = stmt.index("(", m.start())
-        close_i = _close_paren(stmt, open_i)
-        args = _split_args(stmt[open_i + 1 : close_i])
-        stmt = stmt[: m.start()] + fold(args) + stmt[close_i + 1 :]
-        pos = 0
 
 
 def _fold_parse_url_tuple(args: list[str]) -> str:
@@ -2313,7 +2122,10 @@ def _rewrite_gap_fns(stmt: str) -> str:
     # (ref: GenericUDAFSumEmptyIsZero) — backticked in HiveQL text
     if re.search(r"(?i)`?\$sum0`?\s*\(", stmt):
         stmt = re.sub(r"(?i)`?\$sum0`?\s*\(", "__sum0(", stmt)
-        stmt = _fold_gap_calls(stmt, "__sum0", lambda a: f"coalesce(sum({a[0]}), 0)")
+        stmt = rewrite_calls(
+            stmt, "__sum0", lambda a: f"coalesce(sum({a[0]}), 0)",
+            guard_tables=True,
+        )
     # murmur_hash -> Spark's hash (both Murmur3_x86_32; Hive seeds with
     # 104729 where Spark uses 42, so values differ cross-engine —
     # ref: ObjectInspectorUtils.getBucketHashCode)
@@ -2327,41 +2139,55 @@ def _rewrite_gap_fns(stmt: str) -> str:
     # string-cast the input since Hive accepts any type and equal values
     # stay equal under the cast (the property the qtest checks)
     if re.search(r"(?i)\bcompute_bit_vector_hll\s*\(", stmt):
-        stmt = _fold_gap_calls(
+        stmt = rewrite_calls(
             stmt, "compute_bit_vector_hll",
             lambda a: f"hll_sketch_agg(CAST(({a[0]}) AS STRING))",
+            guard_tables=True,
         )
     if re.search(r"(?i)\barray_slice\s*\(", stmt):
         # Hive start is 0-based (golden: slice(array(1,2,3,null,3,4),2,2)
         # = [3,null]); Spark's slice is 1-based
-        stmt = _fold_gap_calls(
+        stmt = rewrite_calls(
             stmt, "array_slice",
             lambda a: f"slice({a[0]}, ({a[1]}) + 1, {a[2]})",
+            guard_tables=True,
         )
     if re.search(r"(?i)\binterval_year_month\s*\(", stmt):
-        stmt = _fold_gap_calls(
+        stmt = rewrite_calls(
             stmt, "interval_year_month",
             lambda a: f"CAST({a[0]} AS INTERVAL YEAR TO MONTH)",
+            guard_tables=True,
         )
     if re.search(r"(?i)\binterval_day_time\s*\(", stmt):
-        stmt = _fold_gap_calls(
+        stmt = rewrite_calls(
             stmt, "interval_day_time",
             lambda a: f"CAST({a[0]} AS INTERVAL DAY TO SECOND)",
+            guard_tables=True,
         )
     if re.search(r"(?i)\bdatetime_legacy_hybrid_calendar\s*\(", stmt):
-        stmt = _fold_gap_calls(
-            stmt, "datetime_legacy_hybrid_calendar", _fold_dlhc
+        stmt = rewrite_calls(
+            stmt, "datetime_legacy_hybrid_calendar", _fold_dlhc,
+            guard_tables=True,
         )
     if re.search(r"(?i)\bparse_url_tuple\s*\(", stmt):
-        stmt = _fold_gap_calls(stmt, "parse_url_tuple", _fold_parse_url_tuple)
+        stmt = rewrite_calls(
+            stmt, "parse_url_tuple", _fold_parse_url_tuple,
+            guard_tables=True,
+        )
     if re.search(r"(?i)\breplicate_rows\s*\(", stmt):
-        stmt = _fold_gap_calls(stmt, "replicate_rows", _fold_replicate_rows)
+        stmt = rewrite_calls(
+            stmt, "replicate_rows", _fold_replicate_rows,
+            guard_tables=True,
+        )
     if re.search(r"(?i)\bin_file\s*\(", stmt):
-        stmt = _fold_gap_calls(stmt, "in_file", _fold_in_file)
+        stmt = rewrite_calls(stmt, "in_file", _fold_in_file, guard_tables=True)
     if re.search(r"(?i)\bngrams\s*\(", stmt):
-        stmt = _fold_gap_calls(stmt, "ngrams", _fold_ngrams)
+        stmt = rewrite_calls(stmt, "ngrams", _fold_ngrams, guard_tables=True)
     if re.search(r"(?i)\bcontext_ngrams\s*\(", stmt):
-        stmt = _fold_gap_calls(stmt, "context_ngrams", _fold_context_ngrams)
+        stmt = rewrite_calls(
+            stmt, "context_ngrams", _fold_context_ngrams,
+            guard_tables=True,
+        )
     if re.search(r"(?i)\bds_theta_\w+\s*\(", stmt):
         # union_f/intersect_f before union so the \b..union\b scan can't
         # split the _f names; estimate last so folded args pass through
@@ -2369,7 +2195,10 @@ def _rewrite_gap_fns(stmt: str) -> str:
                      "ds_theta_intersect_f", "ds_theta_exclude",
                      "ds_theta_union", "ds_theta_estimate"):
             if re.search(rf"(?i)\b{name}\s*\(", stmt):
-                stmt = _fold_gap_calls(stmt, name, _THETA_FOLDS[name])
+                stmt = rewrite_calls(
+                    stmt, name, _THETA_FOLDS[name],
+                    guard_tables=True,
+                )
     # json_read(json, 'hive type string') (ref: GenericUDFJsonRead) —
     # Spark's from_json accepts the same type-string syntax, except that
     # Hive tolerates unquoted struct field names containing spaces
@@ -2381,30 +2210,35 @@ def _rewrite_gap_fns(stmt: str) -> str:
             )
             return f"from_json({a[0]}, {schema})"
 
-        stmt = _fold_gap_calls(stmt, "json_read", _fold_json_read)
+        stmt = rewrite_calls(
+            stmt, "json_read", _fold_json_read,
+            guard_tables=True,
+        )
     # split_map_privs('1 0 ...') -> privilege names at the '1' slots
     # (ref: GenericUDFStringToPrivilege; HiveResourceACLs.Privilege order)
     if re.search(r"(?i)\bsplit_map_privs\s*\(", stmt):
         _privs = ("'SELECT','UPDATE','CREATE','DROP','ALTER',"
                   "'INDEX','LOCK','READ','WRITE'")
-        stmt = _fold_gap_calls(
+        stmt = rewrite_calls(
             stmt, "split_map_privs",
             lambda a: (
                 f"filter(transform(split({a[0]}, ' '), (_x, _i) ->"
                 f" IF(_x = '1', element_at(array({_privs}), _i + 1),"
                 " NULL)), _x -> _x IS NOT NULL)"
             ),
+            guard_tables=True,
         )
     # mid = substr synonym (ref: FunctionRegistry "mid"; 2- and 3-arg)
     if re.search(r"(?i)\bmid\s*\(", stmt):
-        stmt = _fold_gap_calls(
-            stmt, "mid", lambda a: f"substr({', '.join(a)})"
+        stmt = rewrite_calls(
+            stmt, "mid", lambda a: f"substr({', '.join(a)})",
+            guard_tables=True,
         )
     # index(collection, key) -> subscript (ref: GenericUDFIndex; `index`
-    # is a common word, so only 2-arg call sites fold — _rewrite_calls
-    # skips non-matching ones instead of looping)
+    # is a common word, so only 2-arg call sites fold — rewrite_calls
+    # leaves the others as written)
     if re.search(r"(?i)\bindex\s*\(", stmt):
-        stmt = _rewrite_calls(
+        stmt = rewrite_calls(
             stmt, "index",
             lambda a: f"({a[0]})[{a[1]}]" if len(a) == 2 else None,
             guard_tables=True,
@@ -2418,7 +2252,7 @@ def _rewrite_gap_fns(stmt: str) -> str:
         if m is None:
             break
         open_i = m.end() - 1
-        close_i = _close_paren(stmt, open_i)
+        close_i = close_bracket(stmt, open_i)
         inner = stmt[open_i + 1 : close_i].strip()
         if not re.match(r"(?i)VALUES\b", inner):
             break
@@ -2428,25 +2262,21 @@ def _rewrite_gap_fns(stmt: str) -> str:
         if am is None:
             break
         alias, colspec = am.group(1), am.group(2)
-        rows = [
-            r.strip() for r in _split_args(inner[len("VALUES"):].strip())
-        ]
-        first_arity = len(_split_args(rows[0].strip()[1:-1])) if rows else 0
+        tuples = _paren_tuples(inner[len("VALUES"):])
+        if tuples is None:
+            break
+        rows = [split_top(t) for t in tuples]
         cols = (
             [c.strip().strip("`") for c in colspec.split(",")]
             if colspec
-            else [f"col{i+1}" for i in range(first_arity)]
+            else [f"col{i+1}" for i in range(len(rows[0]))]
         )
-        structs = []
-        for r in rows:
-            vals = _split_args(r.strip()[1:-1])
-            structs.append(
-                "named_struct("
-                + ", ".join(
-                    f"'{c}', ({v.strip()})" for c, v in zip(cols, vals)
-                )
-                + ")"
-            )
+        structs = [
+            "named_struct("
+            + ", ".join(f"'{c}', ({v})" for c, v in zip(cols, vals))
+            + ")"
+            for vals in rows
+        ]
         stmt = (
             stmt[: m.start()]
             + f" LATERAL VIEW inline(array({', '.join(structs)}))"
@@ -2456,15 +2286,10 @@ def _rewrite_gap_fns(stmt: str) -> str:
     # TABLE(VALUES (..),(..)) AS alias(cols) -> plain inline VALUES
     # (HiveParser tableSource TABLE(VALUES...) form; Spark accepts the
     # parenthesized VALUES relation directly)
-    while True:
-        span = _find_call(stmt, "TABLE")
-        if span is None:
-            break
-        s, a, e = span
-        inner = stmt[a:e - 1].lstrip()
-        if not re.match(r"(?i)VALUES\b", inner):
-            break
-        stmt = stmt[:s] + "(" + inner + ")" + stmt[e:]
+    while m := re.search(r"(?i)\bTABLE\s*\((?=\s*VALUES\b)", stmt):
+        close = close_bracket(stmt, m.end() - 1)
+        stmt = (stmt[: m.start()] + "(" + stmt[m.end() : close].lstrip()
+                + ")" + stmt[close + 1 :])
     return stmt
 
 
@@ -2484,7 +2309,7 @@ def _expand_regex_columns(spark: SparkSession, stmt: str) -> str:
     for m in re.finditer(r"(?i)\b(?:FROM|JOIN)\s+", stmt):
         i = m.end()
         if i < len(stmt) and stmt[i] == "(":
-            close = _close_paren(stmt, i)
+            close = close_bracket(stmt, i)
             src = ("subq", stmt[i + 1 : close])
             am = re.match(r"\s*(?:AS\s+)?(\w+)", stmt[close + 1 :], re.I)
         else:
@@ -2552,16 +2377,9 @@ def _left_operand_start(stmt: str, end: int) -> int:
     while i > 0 and stmt[i - 1].isspace():
         i -= 1
     if i > 0 and stmt[i - 1] == ")":
-        depth = 0
-        j = i - 1
-        while j >= 0:
-            if stmt[j] == ")":
-                depth += 1
-            elif stmt[j] == "(":
-                depth -= 1
-                if depth == 0:
-                    break
-            j -= 1
+        j = open_bracket(stmt, i - 1)
+        if j is None:
+            return end  # the ')' closes nothing: no operand
         i = j
         while i > 0 and (stmt[i - 1].isalnum() or stmt[i - 1] in "_.`$"):
             i -= 1
@@ -2593,7 +2411,7 @@ def _rewrite_quantified_cmp(stmt: str) -> str:
         op = {"==": "=", "!=": "<>"}.get(m.group(1), m.group(1))
         kind = m.group(2).upper()
         open_i = m.end() - 1
-        close_i = _close_paren(stmt, open_i)
+        close_i = close_bracket(stmt, open_i)
         q = stmt[open_i + 1 : close_i]
         xs = _left_operand_start(stmt, m.start())
         x = stmt[xs : m.start()].strip()
@@ -2676,54 +2494,6 @@ _INTERVAL_SECS = {
 }
 
 
-def _rewrite_calls(stmt: str, name: str, build, guard_tables=False) -> str:
-    """Rewrite every `name(...)` call via build(args) -> replacement
-    text or None to leave that call untouched (scan resumes after it).
-    guard_tables skips call-shaped text that is really a TABLE name
-    followed by a column list (same guard as _fold_gap_calls — qtests
-    name tables after the function under test)."""
-    pos = 0
-    while True:
-        m = re.search(rf"(?i)\b{name}\s*\(", stmt[pos:])
-        if m is None:
-            return stmt
-        s = pos + m.start()
-        a = pos + m.end()
-        if guard_tables:
-            prefix = stmt[:s].rstrip()
-            if (
-                re.search(
-                    r"(?i)\b(table|exists|into|describe|desc)$", prefix
-                )
-                or (
-                    re.search(r"(?i)\bview$", prefix)
-                    and not re.search(r"(?i)\blateral\s+view$", prefix)
-                )
-                or prefix.endswith(".")
-            ):
-                pos = a
-                continue
-        i, depth = a, 1
-        while i < len(stmt) and depth:
-            c = stmt[i]
-            if c in "'\"":
-                q = c
-                i += 1
-                while i < len(stmt) and stmt[i] != q:
-                    i += 2 if stmt[i] == "\\" else 1
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            i += 1
-        rep = build([x.strip() for x in _split_args(stmt[a:i - 1])])
-        if rep is None:
-            pos = a
-        else:
-            stmt = stmt[:s] + rep + stmt[i:]
-            pos = s + len(rep)
-
-
 def _rewrite_arity_fns(stmt: str) -> str:
     """Hive call arities Spark's builtins/our SQL UDFs don't accept
     (FunctionRegistry variadic overloads): pad defaults or map onto the
@@ -2755,7 +2525,7 @@ def _rewrite_arity_fns(stmt: str) -> str:
 
     for name in ("mask_first_n", "mask_last_n",
                  "mask_show_first_n", "mask_show_last_n"):
-        stmt = _rewrite_calls(
+        stmt = rewrite_calls(
             stmt, name,
             lambda a, name=name: _inline_mask_n(name, a),
         )
@@ -2792,17 +2562,17 @@ def _rewrite_arity_fns(stmt: str) -> str:
             ) + ")"
         return None
 
-    stmt = _rewrite_calls(stmt, "mask", _mask_n)
+    stmt = rewrite_calls(stmt, "mask", _mask_n)
     # grouping(c1, c2, ...): Hive's multi-index grouping bit-packs like
     # grouping_id (GenericUDFGrouping over the grouping-set id)
-    stmt = _rewrite_calls(
+    stmt = rewrite_calls(
         stmt, "grouping",
         lambda a: f"grouping_id({', '.join(a)})" if len(a) > 1 else None,
     )
     # percentile_cont/disc(x, p) (Hive 2-arg UDAF form) -> the
     # WITHIN GROUP spelling Spark implements
     for fn in ("percentile_cont", "percentile_disc"):
-        stmt = _rewrite_calls(
+        stmt = rewrite_calls(
             stmt, fn,
             lambda a, fn=fn: (
                 f"{fn}({a[1]}) WITHIN GROUP (ORDER BY {a[0]})"
@@ -2810,7 +2580,7 @@ def _rewrite_arity_fns(stmt: str) -> str:
             ),
         )
     # add_months(d, n, fmt): the 3-arg form returns the FORMATTED string
-    stmt = _rewrite_calls(
+    stmt = rewrite_calls(
         stmt, "add_months",
         lambda a: (
             f"date_format(add_months({a[0]}, {a[1]}), {a[2]})"
@@ -2843,7 +2613,7 @@ def _rewrite_arity_fns(stmt: str) -> str:
             f" sign({x}) * floor(abs({x}) / pow(10, -({s}))) * pow(10, -({s}))))"
         )
 
-    stmt = _rewrite_calls(stmt, "trunc", _trunc_numeric)
+    stmt = rewrite_calls(stmt, "trunc", _trunc_numeric)
     # instr(str, sub, pos[, occurrence]) (GenericUDFInstr 4-arg form;
     # negative pos searches backward from length+pos+1). Spark's instr
     # is 2-arg only; enumerate match positions JVM-side.
@@ -2869,7 +2639,7 @@ def _rewrite_arity_fns(stmt: str) -> str:
             " 0))))"
         )
 
-    stmt = _rewrite_calls(stmt, "instr", _instr_n)
+    stmt = rewrite_calls(stmt, "instr", _instr_n)
     # tumbling_window(ts, INTERVAL 'n' unit[, origin]): the SQL-UDF
     # takes seconds; fold the interval literal and the 3-arg origin
     # form (GenericUDFTumbledWindow) inline
@@ -2900,18 +2670,11 @@ def _rewrite_compute_stats(stmt: str) -> str:
     """compute_stats(col, 'fm'|'hll'[, nbins]) — Hive's internal
     column-statistics UDAF (ql/.../udf/generic/GenericUDAFComputeStats):
     a struct of count/nulls/ndv aggregates."""
-    while True:
-        span = _find_call(stmt, "compute_stats")
-        if span is None:
-            return stmt
-        s, a, e = span
-        args = [x.strip() for x in _split_args(stmt[a:e - 1])]
-        col = args[0]
-        stmt = stmt[:s] + (
-            f"named_struct('count', count({col}),"
-            f" 'numnulls', sum(CASE WHEN {col} IS NULL THEN 1 ELSE 0 END),"
-            f" 'ndv', count(DISTINCT {col}))"
-        ) + stmt[e:]
+    return rewrite_calls(stmt, "compute_stats", lambda a: (
+        f"named_struct('count', count({a[0]}),"
+        f" 'numnulls', sum(CASE WHEN {a[0]} IS NULL THEN 1 ELSE 0 END),"
+        f" 'ndv', count(DISTINCT {a[0]}))"
+    ))
 
 
 def _desugar_qualify(stmt: str) -> str:
@@ -2920,13 +2683,13 @@ def _desugar_qualify(stmt: str) -> str:
     evaluate the predicate as a hidden projected column in a subquery
     and filter on it outside — the registry's qualify_topn operator
     does the same desugar in DataFrame form (relational.py)."""
-    spans = _top_level_spans(stmt, r"\bQUALIFY\b")
+    spans = top_level_spans(stmt, r"\bQUALIFY\b")
     if not spans:
         return stmt
     q_start, q_end = spans[0]
     tail = stmt[q_end:]
     # the predicate runs to the next top-level ORDER/LIMIT/UNION clause
-    stop = _top_level_spans(
+    stop = top_level_spans(
         tail, r"\b(ORDER\s+BY|LIMIT|UNION|INTERSECT|EXCEPT)\b"
     )
     pred_end = stop[0][0] if stop else len(tail)
@@ -2936,7 +2699,7 @@ def _desugar_qualify(stmt: str) -> str:
     # EXPLAIN prefix stays outside the wrap
     em = re.match(r"(?is)^(\s*EXPLAIN\s+(?:\w+\s+)?)(SELECT[\s\S]*)$", head)
     prefix, body = (em.group(1), em.group(2)) if em else ("", head)
-    froms = _top_level_spans(body, r"\bFROM\b")
+    froms = top_level_spans(body, r"\bFROM\b")
     if not froms:
         return stmt
     f0 = froms[0][0]
@@ -2962,13 +2725,13 @@ def _desugar_distinct_having(stmt: str) -> str:
     if not m:
         return stmt
     body = m.group(3)
-    having = _top_level_spans(body, r"\bHAVING\b")
-    if not having or _top_level_spans(body, r"\bGROUP\s+BY\b"):
+    having = top_level_spans(body, r"\bHAVING\b")
+    if not having or top_level_spans(body, r"\bGROUP\s+BY\b"):
         return stmt
-    froms = _top_level_spans(body, r"\bFROM\b")
+    froms = top_level_spans(body, r"\bFROM\b")
     if not froms or froms[0][0] > having[0][0]:
         return stmt
-    items = _split_args(body[: froms[0][0]])
+    items = split_top(body[: froms[0][0]])
     keys = []
     for it in items:
         base = re.sub(r"(?is)\s+AS\s+[`\w]+\s*$", "", it.strip())
@@ -3159,13 +2922,13 @@ def _rewrite_distinct_windows(stmt: str) -> str:
         fn = m.group(1).lower()
         s = pos + m.start()
         open_i = stmt.index("(", s)
-        close_i = _close_paren(stmt, open_i)
+        close_i = close_bracket(stmt, open_i)
         om = re.match(r"(?is)\s*OVER\s*\(", stmt[close_i + 1 :])
         if om is None:
             pos = close_i + 1
             continue
         ospan_open = close_i + 1 + om.end() - 1
-        ospan_close = _close_paren(stmt, ospan_open)
+        ospan_close = close_bracket(stmt, ospan_open)
         arg = re.sub(
             r"(?is)^\s*distinct\b", "", stmt[open_i + 1 : close_i]
         ).strip()
@@ -3199,37 +2962,13 @@ def _orderby_window_to_ordinal(stmt: str) -> str:
     sm = re.match(r"(?is)^(\s*(?:explain\s+(?:\w+\s+)?)?select\s+)", stmt)
     if sm is None:
         return stmt
-    # depth-0 scan: select items end at FROM; find the LAST depth-0
-    # ORDER BY (the statement-level sort)
-    i, depth, n = sm.end(), 0, len(stmt)
-    items, buf_start = [], sm.end()
-    from_at = order_at = None
-    while i < n:
-        c = stmt[i]
-        if c in "'\"`":
-            q = c
-            i += 1
-            while i < n and stmt[i] != q:
-                i += 2 if (stmt[i] == "\\" and q != "`") else 1
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0:
-            word_start = i == 0 or not (stmt[i - 1].isalnum()
-                                        or stmt[i - 1] in "_`")
-            if c == "," and from_at is None:
-                items.append(stmt[buf_start:i])
-                buf_start = i + 1
-            elif (word_start and from_at is None
-                    and re.match(r"(?i)FROM\b", stmt[i:])):
-                items.append(stmt[buf_start:i])
-                from_at = i
-            elif word_start and re.match(r"(?i)ORDER\s+BY\b", stmt[i:]):
-                order_at = i
-        i += 1
-    if from_at is None or order_at is None:
+    # the select list ends at the first top-level FROM; the statement's
+    # sort is the last top-level ORDER BY
+    items = _select_items(stmt, sm.end())
+    orders = top_level_spans(stmt, r"\bORDER\s+BY\b")
+    if items is None or not orders:
         return stmt
+    order_at = orders[-1][0]
     sel = {norm(re.sub(r"(?is)\s+as\s+\w+\s*$", "", it)): k + 1
            for k, it in enumerate(items)}
     ob = re.match(r"(?is)(ORDER\s+BY\s+)(.*?)(\s+LIMIT\b.*|\s*)$",
@@ -3238,7 +2977,7 @@ def _orderby_window_to_ordinal(stmt: str) -> str:
         return stmt
     changed = False
     out_items = []
-    for it in _split_args(ob.group(2)):
+    for it in split_top(ob.group(2)):
         dm = re.match(r"(?is)^(.*?)(\s+(?:ASC|DESC))?(\s+NULLS\s+\w+)?\s*$",
                       it)
         body, direction, nulls = dm.group(1), dm.group(2) or "", dm.group(3) or ""
@@ -3329,7 +3068,7 @@ def _rewrite_hypothetical_set(stmt: str) -> str:
         # Hive sorts NULLs first on ASC (HiveConf default); a NULL key
         # therefore sits strictly before every non-null hypothetical
         lt, le = ("<", "<=") if direc == "ASC" else (">", ">=")
-        vs, cs = _split_args(v), _split_args(c)
+        vs, cs = split_top(v), split_top(c)
         # NULL keys count as "before" the hypothetical row ONLY under an
         # EXPLICIT `ASC NULLS FIRST` or `DESC NULLS LAST` — matched
         # empirically against the hypothetical_set_aggregates.q golden
@@ -3391,21 +3130,10 @@ def _rewrite_lateral_table_values(stmt: str) -> str:
         if not m:
             return stmt
         open_i = stmt.index("(", m.start())
-        close_i = _close_paren(stmt, open_i)
+        close_i = close_bracket(stmt, open_i)
         inner = stmt[open_i + 1: close_i]
-        vals = re.sub(r"(?is)^\s*VALUES\s*", "", inner)
-        # each top-level (..) tuple becomes a STRUCT(..)
-        tuples, depth, start, out = [], 0, None, []
-        for i, ch in enumerate(vals):
-            if ch == "(":
-                if depth == 0:
-                    start = i
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0 and start is not None:
-                    tuples.append(vals[start + 1: i])
-                    start = None
+        # each (..) tuple becomes a STRUCT(..)
+        tuples = _paren_tuples(re.sub(r"(?is)^\s*VALUES\s*", "", inner))
         am = re.match(
             r"\s*(?:AS\s+)?(\w+)\s*\(\s*([\w\s,`]+?)\s*\)",
             stmt[close_i + 1:], re.I,
@@ -3449,11 +3177,11 @@ def _rewrite_uniquejoin(stmt: str) -> str:
         if im is None:
             break
         open_i = pos + im.end() - 1
-        close_i = _close_paren(stmt, open_i)
+        close_i = close_bracket(stmt, open_i)
         items.append((
             bool(im.group(1)), im.group(2), im.group(3),
             [k.strip()
-             for k in _split_args(stmt[open_i + 1 : close_i])],
+             for k in split_top(stmt[open_i + 1 : close_i])],
         ))
         pos = close_i + 1
         first = False
@@ -3542,7 +3270,7 @@ def _paren_in_boolean_test(stmt: str) -> str:
         if m is None:
             return stmt
         open_i = pos + m.end() - 1
-        close_i = _close_paren(stmt, open_i)
+        close_i = close_bracket(stmt, open_i)
         follow = stmt[close_i + 1 :]
         if not re.match(
             r"(?i)\s*(?:IS\s+(?:NOT\s+)?(?:TRUE|FALSE)\b"
@@ -3720,9 +3448,9 @@ def rewrite_statement(spark: SparkSession, stmt: str) -> str:
         r"PARTITION\s*\(([^)]*)\)\s*$",
         stmt,
     )
-    if tm and any("=" not in kv for kv in _split_args(tm.group(2))):
+    if tm and any("=" not in kv for kv in split_top(tm.group(2))):
         kept = [
-            kv.strip() for kv in _split_args(tm.group(2)) if "=" in kv
+            kv.strip() for kv in split_top(tm.group(2)) if "=" in kv
         ]
         stmt = tm.group(1) + (
             f" PARTITION ({', '.join(kept)})" if kept else ""
@@ -3992,7 +3720,7 @@ def rewrite_statement(spark: SparkSession, stmt: str) -> str:
     ) and re.search(r"(?i)\bPARTITION\s*\(", stmt):
         def _quote_pv(m: re.Match) -> str:
             parts = []
-            for kv in _split_args(m.group(1)):
+            for kv in split_top(m.group(1)):
                 if "=" in kv:
                     k, v = kv.split("=", 1)
                     v = v.strip()
@@ -4069,7 +3797,7 @@ def rewrite_statement(spark: SparkSession, stmt: str) -> str:
         props = {
             k.strip().strip("'\""): v.strip().strip("'\"")
             for k, v in (
-                kv.split("=", 1) for kv in _split_args(m.group(2)) if "=" in kv
+                kv.split("=", 1) for kv in split_top(m.group(2)) if "=" in kv
             )
         }
         mapped = []
@@ -4106,35 +3834,39 @@ def rewrite_statement(spark: SparkSession, stmt: str) -> str:
         stmt = m.group(1) + reorder_ctes(m.group(2))
     for name, (params, body) in _MACROS.get(id(spark), {}).items():
         if re.search(rf"\b{name}\s*\(", stmt, re.I):
-            stmt = _fold_calls(stmt, name, _macro_fold(params, body))
+            stmt = rewrite_calls(stmt, name, _macro_fold(params, body))
     for name, fold in _FUNC_FOLDS.get(id(spark), {}).items():
         if re.search(rf"\b{name}\s*\(", stmt, re.I):
-            stmt = _fold_calls(stmt, name, fold)
+            stmt = rewrite_calls(stmt, name, fold)
     if re.search(r"\bds_hll_estimate\s*\(", stmt, re.I):
-        stmt = _fold_calls(stmt, "ds_hll_estimate", _fold_ds_hll)
+        stmt = rewrite_calls(stmt, "ds_hll_estimate", _fold_ds_hll)
     # sketch-object lifecycle (DataSketchesFunctions.java): standalone
     # build/merge calls left after the estimate fold map to the Spark
     # DataSketches natives — sketch values are storable and mergeable
     if re.search(r"\bds_hll_union\s*\(", stmt, re.I):
-        stmt = _fold_calls(stmt, "ds_hll_union", lambda a: f"hll_union_agg({a[0]})")
+        stmt = rewrite_calls(
+            stmt, "ds_hll_union", lambda a: f"hll_union_agg({a[0]})"
+        )
     if re.search(r"\bds_hll_sketch\s*\(", stmt, re.I):
-        stmt = _fold_calls(stmt, "ds_hll_sketch", lambda a: f"hll_sketch_agg({a[0]})")
+        stmt = rewrite_calls(
+            stmt, "ds_hll_sketch", lambda a: f"hll_sketch_agg({a[0]})"
+        )
     if re.search(r"\bds_kll_quantile\s*\(", stmt, re.I):
-        stmt = _fold_calls(stmt, "ds_kll_quantile", _fold_ds_kll)
+        stmt = rewrite_calls(stmt, "ds_kll_quantile", _fold_ds_kll)
     # ds_cpc_estimate(ds_cpc_sketch(x)): the folded composition maps to
     # the same approximate-distinct intent (CPC's default accuracy is in
     # the same band as lgK=12 HLL); the sketch-OBJECT lifecycle lives in
     # operators/sketches.sketch_cpc_lifecycle (coupon-set build/merge)
     if re.search(r"\bds_cpc_estimate\s*\(", stmt, re.I):
-        stmt = _fold_calls(stmt, "ds_cpc_estimate", _fold_ds_cpc)
+        stmt = rewrite_calls(stmt, "ds_cpc_estimate", _fold_ds_cpc)
     if re.search(r"\bdboutput\s*\(", stmt, re.I):
         # Hive's EXPLAIN never executes the plan (ExplainTask renders
         # it); folding dboutput eagerly under EXPLAIN would run the JDBC
         # DML as a rewrite side effect — render a constant instead
         if re.match(r"\s*EXPLAIN\b", stmt, re.I):
-            stmt = _fold_calls(stmt, "dboutput", lambda a: "0")
+            stmt = rewrite_calls(stmt, "dboutput", lambda a: "0")
         else:
-            stmt = _fold_calls(stmt, "dboutput", _fold_dboutput(spark))
+            stmt = rewrite_calls(stmt, "dboutput", _fold_dboutput(spark))
     if re.search(r"\bget_sql_schema\s*\(", stmt, re.I):
         # get_sql_schema('query') UDTF (ref: GenericUDTFGetSQLSchema):
         # one row per output column with its Hive type name. Spark's
@@ -4151,15 +3883,15 @@ def rewrite_statement(spark: SparkSession, stmt: str) -> str:
             )
             return f"inline(array({structs}))"
 
-        stmt = _fold_calls(stmt, "get_sql_schema", _fold_gss)
+        stmt = rewrite_calls(stmt, "get_sql_schema", _fold_gss)
     if re.search(r"\bsort_array_by\s*\(", stmt, re.I):
-        stmt = _fold_calls(stmt, "sort_array_by", _fold_sort_array_by)
+        stmt = rewrite_calls(stmt, "sort_array_by", _fold_sort_array_by)
     if re.search(r"\bfield\s*\(", stmt, re.I):
-        stmt = _fold_calls(stmt, "field", _fold_field)
+        stmt = rewrite_calls(stmt, "field", _fold_field)
     if re.search(r"\blikeany\s*\(", stmt, re.I):
-        stmt = _fold_calls(stmt, "likeany", _fold_like_chain("OR"))
+        stmt = rewrite_calls(stmt, "likeany", _fold_like_chain("OR"))
     if re.search(r"\blikeall\s*\(", stmt, re.I):
-        stmt = _fold_calls(stmt, "likeall", _fold_like_chain("AND"))
+        stmt = rewrite_calls(stmt, "likeall", _fold_like_chain("AND"))
     return stmt
 
 
@@ -4205,60 +3937,28 @@ def _autoalias_select_lists(body: str, top_positions=None) -> str:
     CREATE VIEW rejects auto-generated aliases ANYWHERE in the view
     text — including subqueries — so each site is rewritten in place,
     mirroring Hive's SemanticAnalyzer `_c<pos>` naming."""
-    sel_pat = re.compile(r"SELECT\b", re.I)
+    sel_pat = re.compile(r"(?<![\w`])SELECT\b", re.I)
     kw_end = re.compile(
-        r"\b(FROM|WHERE|GROUP|HAVING|ORDER|LIMIT|UNION|EXCEPT|INTERSECT"
-        r"|WINDOW|DISTRIBUTE|SORT|CLUSTER)\b",
+        r"(?<![\w`])(FROM|WHERE|GROUP|HAVING|ORDER|LIMIT|UNION|EXCEPT"
+        r"|INTERSECT|WINDOW|DISTRIBUTE|SORT|CLUSTER)\b",
         re.I,
     )
-    n = len(body)
-    spans: list[tuple[int, int]] = []  # (select-list start, paren depth)
-    i = depth = 0
-    while i < n:
-        j = _skip_noncode(body, i)
-        if j != i:
-            i = j
-            continue
-        c = body[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        else:
-            m = sel_pat.match(body, i)
-            if m and (i == 0 or not (body[i - 1].isalnum()
-                                     or body[i - 1] in "_`")):
-                spans.append((m.end(), depth))
-                i = m.end()
-                continue
-        i += 1
+    spans = [  # (select-list start, paren depth)
+        (m.end(), depth) for i, depth in code_positions(body)
+        if (m := sel_pat.match(body, i))
+    ]
     for start, d0 in reversed(spans):  # right-to-left keeps offsets valid
         m = re.match(r"\s*(DISTINCT|ALL)\b", body[start:], re.I)
         list_start = start + (m.end() if m else 0)
-        i, depth, end = list_start, d0, len(body)
+        end = len(body)
         cuts: list[int] = []  # top-level comma positions
-        while i < len(body):
-            j = _skip_noncode(body, i)
-            if j != i:
-                i = j
-                continue
-            c = body[i]
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                if depth == d0:
-                    end = i
-                    break
-                depth -= 1
-            elif depth == d0:
-                if c == ",":
-                    cuts.append(i)
-                elif kw_end.match(body, i) and not (
-                    body[i - 1].isalnum() or body[i - 1] in "_`"
-                ):
-                    end = i
-                    break
-            i += 1
+        # the list ends at its enclosing ')' or a top-level clause keyword
+        for i, depth in code_positions(body, list_start):
+            if depth < 0 or depth == 0 and kw_end.match(body, i):
+                end = i
+                break
+            if depth == 0 and body[i] == ",":
+                cuts.append(i)
         bounds = [list_start] + [c + 1 for c in cuts] + [end + 1]
         items = [
             body[bounds[k] : bounds[k + 1] - 1] for k in range(len(bounds) - 1)
@@ -4308,27 +4008,14 @@ def _rewrite_tuple_in(stmt: str) -> str:
         if j < 0 or out[j] != ")":
             i = in_at + m.end() - m.start()
             continue
-        depth, k = 1, j - 1
-        while k >= 0 and depth:
-            if out[k] == ")":
-                depth += 1
-            elif out[k] == "(":
-                depth -= 1
-            k -= 1
-        lhs_open = k + 1
-        lhs = _split_args(out[lhs_open + 1 : j])
+        lhs_open = open_bracket(out, j)
         rhs_open = i + m.end() - 1
-        rhs_close = _scan_parens(out, rhs_open)
-        rhs = [x.strip() for x in _split_args(out[rhs_open + 1 : rhs_close - 1])]
-        if (
-            len(lhs) < 2
-            or not rhs
-            or not all(x.startswith("(") and x.endswith(")") for x in rhs)
-        ):
-            i = rhs_close
-            continue
-        tuples = [_split_args(x[1:-1]) for x in rhs]
-        if any(len(t) != len(lhs) for t in tuples):
+        rhs_close = close_bracket(out, rhs_open) + 1
+        lhs = [] if lhs_open is None else split_top(out[lhs_open + 1 : j])
+        rhs = _paren_tuples(out[rhs_open + 1 : rhs_close - 1]) or []
+        tuples = [split_top(t) for t in rhs]
+        if (len(lhs) < 2 or not tuples
+                or any(len(t) != len(lhs) for t in tuples)):
             i = rhs_close
             continue
         ors = " OR ".join(
@@ -4554,7 +4241,7 @@ def _truncate_charvarchar(spark, stmt: str, err):
         return None
     static = {
         kv.split("=", 1)[0].strip().strip("`")
-        for kv in _split_args(spec or "") if "=" in kv
+        for kv in split_top(spec or "") if "=" in kv
     }
     # positional mapping: the source covers data columns, then the
     # dynamic partition columns (Hive FileSinkOperator order)
@@ -4607,7 +4294,7 @@ def _inline_values(spark, stmt: str, err):
     defaults = _column_defaults(spark, table)
     static = {}
     if pspec:
-        for kv in _split_args(pspec):
+        for kv in split_top(pspec):
             if "=" in kv:
                 k, v = kv.split("=", 1)
                 static[k.strip().strip("`").lower()] = v.strip()
@@ -4624,26 +4311,12 @@ def _inline_values(spark, stmt: str, err):
         targets = [
             (n, t) for n, t in described if n.lower() not in static
         ]
-    # split "(row), (row), ..." into rows at depth 0
-    rows, depth, cur = [], 0, []
-    for ch in rows_text:
-        if ch == "(":
-            depth += 1
-            if depth == 1:
-                cur = []
-                continue
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                rows.append("".join(cur))
-                continue
-        if depth >= 1:
-            cur.append(ch)
-    if not rows:
+    rows = _paren_tuples(rows_text)
+    if rows is None:
         return None
     selects = []
     for row in rows:
-        items = _split_args(row)
+        items = split_top(row)
         if len(items) != len(targets):
             return None
         exprs = []
@@ -4678,7 +4351,7 @@ def _common_category(spark, stmt: str, err):
         return (f"{fn}("
                 + ", ".join(f"CAST(({x}) AS STRING)" for x in args) + ")")
 
-    return _rewrite_calls(
+    return rewrite_calls(
         stmt, fn,
         lambda a: (
             _casts(a) if len(a) > 1
@@ -4710,7 +4383,7 @@ def _ts_numeric_agg(spark, stmt: str, err):
     for fn in _TS_NUMERIC_AGGS:
         if not re.search(rf"(?i)\b{fn}\s*\(", fixed):
             continue
-        fixed = _rewrite_calls(
+        fixed = rewrite_calls(
             fixed, fn,
             lambda a, fn=fn: (
                 f"{fn}(CAST(({a[0]}) AS DOUBLE))"
@@ -4832,10 +4505,10 @@ def _map_comparison(spark, stmt: str, err):
         lambda m: (
             f"{canon(m.group(1))} {m.group(2) or ''}IN ("
             + ", ".join(canon(x.strip())
-                        for x in _split_args(m.group(3)))
+                        for x in split_top(m.group(3)))
             + ")"
             if (_qual(m.group(1))
-                or any(_qual(x.strip()) for x in _split_args(m.group(3))))
+                or any(_qual(x.strip()) for x in split_top(m.group(3))))
             and "select" not in m.group(3).lower()
             else m.group(0)
         ),
@@ -4868,7 +4541,7 @@ def _window_agg_alias(spark, stmt: str, err):
         aliases[m.group(2).lower()] = m.group(1)
     out = stmt
     for om in re.finditer(r"(?i)\bOVER\s*\(", stmt):
-        span = stmt[om.end(): _close_paren(stmt, om.end() - 1)]
+        span = stmt[om.end(): close_bracket(stmt, om.end() - 1)]
         new_span = span
         for al, expr in aliases.items():
             new_span = re.sub(rf"(?i)\b{al}\b", expr, new_span)
@@ -4923,7 +4596,7 @@ def _orderby_hidden_grouping_col(spark, stmt: str, err):
         return None
     sl, body = m.group(1), m.group(2)
     hv, ob, lim = m.group(3), m.group(4) or "", m.group(5) or ""
-    items = _split_args(sl)
+    items = split_top(sl)
     names, inner_items = [], []
     for i, it in enumerate(items):
         am = re.search(r"(?is)\s+AS\s+(`?\w+`?)\s*$", it)
@@ -4948,7 +4621,7 @@ def _orderby_hidden_grouping_col(spark, stmt: str, err):
         for i, it in enumerate(inner_items)
     }
     extra, ob_parts, changed = [], [], False
-    for ocol in _split_args(ob) if ob else []:
+    for ocol in split_top(ob) if ob else []:
         tail_m = re.search(
             r"(?i)\s+(ASC|DESC)(\s+NULLS\s+(FIRST|LAST))?\s*$", ocol
         )
@@ -5005,7 +4678,7 @@ def _partial_cte_aliases(spark, stmt: str, err):
     edits = []
     for m in re.finditer(r"(?i)\b(\w+)\s*\(([\w\s,`]+)\)\s+AS\s*\(", stmt):
         open_i = m.end() - 1
-        body = stmt[open_i + 1: _close_paren(stmt, open_i)]
+        body = stmt[open_i + 1: close_bracket(stmt, open_i)]
         try:
             cols = spark.sql(f"SELECT * FROM ({body}) __cte_probe LIMIT 0").columns
         except Exception:
@@ -5069,7 +4742,7 @@ def _group_by_literal(spark, stmt: str, err):
 def _grouping_id_order(spark, stmt: str, err):
     """Hive permits grouping__id arguments in ANY order; fold to the
     standard bit expression over grouping()."""
-    return _rewrite_calls(
+    return rewrite_calls(
         stmt, "grouping_id",
         lambda a: (
             "CAST(("
@@ -5085,7 +4758,7 @@ def _grouping_id_order(spark, stmt: str, err):
 def _grouping_under_group_by(spark, stmt: str, err):
     """grouping()/grouping_id() under a PLAIN group by: every group is a
     base group, so Hive returns 0."""
-    return _rewrite_calls(stmt, "grouping(?:_id|__id)?", lambda a: "0")
+    return rewrite_calls(stmt, "grouping(?:_id|__id)?", lambda a: "0")
 
 
 def _wide_decimal_literal(spark, stmt: str, err):
@@ -5243,33 +4916,8 @@ def _select_item_positions(spark, body: str):
     sm = re.match(r"(?is)^\s*SELECT\s+(?:DISTINCT\s+|ALL\s+)?", body)
     if sm is None:
         return None
-    i, depth, n = sm.end(), 0, len(body)
-    items, start = [], sm.end()
-    while i < n:
-        c = body[i]
-        if c in "'\"`":
-            q = c
-            i += 1
-            while i < n and body[i] != q:
-                i += 2 if (body[i] == "\\" and q != "`") else 1
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0:
-            if c == ",":
-                items.append(body[start:i])
-                start = i + 1
-            elif (
-                re.match(r"(?i)FROM\b", body[i:])
-                and not (body[i - 1].isalnum() or body[i - 1] in "_`")
-            ):
-                items.append(body[start:i])
-                break
-        i += 1
-    else:
-        return None
-    if not any(it.strip().endswith("*") for it in items):
+    items = _select_items(body, sm.end())
+    if items is None or not any(it.endswith("*") for it in items):
         return None
     widths: list = []
     for it in items:
@@ -5353,7 +5001,7 @@ def _part_spec_cond(spec: str):
     from pyspark.sql import functions as F
 
     cond = None
-    for kv in _split_args(spec):
+    for kv in split_top(spec):
         if "=" not in kv:
             continue  # valueless key: Hive wildcard (matches all)
         km = re.match(r"\s*`?(\w+)`?\s*=\s*(.+?)\s*$", kv, re.S)
@@ -5588,8 +5236,8 @@ def _exec_update_columns(spark, res, m, stmt):
 
     ddl = ddl_from_schema_json(raw)
     specs = []
-    for item in _split_generic_args(ddl):
-        toks = item.strip().split(None, 1)
+    for item in split_top(ddl, "()<>"):
+        toks = item.split(None, 1)
         if len(toks) == 2:
             specs.append((toks[0].strip("`"), toks[1]))
     df = spark.table(table)
@@ -5663,8 +5311,8 @@ def _exec_alter_columns(spark, res, m, stmt):
         table, spec = m.group(1), m.group(2)
         df = spark.table(table)
         specs = []
-        for item in _split_generic_args(m.group(3)):
-            toks = item.strip().split(None, 1)
+        for item in split_top(m.group(3), "()<>"):
+            toks = item.split(None, 1)
             if len(toks) == 2:
                 t = re.sub(
                     r"(?is)\s+COMMENT\s+'[^']*'\s*$", "", toks[1]
@@ -5759,8 +5407,8 @@ def _exec_alter_columns(spark, res, m, stmt):
         # generic-aware split: STRUCT<a:int, b:string> column types carry
         # top-level-looking commas inside <> — and spaces, so the type
         # is everything after the name (minus a trailing COMMENT)
-        for item in _split_generic_args(m.group(2)):
-            toks = item.strip().split(None, 1)
+        for item in split_top(m.group(2), "()<>"):
+            toks = item.split(None, 1)
             if len(toks) == 2:
                 typ = re.sub(
                     r"(?is)\s+COMMENT\s+'[^']*'\s*$", "", toks[1]
@@ -5881,7 +5529,7 @@ def _drop_partial_partitions(spark: SparkSession, table: str,
     from urllib.parse import unquote
 
     wanted: list[tuple[str, str, str]] = []  # (col, op, value)
-    for kv in _split_args(spec):
+    for kv in split_top(spec):
         m = _PART_FILTER_ITEM.match(kv)
         if not m:
             return False
@@ -6120,8 +5768,8 @@ def _exec_create_external_complex_text(spark, res, m, stmt):
     _record_owner(spark, stmt)
     name, col_text, fmt_text, loc = m.groups()
     specs = []
-    for item in _split_generic_args(col_text):
-        toks = item.strip().split(None, 1)
+    for item in split_top(col_text, "()<>"):
+        toks = item.split(None, 1)
         if len(toks) != 2:
             return _DECLINE
         typ = re.sub(r"(?i)\s+COMMENT\s+'[^']*'", "", toks[1]).strip()
@@ -6354,7 +6002,7 @@ def _exec_matchpath_ptf(spark: SparkSession, stmt: str, names: set) -> str:
             if not m:
                 break
             open_i = stmt.index("(", m.start())
-            close_i = _close_paren(stmt, open_i)
+            close_i = close_bracket(stmt, open_i)
             body = stmt[open_i + 1: close_i]
             view = _run_matchpath(spark, body)
             stmt = (
@@ -6376,7 +6024,7 @@ def _run_matchpath(spark: SparkSession, body: str) -> str:
     rest = body[bm.end():]
     if rest.lstrip().startswith("("):
         o = rest.index("(")
-        c = _close_paren(rest, o)
+        c = close_bracket(rest, o)
         rel_sql = rest[o + 1: c]
         rest = re.sub(r"^\s*\w+", "", rest[c + 1:], count=1)  # drop alias
         rel = spark.sql(rewrite_statement(spark, rel_sql))
@@ -6400,7 +6048,7 @@ def _run_matchpath(spark: SparkSession, body: str) -> str:
     # argN(...) in order
     args = []
     for am in re.finditer(r"(?i)\barg\d+\s*\(", rest):
-        c = _close_paren(rest, am.end() - 1)
+        c = close_bracket(rest, am.end() - 1)
         args.append(rest[am.end(): c].strip())
     pattern, result_list = args[0].strip("'\""), args[-1].strip("'\"")
     symbols = {}
@@ -7365,7 +7013,7 @@ def _multi_insert_with_directories(spark, res, m, stmt):
     head, tail = m.groups()
     if not re.search(r"(?i)INSERT\s+OVERWRITE\s+(?:LOCAL\s+)?DIRECTORY", tail):
         return _DECLINE
-    starts = [s for s, _ in _top_level_spans(tail, r"\bINSERT\b")]
+    starts = [s for s, _ in top_level_spans(tail, r"\bINSERT\b")]
     kept = []
     for s, e in zip(starts, starts[1:] + [len(tail)]):
         cl = tail[s:e].strip()

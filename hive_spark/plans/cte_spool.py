@@ -30,53 +30,9 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hive_spark.sqltext import close_bracket, skip_noncode
+
 _WORD = r"[A-Za-z_][A-Za-z0-9_]*"
-
-
-def _skip_noncode(text: str, i: int) -> int:
-    """If text[i] starts a string/quoted identifier/comment, return the
-    index one past its end; else return i."""
-    c = text[i]
-    n = len(text)
-    if c == "'" or c == '"' or c == "`":
-        j = i + 1
-        while j < n:
-            if c != "`" and text[j] == "\\" and j + 1 < n:
-                j += 2  # backslash escape (HiveQL string literals)
-                continue
-            if text[j] == c:
-                if c == "'" and j + 1 < n and text[j + 1] == "'":
-                    j += 2  # '' escape
-                    continue
-                return j + 1
-            j += 1
-        return n
-    if c == "-" and text[i : i + 2] == "--":
-        j = text.find("\n", i)
-        return n if j < 0 else j + 1
-    if c == "/" and text[i : i + 2] == "/*":
-        j = text.find("*/", i + 2)
-        return n if j < 0 else j + 2
-    return i
-
-
-def _scan_parens(text: str, i: int) -> int:
-    """text[i] == '('; return index one past the matching ')'."""
-    depth = 0
-    n = len(text)
-    while i < n:
-        j = _skip_noncode(text, i)
-        if j != i:
-            i = j
-            continue
-        if text[i] == "(":
-            depth += 1
-        elif text[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    return n
 
 
 def _parse_with(text: str):
@@ -101,9 +57,12 @@ def _parse_with(text: str):
         if not m:
             return None  # column-aliased CTE or unexpected shape
         open_at = i + m.end() - 1
-        close = _scan_parens(text, open_at)
-        ctes.append((name, text[open_at + 1 : close - 1]))
-        i = close
+        try:
+            close = close_bracket(text, open_at)
+        except ValueError:
+            return None  # unbalanced: the parser reports it
+        ctes.append((name, text[open_at + 1 : close]))
+        i = close + 1
         m = re.match(r"\s*,\s*", text[i:])
         if m:
             i += m.end()
@@ -175,7 +134,7 @@ def _count_refs(name: str, sql: str) -> int:
     i = 0
     n = len(sql)
     while i < n:
-        j = _skip_noncode(sql, i)
+        j = skip_noncode(sql, i)
         if j != i:
             i = j
             continue
@@ -195,7 +154,7 @@ def _replace_refs(name: str, repl: str, sql: str) -> str:
     i = 0
     n = len(sql)
     while i < n:
-        j = _skip_noncode(sql, i)
+        j = skip_noncode(sql, i)
         if j != i:
             out.append(sql[i:j])
             i = j

@@ -35,6 +35,8 @@ import re
 
 from pyspark.sql import SparkSession
 
+from hive_spark.sqltext import split_top
+
 _DB_DIRECTIVE = re.compile(
     r"--!\s*qt:database:(\w+):(\w+)(?::([\w.\-]+))?", re.I
 )
@@ -161,10 +163,8 @@ def try_create_jdbc_table(spark: SparkSession, stmt: str) -> bool:
     if not m:
         return False
     name, _cols, props_csv = m.group(1), m.group(2), m.group(3)
-    from hive_spark.hqlscript import _split_args
-
     props: dict[str, str] = {}
-    for kv in _split_args(props_csv):
+    for kv in split_top(props_csv):
         if "=" in kv:
             k, v = kv.split("=", 1)
             v = v.strip().strip("'\"").replace('\\"', '"').replace("\\'", "'")

@@ -451,6 +451,17 @@ def test_create_function_in_expressions(spark):
     assert out2.printed == ["42"]
 
 
+def test_function_argument_with_paren_in_string(spark):
+    """A ')' inside a quoted argument does not end the function call."""
+    out = run_hplsql(
+        spark,
+        "CREATE FUNCTION wrap(s STRING) RETURNS STRING"
+        " BEGIN RETURN concat('[', s, ']'); END;"
+        " PRINT wrap('a)b'); DROP FUNCTION wrap;",
+    )
+    assert out.printed == ["[a)b]"]
+
+
 def test_package_function_in_expressions(spark):
     """Package FUNCTIONs resolve as pkg.fn(args) inside expressions and
     see package variables as bare names (Exec.java packCallStack)."""

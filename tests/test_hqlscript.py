@@ -25,13 +25,14 @@ def test_split_respects_quotes_and_comments():
     "f(`a)`, x)",       # parenthesis inside a backticked identifier
     "f(`a,b`, x)",      # comma inside a backticked identifier
     "f(a /* , */, x)",  # comma inside a comment
+    "f(a /* ) */, x)",  # parenthesis inside a comment
 ])
 def test_call_folding_skips_quoted_parens(call):
     """Call folding finds the closing parenthesis and the argument
     commas outside strings and backticked identifiers."""
-    from hive_spark.hqlscript import _fold_calls
+    from hive_spark.sqltext import rewrite_calls
 
-    out = _fold_calls(f"SELECT {call} FROM t", "f", lambda a: f"g[{len(a)}]")
+    out = rewrite_calls(f"SELECT {call} FROM t", "f", lambda a: f"g[{len(a)}]")
     assert out == "SELECT g[2] FROM t"
 
 
@@ -43,10 +44,10 @@ def test_call_folding_skips_quoted_parens(call):
 def test_call_folding_rejects_unbalanced_calls(stmt):
     """An unclosed call raises instead of being folded into a
     statement the user never wrote."""
-    from hive_spark.hqlscript import _fold_calls
+    from hive_spark.sqltext import rewrite_calls
 
     with pytest.raises(ValueError, match="unbalanced parens"):
-        _fold_calls(stmt, "f", lambda a: "g")
+        rewrite_calls(stmt, "f", lambda a: "g")
 
 
 class _StubSession:
@@ -91,20 +92,21 @@ class _StubHpl:
 def _scanners():
     """Each scanner entry point by name, as a function of a case's args."""
     from hive_spark import hqlscript as h
+    from hive_spark import sqltext
     from hive_spark.hplsql import HplInterpreter
-    from hive_spark.plans import cte_spool
 
     def show(args):
         return "g[" + "|".join(args) + "]"
 
     return {
-        "close": lambda s: h._close_paren(s, s.index("(")),
-        "scan_parens": lambda s: cte_spool._scan_parens(s, s.index("(")),
-        "split": h._split_args,
-        "split_types": lambda s: [x.strip() for x in h._split_generic_args(s)],
-        "top_level_spans": h._top_level_spans,
-        "fold_calls": lambda s: h._fold_calls(s, "f", show),
-        "rewrite_calls": lambda s: h._rewrite_calls(
+        "close": lambda s: sqltext.close_bracket(s, s.index("(")),
+        "open": lambda s: sqltext.open_bracket(s, s.rindex(")")),
+        "scan_parens": lambda s: sqltext.close_bracket(s, s.index("(")) + 1,
+        "split": sqltext.split_top,
+        "split_types": lambda s: sqltext.split_top(s, "()<>"),
+        "top_level_spans": sqltext.top_level_spans,
+        "fold_calls": lambda s: sqltext.rewrite_calls(s, "f", show),
+        "rewrite_calls": lambda s: sqltext.rewrite_calls(
             s, "f", lambda a: show(a) if len(a) == 2 else None),
         "gap_fns": h._rewrite_gap_fns,
         "union_fns": h._rewrite_union_fns,
@@ -267,6 +269,100 @@ def test_scanner_entry_point(entry, args, expected):
     """Each place the front end scans SQL text for brackets, commas or
     keywords gives the same result on plain input."""
     assert _scanners()[entry](*args) == expected
+
+
+# The lexical rule at each helper: a bracket or comma inside a string
+# (with a backslash or a doubled-quote escape), a backticked name or a
+# comment is not code. (case id, entry point, arguments, expected result)
+_LEXICAL_CASES = [
+    ("close_backslash", "close", ("f('a\\')', b) + 1",), 11),
+    ("close_doubled_quote", "close", ("f('a'')', b) + 1",), 11),
+    ("close_backtick", "close", ("f(`a)`, b) + 1",), 9),
+    ("close_comment", "close", ("f(a /* ) */, b) + 1",), 14),
+    ("open_backslash", "open", ("x + f('a\\'(', b)",), 5),
+    ("open_doubled_quote", "open", ("x + f('a''(', b)",), 5),
+    ("open_backtick", "open", ("x + f(`a(`, b)",), 5),
+    ("open_comment", "open", ("x + f(a /* ( */, b)",), 5),
+    ("open_inside_string", "open", ("f(a) || ')'",), None),
+    ("split_backslash", "split", ("'a\\', (b', c",), ["'a\\', (b'", "c"]),
+    ("split_doubled_quote", "split", ("'a'', (b', c",), ["'a'', (b'", "c"]),
+    ("split_backtick", "split", ("`a, (b`, c",), ["`a, (b`", "c"]),
+    ("split_comment", "split", ("a /* , ( */, c",), ["a /* , ( */", "c"]),
+    ("split_types_comment_gt", "split_types",
+     ("a int COMMENT 'x > y, z', b map<string,int>",),
+     ["a int COMMENT 'x > y, z'", "b map<string,int>"]),
+    ("split_types_backslash", "split_types",
+     ("a int COMMENT 'it\\'s <', b int",),
+     ["a int COMMENT 'it\\'s <'", "b int"]),
+    ("split_types_doubled_quote", "split_types",
+     ("a int COMMENT 'it''s <', b int",),
+     ["a int COMMENT 'it''s <'", "b int"]),
+    ("split_types_backtick", "split_types",
+     ("a struct<`x>y`:int>, b int",), ["a struct<`x>y`:int>", "b int"]),
+    ("split_types_comment", "split_types",
+     ("a int /* <, */, b int",), ["a int /* <, */", "b int"]),
+    ("spans_backslash", "top_level_spans",
+     ("SELECT 'a\\'(' FROM t", r"\bFROM\b"), [(14, 18)]),
+    ("spans_doubled_quote", "top_level_spans",
+     ("SELECT 'a''(' FROM t", r"\bFROM\b"), [(14, 18)]),
+    ("spans_backtick", "top_level_spans",
+     ("SELECT `a(` FROM t", r"\bFROM\b"), [(12, 16)]),
+    ("spans_comment", "top_level_spans",
+     ("SELECT a /* ( */ FROM t", r"\bFROM\b"), [(17, 21)]),
+]
+
+
+@pytest.mark.parametrize(
+    "entry,args,expected",
+    [c[1:] for c in _LEXICAL_CASES],
+    ids=[c[0] for c in _LEXICAL_CASES],
+)
+def test_scanner_skips_strings_and_comments(entry, args, expected):
+    """Brackets and commas in strings, backticked names and comments
+    neither open, close nor split anything."""
+    assert _scanners()[entry](*args) == expected
+
+
+def test_bracket_depth_is_counted_only_in_sqltext():
+    """hive_spark/sqltext.py is the one place that tracks bracket depth.
+    A function elsewhere that compares a character with a bracket and
+    moves a counter on it re-implements that scan (without its rule for
+    strings and comments); it should use code_positions or a helper
+    built on it instead."""
+    import ast
+    import pathlib
+
+    import hive_spark
+
+    root = pathlib.Path(hive_spark.__file__).parent
+
+    def compares_bracket(test):
+        return any(
+            isinstance(c, ast.Constant) and isinstance(c.value, str)
+            and c.value and set(c.value) <= set("()<>")
+            for n in ast.walk(test) if isinstance(n, ast.Compare)
+            for side in (n.left, *n.comparators) for c in ast.walk(side)
+        )
+
+    def moves_counter(body):
+        return any(
+            isinstance(s, ast.AugAssign)
+            and isinstance(s.op, (ast.Add, ast.Sub))
+            for s in body
+        )
+
+    found = [
+        f"{path.relative_to(root)}:{fn.name}"
+        for path in sorted(root.rglob("*.py")) if path.name != "sqltext.py"
+        for fn in ast.walk(ast.parse(path.read_text()))
+        if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and any(
+            isinstance(n, ast.If) and compares_bracket(n.test)
+            and moves_counter(n.body)
+            for n in ast.walk(fn)
+        )
+    ]
+    assert found == []
 
 
 def test_representative_hive_script(spark, sf_dir):
@@ -1724,6 +1820,11 @@ _STATEMENT_CASES = [
     ("drop_column", "alter_columns",
      "DROP TABLE IF EXISTS ac; CREATE TABLE ac USING parquet AS SELECT * FROM st",
      "ALTER TABLE ac DROP COLUMN value", "SELECT * FROM ac", [(1,), (2,)]),
+    ("replace_columns_comma_in_comment", "alter_columns",
+     "DROP TABLE IF EXISTS rc;"
+     " CREATE TABLE rc USING parquet AS SELECT * FROM st",
+     "ALTER TABLE rc REPLACE COLUMNS (a int COMMENT 'id, key', b string)",
+     "DESCRIBE rc", [("a", "int", None), ("b", "string", None)]),
     ("alter_table_properties", "sql",
      "DROP TABLE IF EXISTS ac2;"
      " CREATE TABLE ac2 USING parquet AS SELECT * FROM st",
@@ -1830,6 +1931,16 @@ _STATEMENT_CASES = [
      " WHEN NOT MATCHED THEN INSERT VALUES (s.key + 1, 'n')",
      "SELECT key, value FROM hq_vm", [(1, "a"), (2, "m"), (3, "n")]),
     ("select", "sql", "", "SELECT key FROM st WHERE key > 1", None, [(2,)]),
+    ("lateral_values_paren_in_string", "sql", "",
+     "SELECT v.x, v.y FROM (SELECT 1 AS k) t,"
+     " LATERAL TABLE(VALUES ('a)', 1), ('b', 2)) AS v(x, y)",
+     None, [("a)", 1), ("b", 2)]),
+    ("qualify_paren_in_backticks", "sql", "",
+     "SELECT `a(b`, r FROM (SELECT 1 AS `a(b`, 1 AS r) t"
+     " QUALIFY row_number() OVER (ORDER BY r) = 1", None, [(1, 1)]),
+    ("union_fns_paren_in_backticks", "sql", "",
+     "SELECT extract_union(create_union(0, `x)y`, 'b'))"
+     " FROM (SELECT 'a' AS `x)y`) t", None, [((0, "a", None),)]),
     ("matchpath", "sql", "",
      "SELECT key, n FROM matchpath(on st sort by key arg1('A+'), arg2('A'),"
      " arg3(key > 0), arg4('key, size(tpath) AS n'))", None,
