@@ -66,7 +66,7 @@ case in tests/test_hqlscript.py's ``_RETRY_CASES``.
 
 SQL-text scanning (where a bracket closes, where a comma splits, whether
 a keyword is at the top level) lives in `hive_spark.sqltext`. Its
-`skip_noncode` is the one lexical rule: '...' and "..." strings with
+`_skip_noncode` is the one lexical rule: '...' and "..." strings with
 backslash and doubled-quote escapes, backticked names, -- and /* */
 comments. `code_positions` walks the code characters with their bracket
 depth, and `close_bracket`, `open_bracket`, `split_top`,

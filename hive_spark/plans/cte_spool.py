@@ -30,7 +30,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from hive_spark.sqltext import close_bracket, skip_noncode
+from hive_spark.sqltext import close_bracket, code_positions
 
 _WORD = r"[A-Za-z_][A-Za-z0-9_]*"
 
@@ -127,45 +127,26 @@ def reorder_ctes(stmt: str) -> str:
     return f"WITH {chain}\n{rest.lstrip()}"
 
 
-def _count_refs(name: str, sql: str) -> int:
-    """Word-boundary references to `name` in code (not strings/comments)."""
+def _ref_spans(name: str, sql: str) -> list[tuple[int, int]]:
+    """Spans of word-boundary references to `name` in code (not
+    strings/comments)."""
     pat = re.compile(rf"\b{re.escape(name)}\b", re.IGNORECASE)
-    count = 0
-    i = 0
-    n = len(sql)
-    while i < n:
-        j = skip_noncode(sql, i)
-        if j != i:
-            i = j
-            continue
-        m = pat.match(sql, i)
-        if m:
-            count += 1
-            i = m.end()
-        else:
-            i += 1
-    return count
+    return [
+        m.span() for i, _ in code_positions(sql) if (m := pat.match(sql, i))
+    ]
+
+
+def _count_refs(name: str, sql: str) -> int:
+    return len(_ref_spans(name, sql))
 
 
 def _replace_refs(name: str, repl: str, sql: str) -> str:
     """Replace word-boundary code references to `name` with `repl`."""
-    pat = re.compile(rf"\b{re.escape(name)}\b", re.IGNORECASE)
-    out = []
-    i = 0
-    n = len(sql)
-    while i < n:
-        j = skip_noncode(sql, i)
-        if j != i:
-            out.append(sql[i:j])
-            i = j
-            continue
-        m = pat.match(sql, i)
-        if m:
-            out.append(repl)
-            i = m.end()
-        else:
-            out.append(sql[i])
-            i += 1
+    out, pos = [], 0
+    for start, end in _ref_spans(name, sql):
+        out += [sql[pos:start], repl]
+        pos = end
+    out.append(sql[pos:])
     return "".join(out)
 
 

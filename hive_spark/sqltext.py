@@ -2,7 +2,7 @@
 
 The front end rewrites statement text before Spark parses it, so it keeps
 asking where a bracket closes and whether a comma or keyword sits outside
-strings and comments. `skip_noncode` is the one answer to the second
+strings and comments. `_skip_noncode` is the one answer to the second
 question: '...' and "..." strings (backslash and doubled-quote escapes),
 backticked names, -- line comments and /* */ comments. `code_positions`
 walks a text with it and yields every code index with its bracket depth;
@@ -22,7 +22,7 @@ from __future__ import annotations
 import re
 
 
-def skip_noncode(text: str, i: int) -> int:
+def _skip_noncode(text: str, i: int) -> int:
     """If text[i] starts a string/quoted identifier/comment, return the
     index one past its end; else return i."""
     c = text[i]
@@ -59,7 +59,7 @@ def code_positions(text: str, start: int = 0, pairs: str = "()"):
     depth = 0
     i, n = start, len(text)
     while i < n:
-        j = skip_noncode(text, i)
+        j = _skip_noncode(text, i)
         if j != i:
             i = j
             continue
@@ -154,8 +154,9 @@ def rewrite_calls(stmt: str, name: str, build, guard_tables=False) -> str:
         close = close_bracket(stmt, m.end() - 1)
         inner = rewrite_calls(stmt[m.end() : close], name, build, guard_tables)
         rep = build(split_top(inner))
-        out.append(stmt[pos : m.start()])
-        out.append(stmt[m.start() : m.end()] + inner + ")" if rep is None else rep)
+        if rep is None:
+            rep = stmt[m.start() : m.end()] + inner + ")"
+        out += [stmt[pos : m.start()], rep]
         pos = close + 1
     out.append(stmt[pos:])
     return "".join(out)
