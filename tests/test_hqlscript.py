@@ -40,6 +40,8 @@ def test_call_folding_skips_quoted_parens(call):
     "SELECT f(a, b FROM t",     # no ')' at all
     "SELECT f(a, g(b)",         # the last ')' closes g, not f
     "SELECT f(a, ')' FROM t",   # the only ')' is inside a string
+    "SELECT f(a, `)` FROM t",   # ... inside a backticked identifier
+    "SELECT f(a /* ) */ FROM t",  # ... inside a comment
 ])
 def test_call_folding_rejects_unbalanced_calls(stmt):
     """An unclosed call raises instead of being folded into a
