@@ -53,10 +53,9 @@ def test_call_folding_rejects_unbalanced_calls(stmt):
 
 
 class _StubSession:
-    """Answers the two statements _inline_values and
-    _select_item_positions issue: DESCRIBE t gives columns a INT and b
-    STRING, SHOW CREATE TABLE fails (no defaults), and any query has
-    three columns."""
+    """Answers the statements _inline_values and _select_item_positions
+    send to Spark: DESCRIBE t gives columns a INT and b STRING, SHOW
+    CREATE TABLE fails (no defaults), and any query has three columns."""
 
     class _Frame:
         def __init__(self, rows, columns):
