@@ -2051,3 +2051,363 @@ def test_every_statement_row_has_a_case():
     assert {row[0] for row in _STATEMENTS} == {
         c[1] for c in _STATEMENT_CASES if not isinstance(c[5], type)
     }
+
+
+_RW_DIR = os.path.join(QTEST_TMP, "hqrw")
+_RW_SCRIPT = os.path.join(_RW_DIR, "rw_script.py")
+_FOLDED_UPPER = (
+    "CREATE TEMPORARY FUNCTION hqrw_up AS"
+    " 'org.apache.hadoop.hive.ql.udf.generic.GenericUDFUpper'"
+)
+
+# Each HiveQL-text rewrite on a statement that needs it: (case id, the
+# _REWRITES row that rewrites it, setup script, statement, the text
+# rewrite_statement hands to spark.sql). Rows that bundle several steps
+# on one statement kind have one case per step.
+_REWRITE_CASES = [
+    ("backtick_trim", "backtick_trim", "",
+     "SELECT ` key ` FROM t",
+     "SELECT `key` FROM t"),
+    ("lateral_table_values", "lateral_table_values", "",
+     "SELECT v.x FROM t, LATERAL TABLE(VALUES (1, 'a'), (2, 'b')) AS "
+     "v(x, y)",
+     "SELECT v.x FROM t LATERAL VIEW INLINE(ARRAY(STRUCT(1, 'a'), "
+     "STRUCT(2, 'b'))) v AS x, y"),
+    ("lateral_table_values_default_columns", "lateral_table_values", "",
+     "SELECT v.col1 FROM t, LATERAL TABLE(VALUES (1, 'a'), (2, 'b')) AS v",
+     "SELECT v.col1 FROM t LATERAL VIEW "
+     "inline(array(named_struct('col1', (1), 'col2', ('a')), "
+     "named_struct('col1', (2), 'col2', ('b')))) v AS col1, col2"),
+    ("alt_intervals", "alt_intervals", "",
+     "SELECT ts + 2 days FROM t",
+     "SELECT ts + INTERVAL '2' DAY FROM t"),
+    ("hypothetical_set", "hypothetical_set", "",
+     "SELECT rank(3) WITHIN GROUP (ORDER BY k) FROM t",
+     "SELECT CAST(COUNT(CASE WHEN k < (3) THEN 1 END) + 1 AS BIGINT) "
+     "FROM t"),
+    ("is_not_distinct_from", "is_distinct_from", "",
+     "SELECT a IS NOT DISTINCT FROM b FROM t",
+     "SELECT (a <=> b) FROM t"),
+    ("is_distinct_from", "is_distinct_from", "",
+     "SELECT a IS DISTINCT FROM b FROM t",
+     "SELECT (NOT (a <=> b)) FROM t"),
+    ("uniquejoin", "uniquejoin", "",
+     "FROM UNIQUEJOIN PRESERVE t1 a (a.k), t2 b (b.k) SELECT a.k, b.k",
+     "SELECT a.k, b.k\nFROM (SELECT a.*, (a.k) AS _uj_k0, TRUE AS _uj_p "
+     "FROM t1 a) a\nFULL OUTER JOIN (SELECT b.*, (b.k) AS _uj_k0, TRUE "
+     "AS _uj_p FROM t2 b) b ON coalesce(a._uj_k0) = b._uj_k0\nWHERE "
+     "a._uj_p IS NOT NULL OR (a._uj_p IS NOT NULL AND b._uj_p IS NOT "
+     "NULL)"),
+    ("uniontype", "uniontype", "",
+     "CREATE TABLE u (c UNIONTYPE<int, string>)",
+     "CREATE TABLE u (c STRUCT<tag:INT, field0:int, field1:string>)"),
+    ("union_fns", "union_fns", "",
+     "SELECT extract_union(create_union(0, k, v), 0) FROM t",
+     "SELECT (named_struct('tag', CAST((0) AS INT), 'field0', CASE WHEN "
+     "CAST((0) AS INT) = 0 THEN k END, 'field1', CASE WHEN CAST((0) AS "
+     "INT) = 1 THEN v END)).field0 FROM t"),
+    ("kll_fns", "kll_fns", "",
+     "SELECT ds_kll_n(ds_kll_sketch(k)) FROM t",
+     "SELECT CAST(size(array_sort(collect_list(CAST((k) AS FLOAT)))) AS "
+     "BIGINT) FROM t"),
+    ("gap_fns", "gap_fns", "",
+     "SELECT approx_distinct(k), stddev(k), mid(v, 2) FROM t",
+     "SELECT approx_count_distinct(k), stddev_pop(k), substr(v, 2) FROM t"),
+    ("quantified_cmp", "quantified_cmp", "",
+     "SELECT k FROM t WHERE k <> ALL (SELECT k FROM s)",
+     "SELECT k FROM t WHERE (CASE WHEN (SELECT count(*) FROM (SELECT k "
+     "FROM s) _qsub) = 0 THEN TRUE WHEN (k) IS NULL THEN CAST(NULL AS "
+     "BOOLEAN) WHEN (SELECT count(*) FROM (SELECT k FROM s) _qsub(_qv) "
+     "WHERE _qv = (k)) > 0 THEN FALSE WHEN (SELECT count(*) - count(_qv) "
+     "FROM (SELECT k FROM s) _qsub(_qv)) > 0 THEN CAST(NULL AS BOOLEAN) "
+     "ELSE TRUE END)"),
+    ("group_by_empty", "group_by_empty", "",
+     "SELECT count(*) FROM t GROUP BY ()",
+     "SELECT count(*) FROM t GROUP BY GROUPING SETS(())"),
+    ("compute_stats", "compute_stats", "",
+     "SELECT compute_stats(k, 'hll') FROM t",
+     "SELECT named_struct('count', count(k), 'numnulls', sum(CASE WHEN k "
+     "IS NULL THEN 1 ELSE 0 END), 'ndv', count(DISTINCT k)) FROM t"),
+    ("arity_fns", "arity_fns", "",
+     "SELECT add_months(d, 1, 'yyyy-MM'), grouping(a, b) FROM t",
+     "SELECT date_format(add_months(d, 1), 'yyyy-MM'), grouping_id(a, b) "
+     "FROM t"),
+    ("distinct_having", "distinct_having", "",
+     "SELECT DISTINCT k FROM t HAVING count(*) > 1",
+     "SELECT DISTINCT k FROM t GROUP BY k HAVING count(*) > 1"),
+    ("distinct_orderby_alias", "distinct_orderby_alias", "",
+     "SELECT DISTINCT k + 1 AS k1 FROM t ORDER BY k + 1",
+     "SELECT DISTINCT k + 1 AS k1 FROM t ORDER BY k1 "),
+    ("qualify", "qualify", "",
+     "SELECT k FROM t QUALIFY row_number() OVER (ORDER BY k) = 1",
+     "SELECT * EXCEPT (__qualify__) FROM (SELECT k, (row_number() OVER "
+     "(ORDER BY k) = 1) AS __qualify__ FROM t) __qsub WHERE __qualify__ "),
+    ("distinct_windows", "distinct_windows", "",
+     "SELECT count(DISTINCT k) OVER (PARTITION BY v) FROM t",
+     "SELECT size(collect_set(k) OVER (PARTITION BY v)) FROM t"),
+    ("orderby_window_ordinal", "orderby_window_ordinal", "",
+     "SELECT k, rank() OVER (ORDER BY k) FROM t ORDER BY rank() OVER "
+     "(ORDER BY k)",
+     "SELECT k, rank() OVER (ORDER BY k) FROM t ORDER BY 2"),
+    ("floor_to", "floor_to", "",
+     "SELECT floor(ts TO day) FROM t",
+     "SELECT date_trunc('DAY', ts) FROM t"),
+    ("bare_interval_literal", "bare_interval_literal", "",
+     "SELECT '1 2:3:4' DAY TO SECOND",
+     "SELECT INTERVAL '1 2:3:4' DAY TO SECOND"),
+    ("double_precision", "double_precision", "",
+     "CREATE TABLE d (x double precision)",
+     "CREATE TABLE d (x double)"),
+    ("charset_literal", "charset_literal", "",
+     "SELECT _UTF-8 0x41",
+     "SELECT decode(unhex('41'), 'UTF-8')"),
+    ("xor_concat", "xor_concat", "",
+     "SELECT 0 ^ 1 || '2'",
+     "SELECT (0 ^ 1) || '2'"),
+    ("in_boolean_test", "in_boolean_test", "",
+     "SELECT k IN (1, 2) IS NOT TRUE FROM t",
+     "SELECT (k IN (1, 2)) IS NOT TRUE FROM t"),
+    ("truncate_force", "truncate_force", "",
+     "TRUNCATE TABLE t FORCE",
+     "TRUNCATE TABLE t"),
+    ("alter_table_set_owner", "alter_table_set_owner", "",
+     "ALTER TABLE t SET OWNER ROLE admin",
+     "ALTER TABLE t SET TBLPROPERTIES ('hive.owner.type'='role', "
+     "'hive.owner'='admin')"),
+    ("create_view_autoalias", "create_view_autoalias", "",
+     "CREATE VIEW v AS SELECT 1 + 1, 'x'",
+     "CREATE VIEW v AS  SELECT 1 + 1 AS _c0 , 'x' AS _c1 "),
+    ("truncate_wildcard_partition", "truncate_wildcard_partition", "",
+     "TRUNCATE TABLE t PARTITION (ds='1', hr)",
+     "TRUNCATE TABLE t PARTITION (ds='1')"),
+    ("truncate_table_keyword", "truncate_table_keyword", "",
+     "TRUNCATE t",
+     "TRUNCATE TABLE t"),
+    ("drop_column_cascade", "drop_column_cascade", "",
+     "ALTER TABLE t DROP COLUMN c CASCADE",
+     "ALTER TABLE t DROP COLUMN c"),
+    ("added_file_paths", "added_file_paths", f"ADD FILE {_RW_SCRIPT}",
+     "SELECT TRANSFORM(k) USING 'python rw_script.py' FROM t",
+     f"SELECT TRANSFORM(k) USING 'python {_RW_SCRIPT}' "
+     "FROM t"),
+    ("transform_using", "transform_using", "",
+     "SELECT TRANSFORM(k) USING 'tr _ \\n' FROM t",
+     'SELECT TRANSFORM(k) USING "tr _ \'\n\'" FROM t'),
+    ("drop_if_exists", "drop_if_exists", "",
+     "DROP TABLE t",
+     "DROP TABLE IF EXISTS t"),
+    ("timestamp_with_local_time_zone", "timestamp_local_tz", "",
+     "CREATE TABLE z (ts TIMESTAMP WITH LOCAL TIME ZONE)",
+     "CREATE TABLE z (ts TIMESTAMP)"),
+    ("timestamplocaltz", "timestamp_local_tz", "",
+     "CREATE TABLE z (ts TIMESTAMPLOCALTZ)",
+     "CREATE TABLE z (ts TIMESTAMP)"),
+    ("show_table_extended_like", "show_table_extended", "",
+     "SHOW TABLE EXTENDED LIKE `part*`",
+     "SHOW TABLE EXTENDED LIKE 'part*'"),
+    ("show_table_extended_from", "show_table_extended", "",
+     "SHOW TABLE EXTENDED FROM db LIKE 'p*'",
+     "SHOW TABLE EXTENDED IN db LIKE 'p*'"),
+    ("pfile_scheme", "pfile_scheme", "",
+     "CREATE TABLE p (a int) LOCATION 'pfile:///x/p'",
+     "CREATE TABLE p (a int) LOCATION 'file:///x/p'"),
+    ("show_tables_quoted_pattern", "show_tables_pattern", "",
+     "SHOW TABLES 'p*'",
+     "SHOW TABLES LIKE 'p*'"),
+    ("show_extended_tables", "show_tables_pattern", "",
+     "SHOW EXTENDED TABLES IN db",
+     "SHOW TABLES IN db"),
+    ("show_tables_bare_pattern", "show_tables_pattern", "",
+     "SHOW TABLES alter1_db",
+     "SHOW TABLES LIKE 'alter1_db'"),
+    ("show_functions_pattern", "show_tables_pattern", "",
+     "SHOW FUNCTIONS 'x*'",
+     "SHOW FUNCTIONS LIKE 'x*'"),
+    ("limit_offset_comma", "limit_offset_comma", "",
+     "SELECT k FROM t LIMIT 5, 10",
+     "SELECT k FROM t LIMIT 10 OFFSET 5"),
+    ("hdfs_tmp", "hdfs_paths", "",
+     "CREATE TABLE h (a int) LOCATION 'hdfs:///tmp/h'",
+     "CREATE TABLE h (a int) LOCATION 'file:///tmp/h'"),
+    ("hdfs_target", "hdfs_paths", "",
+     "CREATE TABLE h (a int) LOCATION 'hdfs:/target/h'",
+     f"CREATE TABLE h (a int) LOCATION 'file://{QTEST_TMP}/target/h'"),
+    ("bare_tmp_location", "bare_tmp_location", "",
+     "ALTER TABLE t SET LOCATION 'file:///tmp'",
+     f"ALTER TABLE t SET LOCATION 'file://{QTEST_TMP}/tmp_root'"),
+    ("database_set_owner", "database_location", "",
+     "ALTER DATABASE d SET OWNER USER u1",
+     "ALTER DATABASE d SET DBPROPERTIES ('hive.owner.type'='user', "
+     "'hive.owner'='u1')"),
+    ("database_set_managedlocation", "database_location", "",
+     "ALTER DATABASE d SET MANAGEDLOCATION '/m'",
+     "ALTER DATABASE d SET DBPROPERTIES ('hive.managedlocation'='/m')"),
+    ("database_managedlocation", "database_location", "",
+     "CREATE DATABASE d MANAGEDLOCATION '/m'",
+     "CREATE DATABASE d "),
+    ("database_root_location", "database_location", "",
+     "CREATE DATABASE d LOCATION '/x/d'",
+     f"CREATE DATABASE d LOCATION '{QTEST_TMP}/x/d'"),
+    ("describe_partition_column", "describe_partition_column", "",
+     "DESCRIBE FORMATTED t PARTITION (ds='1') key",
+     "DESCRIBE FORMATTED t key"),
+    ("alter_columns_cascade", "alter_columns_cascade", "",
+     "ALTER TABLE t ADD COLUMNS (c int) CASCADE",
+     "ALTER TABLE t ADD COLUMNS (c int)"),
+    ("window_specs", "window_specs", "",
+     "SELECT sum(k) OVER (DISTRIBUTE BY v SORT BY k) FROM t",
+     "SELECT sum(k) OVER (PARTITION BY v ORDER BY k) FROM t"),
+    ("ptf_noop", "ptf_noop", "",
+     "SELECT * FROM noop(on t partition by k)",
+     "SELECT * FROM (SELECT * FROM t)"),
+    ("ignore_nulls_inside", "ignore_nulls_inside", "",
+     "SELECT first_value(k IGNORE NULLS) OVER (ORDER BY k) FROM t",
+     "SELECT first_value(k) IGNORE NULLS OVER (ORDER BY k) FROM t"),
+    ("convert_to_acid", "convert_to_acid", "",
+     "ALTER TABLE t CONVERT TO ACID",
+     "ALTER TABLE t SET TBLPROPERTIES ('transactional'='true')"),
+    ("insert_overwrite_if_not_exists", "insert_overwrite_if_not_exists", "",
+     "INSERT OVERWRITE TABLE t PARTITION (ds='1') IF NOT EXISTS SELECT 1",
+     "INSERT OVERWRITE TABLE t PARTITION (ds='1')  SELECT 1"),
+    ("explain_formatted_cbo", "explain_mode", "",
+     "EXPLAIN FORMATTED CBO SELECT 1",
+     "EXPLAIN FORMATTED SELECT 1"),
+    ("explain_rewrite", "explain_mode", "",
+     "EXPLAIN REWRITE SELECT 1",
+     "EXPLAIN EXTENDED SELECT 1"),
+    ("explain_formatted_debug", "explain_mode", "",
+     "EXPLAIN FORMATTED DEBUG SELECT 1",
+     "EXPLAIN FORMATTED SELECT 1"),
+    ("explain_cbo", "explain_mode", "",
+     "EXPLAIN CBO SELECT 1",
+     "EXPLAIN COST SELECT 1"),
+    ("explain_trailing_debug", "explain_mode", "",
+     "EXPLAIN VECTORIZATION DETAIL DEBUG SELECT 1",
+     "EXPLAIN FORMATTED SELECT 1"),
+    ("explain_create_mv", "explain_create_mv", "",
+     "EXPLAIN CREATE MATERIALIZED VIEW mv AS SELECT 1",
+     "EXPLAIN SELECT 1"),
+    ("msck_repair", "msck_repair", "",
+     "MSCK TABLE t",
+     "MSCK REPAIR TABLE t"),
+    ("tablesample_bucket", "tablesample_bucket", "",
+     "SELECT * FROM t TABLESAMPLE(BUCKET 1 OUT OF 2 ON k) s",
+     "SELECT * FROM (SELECT * FROM t WHERE pmod(k, 2) = 0) s"),
+    ("stored_as", "stored_as", "",
+     "CREATE TABLE s (a int) STORED AS ORC",
+     "CREATE TABLE s (a int) USING orc "),
+    ("partition_values", "partition_values", "",
+     "ALTER TABLE t ADD PARTITION (ds=2008-04-08)",
+     "ALTER TABLE t ADD PARTITION (ds='2008-04-08')"),
+    ("set_time_zone", "set_time_zone", "",
+     "SET TIME ZONE LOCAL",
+     "SET TIME ZONE 'UTC'"),
+    ("analyze_partition_spec", "analyze_partition_spec", "",
+     "ANALYZE TABLE t PARTITION (ds) COMPUTE STATISTICS",
+     "ANALYZE TABLE t COMPUTE STATISTICS"),
+    ("virtual_columns", "virtual_columns", "",
+     "SELECT INPUT__FILE__NAME FROM t",
+     "SELECT input_file_name() FROM t"),
+    ("scan_table_properties", "scan_table_properties", "",
+     "SELECT * FROM t('serialization.null.format'='x')",
+     "SELECT * FROM t"),
+    ("all_columns_stats", "all_columns_stats", "",
+     "ANALYZE TABLE t COMPUTE STATISTICS FOR COLUMNS",
+     "ANALYZE TABLE t COMPUTE STATISTICS FOR ALL COLUMNS"),
+    ("update_statistics", "update_statistics", "",
+     "ALTER TABLE t UPDATE STATISTICS SET ('numRows'='10', "
+     "'rawDataSize'='100')",
+     "ALTER TABLE t SET TBLPROPERTIES "
+     "('spark.sql.statistics.numRows'='10', "
+     "'spark.sql.statistics.totalSize'='100')"),
+    ("temporary_table", "temporary_table", "",
+     "CREATE TEMPORARY TABLE tt (a int)",
+     "CREATE TABLE tt (a int)"),
+    ("time_travel", "time_travel", "",
+     "SELECT * FROM hqrw_v FOR SYSTEM_VERSION AS OF 0",
+     "SELECT * FROM hqrw_v__sysver_0"),
+    ("cte_reorder", "cte_reorder", "",
+     "WITH b AS (SELECT * FROM a), a AS (SELECT 1 AS x) SELECT * FROM b",
+     "WITH a AS (SELECT 1 AS x),\nb AS (SELECT * FROM a)\nSELECT * FROM b"),
+    ("macros", "macros", "CREATE TEMPORARY MACRO hqrw_twice(x INT) x + x",
+     "SELECT hqrw_twice(k) FROM t",
+     "SELECT ((k) + (k)) FROM t"),
+    ("function_folds", "function_folds", _FOLDED_UPPER,
+     "SELECT hqrw_up(v) FROM t",
+     "SELECT upper(v) FROM t"),
+    ("ds_hll_estimate", "ds_hll_estimate", "",
+     "SELECT ds_hll_estimate(ds_hll_sketch(k)) FROM t",
+     "SELECT approx_count_distinct(k, 0.016) FROM t"),
+    ("ds_hll_union", "ds_hll_union", "",
+     "SELECT ds_hll_union(sk) FROM t",
+     "SELECT hll_union_agg(sk) FROM t"),
+    ("ds_hll_sketch", "ds_hll_sketch", "",
+     "SELECT ds_hll_sketch(k) FROM t",
+     "SELECT hll_sketch_agg(k) FROM t"),
+    ("ds_cpc_estimate", "ds_cpc_estimate", "",
+     "SELECT ds_cpc_estimate(ds_cpc_sketch(k)) FROM t",
+     "SELECT approx_count_distinct(k, 0.016) FROM t"),
+    ("dboutput", "dboutput", "",
+     "EXPLAIN SELECT dboutput('jdbc:x', 'u', 'p', 'DELETE FROM y')",
+     "EXPLAIN SELECT 0"),
+    ("get_sql_schema", "get_sql_schema", "",
+     "SELECT get_sql_schema('SELECT 1 AS a')",
+     "SELECT inline(array(named_struct('col_name', 'a', 'col_type', "
+     "'int')))"),
+    ("sort_array_by", "sort_array_by", "",
+     "SELECT sort_array_by(arr, 'f') FROM t",
+     "SELECT array_sort(arr, (l, r) -> CASE WHEN l.`f` < r.`f` THEN -1 "
+     "WHEN l.`f` > r.`f` THEN 1 ELSE 0 END) FROM t"),
+    ("field", "field", "",
+     "SELECT field(k, 1, 2) FROM t",
+     "SELECT (CASE WHEN (k) = (1) THEN 1 WHEN (k) = (2) THEN 2 ELSE 0 "
+     "END) FROM t"),
+    ("likeany", "likeany", "",
+     "SELECT likeany(v, 'a%', 'b%') FROM t",
+     "SELECT ((v) LIKE 'a%' OR (v) LIKE 'b%') FROM t"),
+    ("likeall", "likeall", "",
+     "SELECT likeall(v, 'a%', 'b%') FROM t",
+     "SELECT ((v) LIKE 'a%' AND (v) LIKE 'b%') FROM t"),
+
+]
+
+
+@pytest.fixture(scope="module")
+def rewrite_db(spark):
+    import shutil
+
+    from hive_spark import snapshots
+    from hive_spark.hqlscript import VERSIONED_TABLES, register_versioned
+
+    shutil.rmtree(_RW_DIR, ignore_errors=True)
+    os.makedirs(_RW_DIR)
+    with open(_RW_SCRIPT, "w") as f:
+        f.write("print(1)\n")
+    path = os.path.join(_RW_DIR, "hqrw_v")
+    snapshots.write_version(
+        spark.createDataFrame([(1, "a")], "key int, value string"), path
+    )
+    register_versioned("hqrw_v", path)
+    yield
+    VERSIONED_TABLES.pop("hqrw_v", None)
+    spark.catalog.dropTempView("hqrw_v__sysver_0")
+    run_script(
+        spark,
+        f"DELETE FILE {_RW_SCRIPT}; DROP TEMPORARY MACRO IF EXISTS hqrw_twice;"
+        " DROP TEMPORARY FUNCTION IF EXISTS hqrw_up;",
+    )
+    shutil.rmtree(_RW_DIR, ignore_errors=True)
+
+
+@pytest.mark.parametrize(
+    "row,setup,stmt,expected",
+    [c[1:] for c in _REWRITE_CASES],
+    ids=[c[0] for c in _REWRITE_CASES],
+)
+def test_rewrite_row(spark, rewrite_db, row, setup, stmt, expected):
+    """Each HiveQL-only spelling becomes the text Spark parses."""
+    from hive_spark.hqlscript import rewrite_statement
+
+    if setup:
+        run_script(spark, setup + ";")
+    assert rewrite_statement(spark, stmt) == expected
