@@ -11,6 +11,7 @@ the helpers below are built on that walk:
 - `close_bracket` / `open_bracket`: the partner of a bracket;
 - `split_top`: split on top-level commas;
 - `top_level_spans`: pattern matches outside brackets;
+- `code_matches`: pattern matches that start in code;
 - `rewrite_calls`: replace each ``name(args)`` call.
 
 Statement splitting (hqlscript.split_statements) follows the CLI's own
@@ -122,6 +123,21 @@ def top_level_spans(text: str, pattern: str) -> list[tuple[int, int]]:
     return spans
 
 
+def code_matches(pattern: re.Pattern, text: str):
+    """Yield each match of the compiled `pattern` in text that starts
+    outside strings and comments, left to right and not overlapping."""
+    walk = code_positions(text)
+    at, pos = -1, 0  # the walk's last code index; where to search next
+    while (m := pattern.search(text, pos)) is not None:
+        while at < m.start():
+            at = next(walk, (len(text), 0))[0]
+        if at == m.start():
+            yield m
+            pos = max(m.end(), m.start() + 1)
+        else:
+            pos = m.start() + 1
+
+
 def _names_a_table(prefix: str) -> bool:
     """The text before `name(` makes it a table name followed by a
     column list (qtests name tables after the function under test:
@@ -142,14 +158,15 @@ def rewrite_calls(stmt: str, name: str, build, guard_tables=False) -> str:
     case-insensitively at a word start) with build(args), args split by
     `split_top`; build returns None to leave that call as written. Calls
     nested in the arguments are rewritten first; the replacement text
-    is not scanned again. guard_tables skips call-shaped text that is
-    really a table name followed by a column list."""
+    is not scanned again. A `name(` inside a string or comment is not a
+    call. guard_tables skips call-shaped text that is really a table
+    name followed by a column list."""
     pat = re.compile(rf"(?i)\b{name}\s*\(")
     out, pos = [], 0
-    while (m := pat.search(stmt, pos)) is not None:
+    for m in code_matches(pat, stmt):
+        if m.start() < pos:
+            continue  # inside a call already rewritten
         if guard_tables and _names_a_table(stmt[: m.start()]):
-            out.append(stmt[pos : m.end()])
-            pos = m.end()
             continue
         close = close_bracket(stmt, m.end() - 1)
         inner = rewrite_calls(stmt[m.end() : close], name, build, guard_tables)

@@ -2,6 +2,7 @@
 a representative multi-statement Hive script running unmodified."""
 
 import os
+import re
 
 import pytest
 
@@ -106,6 +107,8 @@ def _scanners():
         "split": sqltext.split_top,
         "split_types": lambda s: sqltext.split_top(s, "()<>"),
         "top_level_spans": sqltext.top_level_spans,
+        "code_matches": lambda s, p: [
+            m.start() for m in sqltext.code_matches(re.compile(p), s)],
         "fold_calls": lambda s: sqltext.rewrite_calls(s, "f", show),
         "rewrite_calls": lambda s: sqltext.rewrite_calls(
             s, "f", lambda a: show(a) if len(a) == 2 else None),
@@ -148,6 +151,7 @@ _SCAN_CASES = [
     ("split_types_map", "split_types",
      ("m map<string,int>, n int",),
      ["m map<string,int>", "n int"]),
+    ("code_matches_plain", "code_matches", ("f(a) + f(b)", r"\bf\("), [0, 7]),
     ("spans_from", "top_level_spans",
      ("SELECT a FROM (SELECT b FROM t) s", r"\bFROM\b"),
      [(9, 13)]),
@@ -176,10 +180,11 @@ _SCAN_CASES = [
     ("gap_table_values", "gap_fns",
      ("SELECT * FROM TABLE(VALUES (1, 2), (3, 4)) AS t(a, b)",),
      "SELECT * FROM (VALUES (1, 2), (3, 4)) AS t(a, b)"),
-    ("gap_lateral_values", "gap_fns",
+    ("lateral_values_plain_tuples", "lateral_table_values",
      ("SELECT * FROM t, LATERAL TABLE(VALUES (1, a), (2, b)) AS v(x, y)",),
-     ("SELECT * FROM t LATERAL VIEW inline(array(named_struct('x', (1), "
-      "'y', (a)), named_struct('x', (2), 'y', (b)))) v AS x, y")),
+     ("SELECT * FROM t LATERAL VIEW INLINE(ARRAY(named_struct('col1', "
+      "(1), 'col2', (a)), named_struct('col1', (2), 'col2', (b)))) v AS "
+      "x, y")),
     ("union_fns", "union_fns",
      (("SELECT create_union(0, a, f(b)), extract_union(u, 1), "
        "extract_union(u) FROM t"),),
@@ -223,8 +228,9 @@ _SCAN_CASES = [
     ("lateral_table_values", "lateral_table_values",
      (("SELECT v.x FROM t, LATERAL TABLE(VALUES (1, f(2)), (3, 4)) AS "
        "v(x, y)"),),
-     ("SELECT v.x FROM t LATERAL VIEW INLINE(ARRAY(STRUCT(1, f(2)), "
-      "STRUCT(3, 4))) v AS x, y")),
+     ("SELECT v.x FROM t LATERAL VIEW INLINE(ARRAY(named_struct('col1', "
+      "(1), 'col2', (f(2))), named_struct('col1', (3), 'col2', (4)))) v "
+      "AS x, y")),
     ("autoalias", "autoalias",
      (("SELECT a, b + 1, (SELECT max(c) + 1 FROM u) FROM t WHERE x IN "
        "(SELECT d + 1 FROM w)"),),
@@ -310,6 +316,12 @@ _LEXICAL_CASES = [
      ("SELECT `a(` FROM t", r"\bFROM\b"), [(12, 16)]),
     ("spans_comment", "top_level_spans",
      ("SELECT a /* ( */ FROM t", r"\bFROM\b"), [(17, 21)]),
+    ("matches_string", "code_matches", ("'f(' f(", r"\bf\("), [5]),
+    ("matches_backslash", "code_matches", ("'\\'f(' f(", r"\bf\("), [7]),
+    ("matches_doubled_quote", "code_matches", ("'''f(' f(", r"\bf\("), [7]),
+    ("matches_backtick", "code_matches", ("`f(` f(", r"\bf\("), [5]),
+    ("matches_comment", "code_matches", ("/* f( */ f(", r"\bf\("), [9]),
+    ("matches_line_comment", "code_matches", ("-- f(\nf(", r"\bf\("), [6]),
 ]
 
 
@@ -2071,13 +2083,14 @@ _REWRITE_CASES = [
     ("lateral_table_values", "lateral_table_values", "",
      "SELECT v.x FROM t, LATERAL TABLE(VALUES (1, 'a'), (2, 'b')) AS "
      "v(x, y)",
-     "SELECT v.x FROM t LATERAL VIEW INLINE(ARRAY(STRUCT(1, 'a'), "
-     "STRUCT(2, 'b'))) v AS x, y"),
+     "SELECT v.x FROM t LATERAL VIEW INLINE(ARRAY(named_struct('col1', "
+     "(1), 'col2', ('a')), named_struct('col1', (2), 'col2', ('b')))) v "
+     "AS x, y"),
     ("lateral_table_values_default_columns", "lateral_table_values", "",
      "SELECT v.col1 FROM t, LATERAL TABLE(VALUES (1, 'a'), (2, 'b')) AS v",
-     "SELECT v.col1 FROM t LATERAL VIEW "
-     "inline(array(named_struct('col1', (1), 'col2', ('a')), "
-     "named_struct('col1', (2), 'col2', ('b')))) v AS col1, col2"),
+     "SELECT v.col1 FROM t LATERAL VIEW INLINE(ARRAY(named_struct('col1', "
+     "(1), 'col2', ('a')), named_struct('col1', (2), 'col2', ('b')))) v "
+     "AS col1, col2"),
     ("alt_intervals", "alt_intervals", "",
      "SELECT ts + 2 days FROM t",
      "SELECT ts + INTERVAL '2' DAY FROM t"),
@@ -2344,6 +2357,13 @@ _REWRITE_CASES = [
     ("ds_hll_sketch", "ds_hll_sketch", "",
      "SELECT ds_hll_sketch(k) FROM t",
      "SELECT hll_sketch_agg(k) FROM t"),
+    # the kll_fns row folds every ds_kll_* call the statement spells;
+    # this row folds the ones a macro body brings in later
+    ("ds_kll_quantile", "ds_kll_quantile",
+     "CREATE TEMPORARY MACRO hqrw_median(x DOUBLE)"
+     " ds_kll_quantile(ds_kll_sketch(x), 0.5)",
+     "SELECT hqrw_median(k) FROM t",
+     "SELECT (approx_percentile((k), 0.5)) FROM t"),
     ("ds_cpc_estimate", "ds_cpc_estimate", "",
      "SELECT ds_cpc_estimate(ds_cpc_sketch(k)) FROM t",
      "SELECT approx_count_distinct(k, 0.016) FROM t"),
@@ -2394,6 +2414,7 @@ def rewrite_db(spark):
     run_script(
         spark,
         f"DELETE FILE {_RW_SCRIPT}; DROP TEMPORARY MACRO IF EXISTS hqrw_twice;"
+        " DROP TEMPORARY MACRO IF EXISTS hqrw_median;"
         " DROP TEMPORARY FUNCTION IF EXISTS hqrw_up;",
     )
     shutil.rmtree(_RW_DIR, ignore_errors=True)
@@ -2405,9 +2426,75 @@ def rewrite_db(spark):
     ids=[c[0] for c in _REWRITE_CASES],
 )
 def test_rewrite_row(spark, rewrite_db, row, setup, stmt, expected):
-    """Each HiveQL-only spelling becomes the text Spark parses."""
+    """Each HiveQL-only spelling becomes the text Spark parses, and the
+    trace names the row that rewrote it."""
     from hive_spark.hqlscript import rewrite_statement
 
     if setup:
         run_script(spark, setup + ";")
-    assert rewrite_statement(spark, stmt) == expected
+    fired = []
+    assert rewrite_statement(spark, stmt, fired) == expected
+    assert row in fired
+
+
+def test_every_rewrite_row_has_a_case():
+    """A row added to _REWRITES without a case in _REWRITE_CASES fails
+    here, as does a case naming a row that no longer exists."""
+    from hive_spark.hqlscript import _REWRITES
+
+    assert {row[0] for row in _REWRITES} == {c[1] for c in _REWRITE_CASES}
+
+
+def test_script_trace_names_each_statements_rewrites(spark):
+    """run_script records (statement index, row name) for every rewrite
+    that changed a statement, inline or through EXECUTE."""
+    query = "SELECT id FROM range(20) ORDER BY id LIMIT 5, 10"
+    out = run_script(spark, f"SELECT 1 AS a; {query};")
+    assert out.rewrites == [(1, "limit_offset_comma")]
+    assert [r.id for r in out.results[1].collect()] == list(range(5, 15))
+    out = run_script(spark, f"PREPARE p_lim FROM {query}; EXECUTE p_lim;")
+    assert out.rewrites == [(1, "limit_offset_comma")]
+    assert [r.id for r in out.results[0].collect()] == list(range(5, 15))
+
+
+# Statements whose only call- or keyword-shaped text is inside a string
+# or comment: (statement, the one value it returns). No rewrite touches
+# them.
+_LITERAL_CASES = [
+    ("SELECT 'likeany(a, b)' AS s", "likeany(a, b)"),
+    ("SELECT 'ds_hll_sketch(x)' AS s", "ds_hll_sketch(x)"),
+    ("SELECT 'likeall(' AS s", "likeall("),
+    ("SELECT 1 /* index(a */ AS a", 1),
+    ("SELECT 'double precision' AS s", "double precision"),
+    ("SELECT 'GROUP BY ()' AS s", "GROUP BY ()"),
+    ("SELECT 'LIMIT 5, 10' AS s", "LIMIT 5, 10"),
+    ("SELECT 'TIMESTAMPLOCALTZ' AS s", "TIMESTAMPLOCALTZ"),
+    ("SELECT 'floor(x to day)' AS s", "floor(x to day)"),
+]
+
+
+@pytest.mark.parametrize("stmt,value", _LITERAL_CASES)
+def test_rewrites_leave_strings_and_comments_alone(spark, stmt, value):
+    """A function name or keyword spelled inside a string literal or a
+    comment is text, not SQL: the statement returns its literal."""
+    out = run_script(spark, stmt + ";")
+    assert [tuple(r) for r in out.results[0].collect()] == [(value,)]
+    assert out.rewrites == []
+
+
+@pytest.mark.parametrize("stmt,expected", [
+    ("SELECT v.x, v.y FROM (SELECT 1 AS k) t,"
+     " LATERAL TABLE(VALUES (1, 'a'), (2, 'b')) AS v(x, y)",
+     [(1, "a"), (2, "b")]),
+    ("SELECT v.col1 FROM (SELECT 5 AS k) t,"
+     " LATERAL TABLE(VALUES (k), (k + 1)) AS v",
+     [(5,), (6,)]),
+    ("SELECT v.x FROM (SELECT 5 AS k) t,"
+     " LATERAL TABLE(VALUES (k), (k + 1)) AS v(x)",
+     [(5,), (6,)]),
+])
+def test_lateral_table_values(spark, stmt, expected):
+    """LATERAL TABLE(VALUES ...) yields its rows per left-hand row, with
+    the columns named by the alias's list, or col1..colN without one."""
+    out = run_script(spark, stmt + ";")
+    assert sorted(tuple(r) for r in out.results[0].collect()) == expected
