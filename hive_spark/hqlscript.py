@@ -3506,8 +3506,10 @@ _REWRITES = (
     ("alt_intervals", None, _text(_rewrite_alt_intervals)),
     ("hypothetical_set", None, _text(_rewrite_hypothetical_set)),
     # Hive/ANSI IS [NOT] DISTINCT FROM (HiveParser precedenceSimilar) ->
-    # Spark's null-safe operator
-    ("is_distinct_from", None,
+    # Spark's null-safe operator. The operand pattern backtracks over
+    # every word of a statement; the trigger skips that cheaply.
+    ("is_distinct_from",
+     re.compile(r"(?i)\bIS\s+(NOT\s+)?DISTINCT\s+FROM\b").search,
      _subs((rf"(?i){_DISTINCT_OPND}\s+IS\s+NOT\s+DISTINCT\s+FROM\s+"
             rf"{_DISTINCT_OPND}", r"(\1 <=> \2)"),
            (rf"(?i){_DISTINCT_OPND}\s+IS\s+DISTINCT\s+FROM\s+"

@@ -110,32 +110,37 @@ def split_top(text: str, pairs: str = "()") -> list[str]:
     return out
 
 
-def top_level_spans(text: str, pattern: str) -> list[tuple[int, int]]:
-    """(start, end) of each match of `pattern` (case-insensitive) that
-    starts outside brackets, strings and comments."""
-    rx = re.compile(pattern, re.I)
-    spans: list[tuple[int, int]] = []
-    for i, depth in code_positions(text):
-        if depth == 0 and (not spans or i >= spans[-1][1]):
-            m = rx.match(text, i)
-            if m:
-                spans.append(m.span())
-    return spans
+def _code_matches(pattern: re.Pattern, text: str):
+    """(match, bracket depth at its start) for each match of `pattern`
+    in text that starts outside strings and comments, left to right and
+    not overlapping. The regex finds the candidates, so text without one
+    is not walked."""
+    walk = code_positions(text)
+    at, depth, pos = -1, 0, 0  # the walk's last code index and depth
+    while (m := pattern.search(text, pos)) is not None:
+        while at < m.start():
+            at, depth = next(walk, (len(text), 0))
+        if at == m.start():
+            yield m, depth
+            pos = max(m.end(), m.start() + 1)
+        else:
+            pos = m.start() + 1
 
 
 def code_matches(pattern: re.Pattern, text: str):
     """Yield each match of the compiled `pattern` in text that starts
     outside strings and comments, left to right and not overlapping."""
-    walk = code_positions(text)
-    at, pos = -1, 0  # the walk's last code index; where to search next
-    while (m := pattern.search(text, pos)) is not None:
-        while at < m.start():
-            at = next(walk, (len(text), 0))[0]
-        if at == m.start():
-            yield m
-            pos = max(m.end(), m.start() + 1)
-        else:
-            pos = m.start() + 1
+    return (m for m, _ in _code_matches(pattern, text))
+
+
+def top_level_spans(text: str, pattern: str) -> list[tuple[int, int]]:
+    """(start, end) of each match of `pattern` (case-insensitive) that
+    starts outside brackets, strings and comments."""
+    return [
+        m.span()
+        for m, depth in _code_matches(re.compile(pattern, re.I), text)
+        if depth == 0
+    ]
 
 
 def _names_a_table(prefix: str) -> bool:
