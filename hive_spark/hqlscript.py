@@ -36,8 +36,10 @@ modes, partition specs, Hive type and clause spellings):
 or matches; a row's rewrite takes (spark, stmt), since time travel,
 macros, file paths and some folds read the session. Most rows have no
 trigger, because their own search finds nothing in a statement they do
-not apply to. Keyword rows and the call folds leave a match that starts
-inside a string or comment as written. run_script and EXECUTE record
+not apply to. The call folds (`rewrite_calls`) and the keyword rows built
+with ``_subs(..., code=True)`` leave a match that starts inside a string
+or comment as written; rows whose match starts at a quote (bare interval
+literals, LOCATION paths) keep plain re.sub. run_script and EXECUTE record
 (statement index, row name) in ``ScriptResult.rewrites`` for every row
 that changed a statement's text. Adding a rewrite means one `_REWRITES`
 row plus one case in tests/test_hqlscript.py's ``_REWRITE_CASES``.
@@ -3245,7 +3247,7 @@ def _code_sub(rx: re.Pattern, repl, stmt: str) -> str:
     """rx.sub(repl, stmt) for the matches that start outside strings
     and comments."""
     out, pos = [], 0
-    for m in code_matches(rx, stmt):
+    for m, _ in code_matches(rx, stmt):
         rep = m.expand(repl) if isinstance(repl, str) else repl(m)
         out += [stmt[pos : m.start()], rep]
         pos = m.end()

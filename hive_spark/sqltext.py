@@ -11,7 +11,7 @@ the helpers below are built on that walk:
 - `close_bracket` / `open_bracket`: the partner of a bracket;
 - `split_top`: split on top-level commas;
 - `top_level_spans`: pattern matches outside brackets;
-- `code_matches`: pattern matches that start in code;
+- `code_matches`: pattern matches that start in code, with their depth;
 - `rewrite_calls`: replace each ``name(args)`` call.
 
 Statement splitting (hqlscript.split_statements) follows the CLI's own
@@ -110,11 +110,11 @@ def split_top(text: str, pairs: str = "()") -> list[str]:
     return out
 
 
-def _code_matches(pattern: re.Pattern, text: str):
-    """(match, bracket depth at its start) for each match of `pattern`
-    in text that starts outside strings and comments, left to right and
-    not overlapping. The regex finds the candidates, so text without one
-    is not walked."""
+def code_matches(pattern: re.Pattern, text: str):
+    """Yield (match, bracket depth at its start) for each match of the
+    compiled `pattern` in text that starts outside strings and comments,
+    left to right and not overlapping. The regex finds the candidates,
+    so text without one is not walked."""
     walk = code_positions(text)
     at, depth, pos = -1, 0, 0  # the walk's last code index and depth
     while (m := pattern.search(text, pos)) is not None:
@@ -127,18 +127,12 @@ def _code_matches(pattern: re.Pattern, text: str):
             pos = m.start() + 1
 
 
-def code_matches(pattern: re.Pattern, text: str):
-    """Yield each match of the compiled `pattern` in text that starts
-    outside strings and comments, left to right and not overlapping."""
-    return (m for m, _ in _code_matches(pattern, text))
-
-
 def top_level_spans(text: str, pattern: str) -> list[tuple[int, int]]:
     """(start, end) of each match of `pattern` (case-insensitive) that
     starts outside brackets, strings and comments."""
     return [
         m.span()
-        for m, depth in _code_matches(re.compile(pattern, re.I), text)
+        for m, depth in code_matches(re.compile(pattern, re.I), text)
         if depth == 0
     ]
 
@@ -168,7 +162,7 @@ def rewrite_calls(stmt: str, name: str, build, guard_tables=False) -> str:
     name followed by a column list."""
     pat = re.compile(rf"(?i)\b{name}\s*\(")
     out, pos = [], 0
-    for m in code_matches(pat, stmt):
+    for m, _ in code_matches(pat, stmt):
         if m.start() < pos:
             continue  # inside a call already rewritten
         if guard_tables and _names_a_table(stmt[: m.start()]):

@@ -108,7 +108,7 @@ def _scanners():
         "split_types": lambda s: sqltext.split_top(s, "()<>"),
         "top_level_spans": sqltext.top_level_spans,
         "code_matches": lambda s, p: [
-            m.start() for m in sqltext.code_matches(re.compile(p), s)],
+            m.start() for m, _ in sqltext.code_matches(re.compile(p), s)],
         "fold_calls": lambda s: sqltext.rewrite_calls(s, "f", show),
         "rewrite_calls": lambda s: sqltext.rewrite_calls(
             s, "f", lambda a: show(a) if len(a) == 2 else None),
