@@ -2388,7 +2388,6 @@ _REWRITE_CASES = [
     ("likeall", "likeall", "",
      "SELECT likeall(v, 'a%', 'b%') FROM t",
      "SELECT ((v) LIKE 'a%' AND (v) LIKE 'b%') FROM t"),
-
 ]
 
 
