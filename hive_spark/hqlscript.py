@@ -4302,8 +4302,6 @@ def _ts_numeric_agg(spark, stmt: str, err):
     # rewrite every statistical aggregate spelled in the statement
     fixed = stmt
     for fn in _TS_NUMERIC_AGGS:
-        if not re.search(rf"(?i)\b{fn}\s*\(", fixed):
-            continue
         fixed = rewrite_calls(
             fixed, fn,
             lambda a, fn=fn: (
