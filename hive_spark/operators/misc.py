@@ -223,19 +223,15 @@ def _get_star_mv(spark: SparkSession, sf_dir: str):
     after source views are re-registered with the same definition (and
     correctly misses if they are re-registered over different data)."""
     from hive_spark.operators.tpcds import _register_star
-    from hive_spark.plans.star_mv import StarJoinMV
+    from hive_spark.plans import AggregateMV
 
     _register_star(spark, sf_dir)
     key = (id(spark), sf_dir)
     if key not in _STAR_MVS:
-        _STAR_MVS[key] = StarJoinMV(
+        _STAR_MVS[key] = AggregateMV(
             spark,
             f"q3_family_{os.path.basename(os.path.normpath(sf_dir))}",
             spark.table("store_sales"),
-            [
-                (spark.table("date_dim"), "ss_sold_date_sk", "d_date_sk"),
-                (spark.table("item"), "ss_item_sk", "i_item_sk"),
-            ],
             ["d_year", "d_moy", "i_brand", "i_brand_id", "i_manufact_id"],
             {
                 "sum_cents": (
@@ -244,6 +240,10 @@ def _get_star_mv(spark: SparkSession, sf_dir: str):
                 ),
                 "n_rows": ("count", "*"),
             },
+            dims=[
+                (spark.table("date_dim"), "ss_sold_date_sk", "d_date_sk"),
+                (spark.table("item"), "ss_item_sk", "i_item_sk"),
+            ],
         )
     return _STAR_MVS[key]
 

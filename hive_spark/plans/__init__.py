@@ -10,8 +10,10 @@ and useful at 100 TB:
   QueryResultsCache.java:83 — cross-query answer reuse)
 - materialized views with exact-plan rewrite (the exact-match subset of
   Hive's Calcite MV rewrite, ref: ql/.../optimizer/calcite/rules/views/
-  HiveMaterializedViewsRegistry.java; containment rewrite is documented
-  out of scope)
+  HiveMaterializedViewsRegistry.java)
+- aggregate materialized views with containment rewrite, over one table
+  or a fact joined with dimensions (`AggregateMV`, the aggregate rule of
+  HiveMaterializedViewRule.java in the same directory)
 - salted two-stage aggregation for skewed group keys (Hive
   SkewJoinOptimizer/GroupByOperator skew path, ref: ql/.../optimizer/
   SkewJoinOptimizer.java:78 — for *joins* AQE handles skew at runtime,
@@ -30,8 +32,10 @@ import os
 import re
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DecimalType
 
 from hive_spark.session import read_parquet
 
@@ -105,9 +109,8 @@ class MaterializedViews:
     `create(name, df)` materializes the defining query; `rewrite(df)`
     serves any query whose optimized plan equals a registered definition
     from the materialization instead of the base tables. This is the
-    exact-match subset of Hive's MV rewrite (HiveMaterializedViewsRegistry
-    + Calcite containment rules); containment/aggregate-rollup rewrites
-    are a non-goal (SURVEY §7.8).
+    exact-match subset of Hive's MV rewrite (HiveMaterializedViewsRegistry);
+    `AggregateMV` below answers aggregate rollups by containment.
     """
 
     def __init__(self, spark: SparkSession, root: str | None = None):
@@ -175,266 +178,454 @@ class MaterializedViews:
         return read_parquet(self.spark, path), True
 
 
+_MERGE = {"sum": "sum", "count": "sum", "min": "min", "max": "max"}
+_FN_MAP = {"Sum": "sum", "Count": "count", "Min": "min", "Max": "max",
+           "Average": "avg"}
+
+
+def _unalias(node):
+    # a temp view over the same relation adds SubqueryAlias/View
+    # wrappers; names don't change the relation
+    while node.getClass().getSimpleName() in ("SubqueryAlias", "View"):
+        node = node.child()
+    return node
+
+
+def _conjuncts(cond) -> list:
+    if cond.getClass().getSimpleName() == "And":
+        return _conjuncts(cond.left()) + _conjuncts(cond.right())
+    return [cond]
+
+
+def _gather(node, conjuncts: list, leaves: list) -> bool:
+    """Flatten a Filter/inner-Join tree into its conjuncts and relation
+    leaves; False on a shape the rewrite does not cover."""
+    node = _unalias(node)
+    cls = node.getClass().getSimpleName()
+    if cls == "Filter":
+        conjuncts.extend(_conjuncts(node.condition()))
+        return _gather(node.child(), conjuncts, leaves)
+    if cls == "Join":
+        if node.joinType().toString().lower() not in ("inner", "cross"):
+            return False
+        if node.condition().isDefined():
+            conjuncts.extend(_conjuncts(node.condition().get()))
+        return _gather(node.left(), conjuncts, leaves) and _gather(
+            node.right(), conjuncts, leaves
+        )
+    leaves.append(node)
+    return True
+
+
+def _uncast(e):
+    # implicit widening casts around join keys (int = bigint) don't
+    # change which attribute joins
+    while e.getClass().getSimpleName() in ("Cast", "AnsiCast"):
+        e = e.child()
+    return e
+
+
+def _ref_ids(expr) -> set:
+    out = set()
+    it = expr.references().iterator()
+    while it.hasNext():
+        out.add(it.next().exprId().id())
+    return out
+
+
+def _attr_seq(jvm, leaves: list):
+    """The leaves' output attributes, in order, as a Catalyst AttributeSeq."""
+    out = leaves[0].output()
+    for lf in leaves[1:]:
+        out = out.appendedAll(lf.output())
+    return getattr(
+        jvm.org.apache.spark.sql.catalyst.expressions, "package$AttributeSeq"
+    )(out)
+
+
+def _canonical(jvm, expr, attrs):
+    """``expr`` canonicalized with each attribute numbered by its position
+    in ``attrs``: equal for the same expression over matching relations,
+    whatever the plans' expression ids."""
+    return jvm.org.apache.spark.sql.catalyst.plans.QueryPlan.normalizeExpressions(
+        expr, attrs
+    )
+
+
+def _rebind(jvm, expr, attrs: dict):
+    """``expr`` with each attribute replaced by the one of that name in
+    ``attrs`` (a predicate moved onto another relation). The tree is
+    rebuilt node by node, never re-parsed, so literals stay as written."""
+    if expr.getClass().getSimpleName() == "AttributeReference":
+        return attrs[expr.name()]
+    kids = expr.children()
+    return expr.withNewChildren(
+        jvm.org.apache.spark.api.python.PythonUtils.toSeq(
+            [_rebind(jvm, kids.apply(i), attrs) for i in range(kids.size())]
+        )
+    )
+
+
+def _measure(fn: str, inp: str) -> Column:
+    """The aggregate ``fn`` over ``inp``, a SQL expression ("*": rows)."""
+    if (fn, inp) == ("count", "*"):
+        return F.count(F.lit(1))
+    return getattr(F, fn)(F.expr(inp))
+
+
+def _merge(fn: str, partial: str) -> Column:
+    """Re-aggregate a stored ``fn`` partial. A merged count stays 0, not
+    NULL, over no rows, as COUNT does."""
+    merged = getattr(F, _MERGE[fn])(partial)
+    return F.coalesce(merged, F.lit(0)) if fn == "count" else merged
+
+
 class AggregateMV:
-    """Aggregate materialized view with CONTAINMENT (rollup) rewrite —
-    the aggregate-matching subset of Hive's Calcite-based MV rewrite
-    (ref: ql/.../optimizer/calcite/rules/views/
-    HiveMaterializedViewRule.java — MaterializedViewAggregateRule family:
-    a query whose GROUP BY keys are a subset of the MV's keys and whose
-    aggregates are derivable from the MV's partials is answered from the
-    MV instead of the base table).
+    """Aggregate materialized view with CONTAINMENT (rollup) rewrite: the
+    aggregate rule of Hive's Calcite MV rewrite (ref: ql/.../optimizer/
+    calcite/rules/views/HiveMaterializedViewRule.java,
+    MaterializedViewAggregateRule with join derivability). A query whose
+    aggregate is derivable from the MV's partials is answered from the MV
+    instead of its base tables.
 
-    The MV stores one row per combination of ``group_keys`` with partial
-    aggregates declared in ``measures``: ``{out_name: (fn, col)}`` with
-    fn in {sum, count, min, max} (count col may be "*"). Derivability:
+    The MV is ``fact`` inner-joined with ``dims`` (``[(dim_df, fact_col,
+    dim_col)]``, none for a single-table rollup), grouped by
+    ``group_keys`` (post-join names), storing the partials ``measures``:
+    ``{out: (fn, input)}`` with fn in {sum, count, min, max} and input a
+    SQL expression over the definition ("*" with count: its rows).
 
-    - sum(c)   <- SUM of the MV's sum(c) partial
-    - count(*) <- SUM of the MV's count(*) partial
-    - count(c) <- SUM of the MV's count(c) partial
-    - min/max  <- MIN/MAX of the same MV partial (idempotent re-merge)
-    - avg(c)   <- SUM(sum(c)) / SUM(count(c)) — needs both partials
+    ``try_rewrite`` matches an incoming Aggregate plan structurally:
 
-    Filters are accepted only over group keys (they select whole MV rows,
-    so they commute with the rollup; a predicate over a non-key column
-    would need base-table rows the MV has already collapsed — rejected).
+    - relations compare with Spark's ``LogicalPlan.sameResult`` against
+      plan handles captured at materialization. That is the
+      re-resolution Hive performs per match (a temp view re-registered
+      with the same definition still matches) and its staleness gate (a
+      source re-registered over different files or with a different
+      definition misses instead of answering from stale MV rows);
+    - each MV relation matches a distinct query relation and every MV
+      join edge appears in the query (multiset containment): a dropped
+      MV join could drop fact rows, and a dimension joined twice has
+      filters that cannot be told apart from the MV occurrence's;
+    - residual relations (joins the MV lacks) are re-joined onto the
+      rolled-up rows, provided they attach through an MV group key;
+    - filter conjuncts are deterministic and sit on MV group keys (they
+      select whole MV rows, so they commute with the rollup) or on one
+      residual relation;
+    - aggregates derive from stored partials: sum <- sum, count <- sum
+      of counts, min/max re-merge, avg <- the sum/count pair of the same
+      input. Inputs compare as canonical Catalyst expressions, literals
+      included. DISTINCT aggregates and FILTER clauses are not derivable
+      from plain partials and miss.
 
-    At 100 TB this turns a full fact-table scan + shuffle into a scan of
-    an MV that is orders of magnitude smaller, and the rollup itself into
-    a near-free aggregation; the group-key filter prune reaches the MV's
-    parquet scan via ordinary pushdown.
+    The answer has the query's projection order, column names and types.
+    At 100 TB it replaces a fact scan and an N-way shuffle join with a
+    scan of an MV orders of magnitude smaller; residual dims re-join the
+    rolled-up rows, not the fact.
     """
-
-    _MERGE = {"sum": "sum", "count": "sum", "min": "min", "max": "max"}
 
     def __init__(
         self,
         spark: SparkSession,
         name: str,
-        base_df: DataFrame,
+        fact: DataFrame,
         group_keys: list[str],
         measures: dict[str, tuple[str, str]],
+        dims: list = (),
         root: str | None = None,
     ):
         from hive_spark.scratch import scratch_dir
 
-        root = root or scratch_dir("aggmv")
-        for out, (fn, col) in measures.items():
-            if fn not in self._MERGE:
+        for out, (fn, inp) in measures.items():
+            if fn not in _MERGE:
                 raise ValueError(f"{out}: non-derivable aggregate {fn!r}")
-            if col == "*" and fn != "count":
+            if inp == "*" and fn != "count":
                 raise ValueError(f"{out}: '*' only valid for count")
         self.spark = spark
         self.group_keys = list(group_keys)
         self.measures = dict(measures)
-        self.path = os.path.join(root, name)
-        aggs = []
-        for out, (fn, col) in measures.items():
-            expr = F.count(F.lit(1)) if (fn, col) == ("count", "*") else getattr(F, fn)(col)
-            aggs.append(expr.alias(out))
-        base_df.groupBy(*group_keys).agg(*aggs).write.mode("overwrite").parquet(self.path)
-        # analyzed plan handle of the base relation captured at
-        # materialization time — try_rewrite matches incoming aggregate
-        # children with sameResult (canonicalized-plan equality), which
-        # survives same-definition view re-registration (wrappers are
-        # canonicalized away) and gates on staleness (a base re-registered
-        # over different files/definition no longer matches)
-        self._base_plan = base_df._jdf.queryExecution().analyzed()
+        self.dims = list(dims)
+        self.path = os.path.join(root or scratch_dir("aggmv"), name)
+        self._definition = self._join(fact)
+        rolled = self._rollup(self._definition)
+        rolled.write.mode("overwrite").parquet(self.path)
+        jvm = spark._jvm
+        # analyzed plan handles of the definition's relations:
+        # ``sameResult`` against them is both the match test and the
+        # staleness gate; they denote exactly the data the MV was built from
+        self._leaves = [
+            _unalias(df._jdf.queryExecution().analyzed())
+            for df in [fact] + [d for d, _f, _c in self.dims]
+        ]
+        self._edges = {
+            frozenset({(("mv", 0), fc.split(".")[-1]),
+                       (("mv", j + 1), dc.split(".")[-1])})
+            for j, (_d, fc, dc) in enumerate(self.dims)
+        }
+        # each partial's input, canonical over the relations' outputs
+        attrs = _attr_seq(jvm, self._leaves)
+        agg = rolled._jdf.queryExecution().analyzed().aggregateExpressions()
+        named = {agg.apply(i).name(): agg.apply(i) for i in range(agg.size())}
+        self._partials = {
+            out: (fn, _canonical(
+                jvm, named[out].child().aggregateFunction().children().apply(0),
+                attrs))
+            for out, (fn, _inp) in self.measures.items()
+        }
 
-    def _find_partial(self, fn: str, col: str) -> str | None:
-        for out, spec in self.measures.items():
-            if spec == (fn, col):
+    def _join(self, fact: DataFrame) -> DataFrame:
+        for dim, fact_col, dim_col in self.dims:
+            fact = fact.join(dim, F.col(fact_col) == F.col(dim_col), "inner")
+        return fact
+
+    def _rollup(self, joined: DataFrame) -> DataFrame:
+        return joined.groupBy(*self.group_keys).agg(
+            *[_measure(fn, inp).alias(out)
+              for out, (fn, inp) in self.measures.items()]
+        )
+
+    def _partial(self, fn: str, inp) -> str | None:
+        for out, (pfn, pinp) in self._partials.items():
+            if pfn == fn and pinp.equals(inp):
                 return out
         return None
 
-    def can_answer(
-        self, group_by: list[str], aggs: dict[str, tuple[str, str]]
-    ) -> bool:
-        if not set(group_by) <= set(self.group_keys):
-            return False
-        for fn, col in aggs.values():
-            if fn == "avg":
-                if self._find_partial("sum", col) is None or self._find_partial(
-                    "count", col
-                ) is None:
-                    return False
-            elif fn not in self._MERGE or self._find_partial(fn, col) is None:
-                return False
-        return True
-
-    def refresh_incremental(self, appended_df: DataFrame) -> None:
-        """Incremental rebuild from APPENDED base rows only (Hive:
-        ql/.../optimizer/calcite/rules/views/
-        HiveAggregateInsertIncrementalRewritingRule.java — sound exactly
-        when the base is insert-only since the last refresh): aggregate
-        the delta into partials, union with the stored partials, and
-        merge with the partial-merge rules (sum/count partials re-SUM,
-        min/max re-MIN/MAX). Cost is sized to the DELTA plus the MV — at
-        100 TB that is the difference between touching yesterday's
-        insertions and rescanning the decade. avg needs no special case:
-        it is derived at ANSWER time from sum+count partials, which merge
-        exactly."""
-        aggs = []
-        for out, (fn, col) in self.measures.items():
-            expr = (
-                F.count(F.lit(1)) if (fn, col) == ("count", "*") else getattr(F, fn)(col)
-            )
-            aggs.append(expr.alias(out))
-        delta = appended_df.groupBy(*self.group_keys).agg(*aggs)
-        stored = read_parquet(self.spark, self.path)
-        merged_aggs = [
-            getattr(F, self._MERGE[fn])(out).alias(out)
-            for out, (fn, col) in self.measures.items()
-        ]
-        merged = (
-            stored.unionByName(delta).groupBy(*self.group_keys).agg(*merged_aggs)
+    def _frame(self, plan, conds=()) -> DataFrame:
+        """A DataFrame over the Catalyst ``plan`` filtered by ``conds``."""
+        jvm = self.spark._jvm
+        for c in conds:
+            plan = jvm.org.apache.spark.sql.catalyst.plans.logical.Filter(c, plan)
+        return DataFrame(
+            jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+                self.spark._jsparkSession, plan
+            ),
+            self.spark,
         )
-        staging = self.path + "._refresh"
-        merged.write.mode("overwrite").parquet(staging)
-        import shutil
 
-        shutil.rmtree(self.path)
-        shutil.move(staging, self.path)
-
-    _FN_MAP = {"Sum": "sum", "Count": "count", "Min": "min", "Max": "max",
-               "Average": "avg"}
+    def _match_leaves(self, leaves) -> list | None:
+        """Identity key per query leaf: ("mv", j) when it is the j-th MV
+        relation, else ("res", i). None when containment fails: an MV
+        relation missing from the query, or referenced more than once."""
+        keys: list = []
+        used: set = set()
+        for i, lf in enumerate(leaves):
+            hit = next(
+                (j for j, mv_lf in enumerate(self._leaves) if mv_lf.sameResult(lf)),
+                None,
+            )
+            if hit is None:
+                keys.append(("res", i))
+            elif hit in used:
+                return None
+            else:
+                used.add(hit)
+                keys.append(("mv", hit))
+        return keys if len(used) == len(self._leaves) else None
 
     def try_rewrite(self, df: DataFrame) -> DataFrame | None:
-        """TRANSPARENT containment rewrite: inspect an arbitrary incoming
-        DataFrame's analyzed plan and, when it is an Aggregate (optionally
-        over a group-key Filter) on this MV's exact base relation with
-        derivable aggregates, answer it from the MV — the py4j analog of
-        Hive's Calcite rule firing without the caller asking. Returns
-        None when the query is not contained (caller runs it as-is).
-
-        Matching is structural: the aggregate child's canonical plan must
-        equal the MV base's (expression ids stripped), group keys must be
-        attribute references within the MV's keys, aggregate inputs must
-        be base columns with stored partials (count(1)/count(*) -> the
-        row-count partial), and a Filter may reference group keys only."""
-        def _unalias(node):
-            # a temp view registered over the same relation adds
-            # SubqueryAlias/View wrappers; names don't change the relation
-            while node.getClass().getSimpleName() in ("SubqueryAlias", "View"):
-                node = node.child()
-            return node
-
+        """Answer ``df`` from the MV when its analyzed plan is contained
+        in the definition (see the class docstring); None when it is not,
+        and the caller runs ``df`` as written."""
+        jvm = self.spark._jvm
         jplan = df._jdf.queryExecution().analyzed()
         if jplan.getClass().getSimpleName() != "Aggregate":
             return None
-        child = _unalias(jplan.child())
-        where = None
-        if child.getClass().getSimpleName() == "Filter":
-            cond = child.condition()
-            it = cond.references().iterator()
-            refs = set()
-            while it.hasNext():
-                refs.add(it.next().name())
-            if not refs <= set(self.group_keys):
-                return None
-            # SQL-text plans qualify attributes in .sql() output
-            # (li_slim.l_linestatus, or backticked); the qualifier does
-            # not resolve against the MV relation — rebuild the predicate
-            # over bare attribute names. Only prefixes directly before a
-            # KNOWN reference name are stripped, so literals like 'a.b'
-            # survive unless they end in a reference name (accepted edge).
-            where = cond.sql()
-            for rname in sorted(refs, key=len, reverse=True):
-                esc = re.escape(rname)
-                where = re.sub(
-                    r"(?:(?:`[^`]+`|[A-Za-z_]\w*)\.)+(`" + esc + r"`|" + esc + r")\b",
-                    r"\1",
-                    where,
-                )
-            child = _unalias(child.child())
-        if not self._base_plan.sameResult(child):
+        conjuncts: list = []
+        leaves: list = []
+        if not _gather(jplan.child(), conjuncts, leaves):
             return None
+        keys = self._match_leaves(leaves)
+        if keys is None:
+            return None
+        attr_of: dict[int, tuple] = {}  # exprId -> (leaf key, name)
+        for lf, key in zip(leaves, keys):
+            out = lf.output()
+            for i in range(out.size()):
+                a = out.apply(i)
+                attr_of[a.exprId().id()] = (key, a.name())
 
-        def _col(sql: str) -> str:
-            # SQL-text plans qualify attributes (`li_slim`.`qty`); the MV
-            # matches on the bare column name
-            return sql.replace("`", "").split(".")[-1]
+        # conjuncts: equi-join edges, filters on MV rows, residual filters
+        edges: set = set()
+        mv_filters: list = []
+        residual_filters: dict[tuple, list] = {}
+        for c in conjuncts:
+            if c.getClass().getSimpleName() == "EqualTo":
+                l, r = _uncast(c.left()), _uncast(c.right())
+                if (
+                    l.getClass().getSimpleName() == "AttributeReference"
+                    and r.getClass().getSimpleName() == "AttributeReference"
+                ):
+                    la = attr_of.get(l.exprId().id())
+                    ra = attr_of.get(r.exprId().id())
+                    if la and ra and la[0] != ra[0]:
+                        edges.add(frozenset({la, ra}))
+                        continue
+            ids = _ref_ids(c)
+            if not c.deterministic() or not ids <= attr_of.keys():
+                return None
+            owners = {attr_of[i][0] for i in ids}
+            if all(k[0] == "mv" for k in owners):
+                # must commute with the rollup: group keys only
+                if not {attr_of[i][1] for i in ids} <= set(self.group_keys):
+                    return None
+                mv_filters.append(c)
+            elif len(owners) == 1:
+                residual_filters.setdefault(owners.pop(), []).append(c)
+            else:
+                return None  # a filter spanning MV and residual relations
+        if not self._edges <= edges:
+            return None
+        # each residual relation attaches through an MV group key
+        residual_edges: dict[tuple, list] = {}
+        for e in edges - self._edges:
+            (m_key, m_col), (r_key, r_col) = sorted(e)  # "mv" < "res"
+            if m_key[0] != "mv" or r_key[0] != "res" or m_col not in self.group_keys:
+                return None  # an undeclared MV join or a residual chain
+            residual_edges.setdefault(r_key, []).append((m_col, r_col))
+        if set(residual_edges) != {k for k in keys if k[0] == "res"}:
+            return None
 
         g = jplan.groupingExpressions()
         group_by = []
         for i in range(g.size()):
-            expr = g.apply(i)
-            if expr.getClass().getSimpleName() != "AttributeReference":
+            e = g.apply(i)
+            if e.getClass().getSimpleName() != "AttributeReference":
                 return None
-            group_by.append(expr.name())
+            key, name = attr_of.get(e.exprId().id(), (None, None))
+            if key is None or (key[0] == "mv" and name not in self.group_keys):
+                return None
+            group_by.append(name)
 
-        aggs: dict[str, tuple[str, str]] = {}
-        out_order: list[str] = []  # the query's projection order, verbatim
+        # aggregate inputs are canonical over the MV relations' outputs in
+        # definition order, then the residual ones (which match nothing)
+        attrs = _attr_seq(
+            jvm,
+            [leaves[keys.index(("mv", j))] for j in range(len(self._leaves))]
+            + [lf for lf, k in zip(leaves, keys) if k[0] == "res"],
+        )
+        outputs: list = []  # per output column: ("key", name) or (fn, partials...)
         a = jplan.aggregateExpressions()
         for i in range(a.size()):
             ne = a.apply(i)
-            cls = ne.getClass().getSimpleName()
-            if cls == "AttributeReference":
-                out_order.append(ne.name())
-                continue  # a group key echoed in the select list
-            if cls != "Alias":
+            inner = ne.child() if ne.getClass().getSimpleName() == "Alias" else ne
+            cls = inner.getClass().getSimpleName()
+            if cls == "AttributeReference":  # a group key, maybe renamed
+                name = attr_of.get(inner.exprId().id(), (None, None))[1]
+                if name not in group_by:
+                    return None
+                outputs.append(("key", name))
+                continue
+            if (
+                cls != "AggregateExpression"
+                or inner.isDistinct()
+                or inner.filter().isDefined()
+            ):
+                # stored partials are plain: SUM(DISTINCT x) and FILTER
+                # (WHERE ...) are not derivable from them
                 return None
-            agg_expr = ne.child()
-            if agg_expr.getClass().getSimpleName() != "AggregateExpression":
+            fn = _FN_MAP.get(inner.aggregateFunction().getClass().getSimpleName())
+            kids = inner.aggregateFunction().children()
+            if fn is None or kids.size() != 1:
                 return None
-            if agg_expr.isDistinct() or agg_expr.filter().isDefined():
-                # stored partials are plain: SUM(DISTINCT x) / FILTER
-                # clauses are not derivable from them — force a miss
+            inp = _canonical(jvm, kids.apply(0), attrs)
+            parts = (
+                [self._partial("sum", inp), self._partial("count", inp)]
+                if fn == "avg" else [self._partial(fn, inp)]
+            )
+            if None in parts:
                 return None
-            fn_obj = agg_expr.aggregateFunction()
-            fn = self._FN_MAP.get(fn_obj.getClass().getSimpleName())
-            if fn is None:
-                return None
-            kids = fn_obj.children()
-            if kids.size() != 1:
-                return None
-            col = _col(kids.apply(0).sql())
-            if fn == "count" and col == "1":
-                col = "*"
-            aggs[ne.name()] = (fn, col)
-            out_order.append(ne.name())
+            outputs.append((fn, *parts))
 
-        if not self.can_answer(group_by, aggs):
-            return None
-        answered = self.answer(
-            group_by, aggs, where=F.expr(where) if where is not None else None
-        )
-        # answer() emits group keys first then aggregates; re-project in
-        # the ORIGINAL plan's output order so the rewrite is schema-
-        # transparent (positional consumers: INSERT...SELECT, tuple cmp).
-        return answered.select(*out_order)
+        # ---- the answer: MV rows, filtered, re-joined, rolled up --------
+        out = read_parquet(self.spark, self.path)
+        if mv_filters:
+            plan = out._jdf.queryExecution().analyzed()
+            cols = plan.output()
+            by_name = {cols.apply(i).name(): cols.apply(i) for i in range(cols.size())}
+            out = self._frame(plan, [_rebind(jvm, c, by_name) for c in mv_filters])
+        for key, lf in zip(keys, leaves):
+            if key[0] == "res":
+                dim = self._frame(lf, residual_filters.get(key, []))
+                cond = None
+                for mv_col, dim_col in residual_edges[key]:
+                    eq = out[mv_col] == dim[dim_col]
+                    cond = eq if cond is None else (cond & eq)
+                out = out.join(F.broadcast(dim), cond, "inner")
+        merged, select = [], []
+        for i, (spec, field) in enumerate(zip(outputs, df.schema.fields)):
+            if spec[0] == "key":
+                col = F.col(spec[1])
+            else:
+                merged.append(self._derive(spec, field.dataType, out).alias(f"_a{i}"))
+                col = F.col(f"_a{i}")
+            select.append(col.cast(field.dataType).alias(field.name))
+        grouped = out.groupBy(*group_by)
+        return (grouped.agg(*merged) if merged else grouped.count()).select(*select)
+
+    @staticmethod
+    def _derive(spec: tuple, out_type, mv: DataFrame) -> Column:
+        fn, *parts = spec
+        if fn != "avg":
+            return _merge(fn, parts[0])
+        # as Spark's Average finishes its (sum, count) buffer; the stored
+        # sum partial has the buffer's type
+        total, n = F.sum(parts[0]), F.sum(parts[1])
+        if isinstance(out_type, DecimalType):
+            return F.try_divide(
+                total.cast(mv.schema[parts[0]].dataType), n.cast("decimal(20,0)")
+            )
+        return F.try_divide(total.cast("double"), n.cast("double"))
 
     def answer(
         self,
         group_by: list[str],
         aggs: dict[str, tuple[str, str]],
-        where: F.Column | None = None,
+        where: Column | None = None,
     ) -> DataFrame:
-        """Answer ``base.where(...).groupBy(group_by).agg(aggs)`` from the
-        MV. ``aggs`` is stated against the BASE table ({out: (fn, col)});
-        ``where`` must reference group keys only (validated)."""
-        if not self.can_answer(group_by, aggs):
-            raise ValueError("query is not contained in this MV")
-        mv = read_parquet(self.spark, self.path)
+        """Answer ``definition.where(where).groupBy(group_by).agg(aggs)``
+        from the MV, through ``try_rewrite``. ``aggs`` is ``{out: (fn,
+        input)}`` over the definition, fn in {sum, count, min, max, avg};
+        ValueError when the MV cannot answer it."""
+        q = self._definition
         if where is not None:
-            refs = {
-                t for t in re.findall(r"'?([A-Za-z_][A-Za-z0-9_]*)'?", str(where._jc))
-            }
-            bad = refs & ({f.name for f in mv.schema.fields} - set(self.group_keys))
-            if bad:
-                raise ValueError(f"filter touches non-group-key columns: {bad}")
-            mv = mv.filter(where)
-        merged = []
-        for out, (fn, col) in aggs.items():
-            if fn == "avg":
-                s = self._find_partial("sum", col)
-                c = self._find_partial("count", col)
-                merged.append(
-                    (F.sum(s).cast("double") / F.sum(c)).alias(out)
-                )
-            else:
-                partial = self._find_partial(fn, col)
-                merged.append(getattr(F, self._MERGE[fn])(partial).alias(out))
-        return mv.groupBy(*group_by).agg(*merged)
+            try:
+                q = q.filter(where)
+            except AnalysisException as e:
+                raise ValueError("filter touches non-group-key columns") from e
+        try:
+            q = q.groupBy(*group_by).agg(
+                *[_measure(fn, inp).alias(out) for out, (fn, inp) in aggs.items()]
+            )
+        except AnalysisException as e:
+            raise ValueError("query is not contained in this MV") from e
+        hit = self.try_rewrite(q)
+        if hit is None:
+            raise ValueError("query is not contained in this MV")
+        return hit
+
+    def refresh_incremental(self, appended: DataFrame) -> None:
+        """Incremental rebuild from APPENDED fact rows only (Hive:
+        ql/.../optimizer/calcite/rules/views/
+        HiveAggregateInsertIncrementalRewritingRule.java, sound exactly
+        when the sources are insert-only since the last refresh): roll the
+        delta up through the same definition (joined with the dims), union
+        it with the stored partials and merge them (sum/count partials
+        re-SUM, min/max re-MIN/MAX), keeping each partial's type. Cost is
+        sized to the delta plus the MV: at 100 TB, yesterday's insertions
+        instead of the decade. avg needs nothing: it is derived at answer
+        time from sum and count partials, which merge exactly."""
+        stored = read_parquet(self.spark, self.path)
+        merged = (
+            stored.unionByName(self._rollup(self._join(appended)))
+            .groupBy(*self.group_keys)
+            .agg(*[
+                _merge(fn, out).cast(stored.schema[out].dataType).alias(out)
+                for out, (fn, _inp) in self.measures.items()
+            ])
+        )
+        staging = self.path + "._refresh"
+        merged.write.mode("overwrite").parquet(staging)
+        shutil.rmtree(self.path)
+        shutil.move(staging, self.path)
 
 
 def salted_agg_count(

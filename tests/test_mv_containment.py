@@ -60,9 +60,7 @@ def test_avg_derived_from_sum_and_count(mv):
     got = _rows(m.answer(["l_linestatus"], {"avg_qty": ("avg", "qty")}),
                 "l_linestatus")
     want = _rows(
-        base.groupBy("l_linestatus").agg(
-            (F.sum("qty").cast("double") / F.count("qty")).alias("avg_qty")
-        ),
+        base.groupBy("l_linestatus").agg(F.avg("qty").alias("avg_qty")),
         "l_linestatus",
     )
     assert got == want
@@ -85,16 +83,18 @@ def test_group_key_filter_commutes(mv):
 
 def test_rejects_uncontained_queries(mv):
     _, m = mv
-    # group key outside the MV's keys
-    assert not m.can_answer(["l_shipmode"], {"n": ("count", "*")})
-    # aggregate with no stored partial
-    assert not m.can_answer(["l_returnflag"], {"s": ("sum", "price")})
-    # avg needs BOTH sum and count partials; price has min/max only
-    assert not m.can_answer(["l_returnflag"], {"a": ("avg", "price")})
-    # non-derivable aggregate function
-    assert not m.can_answer(["l_returnflag"], {"d": ("count_distinct", "qty")})
-    with pytest.raises(ValueError, match="not contained"):
-        m.answer(["l_shipmode"], {"n": ("count", "*")})
+    for group_by, aggs in [
+        # group key outside the MV's keys
+        (["l_shipmode"], {"n": ("count", "*")}),
+        # aggregate with no stored partial
+        (["l_returnflag"], {"s": ("sum", "price")}),
+        # avg needs BOTH sum and count partials; price has min/max only
+        (["l_returnflag"], {"a": ("avg", "price")}),
+        # non-derivable aggregate function
+        (["l_returnflag"], {"d": ("count_distinct", "qty")}),
+    ]:
+        with pytest.raises(ValueError, match="not contained"):
+            m.answer(group_by, aggs)
 
 
 def test_rejects_filter_on_collapsed_column(mv):
@@ -143,10 +143,7 @@ def test_try_rewrite_filtered_and_avg(spark, mv):
     want = (
         base.filter(F.col("l_linestatus") == "O")
         .groupBy("l_returnflag")
-        .agg(
-            (F.sum("qty").cast("double") / F.count("qty")).alias("aq"),
-            F.max("price").alias("mx"),
-        )
+        .agg(F.avg("qty").alias("aq"), F.max("price").alias("mx"))
     )
     assert _rows(rewritten.select("l_returnflag", "aq", "mx"), "l_returnflag") == _rows(
         want, "l_returnflag"
@@ -219,6 +216,88 @@ def test_incremental_refresh_equals_full_rebuild(spark, sf_dir, tmp_path):
     assert _rows(inc.answer(["l_returnflag"], q), "l_returnflag") == want
 
 
+@pytest.fixture(scope="module")
+def li_slim(spark, sf_dir, tmp_path_factory):
+    """lineitem's flag, status and quantity as the temp view li_slim, and
+    an MV over it grouped on (flag, status) with a CASE-style measure."""
+    base = views(spark, sf_dir)["lineitem"].select(
+        "l_returnflag",
+        "l_linestatus",
+        F.col("l_quantity").cast("decimal(18,2)").alias("qty"),
+    )
+    base.createOrReplaceTempView("li_slim")
+    return base, AggregateMV(
+        spark,
+        "t_li_slim",
+        base,
+        ["l_returnflag", "l_linestatus"],
+        {"s": ("sum", "qty"), "c": ("count", "qty"), "n": ("count", "*"),
+         "s_f": ("sum", "IF(l_linestatus = 'F', qty, 0)")},
+        root=str(tmp_path_factory.mktemp("aggmv_slim")),
+    )
+
+
+def test_measure_literals_keep_their_case(spark, li_slim):
+    """A measure stored over 'F' must not answer the same text over 'f'
+    (the query sums 0 for every flag)."""
+    _, m = li_slim
+    sql = ("SELECT l_returnflag, sum(IF(l_linestatus = '{}', qty, 0)) AS s "
+           "FROM li_slim GROUP BY l_returnflag")
+    assert m.try_rewrite(spark.sql(sql.format("f"))) is None
+    query = spark.sql(sql.format("F"))
+    hit = m.try_rewrite(query)
+    assert hit is not None
+    assert _rows(hit, "l_returnflag") == _rows(query, "l_returnflag")
+
+
+def test_filter_literal_kept_verbatim(spark, li_slim):
+    """A group-key filter moves onto the MV rows as written: the status
+    'x.F' is not 'F', and no row has it."""
+    _, m = li_slim
+    query = spark.sql("SELECT l_returnflag, count(*) AS n FROM li_slim "
+                      "WHERE l_linestatus = 'x.F' GROUP BY l_returnflag")
+    hit = m.try_rewrite(query)
+    assert hit is not None
+    assert _rows(hit, "l_returnflag") == _rows(query, "l_returnflag") == []
+
+
+def test_rewrite_keeps_query_schema(spark, li_slim, tmp_path):
+    """The answer has the query's names and types (decimal sum and avg,
+    non-NULL count) and rows, through try_rewrite and Engine.sql."""
+    from hive_spark.engine import Engine
+
+    base, m = li_slim
+    sql = ("SELECT l_returnflag, sum(qty) AS s, avg(qty) AS a, "
+           "count(*) AS n FROM li_slim GROUP BY l_returnflag")
+    query = spark.sql(sql)
+    engine = Engine(spark, cache_root=str(tmp_path / "qc"))
+    engine.create_aggregate_mv(
+        "eng_schema", base, ["l_returnflag", "l_linestatus"],
+        {"s": ("sum", "qty"), "c": ("count", "qty"), "n": ("count", "*")},
+    )
+    for rewritten in (m.try_rewrite(query), engine.sql(sql)):
+        assert rewritten.schema == query.schema
+        assert _rows(rewritten, "l_returnflag") == _rows(query, "l_returnflag")
+    assert engine.stats["mv_hits"] == 1
+
+
+def test_rewrite_without_aggregates_or_rows(spark, li_slim):
+    """GROUP BY with no aggregate, and a global COUNT over no rows (0,
+    not NULL), answer from the MV with the query's rows."""
+    _, m = li_slim
+    for sql in (
+        "SELECT l_returnflag FROM li_slim GROUP BY l_returnflag",
+        "SELECT count(*) AS n FROM li_slim WHERE l_linestatus = 'zz'",
+    ):
+        query = spark.sql(sql)
+        hit = m.try_rewrite(query)
+        assert hit is not None
+        assert hit.schema == query.schema
+        assert sorted(map(tuple, hit.collect())) == sorted(
+            map(tuple, query.collect())
+        )
+
+
 # ---------------------------------------------------------------------------
 # Star-join MV (r5): join-containment rewrite
 # (HiveMaterializedViewRule join derivability + residual dimensions)
@@ -227,20 +306,18 @@ def test_incremental_refresh_equals_full_rebuild(spark, sf_dir, tmp_path):
 @pytest.fixture(scope="module")
 def star_mv(spark, sf_dir, tmp_path_factory):
     from hive_spark.operators.tpcds import _register_star
-    from hive_spark.plans.star_mv import StarJoinMV
-
     _register_star(spark, sf_dir)
-    mv = StarJoinMV(
+    mv = AggregateMV(
         spark,
         "t_star",
         spark.table("store_sales"),
-        [(spark.table("date_dim"), "ss_sold_date_sk", "d_date_sk"),
-         (spark.table("item"), "ss_item_sk", "i_item_sk")],
         ["d_year", "d_moy", "i_brand", "i_brand_id", "i_manufact_id",
          "ss_store_sk"],
         {"sum_cents": ("sum",
                        "CAST(round(ss_ext_sales_price * 100) AS BIGINT)"),
          "n": ("count", "*")},
+        dims=[(spark.table("date_dim"), "ss_sold_date_sk", "d_date_sk"),
+              (spark.table("item"), "ss_item_sk", "i_item_sk")],
         root=str(tmp_path_factory.mktemp("starmv")),
     )
     return mv
