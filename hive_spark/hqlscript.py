@@ -3270,10 +3270,6 @@ def _subs(*steps, code=False):
     return rewrite
 
 
-# an operand of IS [NOT] DISTINCT FROM
-_DISTINCT_OPND = r"((?:[\w.`']|\((?:[^()]|\([^()]*\))*\))+)"
-
-
 def _create_view_autoalias(spark, stmt: str) -> str:
     """CREATE VIEW with unaliased expression items: name them _c<pos>
     EAGERLY (SemanticAnalyzer's autogenerated aliases) — Spark would
@@ -3507,15 +3503,6 @@ _REWRITES = (
     ("lateral_table_values", None, _text(_rewrite_lateral_table_values)),
     ("alt_intervals", None, _text(_rewrite_alt_intervals)),
     ("hypothetical_set", None, _text(_rewrite_hypothetical_set)),
-    # Hive/ANSI IS [NOT] DISTINCT FROM (HiveParser precedenceSimilar) ->
-    # Spark's null-safe operator. The operand pattern backtracks over
-    # every word of a statement; the trigger skips that cheaply.
-    ("is_distinct_from",
-     re.compile(r"(?i)\bIS\s+(NOT\s+)?DISTINCT\s+FROM\b").search,
-     _subs((rf"(?i){_DISTINCT_OPND}\s+IS\s+NOT\s+DISTINCT\s+FROM\s+"
-            rf"{_DISTINCT_OPND}", r"(\1 <=> \2)"),
-           (rf"(?i){_DISTINCT_OPND}\s+IS\s+DISTINCT\s+FROM\s+"
-            rf"{_DISTINCT_OPND}", r"(NOT (\1 <=> \2))"))),
     ("uniquejoin", None, _text(_rewrite_uniquejoin)),
     ("uniontype", None, _text(_rewrite_uniontype)),
     ("union_fns", None, _text(_rewrite_union_fns)),

@@ -2098,12 +2098,6 @@ _REWRITE_CASES = [
      "SELECT rank(3) WITHIN GROUP (ORDER BY k) FROM t",
      "SELECT CAST(COUNT(CASE WHEN k < (3) THEN 1 END) + 1 AS BIGINT) "
      "FROM t"),
-    ("is_not_distinct_from", "is_distinct_from", "",
-     "SELECT a IS NOT DISTINCT FROM b FROM t",
-     "SELECT (a <=> b) FROM t"),
-    ("is_distinct_from", "is_distinct_from", "",
-     "SELECT a IS DISTINCT FROM b FROM t",
-     "SELECT (NOT (a <=> b)) FROM t"),
     ("uniquejoin", "uniquejoin", "",
      "FROM UNIQUEJOIN PRESERVE t1 a (a.k), t2 b (b.k) SELECT a.k, b.k",
      "SELECT a.k, b.k\nFROM (SELECT a.*, (a.k) AS _uj_k0, TRUE AS _uj_p "
@@ -2479,6 +2473,28 @@ def test_rewrites_leave_strings_and_comments_alone(spark, stmt, value):
     out = run_script(spark, stmt + ";")
     assert [tuple(r) for r in out.results[0].collect()] == [(value,)]
     assert out.rewrites == []
+
+
+def test_is_distinct_from_is_spark_native(spark):
+    """IS [NOT] DISTINCT FROM reaches Spark as written, which parses it
+    with its own precedence and leaves string literals alone."""
+    cases = [
+        ("SELECT 1 + 1 IS DISTINCT FROM 2 AS e", [(False,)]),
+        ("SELECT 'x IS DISTINCT FROM y' AS s", [("x IS DISTINCT FROM y",)]),
+        ("SELECT NULL IS DISTINCT FROM NULL AS a,"
+         " NULL IS NOT DISTINCT FROM NULL AS b, 1 IS DISTINCT FROM NULL AS c",
+         [(False, True, True)]),
+        ("SELECT a IS DISTINCT FROM b AS d"
+         " FROM VALUES (1, 1), (1, NULL), (NULL, NULL) AS t(a, b)",
+         [(False,), (False,), (True,)]),
+        ("SELECT CASE WHEN a IS NOT DISTINCT FROM b THEN 'same'"
+         " ELSE 'diff' END AS c FROM VALUES (1, 1), (2, NULL) AS t(a, b)",
+         [("diff",), ("same",)]),
+    ]
+    for stmt, expected in cases:
+        out = run_script(spark, stmt + ";")
+        assert sorted(tuple(r) for r in out.results[0].collect()) == expected
+        assert out.rewrites == []
 
 
 @pytest.mark.parametrize("stmt,expected", [
