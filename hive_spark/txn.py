@@ -8,16 +8,13 @@ This module supplies the same two guarantees for this engine's
 copy-on-write tables:
 
 - **Exclusive write locks** (`write_lock`): lock ROWS in a central lock
-  database by default (`hive_spark/lockdb.py` — DbTxnManager's actual
+  database (`hive_spark/lockdb.py` — DbTxnManager's actual
   mechanism: acquire/heartbeat/timeout rows, cross-PROCESS, SHOW LOCKS
   reads the table; see that module for why SQLite plays the
   metastore-RDBMS role in this environment). Every DML rewrite
   (`dml.update_where` / `delete_where` / `merge_into`) takes it for the
   full materialize+publish window, so two concurrent writers SERIALIZE
   instead of last-write-winning at the file level.
-  `HIVE_SPARK_LOCK_BACKEND=file` selects the legacy O_EXCL lock-file
-  fallback (single shared filesystem; stale holders reclaimed by pid
-  probe).
 
 - **Multi-statement transactions** (`Transaction`): over
   `snapshots.py`-layout versioned tables. BEGIN pins each table's
@@ -38,7 +35,6 @@ bracketing controls the Transaction lifecycle.
 from __future__ import annotations
 
 import os
-import time
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -50,157 +46,36 @@ class LockTimeout(RuntimeError):
     """Another writer holds the table lock past the timeout."""
 
 
-def _pid_alive(pid: int) -> bool:
-    try:
-        os.kill(pid, 0)  # signal 0: existence probe
-        return True
-    except PermissionError:
-        # EPERM: the pid exists but belongs to another user — alive.
-        return True
-    except OSError:
-        return False
-
-
-def _read_lock(lock_path: str) -> tuple[str, int] | None:
-    """Return (raw content, holder pid), or None if unreadable/gone."""
-    try:
-        with open(lock_path) as f:
-            content = f.read()
-        return content, int(content.split(":", 1)[0])
-    except (OSError, ValueError):
-        return None
-
-
-def _holder_alive(lock_path: str) -> bool:
-    got = _read_lock(lock_path)
-    return got is not None and _pid_alive(got[1])
-
-
-def _lock_file(table_path: str) -> str:
-    return table_path.rstrip("/") + "._lock"
-
-
-def _backend() -> str:
-    """'db' (default): lock rows in the central lock database —
-    DbTxnManager's real mechanism (see hive_spark/lockdb.py). 'file':
-    the O_EXCL lock-file fallback for environments with no writable
-    shared database path."""
-    return os.environ.get("HIVE_SPARK_LOCK_BACKEND", "db").lower()
-
-
 @contextmanager
 def write_lock(table_path: str, timeout: float = 30.0, poll: float = 0.05):
     """Exclusive writer lock for one table path (DbTxnManager analog).
-    Blocks up to `timeout` seconds, reclaims stale locks, raises
-    LockTimeout otherwise."""
-    if _backend() == "db":
-        from hive_spark import lockdb
+    Blocks up to `timeout` seconds, expires dead or silent holders,
+    raises LockTimeout otherwise."""
+    from hive_spark import lockdb
 
-        with lockdb.lock(table_path, timeout=timeout, poll=poll):
-            yield
-        return
-    lock = _lock_file(table_path)
-    deadline = time.monotonic() + timeout
-    while True:
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.write(fd, f"{os.getpid()}:{time.time()}".encode())
-            os.close(fd)
-            break
-        except FileExistsError:
-            got = _read_lock(lock)
-            if got is None or not _pid_alive(got[1]):
-                # Holder died without releasing — reclaim (Hive's
-                # heartbeat-expiry equivalent). Atomic: rename the stale
-                # file to a unique name first, then verify we renamed the
-                # SAME stale lock we observed (not one a new writer just
-                # re-created in the window), so two waiters can't both
-                # proceed and a live lock is never silently dropped.
-                grave = f"{lock}.reclaim.{os.getpid()}.{time.monotonic_ns()}"
-                try:
-                    os.rename(lock, grave)
-                except OSError:
-                    continue  # another waiter reclaimed, or holder released
-                observed = got[0] if got is not None else None
-                buried = _read_lock(grave)
-                if buried is None or buried[0] == observed:
-                    try:
-                        os.remove(grave)
-                    except FileNotFoundError:
-                        pass
-                    continue  # reclaimed — retry acquisition
-                # We renamed a DIFFERENT (fresh) lock: restore it if the
-                # slot is still empty, else the newest writer keeps it.
-                try:
-                    os.link(grave, lock)
-                except OSError:
-                    pass
-                try:
-                    os.remove(grave)
-                except FileNotFoundError:
-                    pass
-                # fall through to timeout check below
-            if time.monotonic() >= deadline:
-                raise LockTimeout(
-                    f"writer lock on {table_path} held by another process "
-                    f"(waited {timeout}s)"
-                ) from None
-            time.sleep(poll)
-    try:
+    with lockdb.lock(table_path, timeout=timeout, poll=poll):
         yield
-    finally:
-        try:
-            os.remove(lock)
-        except FileNotFoundError:
-            pass
 
 
 def list_locks(tables: dict[str, str]) -> list[dict]:
     """SHOW LOCKS analog (ref: ql/.../ddl/process/show/locks/ — Hive
     lists metastore lock rows): one row per held lock among `tables`
-    (name -> path), with holder pid and liveness. Reads the central
-    lock DATABASE first (the DbTxnManager mechanism), then any legacy
-    lock files."""
-    out = []
-    seen = set()
-    if _backend() == "db":
-        from hive_spark import lockdb
+    (name -> path), with holder pid and liveness, read from the central
+    lock database."""
+    from hive_spark import lockdb
 
-        by_path = {path: name for name, path in tables.items()}
-        for row in lockdb.DbLockManager().locks():
-            name = by_path.get(row["path"])
-            if name is None:
-                continue
-            seen.add(name)
-            out.append(
-                {
-                    "table": name,
-                    "path": row["path"],
-                    "holder_pid": row["holder_pid"],
-                    "holder_alive": row["holder_alive"],
-                    "acquired_at": row["acquired_at"],
-                }
-            )
-    for name, path in sorted(tables.items()):
-        if name in seen:
-            continue
-        lock = _lock_file(path)
-        if not os.path.exists(lock):
-            continue
-        try:
-            with open(lock) as f:
-                pid_s, ts_s = f.read().split(":", 1)
-            out.append(
-                {
-                    "table": name,
-                    "path": path,
-                    "holder_pid": int(pid_s),
-                    "holder_alive": _holder_alive(lock),
-                    "acquired_at": float(ts_s),
-                }
-            )
-        except (OSError, ValueError):
-            continue
+    by_path = {path: name for name, path in tables.items()}
+    out = [
+        {
+            "table": by_path[row["path"]],
+            "path": row["path"],
+            "holder_pid": row["holder_pid"],
+            "holder_alive": row["holder_alive"],
+            "acquired_at": row["acquired_at"],
+        }
+        for row in lockdb.DbLockManager().locks()
+        if row["path"] in by_path
+    ]
     out.sort(key=lambda r: r["table"])
     return out
 

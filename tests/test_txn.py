@@ -21,19 +21,6 @@ def test_write_lock_excludes_second_writer(tmp_path):
         pass
 
 
-def test_stale_lock_reclaimed(tmp_path, monkeypatch):
-    """A lock whose holder pid is dead must be reclaimed (heartbeat-expiry
-    analog), not block forever. (File backend — the DB backend's expiry
-    is covered in test_lockdb_*.)"""
-    monkeypatch.setenv("HIVE_SPARK_LOCK_BACKEND", "file")
-    path = str(tmp_path / "t")
-    os.makedirs(path)
-    with open(path + "._lock", "w") as f:
-        f.write("999999999:0")  # no such pid
-    with write_lock(path, timeout=1.0):
-        pass
-
-
 def test_dml_rewrite_serializes_under_lock(spark, tmp_path):
     """update_where must wait for (or fail on) a held table lock instead
     of interleaving with another writer's rewrite."""
@@ -181,54 +168,16 @@ def test_begin_partial_failure_releases_acquired_locks(spark, tmp_path):
 
 def test_pid_alive_eperm_means_alive(monkeypatch):
     """EPERM from kill(pid, 0) = pid exists under another user — the
-    lock must be treated as held, not reclaimed."""
-    from hive_spark.txn import _pid_alive
+    lock must be treated as held, not expired."""
+    import socket
+
+    from hive_spark.lockdb import _pid_alive_local
 
     def eperm(pid, sig):
         raise PermissionError("not permitted")
 
     monkeypatch.setattr(os, "kill", eperm)
-    assert _pid_alive(12345)
-
-
-def test_reclaim_restores_fresh_lock(tmp_path, monkeypatch):
-    """If the reclaim rename grabs a DIFFERENT (fresh, live) lock than
-    the stale one observed, the fresh lock is restored, not dropped.
-    (File backend internals.)"""
-    monkeypatch.setenv("HIVE_SPARK_LOCK_BACKEND", "file")
-    import hive_spark.txn as txn_mod
-
-    path = str(tmp_path / "t")
-    os.makedirs(path)
-    lock = path + "._lock"
-    stale = "999999999:0"
-    fresh = f"{os.getpid()}:1.0"
-
-    real_rename = os.rename
-    swapped = {}
-
-    def racing_rename(src, dst):
-        # simulate: holder released and a live writer re-created the lock
-        # file in the window between our staleness check and the rename
-        if src == lock and not swapped:
-            swapped["done"] = True
-            with open(lock, "w") as f:
-                f.write(fresh)
-        real_rename(src, dst)
-
-    with open(lock, "w") as f:
-        f.write(stale)
-    orig_rename = txn_mod.os.rename
-    txn_mod.os.rename = racing_rename
-    try:
-        with pytest.raises(LockTimeout):
-            with write_lock(path, timeout=0.4):
-                pass
-    finally:
-        txn_mod.os.rename = orig_rename
-    # the live writer's lock survived the attempted reclaim
-    with open(lock) as f:
-        assert f.read() == fresh
+    assert _pid_alive_local(socket.gethostname(), 12345)
 
 
 def test_script_error_inside_txn_rolls_back_and_releases(spark, tmp_path):
