@@ -172,6 +172,12 @@ def test_try_rewrite_declines_uncontained(spark, sf_dir, mv):
             F.count(F.lit(1)).alias("n")
         )
     ) is None
+    # a nondeterministic filter picks base rows, not whole MV groups
+    assert m.try_rewrite(
+        base.filter(F.rand(1) < 0.5).groupBy("l_returnflag").agg(
+            F.count(F.lit(1)).alias("n")
+        )
+    ) is None
     # aggregate with no stored partial (sum of price)
     assert m.try_rewrite(
         base.groupBy("l_returnflag").agg(F.sum("price").alias("sp"))
