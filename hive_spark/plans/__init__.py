@@ -183,6 +183,11 @@ _FN_MAP = {"Sum": "sum", "Count": "count", "Min": "min", "Max": "max",
            "Average": "avg"}
 
 
+def _list(seq) -> list:
+    """A Scala Seq as a Python list."""
+    return [seq.apply(i) for i in range(seq.size())]
+
+
 def _unalias(node):
     # a temp view over the same relation adds SubqueryAlias/View
     # wrappers; names don't change the relation
@@ -258,10 +263,9 @@ def _rebind(jvm, expr, attrs: dict):
     rebuilt node by node, never re-parsed, so literals stay as written."""
     if expr.getClass().getSimpleName() == "AttributeReference":
         return attrs[expr.name()]
-    kids = expr.children()
     return expr.withNewChildren(
         jvm.org.apache.spark.api.python.PythonUtils.toSeq(
-            [_rebind(jvm, kids.apply(i), attrs) for i in range(kids.size())]
+            [_rebind(jvm, k, attrs) for k in _list(expr.children())]
         )
     )
 
@@ -364,7 +368,7 @@ class AggregateMV:
         # each partial's input, canonical over the relations' outputs
         attrs = _attr_seq(jvm, self._leaves)
         agg = rolled._jdf.queryExecution().analyzed().aggregateExpressions()
-        named = {agg.apply(i).name(): agg.apply(i) for i in range(agg.size())}
+        named = {e.name(): e for e in _list(agg)}
         self._partials = {
             out: (fn, _canonical(
                 jvm, named[out].child().aggregateFunction().children().apply(0),
@@ -438,9 +442,7 @@ class AggregateMV:
             return None
         attr_of: dict[int, tuple] = {}  # exprId -> (leaf key, name)
         for lf, key in zip(leaves, keys):
-            out = lf.output()
-            for i in range(out.size()):
-                a = out.apply(i)
+            for a in _list(lf.output()):
                 attr_of[a.exprId().id()] = (key, a.name())
 
         # conjuncts: equi-join edges, filters on MV rows, residual filters
@@ -484,10 +486,8 @@ class AggregateMV:
         if set(residual_edges) != {k for k in keys if k[0] == "res"}:
             return None
 
-        g = jplan.groupingExpressions()
         group_by = []
-        for i in range(g.size()):
-            e = g.apply(i)
+        for e in _list(jplan.groupingExpressions()):
             if e.getClass().getSimpleName() != "AttributeReference":
                 return None
             key, name = attr_of.get(e.exprId().id(), (None, None))
@@ -503,9 +503,7 @@ class AggregateMV:
             + [lf for lf, k in zip(leaves, keys) if k[0] == "res"],
         )
         outputs: list = []  # per output column: ("key", name) or (fn, partials...)
-        a = jplan.aggregateExpressions()
-        for i in range(a.size()):
-            ne = a.apply(i)
+        for ne in _list(jplan.aggregateExpressions()):
             inner = ne.child() if ne.getClass().getSimpleName() == "Alias" else ne
             cls = inner.getClass().getSimpleName()
             if cls == "AttributeReference":  # a group key, maybe renamed
@@ -539,8 +537,7 @@ class AggregateMV:
         out = read_parquet(self.spark, self.path)
         if mv_filters:
             plan = out._jdf.queryExecution().analyzed()
-            cols = plan.output()
-            by_name = {cols.apply(i).name(): cols.apply(i) for i in range(cols.size())}
+            by_name = {a.name(): a for a in _list(plan.output())}
             out = self._frame(plan, [_rebind(jvm, c, by_name) for c in mv_filters])
         for key, lf in zip(keys, leaves):
             if key[0] == "res":
