@@ -202,21 +202,26 @@ def _conjuncts(cond) -> list:
     return [cond]
 
 
-def _gather(node, conjuncts: list, leaves: list) -> bool:
+def _gather(node, conjuncts: list, leaves: list, whole: list) -> bool:
     """Flatten a Filter/inner-Join tree into its conjuncts and relation
-    leaves; False on a shape the rewrite does not cover."""
+    leaves; False on a shape the rewrite does not cover. A node with the
+    result of one of the ``whole`` plans (an MV relation that is itself a
+    Filter or Join) stays one leaf."""
     node = _unalias(node)
+    if any(w.sameResult(node) for w in whole):
+        leaves.append(node)
+        return True
     cls = node.getClass().getSimpleName()
     if cls == "Filter":
         conjuncts.extend(_conjuncts(node.condition()))
-        return _gather(node.child(), conjuncts, leaves)
+        return _gather(node.child(), conjuncts, leaves, whole)
     if cls == "Join":
         if node.joinType().toString().lower() not in ("inner", "cross"):
             return False
         if node.condition().isDefined():
             conjuncts.extend(_conjuncts(node.condition().get()))
-        return _gather(node.left(), conjuncts, leaves) and _gather(
-            node.right(), conjuncts, leaves
+        return _gather(node.left(), conjuncts, leaves, whole) and _gather(
+            node.right(), conjuncts, leaves, whole
         )
     leaves.append(node)
     return True
@@ -349,24 +354,30 @@ class AggregateMV:
         self.measures = dict(measures)
         self.dims = list(dims)
         self.path = os.path.join(root or scratch_dir("aggmv"), name)
-        self._definition = self._join(fact)
-        rolled = self._rollup(self._definition)
-        rolled.write.mode("overwrite").parquet(self.path)
-        jvm = spark._jvm
-        # analyzed plan handles of the definition's relations:
-        # ``sameResult`` against them is both the match test and the
-        # staleness gate; they denote exactly the data the MV was built from
-        self._leaves = [
-            _unalias(df._jdf.queryExecution().analyzed())
-            for df in [fact] + [d for d, _f, _c in self.dims]
-        ]
         self._edges = {
             frozenset({(("mv", 0), fc.split(".")[-1]),
                        (("mv", j + 1), dc.split(".")[-1])})
             for j, (_d, fc, dc) in enumerate(self.dims)
         }
+        self._bind(fact)
+        self._rollup(self._definition).write.mode("overwrite").parquet(self.path)
+
+    def _bind(self, fact: DataFrame) -> None:
+        """Capture the plans of the data the MV holds: ``fact`` joined
+        with the dims."""
+        jvm = self.spark._jvm
+        self._fact = fact
+        self._definition = self._join(fact)
+        # analyzed plan handles of the definition's relations:
+        # ``sameResult`` against them is both the match test and the
+        # staleness gate; they denote exactly the data the MV holds
+        self._leaves = [
+            _unalias(df._jdf.queryExecution().analyzed())
+            for df in [fact] + [d for d, _f, _c in self.dims]
+        ]
         # each partial's input, canonical over the relations' outputs
         attrs = _attr_seq(jvm, self._leaves)
+        rolled = self._rollup(self._definition)
         agg = rolled._jdf.queryExecution().analyzed().aggregateExpressions()
         named = {e.name(): e for e in _list(agg)}
         self._partials = {
@@ -435,15 +446,21 @@ class AggregateMV:
             return None
         conjuncts: list = []
         leaves: list = []
-        if not _gather(jplan.child(), conjuncts, leaves):
+        if not _gather(jplan.child(), conjuncts, leaves, self._leaves):
             return None
         keys = self._match_leaves(leaves)
         if keys is None:
             return None
-        attr_of: dict[int, tuple] = {}  # exprId -> (leaf key, name)
+        # exprId -> (leaf key, column): an MV relation's column by name, a
+        # residual one by relation and position, the name it is re-joined
+        # under, so it cannot clash with an MV column (a self-join, a
+        # partial called ``n``) or another residual relation's column
+        attr_of: dict[int, tuple] = {}
         for lf, key in zip(leaves, keys):
-            for a in _list(lf.output()):
-                attr_of[a.exprId().id()] = (key, a.name())
+            for p, a in enumerate(_list(lf.output())):
+                attr_of[a.exprId().id()] = (
+                    key, a.name() if key[0] == "mv" else f"_r{key[1]}_{p}"
+                )
 
         # conjuncts: equi-join edges, filters on MV rows, residual filters
         edges: set = set()
@@ -486,14 +503,14 @@ class AggregateMV:
         if set(residual_edges) != {k for k in keys if k[0] == "res"}:
             return None
 
-        group_by = []
+        group_by = []  # (leaf key, column)
         for e in _list(jplan.groupingExpressions()):
             if e.getClass().getSimpleName() != "AttributeReference":
                 return None
-            key, name = attr_of.get(e.exprId().id(), (None, None))
-            if key is None or (key[0] == "mv" and name not in self.group_keys):
+            ref = attr_of.get(e.exprId().id())
+            if ref is None or (ref[0][0] == "mv" and ref[1] not in self.group_keys):
                 return None
-            group_by.append(name)
+            group_by.append(ref)
 
         # aggregate inputs are canonical over the MV relations' outputs in
         # definition order, then the residual ones (which match nothing)
@@ -502,15 +519,15 @@ class AggregateMV:
             [leaves[keys.index(("mv", j))] for j in range(len(self._leaves))]
             + [lf for lf, k in zip(leaves, keys) if k[0] == "res"],
         )
-        outputs: list = []  # per output column: ("key", name) or (fn, partials...)
+        outputs: list = []  # per column: ("key", ref) or (fn, partials...)
         for ne in _list(jplan.aggregateExpressions()):
             inner = ne.child() if ne.getClass().getSimpleName() == "Alias" else ne
             cls = inner.getClass().getSimpleName()
             if cls == "AttributeReference":  # a group key, maybe renamed
-                name = attr_of.get(inner.exprId().id(), (None, None))[1]
-                if name not in group_by:
+                ref = attr_of.get(inner.exprId().id())
+                if ref not in group_by:
                     return None
-                outputs.append(("key", name))
+                outputs.append(("key", ref))
                 continue
             if (
                 cls != "AggregateExpression"
@@ -539,28 +556,41 @@ class AggregateMV:
             plan = out._jdf.queryExecution().analyzed()
             by_name = {a.name(): a for a in _list(plan.output())}
             out = self._frame(plan, [_rebind(jvm, c, by_name) for c in mv_filters])
+        # MV columns are renamed by position too: no working name can
+        # clash with another
+        mv_col = {c: f"_m{p}" for p, c in enumerate(out.columns)}
+        out = out.toDF(*mv_col.values())
+
+        def working(ref: tuple) -> str:
+            key, name = ref
+            return mv_col[name] if key[0] == "mv" else name
+
         for key, lf in zip(keys, leaves):
             if key[0] == "res":
                 dim = self._frame(lf, residual_filters.get(key, []))
+                dim = dim.toDF(*[f"_r{key[1]}_{p}" for p in range(len(dim.columns))])
                 cond = None
-                for mv_col, dim_col in residual_edges[key]:
-                    eq = out[mv_col] == dim[dim_col]
+                for m_col, r_col in residual_edges[key]:
+                    eq = out[mv_col[m_col]] == dim[r_col]
                     cond = eq if cond is None else (cond & eq)
                 out = out.join(F.broadcast(dim), cond, "inner")
         merged, select = [], []
         for i, (spec, field) in enumerate(zip(outputs, df.schema.fields)):
             if spec[0] == "key":
-                col = F.col(spec[1])
+                col = F.col(working(spec[1]))
             else:
-                merged.append(self._derive(spec, field.dataType, out).alias(f"_a{i}"))
+                fn, *parts = spec
+                merged.append(
+                    self._derive(fn, [mv_col[p] for p in parts], field.dataType, out)
+                    .alias(f"_a{i}")
+                )
                 col = F.col(f"_a{i}")
             select.append(col.cast(field.dataType).alias(field.name))
-        grouped = out.groupBy(*group_by)
+        grouped = out.groupBy(*map(working, group_by))
         return (grouped.agg(*merged) if merged else grouped.count()).select(*select)
 
     @staticmethod
-    def _derive(spec: tuple, out_type, mv: DataFrame) -> Column:
-        fn, *parts = spec
+    def _derive(fn: str, parts: list, out_type, mv: DataFrame) -> Column:
         if fn != "avg":
             return _merge(fn, parts[0])
         # as Spark's Average finishes its (sum, count) buffer; the stored
@@ -609,7 +639,9 @@ class AggregateMV:
         re-SUM, min/max re-MIN/MAX), keeping each partial's type. Cost is
         sized to the delta plus the MV: at 100 TB, yesterday's insertions
         instead of the decade. avg needs nothing: it is derived at answer
-        time from sum and count partials, which merge exactly."""
+        time from sum and count partials, which merge exactly. The MV
+        then answers rollups over ``fact.unionByName(appended)``, and no
+        longer those over the fact alone."""
         stored = read_parquet(self.spark, self.path)
         merged = (
             stored.unionByName(self._rollup(self._join(appended)))
@@ -623,6 +655,7 @@ class AggregateMV:
         merged.write.mode("overwrite").parquet(staging)
         shutil.rmtree(self.path)
         shutil.move(staging, self.path)
+        self._bind(self._fact.unionByName(appended))
 
 
 def salted_agg_count(

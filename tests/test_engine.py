@@ -64,6 +64,25 @@ def test_uncontained_sql_runs_as_written(engine):
     assert engine.sql(q).count() == 3
 
 
+def test_sql_mv_join_with_same_named_columns(spark, engine):
+    """A join whose second relation has columns named like MV columns (a
+    group key, the partial ``n``) is answered by re-joining that relation
+    onto the MV rows, with the query's rows."""
+    for q in (
+        """SELECT a.l_returnflag, count(*) AS n FROM li_slim a
+           JOIN (SELECT DISTINCT l_returnflag FROM li_slim) b
+             ON a.l_returnflag = b.l_returnflag
+           GROUP BY a.l_returnflag""",
+        """SELECT a.l_returnflag, b.n, count(*) AS c FROM li_slim a
+           JOIN (SELECT DISTINCT l_returnflag AS f, 1 AS n FROM li_slim) b
+             ON a.l_returnflag = b.f
+           GROUP BY a.l_returnflag, b.n""",
+    ):
+        assert engine.explain_rewrite(q)
+        got = sorted(map(tuple, engine.sql(q).collect()))
+        assert got == sorted(map(tuple, spark.sql(q).collect()))
+
+
 def test_results_cache_round_trip(spark, engine):
     q = "SELECT l_linestatus, COUNT(*) AS n FROM li_slim GROUP BY l_linestatus"
     before = dict(engine.stats)

@@ -222,6 +222,63 @@ def test_incremental_refresh_equals_full_rebuild(spark, sf_dir, tmp_path):
     assert _rows(inc.answer(["l_returnflag"], q), "l_returnflag") == want
 
 
+def test_refresh_moves_the_definition(spark, sf_dir, tmp_path):
+    """After a refresh the MV holds base plus appended rows: a rollup of
+    the old base misses, and one of the union is answered exactly."""
+    base = views(spark, sf_dir)["lineitem"].select(
+        "l_returnflag", F.col("l_quantity").cast("decimal(18,2)").alias("qty"),
+        "l_orderkey",
+    )
+    old = base.filter("l_orderkey % 4 != 0").drop("l_orderkey")
+    delta = base.filter("l_orderkey % 4 = 0").drop("l_orderkey")
+    m = AggregateMV(spark, "moved", old, ["l_returnflag"],
+                    {"s": ("sum", "qty"), "n": ("count", "*")},
+                    root=str(tmp_path))
+    m.refresh_incremental(delta)
+
+    def rollup(df):
+        return df.groupBy("l_returnflag").agg(
+            F.sum("qty").alias("s"), F.count(F.lit(1)).alias("n"))
+
+    assert m.try_rewrite(rollup(old)) is None
+    query = rollup(old.unionByName(delta))
+    hit = m.try_rewrite(query)
+    assert hit is not None
+    assert _rows(hit, "l_returnflag") == _rows(query, "l_returnflag")
+
+
+def test_filter_and_join_rooted_fact(spark, sf_dir, tmp_path):
+    """A fact whose plan is itself a Filter or an inner Join is one MV
+    relation: rollups over it are answered, rollups over its inputs
+    miss."""
+    li = views(spark, sf_dir)["lineitem"]
+    base = li.select(
+        "l_returnflag", "l_linestatus", "l_orderkey",
+        F.col("l_quantity").cast("decimal(18,2)").alias("qty"),
+    )
+    orders = views(spark, sf_dir)["orders"].select("o_orderkey", "o_orderstatus")
+    measures = {"s": ("sum", "qty"), "n": ("count", "*")}
+    for i, fact in enumerate((
+        base.filter(F.col("qty") > 10),
+        base.join(orders, base.l_orderkey == orders.o_orderkey),
+    )):
+        m = AggregateMV(spark, f"rooted{i}", fact,
+                        ["l_returnflag", "l_linestatus"], measures,
+                        root=str(tmp_path))
+        got = m.answer(["l_returnflag"], {"s": ("sum", "qty")},
+                       where=F.col("l_linestatus") == "F")
+        want = (fact.filter(F.col("l_linestatus") == "F")
+                .groupBy("l_returnflag").agg(F.sum("qty").alias("s")))
+        assert _rows(got, "l_returnflag") == _rows(want, "l_returnflag")
+        query = fact.groupBy("l_linestatus").agg(F.count(F.lit(1)).alias("n"))
+        hit = m.try_rewrite(query)
+        assert hit is not None
+        assert _rows(hit, "l_linestatus") == _rows(query, "l_linestatus")
+        assert m.try_rewrite(
+            base.groupBy("l_linestatus").agg(F.count(F.lit(1)).alias("n"))
+        ) is None
+
+
 @pytest.fixture(scope="module")
 def li_slim(spark, sf_dir, tmp_path_factory):
     """lineitem's flag, status and quantity as the temp view li_slim, and
