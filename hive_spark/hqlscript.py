@@ -86,6 +86,7 @@ from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession
 
 from hive_spark import authz
+from hive_spark.session import read_parquet
 from hive_spark.sqltext import (
     close_bracket,
     code_matches,
@@ -3983,7 +3984,7 @@ def _insert_overwrite_selfread(spark, stmt: str, err):
         spark.sql(query, args=args).write.parquet(stage)
         view = f"__stage_{uuid.uuid4().hex[:8]}"
         try:
-            spark.read.parquet(stage).createOrReplaceTempView(view)
+            read_parquet(spark, stage).createOrReplaceTempView(view)
             # re-run the SAME insert head (partition spec and all) over
             # the staged rows — Spark's own partitioned-insert path,
             # minus the self-read the staging removed
@@ -5046,7 +5047,7 @@ def _rewrite_table_inplace(spark: SparkSession, table: str, out) -> None:
     )
     out.write.parquet(stage)
     try:
-        staged = spark.read.parquet(stage).select(*out.columns)
+        staged = read_parquet(spark, stage).select(*out.columns)
         spark.sql(f"DROP TABLE `{table.replace('.', '`.`')}`")
         w = staged.write
         kept_parts = [c for c in part_cols if c in staged.columns]

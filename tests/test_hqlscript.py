@@ -615,6 +615,83 @@ def test_insert_overwrite_self_read(spark):
     run_script(spark, "DROP TABLE hqtest.selfrw; USE default;")
 
 
+@pytest.fixture
+def staged_read_jobs(spark, monkeypatch):
+    """The Spark jobs each staged read-back in hqlscript ran while it
+    built its frame (a schema-inference job would be one)."""
+    from hive_spark import hqlscript
+
+    def next_job():
+        return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+    jobs = []
+    real = hqlscript.read_parquet
+
+    def counting(s, path):
+        before = next_job()
+        df = real(s, path)
+        jobs.append(next_job() - before)
+        return df
+
+    monkeypatch.setattr(hqlscript, "read_parquet", counting)
+    return jobs
+
+
+_TYPED_ROWS = (
+    "SELECT * FROM VALUES"
+    " (1, CAST(12.34 AS DECIMAL(18,2)), DATE'1997-03-01',"
+    "  TIMESTAMP_NTZ'1997-03-01 12:30:45.123456', 'a', array(1, 2)),"
+    " (2, NULL, NULL, NULL, NULL, NULL),"
+    " (3, CAST(-0.5 AS DECIMAL(18,2)), DATE'2000-01-01',"
+    "  TIMESTAMP_NTZ'2000-01-01 00:00:00', 'c', array(3))"
+    " AS t(key, amt, day, ts, tag, xs)"
+)
+
+
+def test_insert_overwrite_self_read_stage_reads_back_without_a_job(
+    spark, staged_read_jobs
+):
+    """The self-read INSERT OVERWRITE reads its stage back with the
+    schema from the stage's footers: no inference job, and every column
+    value survives the round trip."""
+    run_script(
+        spark,
+        "CREATE DATABASE IF NOT EXISTS hqtest; USE hqtest;"
+        " DROP TABLE IF EXISTS selfrw_typed;"
+        f" CREATE TABLE selfrw_typed USING parquet AS {_TYPED_ROWS};"
+        " INSERT OVERWRITE TABLE selfrw_typed SELECT * FROM selfrw_typed;",
+    )
+    got = spark.table("hqtest.selfrw_typed")
+    assert sorted(map(repr, got.collect())) == sorted(
+        map(repr, spark.sql(_TYPED_ROWS).collect())
+    )
+    assert staged_read_jobs == [0]
+    run_script(spark, "DROP TABLE hqtest.selfrw_typed; USE default;")
+
+
+def test_table_rewrite_stage_reads_back_without_a_job(spark, staged_read_jobs):
+    """UPDATE of a bucketed table swaps it through a parquet stage
+    (_rewrite_table_inplace); the stage reads back with no inference job,
+    and the rows the UPDATE leaves alone are unchanged."""
+    run_script(
+        spark,
+        "CREATE DATABASE IF NOT EXISTS hqtest; USE hqtest;"
+        " DROP TABLE IF EXISTS rw_typed;"
+        " CREATE TABLE rw_typed (key INT, amt DECIMAL(18,2), day DATE,"
+        " ts TIMESTAMP_NTZ, tag STRING, xs ARRAY<INT>)"
+        " USING parquet CLUSTERED BY (key) INTO 2 BUCKETS;"
+        f" INSERT INTO rw_typed {_TYPED_ROWS};"
+        " UPDATE rw_typed SET tag = 'z' WHERE key = 3;",
+    )
+    want = spark.sql(_TYPED_ROWS).selectExpr(
+        "key", "amt", "day", "ts", "IF(key = 3, 'z', tag) AS tag", "xs"
+    )
+    got = spark.table("hqtest.rw_typed")
+    assert sorted(map(repr, got.collect())) == sorted(map(repr, want.collect()))
+    assert staged_read_jobs == [0]
+    run_script(spark, "DROP TABLE hqtest.rw_typed; USE default;")
+
+
 def test_temporary_table_and_double_quoted_delim(spark, tmp_path):
     """CREATE TEMPORARY TABLE maps to a writable managed table;
     ROW FORMAT DELIMITED accepts double-quoted delimiters
