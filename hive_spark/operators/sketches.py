@@ -28,8 +28,6 @@ error bound. The sketch is a register-max structure, so the estimate is
 identical at any partitioning/merge order — the boolean is stable.
 """
 
-from __future__ import annotations
-
 import os
 import tempfile
 
@@ -667,7 +665,7 @@ def _register_cpc_estimate(spark: SparkSession) -> None:
     (vectorized numpy over the handful of sketch rows)."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
     k = float(_CPC_K)
     probs = 2.0 ** -(np.arange(_CPC_COLS, dtype=np.float64) + 1.0)
@@ -677,8 +675,10 @@ def _register_cpc_estimate(spark: SparkSession) -> None:
     def expected(n):  # n: (rows,) -> E[total coupons]
         return k * (1.0 - np.exp(np.outer(n, log1m))).sum(axis=1)
 
-    @pandas_udf("double", PandasUDFType.SCALAR)
-    def cpc_estimate(c):
+    # the hints must be objects for pandas_udf to read the UDF's kind,
+    # so this module has no `from __future__ import annotations`
+    @pandas_udf("double")
+    def cpc_estimate(c: pd.Series) -> pd.Series:
         obs = c.to_numpy(dtype=np.float64)
         lo = np.zeros_like(obs)
         hi = np.full_like(obs, 2.0**50)

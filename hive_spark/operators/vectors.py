@@ -31,8 +31,6 @@ on either engine's double→decimal rounding algorithm. Cross-row sums are
 carried as DECIMAL(38,0) so they cannot overflow at 100 TB row counts.
 """
 
-from __future__ import annotations
-
 from pyspark.sql import DataFrame, SparkSession
 
 from hive_spark.operators import QuerySpec, views
@@ -155,10 +153,12 @@ def _register_lsh_sig_udf(spark: SparkSession, bits: int, bands: int) -> None:
     row-at-a-time UDF."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("array<bigint>", PandasUDFType.SCALAR)
-    def lsh_sigs(emb):
+    # the hints must be objects for pandas_udf to read the UDF's kind,
+    # so this module has no `from __future__ import annotations`
+    @pandas_udf("array<bigint>")
+    def lsh_sigs(emb: pd.Series) -> pd.Series:
         mat = np.stack(emb.to_numpy()).astype(np.float64)  # n x DIM
         # element 0 = quantized squared norm (same floor((x*x)*1e12)
         # integers as the _DOTQ SQL text), elements 1.. = band sigs —
