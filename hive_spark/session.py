@@ -30,11 +30,37 @@ Scale notes (100 TB design intent):
   the engine wrote: O(files) footer reads, ~0.1 ms per page-cached file
   on the same host (the 53 files of the sf 0.01 star in 6-7 ms), and
   no job. Paths that are not local directories (HDFS, object stores)
-  keep Spark's inference job.
+  keep Spark's inference job. ``load_tables`` maps the testdata's own
+  footer (written by pyarrow, without Spark's key) the same way, so a
+  cold session registers its ten tables with no job.
+- A cold driver JVM spends most of its start loading, parsing and
+  verifying Spark's classes from 287 jars; Hive pays the same per job,
+  and Shark's and Dremel's answer is a long-lived server. ``get_session``
+  keeps the classes instead: a JDK dynamic AppCDS archive of every class
+  the built-in loaders loaded in one session (~160-170 MB; Janino's
+  signed jar and pre-Java-6 class files are left out), mapped read-only
+  by later JVMs. The first JVM for a key runs with
+  ``-XX:ArchiveClassesAtExit`` and dumps at exit under a name unique to
+  its process; its Python process then moves the file to the key path
+  (``scratch_dir("cds")/spark-<key>.jsa``), so no JVM maps a partly
+  written archive. Later JVMs run with ``-XX:SharedArchiveFile``. The key
+  digests the JDK (install path, ``release``, ``lib/modules`` size and
+  mtime) and Spark's jar list (names, sizes, mtimes), read from the file
+  system: probing ``java -version`` would cost a JVM launch per session.
+  One archive is kept, as the ones for other keys belong to a JDK or
+  Spark install that is gone. There is no switch: a JVM that finds the
+  archive unusable (corrupt, another build) maps nothing and loads from
+  the jars as before, so results never depend on it. Archived classes
+  need a class path without non-empty directories, and Spark puts its
+  conf directory first; when that directory holds only ``*.template``
+  files the launch points ``SPARK_CONF_DIR`` at an empty directory, and
+  when it holds real configuration the JVM gets no archive. A session
+  whose JVM is already running (a foreign driver's) is not touched.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import weakref
 
@@ -113,8 +139,9 @@ def get_session(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # testdata parquet stores TIMESTAMP(NANOS); read as long + convert
-        # in load_tables (Spark has no native ns timestamp type)
+        # TIMESTAMP(NANOS) parquet columns read as long, and load_tables
+        # converts them (Spark has no ns timestamp type). The testdata
+        # stores timestamp[us] (isAdjustedToUTC=false), read as TIMESTAMP_NTZ
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
@@ -144,17 +171,157 @@ def get_session(
     # the JVM's temp root on durable scratch alongside spark.local.dir.
     jtmp = os.path.join(local_dir, "jtmp")
     os.makedirs(jtmp, exist_ok=True)
-    builder = builder.config(
-        "spark.driver.extraJavaOptions", f"-Djava.io.tmpdir={jtmp}"
-    ).config("spark.executor.extraJavaOptions", f"-Djava.io.tmpdir={jtmp}")
+    java_opts = f"-Djava.io.tmpdir={jtmp}"
+    archive = _ClassArchive.for_launch()
+    if archive is not None:
+        java_opts += " " + archive.option
+    builder = builder.config("spark.driver.extraJavaOptions", java_opts).config(
+        "spark.executor.extraJavaOptions", f"-Djava.io.tmpdir={jtmp}"
+    )
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
 
-    spark = builder.getOrCreate()
+    if archive is None:
+        spark = builder.getOrCreate()
+    else:
+        spark = archive.launch(builder)
     spark.sparkContext.setLogLevel("WARN")
     register_functions(spark)
     return spark
+
+
+class _ClassArchive:
+    """The driver JVM's dynamic AppCDS archive (see the scale note)."""
+
+    def __init__(self, root: str, key: str, conf_dir: str) -> None:
+        self.path = os.path.join(root, f"spark-{key}.jsa")
+        self.conf_dir = conf_dir
+        if os.path.isfile(self.path):
+            self.tmp = None
+            self.option = f"-XX:SharedArchiveFile={self.path}"
+        else:
+            self.tmp = f"{self.path}.{os.getpid()}.tmp"
+            # the dump warns once per class it skips (signed jars, old
+            # class-file versions): ~700 lines at exit
+            self.option = f"-XX:ArchiveClassesAtExit={self.tmp} -Xlog:cds=off"
+
+    @classmethod
+    def for_launch(cls) -> _ClassArchive | None:
+        """The archive for a driver JVM this process is about to launch;
+        None when no JVM is launched (a gateway is running or given) or
+        when Spark's conf directory holds configuration that would have
+        to stay on the class path."""
+        from pyspark import SparkContext
+        from pyspark.find_spark_home import _find_spark_home
+
+        if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+            return None
+        spark_home = _find_spark_home()
+        conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+        if os.path.isdir(conf) and any(
+            not name.endswith(".template") for name in os.listdir(conf)
+        ):
+            return None
+        key = _archive_key(spark_home)
+        if key is None:
+            return None
+        from hive_spark.scratch import scratch_dir
+
+        return cls(scratch_dir("cds"), key, scratch_dir("cds", "conf"))
+
+    def launch(self, builder: SparkSession.Builder) -> SparkSession:
+        """``builder.getOrCreate()`` with the empty conf directory in
+        place of Spark's, and, when this JVM writes the archive, its
+        publication registered for this process's exit."""
+        import atexit
+
+        from pyspark import SparkContext
+
+        saved = os.environ.get("SPARK_CONF_DIR")
+        os.environ["SPARK_CONF_DIR"] = self.conf_dir
+        try:
+            spark = builder.getOrCreate()
+        finally:
+            if saved is None:
+                del os.environ["SPARK_CONF_DIR"]
+            else:
+                os.environ["SPARK_CONF_DIR"] = saved
+        proc = getattr(SparkContext._gateway, "proc", None)
+        if self.tmp is not None and proc is not None:
+            atexit.register(self.publish, proc)
+        return spark
+
+    def publish(self, proc) -> None:
+        """Wait for the JVM to write the archive at exit, then move it
+        to the key path and delete every other archive."""
+        import subprocess
+
+        from pyspark import SparkContext
+
+        if proc.poll() is None:
+            if SparkContext._active_spark_context is not None:
+                # stop it first, or its accumulator server thread dies on
+                # the closed connection with a traceback
+                SparkContext._active_spark_context.stop()
+            proc.stdin.close()  # the gateway JVM exits when its stdin closes
+            try:
+                proc.wait(timeout=300)
+            except subprocess.TimeoutExpired:
+                return
+        if proc.returncode == 0 and os.path.isfile(self.tmp):
+            os.replace(self.tmp, self.path)
+        root = os.path.dirname(self.path)
+        for name in os.listdir(root):
+            path = os.path.join(root, name)
+            if path == self.path or not name.endswith((".jsa", ".tmp")):
+                continue
+            owner = name.rsplit(".", 2)[-2] if name.endswith(".tmp") else ""
+            if owner.isdigit() and int(owner) != os.getpid() and _alive(int(owner)):
+                continue  # another process's JVM may still be writing it
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(path)
+
+
+def _alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
+def _archive_key(spark_home: str) -> str | None:
+    """A digest of what the archive's classes come from: the JDK that
+    ``spark-class`` runs (``$JAVA_HOME``, else ``java`` on the path) and
+    Spark's jars. Read from the file system; no JVM is started. None
+    when no JDK is found."""
+    import hashlib
+    import shutil
+
+    java = (
+        os.path.join(os.environ["JAVA_HOME"], "bin", "java")
+        if os.environ.get("JAVA_HOME")
+        else shutil.which("java")
+    )
+    if not java or not os.path.isfile(java):
+        return None
+    jdk = os.path.dirname(os.path.dirname(os.path.realpath(java)))
+    h = hashlib.sha256(jdk.encode())
+    try:
+        with open(os.path.join(jdk, "release"), "rb") as f:
+            h.update(f.read())
+        st = os.stat(os.path.join(jdk, "lib", "modules"))
+        h.update(f"{st.st_size} {st.st_mtime_ns}".encode())
+        jars = sorted(os.scandir(os.path.join(spark_home, "jars")), key=lambda e: e.name)
+        for e in jars:
+            st = e.stat()
+            h.update(f"\0{e.name} {st.st_size} {st.st_mtime_ns}".encode())
+    except OSError:
+        return None
+    return h.hexdigest()[:16]
 
 
 def register_functions(spark: SparkSession) -> None:
@@ -178,7 +345,9 @@ def load_tables(
 
     Plain `spark.read.parquet` — Catalyst handles column pruning and filter
     pushdown into the scan; nothing to hand-roll (Hive needed MapOperator +
-    SerDe per format, ref: ql/.../exec/MapOperator.java:78).
+    SerDe per format, ref: ql/.../exec/MapOperator.java:78). The schema
+    comes from the parquet footer on the driver, so no table costs a
+    schema-inference job (see the scale note).
     """
     from pyspark.sql import functions as F
 
@@ -187,41 +356,51 @@ def load_tables(
         path = os.path.join(sf_dir, f"{name}.parquet")
         if not os.path.exists(path):
             continue
-        df = spark.read.parquet(path)
+        schema, ns_cols = _testdata_schema(path)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        df = reader.parquet(path)
         # Timestamp normalization: ms/us parquet timestamps read natively as
         # TIMESTAMP_NTZ; TIMESTAMP(NANOS) columns arrive as long (nanosAsLong)
         # and are converted here to TIMESTAMP_NTZ at microsecond precision,
         # so every table exposes one timestamp type (matching the DuckDB
         # oracle's naive timestamps under the UTC session).
-        for col, unit in _ns_timestamp_columns(path):
-            if unit == "ns":
-                df = df.withColumn(
-                    col,
-                    F.timestamp_micros(F.expr(f"`{col}` div 1000")).cast(
-                        "timestamp_ntz"
-                    ),
-                )
+        for col in ns_cols:
+            df = df.withColumn(
+                col,
+                F.timestamp_micros(F.expr(f"`{col}` div 1000")).cast("timestamp_ntz"),
+            )
         out[name] = df
     return out
 
 
-def _ns_timestamp_columns(path: str) -> list[tuple[str, str]]:
+def _testdata_schema(path: str) -> tuple[StructType | None, list[str]]:
+    """(the schema Spark's inference would return for ``path``, or None
+    when the footer's types do not map; its TIMESTAMP(NANOS) columns).
+
+    Naive timestamps map to TIMESTAMP_NTZ and nanosecond ones to BIGINT,
+    as Spark reads them under ``nanosAsLong``."""
     import pyarrow.parquet as pq
     import pyarrow.types as pat
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import LongType
 
     if os.path.isdir(path):  # multi-file table: any part carries the schema
-        parts = sorted(
-            f for f in os.listdir(path) if f.endswith(".parquet")
-        )
+        parts = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
         if not parts:
-            return []
+            return None, []
         path = os.path.join(path, parts[0])
-    schema = pq.read_schema(path)
-    return [
-        (f.name, f.type.unit)
-        for f in schema
-        if pat.is_timestamp(f.type) and f.type.unit == "ns"
+    arrow = pq.read_schema(path)
+    ns_cols = [
+        f.name for f in arrow if pat.is_timestamp(f.type) and f.type.unit == "ns"
     ]
+    try:
+        schema = from_arrow_schema(arrow, prefer_timestamp_ntz=True)
+    except (TypeError, ValueError, KeyError):  # a type Spark's mapping lacks
+        return None, ns_cols
+    for f in schema.fields:
+        if f.name in ns_cols:
+            f.dataType = LongType()
+    return schema, ns_cols
 
 
 # footer key under which Spark's parquet writer stores the row schema

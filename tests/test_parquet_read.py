@@ -1,7 +1,8 @@
 """session.read_parquet: the schema of engine-written parquet comes from
 the file footers on the driver, with no Spark job, and equals what
 Spark's own inference returns; every other directory takes Spark's
-plain read (one inference job)."""
+plain read (one inference job). session.load_tables does the same for
+the pyarrow-written testdata."""
 
 import datetime
 import decimal
@@ -9,8 +10,9 @@ import os
 import shutil
 
 import pytest
+from pyspark.sql import functions as F
 
-from hive_spark import snapshots
+from hive_spark import session, snapshots
 from hive_spark.session import read_parquet
 
 
@@ -103,3 +105,33 @@ def test_other_dirs_fall_back_to_spark_inference(spark, sf_dir, tmp_path, typed)
         fast, ran, plain = _read_both(spark, path)
         assert ran == 1, path
         assert fast.schema.json() == plain.schema.json(), path
+
+
+def _testdata_dirs(sf_dir):
+    """Every testdata scale present beside ``sf_dir`` (sf0.001, sf0.01, ...)."""
+    root = os.path.dirname(os.path.abspath(sf_dir))
+    return sorted(
+        os.path.join(root, d) for d in os.listdir(root)
+        if d.startswith("sf") and os.path.isdir(os.path.join(root, d))
+    )
+
+
+def _digest(df):
+    return df.agg(F.count("*"), F.sum(F.xxhash64(*df.columns))).first()
+
+
+def test_testdata_tables_load_without_a_job(spark, sf_dir):
+    """load_tables builds each testdata schema from the pyarrow-written
+    footer: Spark's inference returns the same schema, the rows read
+    under it are the same, and registering the tables runs no job."""
+    for d in _testdata_dirs(sf_dir):
+        before = _jobs(spark)
+        tables = session.load_tables(spark, d)
+        assert _jobs(spark) - before == 0, d
+        assert tables, d
+        for name in tables:
+            path = os.path.join(d, f"{name}.parquet")
+            schema, _ = session._testdata_schema(path)
+            plain = spark.read.parquet(path)
+            assert schema.json() == plain.schema.json(), path
+            assert _digest(spark.read.schema(schema).parquet(path)) == _digest(plain), path

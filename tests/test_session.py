@@ -1,8 +1,12 @@
-"""Session factory: one-time function registration and the codegen class
-cache sized to the engine's working set."""
+"""Session factory: one-time function registration, the codegen class
+cache sized to the engine's working set, and the driver JVM's
+class-data-sharing archive."""
 
 import os
+import re
 import weakref
+
+import pytest
 
 from hive_spark import functions, operators, session
 from hive_spark.operators import full_registry, views
@@ -65,3 +69,140 @@ def test_warm_pass_compiles_nothing(spark, sf_dir):
     before = _compilations(spark)
     run_pass()
     assert _compilations(spark) - before == 0
+
+
+# -- the driver JVM's class-data-sharing archive ---------------------------
+# Each test starts sessions in child processes: the archive option only
+# reaches a JVM at launch, and this suite's JVM is already running.
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_PROBE = """
+import json
+from hive_spark.session import get_session
+s = get_session(app_name="cds_probe", master="local[1]", shuffle_partitions=1)
+jvm = s._jvm
+print("PROBE " + json.dumps({
+    "rows": s.sql("SELECT count(*) FROM range(7)").collect()[0][0],
+    "classpath": jvm.System.getProperty("java.class.path"),
+    "args": list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()),
+    "marker": s.conf.get("spark.hive_spark.probe", None),
+}))
+"""
+
+
+def _probe(scratch, **env) -> dict:
+    """Start a session in a child process whose engine scratch is
+    ``scratch``; its answer to a query, class path and JVM arguments."""
+    import json
+    import subprocess
+    import sys
+
+    child_env = {
+        k: v for k, v in os.environ.items()
+        if k not in ("SPARK_CONF_DIR", "PYSPARK_GATEWAY_PORT", "PYSPARK_GATEWAY_SECRET")
+    }
+    child_env.update(
+        HIVE_SPARK_SCRATCH=str(scratch),
+        SPARK_GRAFT_DRIVER_MEM="1g",
+        PYTHONPATH=_REPO,
+        **env,
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", _PROBE],
+        capture_output=True, text=True, timeout=600, env=child_env, cwd=str(scratch),
+    )
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("PROBE ")]
+    assert out.returncode == 0 and lines, out.stdout[-2000:] + out.stderr[-2000:]
+    return json.loads(lines[-1][len("PROBE "):])
+
+
+def _key_path(scratch) -> str:
+    from pyspark.find_spark_home import _find_spark_home
+
+    key = session._archive_key(_find_spark_home())
+    assert key is not None
+    return os.path.join(str(scratch), "cds", f"spark-{key}.jsa")
+
+
+def _archive_args(probe: dict) -> list[str]:
+    return [a for a in probe["args"] if "Archive" in a or "Xlog:cds" in a]
+
+
+@pytest.fixture(scope="module")
+def written(tmp_path_factory):
+    """A session started with no archive for its key, and the archive
+    its JVM wrote at exit."""
+    scratch = tmp_path_factory.mktemp("cds_written")
+    return scratch, _probe(scratch)
+
+
+def test_missing_archive_is_written_and_published(written):
+    """With no archive for its key the JVM dumps one at exit under a
+    per-process name, and the session's exit moves it to the key path."""
+    scratch, probe = written
+    path = _key_path(scratch)
+    assert probe["rows"] == 7
+    (dump, quiet) = _archive_args(probe)
+    assert re.fullmatch(rf"-XX:ArchiveClassesAtExit={re.escape(path)}\.\d+\.tmp", dump)
+    assert quiet == "-Xlog:cds=off"
+    assert os.path.isfile(path)
+    assert sorted(os.listdir(os.path.dirname(path))) == ["conf", os.path.basename(path)]
+
+
+def test_archive_maps_on_the_session_class_path(written):
+    """A JVM that must map the archive (-Xshare:on exits 1 when it
+    cannot) accepts it on the class path the session ran with."""
+    import shutil
+    import subprocess
+
+    scratch, probe = written
+    java = os.path.join(os.environ["JAVA_HOME"], "bin", "java") if os.environ.get(
+        "JAVA_HOME"
+    ) else shutil.which("java")
+    out = subprocess.run(
+        [java, "-Xshare:on", f"-XX:SharedArchiveFile={_key_path(scratch)}",
+         "-cp", probe["classpath"], "-version"],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    assert "sharing" in out.stderr
+
+
+@pytest.mark.parametrize("kind", ["garbage", "other_jdk"])
+def test_session_starts_over_a_bad_archive(written, tmp_path, kind):
+    """Garbage bytes, or an archive whose header names another JVM build,
+    at the key path: the JVM declines to map it and the session runs
+    from the jars."""
+    scratch, _ = written
+    path = _key_path(tmp_path)
+    os.makedirs(os.path.dirname(path))
+    if kind == "garbage":
+        data = bytearray(os.urandom(1 << 16))
+    else:
+        with open(_key_path(scratch), "rb") as f:
+            data = bytearray(f.read())
+        at = data.index(b"VM (", 0, 4096) + len(b"VM (")  # "... VM (17.0.x+..."
+        data[at] = ord("9") if data[at] != ord("9") else ord("8")
+    with open(path, "wb") as f:
+        f.write(data)
+    probe = _probe(tmp_path)
+    assert probe["rows"] == 7
+    assert _archive_args(probe) == [f"-XX:SharedArchiveFile={path}"]
+
+
+def test_real_conf_dir_is_kept_without_an_archive(tmp_path):
+    """A conf directory that holds configuration stays on the class path
+    and is read; the JVM gets no archive option, since JDK 17 refuses a
+    non-empty directory on an archived class path."""
+    conf = tmp_path / "conf"
+    conf.mkdir()
+    (conf / "spark-defaults.conf").write_text("spark.hive_spark.probe honoured\n")
+    (conf / "log4j2.properties.template").write_text("")
+    scratch = tmp_path / "scratch"
+    scratch.mkdir()
+    probe = _probe(scratch, SPARK_CONF_DIR=str(conf))
+    assert probe["rows"] == 7
+    assert probe["marker"] == "honoured"
+    assert _archive_args(probe) == []
+    assert probe["classpath"].split(os.pathsep)[0].rstrip("/") == str(conf)
+    assert not os.path.exists(scratch / "cds")
