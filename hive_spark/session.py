@@ -37,7 +37,7 @@ Scale notes (100 TB design intent):
   verifying Spark's classes from 287 jars; Hive pays the same per job,
   and Shark's and Dremel's answer is a long-lived server. ``get_session``
   keeps the classes instead: a JDK dynamic AppCDS archive of every class
-  the built-in loaders loaded in one session (~160-170 MB; Janino's
+  the built-in loaders loaded in one session (~160-175 MB; Janino's
   signed jar and pre-Java-6 class files are left out), mapped read-only
   by later JVMs. The first JVM for a key runs with
   ``-XX:ArchiveClassesAtExit`` and dumps at exit under a name unique to
@@ -54,8 +54,10 @@ Scale notes (100 TB design intent):
   need a class path without non-empty directories, and Spark puts its
   conf directory first; when that directory holds only ``*.template``
   files the launch points ``SPARK_CONF_DIR`` at an empty directory, and
-  when it holds real configuration the JVM gets no archive. A session
-  whose JVM is already running (a foreign driver's) is not touched.
+  when it holds real configuration the JVM gets no archive. (Another
+  non-empty directory on the class path, which no caller adds, fails
+  the dump at exit; nothing is published.) A session whose JVM is
+  already running (a foreign driver's) is not touched.
 """
 
 from __future__ import annotations
@@ -182,10 +184,7 @@ def get_session(
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
 
-    if archive is None:
-        spark = builder.getOrCreate()
-    else:
-        spark = archive.launch(builder)
+    spark = builder.getOrCreate() if archive is None else archive.launch(builder)
     spark.sparkContext.setLogLevel("WARN")
     register_functions(spark)
     return spark
@@ -194,16 +193,18 @@ def get_session(
 class _ClassArchive:
     """The driver JVM's dynamic AppCDS archive (see the scale note)."""
 
-    def __init__(self, root: str, key: str, conf_dir: str) -> None:
-        self.path = os.path.join(root, f"spark-{key}.jsa")
-        self.conf_dir = conf_dir
+    def __init__(self, key: str) -> None:
+        from hive_spark.scratch import scratch_dir
+
+        self.path = os.path.join(scratch_dir("cds"), f"spark-{key}.jsa")
+        self.conf_dir = scratch_dir("cds", "conf")  # stays empty
         if os.path.isfile(self.path):
             self.tmp = None
             self.option = f"-XX:SharedArchiveFile={self.path}"
         else:
             self.tmp = f"{self.path}.{os.getpid()}.tmp"
             # the dump warns once per class it skips (signed jars, old
-            # class-file versions): ~700 lines at exit
+            # class-file versions): ~640 lines at exit
             self.option = f"-XX:ArchiveClassesAtExit={self.tmp} -Xlog:cds=off"
 
     @classmethod
@@ -224,11 +225,7 @@ class _ClassArchive:
         ):
             return None
         key = _archive_key(spark_home)
-        if key is None:
-            return None
-        from hive_spark.scratch import scratch_dir
-
-        return cls(scratch_dir("cds"), key, scratch_dir("cds", "conf"))
+        return None if key is None else cls(key)
 
     def launch(self, builder: SparkSession.Builder) -> SparkSession:
         """``builder.getOrCreate()`` with the empty conf directory in
