@@ -131,9 +131,13 @@ def _archive_args(probe: dict) -> list[str]:
 @pytest.fixture(scope="module")
 def written(tmp_path_factory):
     """A session started with no archive for its key, and the archive
-    its JVM wrote at exit."""
+    its JVM wrote at exit (deleted afterwards: pytest keeps its last
+    temporary directories, and an archive is ~170 MB)."""
+    import shutil
+
     scratch = tmp_path_factory.mktemp("cds_written")
-    return scratch, _probe(scratch)
+    yield scratch, _probe(scratch)
+    shutil.rmtree(scratch, ignore_errors=True)
 
 
 def test_missing_archive_is_written_and_published(written):
@@ -185,7 +189,10 @@ def test_session_starts_over_a_bad_archive(written, tmp_path, kind):
         data[at] = ord("9") if data[at] != ord("9") else ord("8")
     with open(path, "wb") as f:
         f.write(data)
-    probe = _probe(tmp_path)
+    try:
+        probe = _probe(tmp_path)
+    finally:
+        os.remove(path)
     assert probe["rows"] == 7
     assert _archive_args(probe) == [f"-XX:SharedArchiveFile={path}"]
 
