@@ -21,10 +21,12 @@ import re
 
 from pyspark.sql import SparkSession
 
+from hive_spark.session import state
+
 _FIXED_TIME = 0  # qtest determinism: Hive prints epoch grant times
 
 
-class _AuthState:
+class AuthState:
     def __init__(self) -> None:
         self.roles: set[str] = {"public", "admin"}
         # role -> list of (principal_name, principal_type, admin_option)
@@ -38,13 +40,6 @@ class _AuthState:
         # (db, table) -> owner user (object creator has all privileges,
         # SQLStdHiveAuthorizationValidator's ownership short-circuit)
         self.owners: dict[tuple, str] = {}
-
-
-_STATES: dict[int, _AuthState] = {}
-
-
-def _state(spark: SparkSession) -> _AuthState:
-    return _STATES.setdefault(id(spark), _AuthState())
 
 
 def current_user() -> str:
@@ -150,7 +145,7 @@ def handle(spark: SparkSession, stmt: str):
     """Execute an authorization statement. Returns a DataFrame for SHOW
     forms, True for handled commands, None if `stmt` is not an auth
     statement (caller falls through)."""
-    st = _state(spark)
+    st = state(spark).auth
     m = _CREATE_ROLE.match(stmt)
     if m:
         role = m.group(1).lower()
@@ -358,7 +353,7 @@ def enforcement_enabled(spark: SparkSession) -> bool:
 def record_owner(spark: SparkSession, name: str) -> None:
     """Remember the creator of a table/view; owners pass all checks on
     their own objects (StorageBasedAuthorizationProvider ownership)."""
-    st = _state(spark)
+    st = state(spark).auth
     if "." in name:
         db, tbl = name.rsplit(".", 1)
     else:
@@ -407,7 +402,7 @@ def _resolve(spark: SparkSession, name: str) -> tuple:
     return (db.lower(), tbl.strip("`").lower())
 
 
-def _has_priv(st: _AuthState, db: str, tbl: str, priv: str) -> bool:
+def _has_priv(st: AuthState, db: str, tbl: str, priv: str) -> bool:
     """True when the current user (directly or via a CURRENT role) holds
     `priv` on (db, tbl) — table-level or database-level, whole-object
     grants only (column grants don't authorize the full table)."""
@@ -514,7 +509,7 @@ def check_statement(
     is authorized against the statement it runs."""
     if not enforcement_enabled(spark):
         return
-    st = _state(spark)
+    st = state(spark).auth
     if "admin" in st.current_roles:
         return  # admin role active: all privileges (SQLStdAuth)
     user = current_user()

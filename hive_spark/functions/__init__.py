@@ -33,9 +33,6 @@ from pyspark.sql import SparkSession
 # `quote` and `mask` are native in Spark 4 with Hive-matching semantics
 # (verified: quote("don't") -> 'don\'t', mask('Abc-123') -> Xxx-nnn);
 # the positional mask variants below compose the native `mask`.
-# `quote` and `mask` are native in Spark 4 with Hive-matching semantics
-# (verified: quote("don't") -> 'don\'t', mask('Abc-123') -> Xxx-nnn);
-# the positional mask variants below compose the native `mask`.
 _MASK_EXPR = "mask({s})"
 
 _SQL_UDFS: list[str] = [

@@ -86,7 +86,7 @@ from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession
 
 from hive_spark import authz
-from hive_spark.session import read_parquet
+from hive_spark.session import read_parquet, state
 from hive_spark.sqltext import (
     close_bracket,
     code_matches,
@@ -223,9 +223,9 @@ _METADATA_NOOP = re.compile(
 
 # explicit LOCK TABLE/DATABASE statements (ref: ql/.../ddl/table/lock/
 # LockTableDesc; DbTxnManager treats them as advisory session locks) —
-# recorded per-session and surfaced through SHOW LOCKS. Real writer
-# serialization is the lockdb central database's job (hive_spark.lockdb).
-_EXPLICIT_LOCKS: dict[int, dict[str, str]] = {}
+# recorded in state(spark).explicit_locks and surfaced through SHOW
+# LOCKS. Real writer serialization is the lockdb central database's job
+# (hive_spark.lockdb); an explicit lock excludes no writer.
 _LOCK_STMT = re.compile(
     r"^\s*LOCK\s+(TABLE|DATABASE)\s+`?([\w.]+)`?"
     r"(?:\s+PARTITION\s*\([^)]*\))?\s+(SHARED|EXCLUSIVE)\s*$",
@@ -240,7 +240,6 @@ _UNLOCK_STMT = re.compile(
 # SHOW COMPACTIONS reads COMPACTION_QUEUE): ALTER TABLE ... COMPACT
 # enqueues; our CoW tables have no delta files so requests complete
 # immediately ("succeeded")
-_COMPACTIONS: dict[int, list[tuple]] = {}
 _COMPACT_STMT = re.compile(
     r"^\s*ALTER\s+TABLE\s+`?([\w.]+)`?\s*"
     r"(?:PARTITION\s*\(([^)]*)\)\s*)?COMPACT\s+'(\w+)'"
@@ -252,7 +251,6 @@ _COMPACT_STMT = re.compile(
 # view partitions: pure metastore metadata, no files (ref: ql/.../ddl/
 # view/AlterViewAddPartitionAnalyzer — Hive records the spec and SHOW
 # PARTITIONS / DESCRIBE surface it)
-_VIEW_PARTS: dict[int, dict[str, list[str]]] = {}
 _ALTER_VIEW_PART = re.compile(
     r"^\s*ALTER\s+VIEW\s+`?([\w.]+)`?\s+(ADD|DROP)\s+"
     r"(?:IF\s+(?:NOT\s+)?EXISTS\s+)?"
@@ -2703,16 +2701,12 @@ def _hive_split_args(cmd: str) -> list[str]:
     return args
 
 
-# session resources from ADD FILE: basename -> absolute local path
-_ADDED_FILES: dict[int, dict[str, str]] = {}
-
-
 def _absolutize_added_files(spark: SparkSession, stmt: str) -> str:
     """TRANSFORM USING 'python input20_script.py': Hive execs in a work
     dir seeded with ADD FILE resources; Spark's script transform runs in
     the executor cwd, so substitute registered basenames with their
     resolved absolute paths inside the USING command literal."""
-    added = _ADDED_FILES.get(id(spark))
+    added = state(spark).added_files
     if not added or not re.search(r"(?i)\bUSING\s+['\"]", stmt):
         return stmt
 
@@ -3448,13 +3442,13 @@ def _reorder_ctes(spark, stmt: str) -> str:
 
 
 def _inline_macros(spark, stmt: str) -> str:
-    for name, (params, body) in _MACROS.get(id(spark), {}).items():
+    for name, (params, body) in state(spark).macros.items():
         stmt = rewrite_calls(stmt, name, _macro_fold(params, body))
     return stmt
 
 
 def _fold_functions(spark, stmt: str) -> str:
-    for name, fold in _FUNC_FOLDS.get(id(spark), {}).items():
+    for name, fold in state(spark).func_folds.items():
         stmt = rewrite_calls(stmt, name, fold)
     return stmt
 
@@ -5384,7 +5378,6 @@ _SHOW_MVS = re.compile(
 _REBUILD_MV = re.compile(
     r"^\s*ALTER\s+MATERIALIZED\s+VIEW\s+`?([\w.]+)`?\s+REBUILD\s*$", re.I
 )
-_MV_DEFS: dict[int, dict[str, str]] = {}  # id(spark) -> name -> sql
 
 # EXPLAIN LOCKS / DDL / AUTHORIZATION (ref: ql/.../parse/
 # ExplainConfiguration.java; output shapes from ExplainTask.java).
@@ -5607,8 +5600,8 @@ def _exec_import(spark, res, m, stmt):
 
 # ALTER TABLE ... ADD CONSTRAINT (ref: ql/.../ddl/table/constraint/
 # AlterTableAddConstraintAnalyzer.java). Hive constraints are
-# informational (NOVALIDATE); they land in the same ConstraintRegistry
-# the ddl.py API uses, so validate()/CBO parity tools see them.
+# informational (NOVALIDATE): recorded by name in
+# state(spark).constraints, which only DROP CONSTRAINT reads.
 _ADD_CONSTRAINT = re.compile(
     r"^\s*ALTER\s+TABLE\s+`?([\w.]+)`?\s+ADD\s+CONSTRAINT\s+`?(\w+)`?\s+"
     r"(PRIMARY\s+KEY|UNIQUE|FOREIGN\s+KEY|CHECK)\s*"
@@ -5616,12 +5609,10 @@ _ADD_CONSTRAINT = re.compile(
     r"([\s\S]*)$",
     re.I,
 )
-CONSTRAINTS: dict[int, object] = {}  # id(spark) -> ddl.ConstraintRegistry
-_CONSTRAINT_NAMES: dict[int, dict[str, object]] = {}
 
 
 def _exec_add_constraint(spark, res, m, stmt):
-    from hive_spark.ddl import Constraint, ConstraintRegistry
+    from hive_spark.ddl import Constraint
 
     table, cname, kind_txt, inner, tail = m.groups()
     kind = {
@@ -5649,9 +5640,7 @@ def _exec_add_constraint(spark, res, m, stmt):
         kind=kind, table=table.split(".")[-1].lower(), cols=cols, rely=rely,
         check_expr=check_expr, ref_table=ref_table, ref_cols=ref_cols,
     )
-    reg = CONSTRAINTS.setdefault(id(spark), ConstraintRegistry())
-    reg.add(c)
-    _CONSTRAINT_NAMES.setdefault(id(spark), {})[cname.lower()] = c
+    state(spark).constraints[cname.lower()] = c
 
 
 _CREATE_EXT_TEXT = re.compile(
@@ -5889,16 +5878,12 @@ _CREATE_MACRO = re.compile(
 )
 _DROP_MACRO = re.compile(r"^\s*DROP\s+TEMPORARY\s+MACRO\s+(?:IF\s+EXISTS\s+)?(\w+)", re.I)
 
-# session-scoped macro registry (Hive macros live for the session)
-_MACROS: dict[int, dict[str, tuple[list[str], str]]] = {}
-
 # SQL-text MatchPath PTF: `FROM matchpath(on <rel> [distribute by ...]
 # [sort by ...] arg1('<pattern>'), arg2('SYM'), arg3(<pred>), ...,
 # argN('<result list>'))` (ref: ql/.../udf/ptf/MatchPath.java — symbols
 # are named predicates, the pattern is a concatenation of symbols with
 # + / * quantifiers, each row starting a match emits one row whose
 # `tpath` is the matched path as an array of input-row structs).
-_MATCHPATH_FNS: dict[int, set] = {}
 _MP_SEQ = [0]
 
 
@@ -6123,9 +6108,6 @@ _CREATE_FUNCTION_CLASS = re.compile(
 _DROP_FUNCTION = re.compile(
     r"^\s*DROP\s+TEMPORARY\s+FUNCTION\s+(?:IF\s+EXISTS\s+)?(\w+)\s*$", re.I
 )
-# session-scoped alias -> fold for class-mapped functions
-_FUNC_FOLDS: dict[int, dict[str, object]] = {}
-
 # names rewrite_statement folds inline (no Spark catalog entry exists)
 _ENGINE_FOLDED_FNS = {
     "sort_array_by", "field", "likeany", "likeall", "dboutput",
@@ -6263,11 +6245,11 @@ def _record_owner(spark: SparkSession, stmt: str) -> None:
 def _create_macro(spark, res, m, stmt):
     name, sig, body = m.group(1).lower(), m.group(2), m.group(3)
     params = [p.strip().split()[0] for p in sig.split(",") if p.strip()]
-    _MACROS.setdefault(id(spark), {})[name] = (params, body.strip())
+    state(spark).macros[name] = (params, body.strip())
 
 
 def _drop_macro(spark, res, m, stmt):
-    _MACROS.get(id(spark), {}).pop(m.group(1).lower(), None)
+    state(spark).macros.pop(m.group(1).lower(), None)
 
 
 def _prepare(spark, res, m, stmt):
@@ -6353,7 +6335,7 @@ def _show_locks(spark, res, m, stmt):
         })
     ]
     # explicit LOCK TABLE/DATABASE session locks
-    for key, mode in sorted(_EXPLICIT_LOCKS.get(id(spark), {}).items()):
+    for key, mode in sorted(state(spark).explicit_locks.items()):
         name = key.split(":", 1)[1]
         if not wanted or name.split(".")[-1] == wanted:
             rows.append((name, mode, os.getpid(), True))
@@ -6554,10 +6536,7 @@ _DROP_CONSTRAINT = re.compile(
 
 
 def _drop_constraint(spark, res, m, stmt):
-    c = _CONSTRAINT_NAMES.get(id(spark), {}).pop(m.group(1).lower(), None)
-    reg = CONSTRAINTS.get(id(spark))
-    if reg is not None and c is not None:
-        reg.constraints = [x for x in reg.constraints if x is not c]
+    state(spark).constraints.pop(m.group(1).lower(), None)
 
 
 def _transaction(spark, res, m, stmt):
@@ -6603,25 +6582,24 @@ def _authorization(spark, res, m, stmt):
 def _lock(spark, res, m, stmt):
     kind, name, mode = m.groups()
     key = f"{kind.upper()}:{name.lower()}"
-    _EXPLICIT_LOCKS.setdefault(id(spark), {})[key] = mode.upper()
+    state(spark).explicit_locks[key] = mode.upper()
 
 
 def _unlock(spark, res, m, stmt):
     kind, name = m.groups()
-    locks = _EXPLICIT_LOCKS.get(id(spark), {})
-    locks.pop(f"{kind.upper()}:{name.lower()}", None)
+    state(spark).explicit_locks.pop(f"{kind.upper()}:{name.lower()}", None)
 
 
 def _compact(spark, res, m, stmt):
     tbl, pspec, ctype = m.groups()
-    _COMPACTIONS.setdefault(id(spark), []).append(
+    state(spark).compactions.append(
         (tbl.lower(), (pspec or "").strip(), ctype.lower(), "succeeded")
     )
 
 
 def _alter_view_partitions(spark, res, m, stmt):
     view, verb, specs_text = m.groups()
-    vparts = _VIEW_PARTS.setdefault(id(spark), {}).setdefault(view.lower(), [])
+    vparts = state(spark).view_parts.setdefault(view.lower(), [])
     for sp in re.findall(r"PARTITION\s*\(([^)]*)\)", specs_text, re.I):
         pname = _part_spec_to_name(sp)
         if verb.upper() == "ADD" and pname not in vparts:
@@ -6638,7 +6616,7 @@ _SHOW_PARTITIONS = re.compile(
 
 
 def _show_view_partitions(spark, res, m, stmt):
-    views = _VIEW_PARTS.get(id(spark), {})
+    views = state(spark).view_parts
     if m.group(1).lower() not in views:
         try:
             if spark.catalog.getTable(m.group(1)).tableType != "VIEW":
@@ -6660,7 +6638,7 @@ _SHOW_EXTENDED_PARTITION = re.compile(
 
 
 def _show_view_partition_extended(spark, res, m, stmt):
-    if m.group(2).lower() not in _VIEW_PARTS.get(id(spark), {}):
+    if m.group(2).lower() not in state(spark).view_parts:
         return _DECLINE
     # metadata-only view partition: the table-level lines
     return spark.sql(rewrite_statement(spark, m.group(1)))
@@ -6674,7 +6652,7 @@ _DESCRIBE_PARTITION = re.compile(
 
 
 def _describe_view_partition(spark, res, m, stmt):
-    if m.group(3).lower() not in _VIEW_PARTS.get(id(spark), {}):
+    if m.group(3).lower() not in state(spark).view_parts:
         return _DECLINE
     # the view's columns (the partition is metadata-only)
     return spark.sql(f"DESCRIBE {m.group(2) or ''}`{m.group(3)}`")
@@ -6829,7 +6807,7 @@ def _show_compactions(spark, res, m, stmt):
     return spark.createDataFrame(
         [
             (str(i + 1), "default", t, p, c, s, "")
-            for i, (t, p, c, s) in enumerate(_COMPACTIONS.get(id(spark), []))
+            for i, (t, p, c, s) in enumerate(state(spark).compactions)
         ],
         "compactionid string, dbname string, tabname string,"
         " partname string, type string, state string, workerid string",
@@ -6862,7 +6840,7 @@ def _add_resource(spark, res, m, stmt):
         # add_resource); here the executor IS local, so record basename
         # -> resolved path and let the TRANSFORM USING rewrite
         # absolutize commands
-        files = _ADDED_FILES.setdefault(id(spark), {})
+        files = state(spark).added_files
         for p in am.group(2).split():
             base = os.path.basename(p.rstrip("/"))
             if am.group(1).upper() == "DELETE":
@@ -6897,16 +6875,16 @@ def _create_materialized_view(spark, res, m, stmt):
     if not (re.search(r"(?i)IF\s+NOT\s+EXISTS", stmt)
             and spark.catalog.tableExists(name)):
         spark.sql(sql).write.mode("overwrite").saveAsTable(name)
-    _MV_DEFS.setdefault(id(spark), {})[name.lower()] = sql
+    state(spark).mv_defs[name.lower()] = sql
 
 
 def _drop_materialized_view(spark, res, m, stmt):
     spark.sql(f"DROP TABLE IF EXISTS `{m.group(1)}`")
-    _MV_DEFS.get(id(spark), {}).pop(m.group(1).lower(), None)
+    state(spark).mv_defs.pop(m.group(1).lower(), None)
 
 
 def _show_materialized_views(spark, res, m, stmt):
-    names = sorted(_MV_DEFS.get(id(spark), {}))
+    names = sorted(state(spark).mv_defs)
     return spark.createDataFrame(
         [(n, "Yes", "Manual refresh") for n in names],
         "mv_name string, rewrite_enabled string, mode string",
@@ -6914,7 +6892,7 @@ def _show_materialized_views(spark, res, m, stmt):
 
 
 def _rebuild_materialized_view(spark, res, m, stmt):
-    sql = _MV_DEFS.get(id(spark), {}).get(m.group(1).lower())
+    sql = state(spark).mv_defs.get(m.group(1).lower())
     if sql is None:
         raise ValueError(f"REBUILD of unknown materialized view {m.group(1)!r}")
     spark.sql(sql).write.mode("overwrite").saveAsTable(m.group(1))
@@ -7039,8 +7017,8 @@ def _describe_folded_function(spark, res, m, stmt):
     # engine-folded functions aren't in Spark's catalog; answer the way
     # FunctionRegistry would
     name = m.group(1).lower()
-    if not (name in _ENGINE_FOLDED_FNS or name in _MACROS.get(id(spark), {})
-            or name in _FUNC_FOLDS.get(id(spark), {})):
+    if not (name in _ENGINE_FOLDED_FNS or name in state(spark).macros
+            or name in state(spark).func_folds):
         return _DECLINE
     return spark.createDataFrame(
         [(f"{name} is an engine-folded function "
@@ -7064,30 +7042,30 @@ def _create_matchpath_alias(spark, res, m, stmt):
     # a user-registered alias of the MatchPath PTF (ptf_register_tblfn.q)
     if "MatchPath" not in m.group(2):
         return _DECLINE
-    _MATCHPATH_FNS.setdefault(id(spark), {"matchpath"}).add(m.group(1).lower())
+    state(spark).matchpath_fns.add(m.group(1).lower())
     return None
 
 
 def _create_folded_function(spark, res, m, stmt):
     if m.group(2) not in _FUNCTION_CLASS_FOLDS:
         return _DECLINE
-    _FUNC_FOLDS.setdefault(id(spark), {})[m.group(1).lower()] = (
-        _FUNCTION_CLASS_FOLDS[m.group(2)]
-    )
+    folds = state(spark).func_folds
+    folds[m.group(1).lower()] = _FUNCTION_CLASS_FOLDS[m.group(2)]
     return None
 
 
 def _drop_folded_function(spark, res, m, stmt):
-    if _FUNC_FOLDS.get(id(spark), {}).pop(m.group(1).lower(), None) is None:
+    if state(spark).func_folds.pop(m.group(1).lower(), None) is None:
         return _DECLINE
     return None
 
 
 def _drop_matchpath_alias(spark, res, m, stmt):
-    names = _MATCHPATH_FNS.get(id(spark), set())
-    if m.group(1).lower() not in names:
+    # the built-in name is no alias: dropping it is Spark's to refuse
+    name = m.group(1).lower()
+    if name == "matchpath" or name not in state(spark).matchpath_fns:
         return _DECLINE
-    names.discard(m.group(1).lower())
+    state(spark).matchpath_fns.discard(name)
     return None
 
 
@@ -7131,7 +7109,7 @@ def _exec_sql(spark, res, m, stmt):
         and re.search(r"`[^`]+`", stmt)
     ):
         stmt = _expand_regex_columns(spark, stmt)
-    mp_names = _MATCHPATH_FNS.get(id(spark), {"matchpath"})
+    mp_names = state(spark).matchpath_fns
     if any(re.search(rf"(?i)\b{n}\s*\(\s*on\b", stmt) for n in mp_names):
         stmt = _exec_matchpath_ptf(spark, stmt, mp_names)
     rewritten = _traced_rewrite(res, spark, stmt)

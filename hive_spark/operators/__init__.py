@@ -20,6 +20,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hive_spark.session import register_functions, register_views, state
+
 
 @dataclass(frozen=True)
 class QuerySpec:
@@ -105,33 +107,22 @@ def ensure_engine(spark: SparkSession) -> None:
             spark.conf.set(k, v)
         except Exception:
             pass
-    from hive_spark.session import register_functions
-
     register_functions(spark)
-
-
-_VIEWS_CACHE: dict[tuple[int, str], dict[str, DataFrame]] = {}
-# sf_dir whose views are CURRENTLY registered per session — table NAMES
-# resolve to the last registration, so a cache hit is only valid while
-# this session's active dir matches (queries alternate dirs: entry runs
-# sf0.001, correctness runs sf0.01, possibly in one session).
-_ACTIVE_SF: dict[int, str] = {}
 
 
 def views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Register the testdata tables as temp views on this session and
-    return them. Memoized while sf_dir stays the active registration:
-    registration reads parquet footers for every table, which adds up
-    across a 100-query registry run."""
-    from hive_spark.session import register_views
-
-    sid = id(spark)
-    if _ACTIVE_SF.get(sid) == sf_dir:
-        return _VIEWS_CACHE[(sid, sf_dir)]
+    return them. Memoized while sf_dir stays the active registration
+    (table names resolve to the last one; entry runs sf0.001 and
+    correctness runs sf0.01, possibly in one session): registration
+    reads parquet footers for every table, which adds up across a
+    100-query registry run."""
+    st = state(spark)
+    if st.views is not None and st.views[0] == sf_dir:
+        return st.views[1]
     ensure_engine(spark)
     out = register_views(spark, sf_dir)
-    _VIEWS_CACHE[(sid, sf_dir)] = out
-    _ACTIVE_SF[sid] = sf_dir
+    st.views = (sf_dir, out)
     return out
 
 

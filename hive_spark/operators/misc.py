@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_spark.operators import QuerySpec, views
+from hive_spark.session import state
 
 
 def approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -213,9 +214,6 @@ ORDER BY l_returnflag
 """
 
 
-_STAR_MVS: dict = {}
-
-
 def _get_star_mv(spark: SparkSession, sf_dir: str):
     """The q3-family star MV, constructed once per (session, sf_dir).
     Matching inside try_rewrite uses sameResult against plan handles
@@ -226,9 +224,9 @@ def _get_star_mv(spark: SparkSession, sf_dir: str):
     from hive_spark.plans import AggregateMV
 
     _register_star(spark, sf_dir)
-    key = (id(spark), sf_dir)
-    if key not in _STAR_MVS:
-        _STAR_MVS[key] = AggregateMV(
+    mvs = state(spark).star_mvs
+    if sf_dir not in mvs:
+        mvs[sf_dir] = AggregateMV(
             spark,
             f"q3_family_{os.path.basename(os.path.normpath(sf_dir))}",
             spark.table("store_sales"),
@@ -245,7 +243,7 @@ def _get_star_mv(spark: SparkSession, sf_dir: str):
                 (spark.table("item"), "ss_item_sk", "i_item_sk"),
             ],
         )
-    return _STAR_MVS[key]
+    return mvs[sf_dir]
 
 
 def mv_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -58,7 +58,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from hive_spark.operators import QuerySpec, views
-from hive_spark.session import read_parquet
+from hive_spark.session import read_parquet, state
 
 _NCUST = "(SELECT max(c_custkey) FROM customer)"
 _NSTORE = "(SELECT CAST(least(count(*), 25) AS INT) FROM supplier)"
@@ -393,12 +393,6 @@ FROM lineitem, orders WHERE l_orderkey = o_orderkey"""
     ]
 
 
-# last sf_dir whose star views are ACTIVE per session (the view names
-# are shared, so memoizing on (session, sf_dir) pairs would silently
-# keep another sf's views active after switching back — same pattern
-# as operators.views()'s _ACTIVE_SF)
-_ACTIVE_STAR: dict[int, str] = {}
-
 # wall-clock of the last star materialization build (0.0 on a disk-cache
 # hit) and the process-cumulative total across all dirs — bench.py
 # reports the total so the one-time ETL cost is visible instead of
@@ -485,7 +479,7 @@ def measure_cold_star_build(spark: SparkSession, sf_dir: str) -> float:
     views(spark, sf_dir)
     _sqls, dst = _star_plan(spark, sf_dir)
     shutil.rmtree(dst, ignore_errors=True)
-    _ACTIVE_STAR.pop(id(spark), None)
+    state(spark).star_dir = None
     _register_star(spark, sf_dir)
     return LAST_BUILD_SEC
 
@@ -519,7 +513,8 @@ def _register_star(spark: SparkSession, sf_dir: str) -> None:
     """
     global LAST_BUILD_SEC, TOTAL_BUILD_SEC
     views(spark, sf_dir)
-    if _ACTIVE_STAR.get(id(spark)) == sf_dir:
+    # the star's view names are shared: only the last sf_dir is active
+    if state(spark).star_dir == sf_dir:
         return
 
     sqls, dst = _star_plan(spark, sf_dir)
@@ -625,7 +620,7 @@ def _register_star(spark: SparkSession, sf_dir: str) -> None:
         TOTAL_BUILD_SEC = round(TOTAL_BUILD_SEC + LAST_BUILD_SEC, 3)
     for name, _sql in sqls:
         read_parquet(spark, os.path.join(dst, name)).createOrReplaceTempView(name)
-    _ACTIVE_STAR[id(spark)] = sf_dir
+    state(spark).star_dir = sf_dir
 
 
 def _oracle(body: str) -> str:

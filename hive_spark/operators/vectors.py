@@ -34,6 +34,7 @@ carried as DECIMAL(38,0) so they cannot overflow at 100 TB row counts.
 from pyspark.sql import DataFrame, SparkSession
 
 from hive_spark.operators import QuerySpec, views
+from hive_spark.session import state
 
 # quantized dot(a,b): sum of floor(x*y*1e12) as BIGINT (exact, associative)
 _DOTQ = (
@@ -228,9 +229,6 @@ def _register_lsh_views(
     )
 
 
-_COUNT_MEMO: dict[tuple[int, str], int] = {}
-
-
 def _corpus_rows(spark: SparkSession, sf_dir: str) -> int:
     """Embedding row count for lsh_cfg, memoized on the view's SEMANTIC
     identity (semanticHash of the analyzed plan) — parquet count() is
@@ -240,10 +238,11 @@ def _corpus_rows(spark: SparkSession, sf_dir: str) -> int:
     memo (r6 carry-over; same root cause as the star-MV canon staleness,
     same cure: plan identity, not registration-time identity)."""
     df = spark.table("embeddings")
-    key = (id(spark), df.semanticHash())
-    if key not in _COUNT_MEMO:
-        _COUNT_MEMO[key] = df.count()
-    return _COUNT_MEMO[key]
+    key = df.semanticHash()
+    memo = state(spark).embedding_rows
+    if key not in memo:
+        memo[key] = df.count()
+    return memo[key]
 
 
 def knn_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -31,6 +31,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hive_spark.session import state
+
 
 @dataclass
 class TablePolicy:
@@ -48,11 +50,6 @@ class TablePolicy:
 
 _POLICIES: dict[str, TablePolicy] = {}
 _STASH_SUFFIX = "__unmasked"
-# sessions (by id) with policies currently enabled -> user
-_ACTIVE: dict[int, str] = {}
-# sessions (by id) -> table names rewritten at enable time, so disable()
-# restores exactly what was masked even if a policy is dropped meanwhile
-_REWRITTEN: dict[int, list[str]] = {}
 
 
 def register_policy(policy: TablePolicy) -> None:
@@ -85,7 +82,8 @@ def enable_for_user(spark: SparkSession, user: str) -> list[str]:
     """Swap every governed table's view for its masked relation, as seen
     by `user`. Returns the rewritten table names. Idempotent per user;
     call disable() to restore the pristine relations."""
-    if _ACTIVE.get(id(spark)) == user:
+    masking = state(spark).masking
+    if masking is not None and masking[0] == user:
         return []
     disable(spark)
     rewritten = []
@@ -97,8 +95,7 @@ def enable_for_user(spark: SparkSession, user: str) -> list[str]:
         masked_relation(spark.table(name + _STASH_SUFFIX), pol)\
             .createOrReplaceTempView(name)
         rewritten.append(name)
-    _ACTIVE[id(spark)] = user
-    _REWRITTEN[id(spark)] = list(rewritten)
+    state(spark).masking = (user, list(rewritten))
     return rewritten
 
 
@@ -106,14 +103,14 @@ def disable(spark: SparkSession) -> None:
     """Restore every stashed pristine relation. Restores from the list
     recorded at enable time, NOT the live policy dict — a policy dropped
     while masking is active must still have its view unwound."""
-    if id(spark) not in _ACTIVE:
+    st = state(spark)
+    if st.masking is None:
         return
-    for name in _REWRITTEN.get(id(spark), []):
+    for name in st.masking[1]:
         stash = name + _STASH_SUFFIX
         try:
             spark.table(stash).createOrReplaceTempView(name)
             spark.catalog.dropTempView(stash)
         except Exception:
             pass  # stash vanished (view dropped externally)
-    _ACTIVE.pop(id(spark), None)
-    _REWRITTEN.pop(id(spark), None)
+    st.masking = None

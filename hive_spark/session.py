@@ -65,9 +65,16 @@ from __future__ import annotations
 import contextlib
 import os
 import weakref
+from dataclasses import dataclass, field
+from typing import TYPE_CHECKING, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+if TYPE_CHECKING:
+    from hive_spark.authz import AuthState
+    from hive_spark.ddl import Constraint
+    from hive_spark.plans import AggregateMV
 
 # Tables the driver materializes at /root/testdata/sf*/ (TESTDATA.md).
 TESTDATA_TABLES = (
@@ -85,8 +92,47 @@ TESTDATA_TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# sessions whose SQL namespace already holds the Hive gap functions
-_FUNCS_REGISTERED: weakref.WeakSet[SparkSession] = weakref.WeakSet()
+
+def _auth_state() -> AuthState:
+    from hive_spark.authz import AuthState  # authz imports this module
+
+    return AuthState()
+
+
+@dataclass
+class SessionState:
+    """A Spark session's engine state, as Hive's ``SessionState`` holds a
+    session's temporary functions, macros, locks, roles and resources."""
+
+    funcs_registered: bool = False  # the Hive gap functions are installed
+    views: tuple[str, dict[str, DataFrame]] | None = None  # (sf_dir, views)
+    star_dir: str | None = None  # sf_dir of the registered TPC-DS star views
+    star_mvs: dict[str, AggregateMV] = field(default_factory=dict)  # by sf_dir
+    embedding_rows: dict[str, int] = field(default_factory=dict)  # by semanticHash
+    masking: tuple[str, list[str]] | None = None  # (user, tables masked)
+    auth: AuthState = field(default_factory=_auth_state)
+    # HiveQL registries (hqlscript), by lower-case name
+    explicit_locks: dict[str, str] = field(default_factory=dict)  # "TABLE:t" -> mode
+    # (table, partition spec, type, state) per ALTER TABLE ... COMPACT
+    compactions: list[tuple[str, str, str, str]] = field(default_factory=list)
+    view_parts: dict[str, list[str]] = field(default_factory=dict)
+    added_files: dict[str, str] = field(default_factory=dict)  # ADD FILE -> path
+    mv_defs: dict[str, str] = field(default_factory=dict)  # MV -> its SQL
+    constraints: dict[str, Constraint] = field(default_factory=dict)
+    macros: dict[str, tuple[list[str], str]] = field(default_factory=dict)
+    matchpath_fns: set[str] = field(default_factory=lambda: {"matchpath"})  # + aliases
+    func_folds: dict[str, Callable] = field(default_factory=dict)  # alias -> fold
+
+
+# held weakly: a session's state goes with it
+_STATES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def state(spark: SparkSession) -> SessionState:
+    """The engine state of this Spark session, made on first use."""
+    if spark not in _STATES:
+        _STATES[spark] = SessionState()
+    return _STATES[spark]
 
 
 def get_session(
@@ -325,12 +371,12 @@ def register_functions(spark: SparkSession) -> None:
     """Install the Hive function gap-fill into this session's SQL
     namespace, once per session (``get_session`` and ``ensure_engine``
     both ask for it)."""
-    if spark in _FUNCS_REGISTERED:
+    if state(spark).funcs_registered:
         return
     from hive_spark.functions import register_all
 
     register_all(spark)
-    _FUNCS_REGISTERED.add(spark)
+    state(spark).funcs_registered = True
 
 
 def load_tables(

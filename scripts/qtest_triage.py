@@ -101,14 +101,12 @@ def main():
             # the script created so scripts can't collide on names;
             # reset the database pointer (scripts may USE other dbs)
             try:
-                from hive_spark import hqlscript as _hql
                 from hive_spark.sources.jdbc_handler import (
                     drop_memory_databases,
                 )
+                from tests.qtest_fixture_lib import reset_script_state
 
-                for _reg in (_hql._COMPACTIONS, _hql._EXPLICIT_LOCKS,
-                             _hql._VIEW_PARTS):
-                    _reg.pop(id(spark), None)
+                reset_script_state(spark)
                 drop_memory_databases(spark)
                 spark.conf.set("spark.sql.session.timeZone", "UTC")
                 spark.catalog.setCurrentDatabase("default")

@@ -14,6 +14,8 @@ import shutil
 
 from pyspark.sql import functions as F
 
+from hive_spark.session import state
+
 REF_ROOT = "/root/reference/ql/src"
 QDIR = "/root/reference/ql/src/test/queries/clientpositive"
 
@@ -99,11 +101,8 @@ def build_qtest_fixtures(spark, db: str, scratch: str) -> None:
     for t in spark.catalog.listTables():
         if t.isTemporary:
             spark.catalog.dropTempView(t.name)
-    from hive_spark import operators as _ops
-    from hive_spark.operators import tpcds as _tpcds
-
-    _ops._ACTIVE_SF.pop(id(spark), None)
-    _tpcds._ACTIVE_STAR.pop(id(spark), None)
+    state(spark).views = None
+    state(spark).star_dir = None
     lineitem_schema = (
         "l_orderkey int, l_partkey int, l_suppkey int, l_linenumber int,"
         " l_quantity double, l_extendedprice double, l_discount double,"
@@ -288,6 +287,30 @@ def _conf_overlay(spark) -> dict:
     return out
 
 
+def reset_script_state(spark) -> None:
+    """Drop the session state one script leaves that Hive's QTestUtil
+    resets between tests. Roles and grants are session-scoped in Hive's
+    qtests too (QTestUtil tears the session down), but table OWNERSHIP
+    is metastore state (the setup user owns src/srcpart across every
+    test), so owners carry over: wiping them made any later script that
+    SETs authorization.enabled=true (the masking_* family's
+    SQLStdHiveAuthorizerFactoryForTest preamble) deny the owner its own
+    fixture tables. The compaction queue, explicit locks, view
+    partitions and ADD FILE resources are metastore state QTestUtil
+    resets; a leaked compaction request would inflate a later script's
+    SHOW COMPACTIONS."""
+    from hive_spark.authz import AuthState
+
+    st = state(spark)
+    owners = st.auth.owners
+    st.auth = AuthState()
+    st.auth.owners.update(owners)
+    st.compactions.clear()
+    st.explicit_locks.clear()
+    st.view_parts.clear()
+    st.added_files.clear()
+
+
 def run_and_cleanup(
     spark, db: str, fname: str, fixture_tables: set, known_dbs: set | None = None
 ):
@@ -329,28 +352,7 @@ def run_and_cleanup(
                     spark.conf.set(k, v)
                 except Exception:
                     pass
-        # roles/grants a script creates are session-scoped in Hive's
-        # qtests too (QTestUtil tears the session down); drop ours —
-        # but table OWNERSHIP is metastore state in Hive (the setup
-        # user owns src/srcpart across every test), so carry owners
-        # over: wiping them made any later script that SETs
-        # authorization.enabled=true (the masking_* family's
-        # SQLStdHiveAuthorizerFactoryForTest preamble) deny the owner
-        # its own fixture tables (r7 corpus burst)
-        from hive_spark import authz as _authz
-
-        _owners_prev = dict(_authz._state(spark).owners)
-        _authz._STATES.pop(id(spark), None)
-        _authz._state(spark).owners.update(_owners_prev)
-        # per-session dialect registries (compaction queue, explicit
-        # locks, view partitions) are metastore state Hive's QTestUtil
-        # resets between tests — a leaked compaction request would
-        # inflate a later script's SHOW COMPACTIONS
-        from hive_spark import hqlscript as _hql
-
-        for _reg in (_hql._COMPACTIONS, _hql._EXPLICIT_LOCKS,
-                     _hql._VIEW_PARTS, _hql._ADDED_FILES):
-            _reg.pop(id(spark), None)
+        reset_script_state(spark)
         from hive_spark.sources.jdbc_handler import drop_memory_databases
 
         drop_memory_databases(spark)

@@ -8,6 +8,7 @@ import pytest
 
 from hive_spark.hqlscript import QTEST_TMP, run_script, split_statements
 from hive_spark.operators import views
+from hive_spark.session import state
 
 
 def test_split_respects_quotes_and_comments():
@@ -1630,15 +1631,11 @@ def _dir_lines(path):
 
 
 def _explicit_locks(spark):
-    from hive_spark.hqlscript import _EXPLICIT_LOCKS
-
-    return _EXPLICIT_LOCKS.get(id(spark), {})
+    return state(spark).explicit_locks
 
 
 def _session_entry(registry, spark, name):
-    from hive_spark import hqlscript
-
-    return name in getattr(hqlscript, registry).get(id(spark), {})
+    return name in getattr(state(spark), registry)
 
 
 def _scheduled(spark, name):
@@ -1745,11 +1742,11 @@ _STATEMENT_CASES = [
      [(1, "a"), (2, "b")]),
     ("add_constraint", "add_constraint", "",
      "ALTER TABLE st ADD CONSTRAINT hq_pk PRIMARY KEY (key) DISABLE NOVALIDATE",
-     None, lambda spark, out: _session_entry("_CONSTRAINT_NAMES", spark, "hq_pk")),
+     None, lambda spark, out: _session_entry("constraints", spark, "hq_pk")),
     ("drop_constraint", "drop_constraint",
      "ALTER TABLE st ADD CONSTRAINT hq_uk UNIQUE (value) DISABLE NOVALIDATE",
      "ALTER TABLE st DROP CONSTRAINT hq_uk", None,
-     lambda spark, out: not _session_entry("_CONSTRAINT_NAMES", spark, "hq_uk")),
+     lambda spark, out: not _session_entry("constraints", spark, "hq_uk")),
     ("start_transaction", "transaction", "", "START TRANSACTION",
      "SHOW TRANSACTIONS",
      lambda spark, out: [r[1] for r in _rows(out)] == ["OPEN"]),
@@ -1857,7 +1854,7 @@ _STATEMENT_CASES = [
     ("add_jar", "add_resource", "", "ADD JAR /nonexistent/hq.jar", None,
      lambda spark, out: out.skipped == ["ADD JAR /nonexistent/hq.jar"]),
     ("add_file", "add_resource", "", f"ADD FILE {_STMT_DIR}/src.q", None,
-     lambda spark, out: _session_entry("_ADDED_FILES", spark, "src.q")),
+     lambda spark, out: _session_entry("added_files", spark, "src.q")),
     ("metadata_noop", "metadata_noop", "",
      "ALTER TABLE st SET SERDEPROPERTIES ('a'='b')", None,
      lambda spark, out: out.skipped
@@ -1957,7 +1954,7 @@ _STATEMENT_CASES = [
     ("create_matchpath_alias", "create_matchpath_alias", "",
      "CREATE TEMPORARY FUNCTION hq_mp AS"
      " 'org.apache.hadoop.hive.ql.udf.ptf.MatchPath'", None,
-     lambda spark, out: _session_entry("_MATCHPATH_FNS", spark, "hq_mp")),
+     lambda spark, out: _session_entry("matchpath_fns", spark, "hq_mp")),
     ("create_folded_function", "create_folded_function", "",
      "CREATE TEMPORARY FUNCTION hq_len AS"
      " 'org.apache.hadoop.hive.ql.udf.UDFTestLength'",
@@ -1966,12 +1963,12 @@ _STATEMENT_CASES = [
      "CREATE TEMPORARY FUNCTION hq_len2 AS"
      " 'org.apache.hadoop.hive.ql.udf.UDFTestLength'",
      "DROP TEMPORARY FUNCTION hq_len2", None,
-     lambda spark, out: not _session_entry("_FUNC_FOLDS", spark, "hq_len2")),
+     lambda spark, out: not _session_entry("func_folds", spark, "hq_len2")),
     ("drop_matchpath_alias", "drop_matchpath_alias",
      "CREATE TEMPORARY FUNCTION hq_mp2 AS"
      " 'org.apache.hadoop.hive.ql.udf.ptf.MatchPath'",
      "DROP TEMPORARY FUNCTION hq_mp2", None,
-     lambda spark, out: not _session_entry("_MATCHPATH_FNS", spark, "hq_mp2")),
+     lambda spark, out: not _session_entry("matchpath_fns", spark, "hq_mp2")),
     ("update_path_table", "update",
      "DROP TABLE IF EXISTS up; CREATE TABLE up USING parquet AS SELECT * FROM st",
      "UPDATE up SET value = 'z' WHERE key = 1", "SELECT key, value FROM up",
@@ -2140,6 +2137,52 @@ def test_every_statement_row_has_a_case():
     assert {row[0] for row in _STATEMENTS} == {
         c[1] for c in _STATEMENT_CASES if not isinstance(c[5], type)
     }
+
+
+def test_drop_of_builtin_matchpath_is_refused(spark, stmt_db):
+    """DROP TEMPORARY FUNCTION matchpath drops no alias: Spark refuses it,
+    as in a session that made no alias, and the MatchPath PTF keeps its
+    name in a session that made one."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        run_script(
+            spark,
+            "CREATE TEMPORARY FUNCTION hq_mp4 AS"
+            " 'org.apache.hadoop.hive.ql.udf.ptf.MatchPath';",
+        )
+        with pytest.raises(AnalysisException, match="ROUTINE_NOT_FOUND"):
+            run_script(spark, "DROP TEMPORARY FUNCTION matchpath;")
+        out = run_script(
+            spark,
+            "USE hqstmt; SELECT key, n FROM matchpath(on st sort by key"
+            " arg1('A+'), arg2('A'), arg3(key > 0),"
+            " arg4('key, size(tpath) AS n'));",
+        )
+    finally:
+        run_script(spark, "DROP TEMPORARY FUNCTION IF EXISTS hq_mp4; USE default;")
+    assert sorted(_rows(out)) == [(1, 2), (2, 1)]
+
+
+def test_explicit_lock_is_advisory(spark):
+    """LOCK TABLE takes an advisory session lock, as Hive's DbTxnManager
+    does for explicit locks: SHOW LOCKS lists it, and it excludes no
+    writer, so the table's write lock is still granted."""
+    from hive_spark.hqlscript import VERSIONED_TABLES, register_versioned
+    from hive_spark.txn import write_lock
+
+    path = os.path.join(QTEST_TMP, "hq_advisory")
+    register_versioned("hq_advisory", path)
+    try:
+        out = run_script(
+            spark, "LOCK TABLE hq_advisory EXCLUSIVE; SHOW LOCKS hq_advisory;"
+        )
+        assert _rows(out) == [("hq_advisory", "EXCLUSIVE", os.getpid(), True)]
+        with write_lock(path, timeout=1.0):
+            pass
+    finally:
+        run_script(spark, "UNLOCK TABLE hq_advisory;")
+        VERSIONED_TABLES.pop("hq_advisory", None)
 
 
 _RW_DIR = os.path.join(QTEST_TMP, "hqrw")

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from hive_spark.operators import views
 from hive_spark.plans import AggregateMV
+from hive_spark.session import state
 
 
 @pytest.fixture(scope="module")
@@ -500,7 +501,7 @@ def test_star_mv_stale_source_misses(spark, sf_dir, star_mv):
         """)
         assert star_mv.try_rewrite(q) is None
     finally:
-        tpcds._ACTIVE_STAR.pop(id(spark), None)
+        state(spark).star_dir = None
         tpcds._register_star(spark, sf_dir)
 
 

@@ -90,7 +90,7 @@ def test_minhash_identical_docs_share_cluster(spark, sf_dir):
     property that makes LSH dedup sound). The corpus has no exact dups, so
     construct them: every doc is duplicated under doc_id+100000 via a view
     override (the memoized views() leaves the override in place)."""
-    from hive_spark.operators import _ACTIVE_SF
+    from hive_spark.session import state
 
     views(spark, sf_dir)
     docs = spark.table("documents")
@@ -109,5 +109,5 @@ def test_minhash_identical_docs_share_cluster(spark, sf_dir):
             assert clusters[d] == clusters[d + 100000], f"split dup pair {d}"
     finally:
         # force re-registration of the real view for subsequent tests
-        _ACTIVE_SF.pop(id(spark), None)
+        state(spark).views = None
         views(spark, sf_dir)

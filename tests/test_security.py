@@ -11,6 +11,7 @@ from hive_spark.security import (
     enable_for_user,
     register_policy,
 )
+from hive_spark.session import state
 
 
 def _policy():
@@ -116,7 +117,7 @@ def test_privilege_enforcement_on_query_path(spark):
         " CREATE TABLE sec_enf_t (k INT) USING parquet;"
         " INSERT INTO sec_enf_t VALUES (1), (2);",
     )
-    st = authz._state(spark)
+    st = state(spark).auth
     saved_owner = st.owners.pop(
         (spark.catalog.currentDatabase().lower(), "sec_enf_t"), None
     )
@@ -192,7 +193,7 @@ def test_enforcement_covers_intercepted_statements(spark):
         " CREATE TABLE sec_gap_t (k INT) PARTITIONED BY (p INT);"
         " INSERT INTO sec_gap_t PARTITION (p=1) VALUES (1);",
     )
-    st = authz._state(spark)
+    st = state(spark).auth
     db = spark.catalog.currentDatabase().lower()
     saved_owner = st.owners.pop((db, "sec_gap_t"), None)
     try:
@@ -238,13 +239,12 @@ def test_database_ownership_enforcement(spark):
     admin's) succeeds."""
     import pytest
 
-    from hive_spark import authz
     from hive_spark.authz import HiveAccessControlError
     from hive_spark.hqlscript import run_script
 
     run_script(spark, "DROP DATABASE IF EXISTS sec_db_own CASCADE;"
                       " CREATE DATABASE sec_db_own;")
-    st = authz._state(spark)
+    st = state(spark).auth
     try:
         spark.conf.set("hive.security.authorization.enabled", "true")
         # owner may alter and drop

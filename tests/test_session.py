@@ -4,11 +4,10 @@ class-data-sharing archive."""
 
 import os
 import re
-import weakref
 
 import pytest
 
-from hive_spark import functions, operators, session
+from hive_spark import functions, session
 from hive_spark.operators import full_registry, views
 
 # perfbench's interactive_sf0.01 workload: one query of each shape the
@@ -38,13 +37,97 @@ def test_functions_registered_once(spark, sf_dir, monkeypatch):
 
     monkeypatch.setattr(functions, "register_all", counting)
     # forget that the fixture session is registered and has views
-    monkeypatch.setattr(session, "_FUNCS_REGISTERED", weakref.WeakSet())
-    monkeypatch.setattr(operators, "_ACTIVE_SF", {})
+    monkeypatch.setattr(session.state(spark), "funcs_registered", False)
+    monkeypatch.setattr(session.state(spark), "views", None)
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
     s = session.get_session(app_name="hive_spark_tests", master=f"local[{cpus}]", shuffle_partitions=8)
     assert s is spark
     views(s, sf_dir)
     assert calls == [spark]
+
+
+def test_engine_state_is_per_session(spark):
+    """A second Spark session's macro, function fold, explicit lock, role
+    and view partition stay in that session: the first sees none of
+    them, and the second still sees its own."""
+    from hive_spark.hqlscript import run_script
+
+    def seen(s):
+        out = run_script(
+            s,
+            "DESCRIBE FUNCTION iso_twice; DESCRIBE FUNCTION iso_len;"
+            " SHOW LOCKS iso_t; SHOW ROLES; SHOW PARTITIONS iso_v;",
+        )
+        macro, fold, locks, roles, parts = (
+            [tuple(r) for r in df.collect()] for df in out.results
+        )
+        return {
+            "macro": "engine-folded" in macro[0][0],
+            "fold": "engine-folded" in fold[0][0],
+            "lock": locks == [("iso_t", "EXCLUSIVE", os.getpid(), True)],
+            "role": ("iso_role",) in roles,
+            "partition": parts == [("p=a",)],
+        }
+
+    other = spark.newSession()
+    try:
+        run_script(
+            other,
+            "CREATE TEMPORARY MACRO iso_twice(x INT) x * 2;"
+            " CREATE TEMPORARY FUNCTION iso_len AS"
+            " 'org.apache.hadoop.hive.ql.udf.UDFTestLength';"
+            " LOCK TABLE iso_t EXCLUSIVE; CREATE ROLE iso_role;"
+            " CREATE VIEW iso_v AS SELECT 1 AS k, 'a' AS p;"
+            " ALTER VIEW iso_v ADD PARTITION (p='a');",
+        )
+        first, second = seen(spark), seen(other)
+    finally:
+        run_script(spark, "DROP VIEW IF EXISTS iso_v;")
+    assert not any(first.values()), first
+    assert all(second.values()), second
+
+
+def test_script_reset_keeps_owners_and_macros(spark):
+    """The reset the qtest fixture and the triage script run between
+    scripts drops a script's roles, compactions, explicit locks, view
+    partitions and ADD FILE resources, and keeps table owners and the
+    session's macros."""
+    from hive_spark.hqlscript import run_script
+    from tests.qtest_fixture_lib import reset_script_state
+
+    other = spark.newSession()
+    st = session.state(other)
+    st.auth.owners[("default", "rs_t")] = "rs_owner"
+    run_script(
+        other,
+        "CREATE ROLE rs_role; LOCK TABLE rs_t SHARED;"
+        " ALTER TABLE rs_t COMPACT 'major'; ALTER VIEW rs_v ADD PARTITION (p='a');"
+        f" ADD FILE {__file__}; CREATE TEMPORARY MACRO rs_m(x INT) x;",
+    )
+    assert "rs_role" in st.auth.roles and st.compactions and st.explicit_locks
+    assert st.view_parts and st.added_files
+    reset_script_state(other)
+    assert "rs_role" not in st.auth.roles
+    assert st.auth.owners == {("default", "rs_t"): "rs_owner"}
+    assert not (st.compactions or st.explicit_locks or st.view_parts or st.added_files)
+    assert "rs_m" in st.macros
+
+
+def test_no_state_is_keyed_on_session_ids():
+    """Per-session state has one home, session.state(spark). A module
+    store keyed on the session's id() would be a second one, and would
+    outlive its session."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    found = [
+        f"{path.relative_to(root)}:{n}"
+        for top in ("hive_spark", "scripts", "tests")
+        for path in sorted((root / top).rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if re.search(r"\bid\(\s*spark\s*\)", line)
+    ]
+    assert found == []
 
 
 def _compilations(spark) -> int:

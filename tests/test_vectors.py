@@ -33,7 +33,8 @@ def test_embedding_cosine_dedup_merges_duplicates(spark, sf_dir):
     corpus)."""
     from pyspark.sql import functions as F
 
-    from hive_spark.operators import _ACTIVE_SF, views
+    from hive_spark.operators import views
+    from hive_spark.session import state
 
     views(spark, sf_dir)
     emb = spark.table("embeddings")
@@ -50,7 +51,7 @@ def test_embedding_cosine_dedup_merges_duplicates(spark, sf_dir):
             assert rows[v + 100000].cluster_id == rows[v].cluster_id == v
             assert rows[v].kept and not rows[v + 100000].kept
     finally:
-        _ACTIVE_SF.pop(id(spark), None)
+        state(spark).views = None
         views(spark, sf_dir)
 
 
