@@ -1,285 +1,22 @@
-"""DDL/catalog surface: CREATE TABLE (+partitioning/bucketing/format),
-CTAS, ANALYZE, partition repair (MSCK), SHOW/DESCRIBE.
+"""EXPORT / IMPORT (Hive: ExportSemanticAnalyzer.java,
+ImportSemanticAnalyzer.java), run by HiveQL's EXPORT and IMPORT
+statements in ``hqlscript``.
 
-Hive's DDL family is dispatched via DDLSemanticAnalyzerFactory (ref:
-ql/src/java/org/apache/hadoop/hive/ql/ddl/ — CREATE/ALTER/DROP/SHOW/MSCK);
-in the Spark engine each maps to `spark.sql` DDL text or `spark.catalog`
-calls. This module provides the programmatic API; SQL-text DDL works
-directly through `spark.sql` (verified in tests/test_ddl.py).
-
-Scale notes: partitioned layout (one dir per value — Hive's metastore
-Partition model, thrift struct Partition, hive_metastore.thrift:684) is
-what enables partition pruning at 100 TB; bucketing (CLUSTERED BY ... INTO
-n BUCKETS, ReduceSinkOperator bucket hash ref ql/.../exec/
-ReduceSinkOperator.java:60) pre-shuffles fact tables once so repeated
-joins/aggregations on the bucket key skip their exchange. ANALYZE feeds
-Spark CBO (join reordering needs rowCount/size stats like Hive's
-StatsRulesProcFactory selectivities).
+EXPORT writes the table's data plus a metadata descriptor so IMPORT can
+recreate the table elsewhere. Same contract here: a file-level copy of the
+data directory (scales as a distcp-style parallel copy in production —
+never a row-level rewrite), a ``_metadata.json`` descriptor, and catalog
+registration + partition repair on the way back in. This module is the
+only one that knows the descriptor's layout.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession
-
-STORAGE_FORMATS = ("parquet", "orc", "json", "csv", "text")
-
-
-def create_table(
-    spark: SparkSession,
-    name: str,
-    schema: str,
-    fmt: str = "parquet",
-    partition_by: tuple[str, ...] = (),
-    location: str | None = None,
-    bucket_spec: tuple[int, tuple[str, ...]] | None = None,
-) -> None:
-    """CREATE TABLE ... USING fmt [PARTITIONED BY] [CLUSTERED BY ... INTO n
-    BUCKETS] [LOCATION] (Hive: STORED AS orc/parquet/textfile etc.)."""
-    parts = [f"CREATE TABLE IF NOT EXISTS {name} ({schema}) USING {fmt}"]
-    if partition_by:
-        parts.append(f"PARTITIONED BY ({', '.join(partition_by)})")
-    if bucket_spec:
-        n, cols = bucket_spec
-        parts.append(f"CLUSTERED BY ({', '.join(cols)}) INTO {n} BUCKETS")
-    if location:
-        parts.append(f"LOCATION '{location}'")
-    spark.sql(" ".join(parts))
-
-
-def ctas(spark: SparkSession, name: str, query: str, fmt: str = "parquet") -> None:
-    """CREATE TABLE AS SELECT (Hive CTAS, HiveParser.g query alternatives)."""
-    spark.sql(f"CREATE TABLE {name} USING {fmt} AS {query}")
-
-
-def analyze(spark: SparkSession, name: str, columns: bool = True) -> None:
-    """ANALYZE TABLE ... COMPUTE STATISTICS [FOR ALL COLUMNS] — feeds CBO
-    (Hive: StatsTask/ColumnStatsUpdateTask, ql/.../exec/StatsTask.java)."""
-    spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS")
-    if columns:
-        spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR ALL COLUMNS")
-
-
-def repair_partitions(spark: SparkSession, name: str) -> None:
-    """MSCK REPAIR TABLE equivalent: discover partition dirs written
-    outside the catalog (Hive Msck, ql/.../ddl/misc/msck/)."""
-    spark.sql(f"MSCK REPAIR TABLE {name}")
-
-
-def table_stats(spark: SparkSession, name: str) -> dict[str, str]:
-    """DESCRIBE EXTENDED summary → dict (rowCount/sizeInBytes when
-    ANALYZE has run)."""
-    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
-    out: dict[str, str] = {}
-    for r in rows:
-        if r.col_name and r.data_type:
-            out[r.col_name.strip()] = str(r.data_type).strip()
-    return out
-
-
-def sort_cluster(
-    df: DataFrame, path: str, cols: tuple[str, ...], n_files: int = 8
-) -> None:
-    """Range-cluster a table on write (Hive: CLUSTERED BY + SORTED BY,
-    ref ql/.../parse/BaseSemanticAnalyzer.java tableSortCols; ORC row
-    index ref ql/.../io/orc/ — min/max per stride enables skipping).
-
-    `repartitionByRange` gives each output file a DISJOINT key range and
-    `sortWithinPartitions` tightens every parquet row-group's min/max to
-    a narrow slice, so a selective predicate prunes to the few row groups
-    whose [min,max] intersect it — the difference between reading ~1/N of
-    a 100 TB table and all of it. Parquet pushdown uses these stats
-    automatically; nothing else to wire. The cost is one range shuffle at
-    write time (sampling pass + exchange), paid once, amortized over
-    every subsequent selective read."""
-    (
-        df.repartitionByRange(n_files, *cols)
-        .sortWithinPartitions(*cols)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def row_groups_matching(
-    path: str, column: str, lo, hi
-) -> tuple[int, int]:
-    """(matching, total) parquet row groups whose [min,max] stats
-    intersect [lo, hi] — the groups a pushed-down range predicate must
-    actually read. Measures what the clustered layout buys."""
-    import pyarrow.parquet as pq
-
-    total = matching = 0
-    ds = pq.ParquetDataset(path)
-    for frag in ds.fragments:
-        md = frag.metadata
-        idx = {c: i for i, c in enumerate(frag.physical_schema.names)}[column]
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            total += 1
-            if st is None or st.min is None:
-                matching += 1  # no stats -> reader must scan it
-            elif not (st.max < lo or st.min > hi):
-                matching += 1
-    return matching, total
-
-
-def compact(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    partition_cols: list[str] | None = None,
-) -> int:
-    """Small-file compaction (Hive: ALTER TABLE ... CONCATENATE + the
-    background compactor, ref ql/src/java/org/apache/hadoop/hive/ql/txn/
-    compactor/Compactor.java): rewrite a parquet dir into
-    ceil(total_bytes / target) files. Returns the new file count.
-
-    The 100 TB story: streaming/micro-batch sinks accumulate small files
-    that wreck scan parallelism and NameNode/listing costs; periodic
-    compaction keeps file sizes near the scan split size so one task
-    reads one file."""
-    import math
-
-    total = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, fs in os.walk(path)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
-    staging = path.rstrip("/") + "._compact"
-    writer = df.repartition(n_files).write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(staging)
-    import shutil
-
-    shutil.rmtree(path)
-    shutil.move(staging, path)
-    return n_files
-
-
-def round_trip(
-    df: DataFrame, path: str, fmt: str, read_options: dict | None = None
-) -> DataFrame:
-    """Write+read through a storage format (Hive SerDe matrix: ORC/Parquet/
-    JSON/CSV/Text — ref SURVEY §2.1 file formats). CSV/JSON lose type
-    precision by design; caller supplies schema-bearing read options."""
-    df.write.mode("overwrite").format(fmt).options(
-        **({"header": "true"} if fmt == "csv" else {})
-    ).save(path)
-    reader = df.sparkSession.read.format(fmt)
-    if fmt == "csv":
-        reader = reader.option("header", "true").schema(df.schema)
-    elif fmt == "json":
-        reader = reader.schema(df.schema)
-    if read_options:
-        reader = reader.options(**read_options)
-    return reader.load(path)
-
-
-# ---------------------------------------------------------------------------
-# Constraints (Hive: ALTER TABLE ... ADD CONSTRAINT pk/fk/unique/not-null/
-# check [RELY|NORELY] [VALIDATE|NOVALIDATE], ref: ql/.../ddl/table/
-# constraint/AlterTableAddConstraintAnalyzer.java + metastore
-# SQLPrimaryKey/SQLForeignKey/SQLCheckConstraint thrift structs).
-#
-# Hive constraints are INFORMATIONAL (NOVALIDATE): the engine never
-# enforces them on write; RELY lets the CBO use them (join elimination,
-# distinct removal). This mirror keeps the same split: a registry carries
-# the metadata for planners/tools, and validate() runs the scan-shaped
-# checks on demand — each a single aggregation or broadcast anti-join,
-# which is the only shape that survives a 100 TB fact table.
-# ---------------------------------------------------------------------------
-
-from dataclasses import dataclass, field
-
-
-@dataclass
-class Constraint:
-    kind: str  # primary_key | unique | not_null | check | foreign_key
-    table: str
-    cols: tuple[str, ...]
-    rely: bool = False
-    check_expr: str | None = None  # for kind == "check"
-    ref_table: str | None = None  # for kind == "foreign_key"
-    ref_cols: tuple[str, ...] = ()
-
-
-@dataclass
-class ConstraintRegistry:
-    constraints: list[Constraint] = field(default_factory=list)
-
-    def add(self, c: Constraint) -> None:
-        if c.kind not in ("primary_key", "unique", "not_null", "check", "foreign_key"):
-            raise ValueError(f"unknown constraint kind: {c.kind}")
-        self.constraints.append(c)
-
-    def for_table(self, table: str) -> list[Constraint]:
-        return [c for c in self.constraints if c.table == table]
-
-    def validate(
-        self, spark: SparkSession, tables: dict[str, DataFrame]
-    ) -> dict[str, int]:
-        """Run every constraint's check; returns {description: violations}.
-        Zero everywhere == the metadata is safe to RELY on."""
-        from pyspark.sql import functions as F
-
-        out: dict[str, int] = {}
-        for c in self.constraints:
-            df = tables[c.table]
-            key = f"{c.kind}({c.table}.{','.join(c.cols)})"
-            if c.kind in ("primary_key", "unique"):
-                # one aggregation: key -> count > 1 (PK additionally
-                # rejects NULL keys)
-                dup = (
-                    df.groupBy(*c.cols)
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .filter(F.col("n") > 1)
-                    .count()
-                )
-                nulls = 0
-                if c.kind == "primary_key":
-                    nulls = df.filter(
-                        " OR ".join(f"`{col}` IS NULL" for col in c.cols)
-                    ).count()
-                out[key] = dup + nulls
-            elif c.kind == "not_null":
-                out[key] = df.filter(F.col(c.cols[0]).isNull()).count()
-            elif c.kind == "check":
-                out[f"check({c.table}:{c.check_expr})"] = df.filter(
-                    f"NOT ({c.check_expr})"
-                ).count()
-            elif c.kind == "foreign_key":
-                # broadcast anti-join against the (small) referenced keys
-                parent = tables[c.ref_table].select(
-                    *[F.col(rc).alias(cc) for rc, cc in zip(c.ref_cols, c.cols)]
-                ).dropDuplicates()
-                orphans = (
-                    df.filter(
-                        " AND ".join(f"`{col}` IS NOT NULL" for col in c.cols)
-                    )
-                    .join(F.broadcast(parent), list(c.cols), "left_anti")
-                    .count()
-                )
-                out[f"fk({c.table}.{','.join(c.cols)} -> {c.ref_table})"] = orphans
-        return out
-
-
-# ---------------------------------------------------------------------------
-# LOAD DATA / EXPORT / IMPORT (Hive: LoadSemanticAnalyzer.java,
-# ExportSemanticAnalyzer.java, ImportSemanticAnalyzer.java).
-#
-# Hive's LOAD DATA is a pure file move into the table/partition directory
-# (no conversion — the files must already be in the table's format);
-# EXPORT writes data plus a _metadata descriptor so IMPORT can recreate
-# the table elsewhere. Same contract here: file-level copies (scales as a
-# distcp-style parallel copy in production — never a row-level rewrite),
-# a JSON metadata descriptor, and catalog registration + partition repair
-# on the way back in.
-# ---------------------------------------------------------------------------
+from pyspark.sql import SparkSession
 
 
 def _table_info(spark: SparkSession, name: str) -> dict[str, str | list[str]]:
@@ -309,61 +46,10 @@ def _as_local(location: str) -> str:
     return location.removeprefix("file:")
 
 
-def load_data(
-    spark: SparkSession,
-    src_path: str,
-    table: str,
-    partition: dict[str, str] | None = None,
-    overwrite: bool = False,
-) -> int:
-    """LOAD DATA INPATH src INTO TABLE t [PARTITION (k=v,...)] [OVERWRITE]:
-    move/copy data files into the table (or partition) directory and
-    refresh. Returns the number of files placed. The files must already
-    match the table's storage format (Hive contract: LoadSemanticAnalyzer
-    rejects format conversion)."""
-    import shutil
-
-    info = _table_info(spark, table)
-    dest = _as_local(str(info["location"]))
-    if info["partition_cols"] and not partition:
-        # Hive rejects LOAD DATA without a partition spec on a partitioned
-        # table (no dynamic-partition load; LoadSemanticAnalyzer check)
-        raise ValueError(
-            f"table {table} is partitioned; partition spec missing keys: "
-            f"{info['partition_cols']}"
-        )
-    if partition:
-        missing = [k for k in info["partition_cols"] if k not in partition]
-        if missing:
-            raise ValueError(f"partition spec missing keys: {missing}")
-        dest = os.path.join(
-            dest, *(f"{k}={partition[k]}" for k in info["partition_cols"])
-        )
-    if overwrite and os.path.isdir(dest):
-        shutil.rmtree(dest)
-    os.makedirs(dest, exist_ok=True)
-    srcs = (
-        [os.path.join(src_path, f) for f in sorted(os.listdir(src_path))
-         if not f.startswith(("_", "."))]
-        if os.path.isdir(src_path)
-        else [src_path]
-    )
-    for f in srcs:
-        shutil.copy(f, os.path.join(dest, os.path.basename(f)))
-    if partition:
-        spec = ", ".join(f"{k}='{v}'" for k, v in partition.items())
-        spark.sql(f"ALTER TABLE {table} ADD IF NOT EXISTS PARTITION ({spec})")
-    spark.sql(f"REFRESH TABLE {table}")
-    return len(srcs)
-
-
 def export_table(spark: SparkSession, table: str, dest: str) -> str:
     """EXPORT TABLE t TO dest: copy the table's data directory plus a
     _metadata.json descriptor (schema DDL, provider, partition columns) —
     the Hive export layout (data/ + _metadata) in JSON form."""
-    import json
-    import shutil
-
     info = _table_info(spark, table)
     src = _as_local(str(info["location"]))
     shutil.rmtree(dest, ignore_errors=True)
@@ -386,87 +72,32 @@ def export_table(spark: SparkSession, table: str, dest: str) -> str:
     return dest
 
 
-def import_table(spark: SparkSession, src: str, new_name: str) -> None:
-    """IMPORT TABLE new_name FROM src: recreate the table from an
-    export_table() directory — register over the copied data, then repair
-    partitions so the metastore sees every partition directory."""
-    import json
-    import shutil
-
+def import_table(spark: SparkSession, src: str, new_name: str | None) -> None:
+    """IMPORT [TABLE new_name] FROM src, src an export_table() directory.
+    With no name the exported table's name is used. A table that exists
+    gets the exported rows appended; otherwise the table is created over
+    a copy of the data and its partitions repaired, so the metastore sees
+    every partition directory."""
     with open(os.path.join(src, "_metadata.json")) as fh:
         meta = json.load(fh)
-    warehouse = _as_local(
-        spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    name = new_name or meta["table"].split(".")[-1]
+    data = os.path.join(src, "data")
+    if spark.catalog.tableExists(name):
+        # ImportSemanticAnalyzer's existing-table path
+        staged = spark.read.format(meta["provider"]).load(data)
+        staged.select(*spark.table(name).columns).write.insertInto(name)
+        return
+    dest = os.path.join(
+        _as_local(spark.conf.get("spark.sql.warehouse.dir")), name
     )
-    dest = os.path.join(warehouse, new_name)
     shutil.rmtree(dest, ignore_errors=True)
-    shutil.copytree(os.path.join(src, "data"), dest)
+    shutil.copytree(data, dest)
     part_cols = meta["partition_cols"]
-    create_table(
-        spark,
-        new_name,
-        meta["schema"],
-        fmt=str(meta["provider"]),
-        partition_by=tuple(part_cols),
-        location=dest,
+    partitioned = f" PARTITIONED BY ({', '.join(part_cols)})" if part_cols else ""
+    spark.sql(
+        f"CREATE TABLE {name} ({meta['schema']}) USING {meta['provider']}"
+        f"{partitioned} LOCATION '{dest}'"
     )
     if part_cols:
-        repair_partitions(spark, new_name)
-    spark.sql(f"REFRESH TABLE {new_name}")
-
-
-# ---------------------------------------------------------------------------
-# ALTER TABLE family (Hive: ql/.../ddl/table/ — AlterTableRenameAnalyzer,
-# AlterTableAddColumnsAnalyzer, AlterTableSetPropertiesAnalyzer,
-# AlterTableAddPartitionAnalyzer/AlterTableDropPartitionAnalyzer,
-# AlterTableRenamePartitionAnalyzer). Thin SQL dispatch — the engine value
-# is pinning which shapes Spark's catalogs support (tests/test_ddl.py).
-# ---------------------------------------------------------------------------
-
-
-def rename_table(spark: SparkSession, old: str, new: str) -> None:
-    spark.sql(f"ALTER TABLE {old} RENAME TO {new}")
-
-
-def add_columns(spark: SparkSession, table: str, schema: str) -> None:
-    """ALTER TABLE ... ADD COLUMNS (c TYPE, ...) — existing files read the
-    new columns as NULL (schema evolution on read, like Hive)."""
-    spark.sql(f"ALTER TABLE {table} ADD COLUMNS ({schema})")
-
-
-def set_tblproperties(spark: SparkSession, table: str, props: dict[str, str]) -> None:
-    kv = ", ".join(f"'{k}'='{v}'" for k, v in props.items())
-    spark.sql(f"ALTER TABLE {table} SET TBLPROPERTIES ({kv})")
-
-
-def tblproperties(spark: SparkSession, table: str) -> dict[str, str]:
-    return {r.key: r.value for r in spark.sql(f"SHOW TBLPROPERTIES {table}").collect()}
-
-
-def drop_partition(
-    spark: SparkSession, table: str, partition: dict[str, str], purge: bool = False
-) -> None:
-    """ALTER TABLE ... DROP PARTITION (k=v,...): unregisters the partition
-    (metadata); purge=True also deletes its directory (Hive PURGE skips
-    the trash — here: actually remove the files)."""
-    import shutil
-
-    spec = ", ".join(f"{k}='{v}'" for k, v in partition.items())
-    if purge:
-        info = _table_info(spark, table)
-        pdir = os.path.join(
-            _as_local(str(info["location"])),
-            *(f"{k}={partition[k]}" for k in info["partition_cols"] if k in partition),
-        )
-        shutil.rmtree(pdir, ignore_errors=True)
-    spark.sql(f"ALTER TABLE {table} DROP IF EXISTS PARTITION ({spec})")
-    spark.sql(f"REFRESH TABLE {table}")
-
-
-def rename_partition(
-    spark: SparkSession, table: str, old: dict[str, str], new: dict[str, str]
-) -> None:
-    o = ", ".join(f"{k}='{v}'" for k, v in old.items())
-    n = ", ".join(f"{k}='{v}'" for k, v in new.items())
-    spark.sql(f"ALTER TABLE {table} PARTITION ({o}) RENAME TO PARTITION ({n})")
-    spark.sql(f"REFRESH TABLE {table}")
+        spark.sql(f"MSCK REPAIR TABLE {name}")
+    spark.sql(f"REFRESH TABLE {name}")

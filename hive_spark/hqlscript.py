@@ -981,9 +981,8 @@ def _fold_like_chain(op: str):
 # CREATE TABLE ... STORED AS <fmt>: Spark's parser treats STORED AS as
 # a Hive-catalog table (NOT_SUPPORTED_COMMAND_WITHOUT_HIVE_SUPPORT on
 # the in-memory catalog), so the SQL-text path maps it to USING. The
-# row-based Hive formats keep their CAPABILITY via the engine's native
-# store (the ddl.py API writes real TextFile/SequenceFile/RCFile via
-# the bundled serde jars when the physical format matters).
+# row-based Hive formats store natively; their physical files are served
+# by sources/hive_formats (bundled serde jars, hive-catalog session).
 _STORED_AS_USING = {
     # avro: the spark-avro datasource module is absent in this runtime
     # (only the core avro jars ship), so SQL-text Avro tables store
@@ -1086,8 +1085,7 @@ def _rewrite_stored_as(stmt: str) -> str:
     - Hive-style TYPED partition columns are merged into the schema and
       PARTITIONED BY reduced to column names (the datasource spelling);
     - inline PK/FK/UNIQUE constraint items and DISABLE/RELY tails are
-      stripped (Hive metadata Spark's parser rejects; ddl.py carries
-      real constraint metadata for API callers);
+      stripped (informational Hive metadata Spark's parser rejects);
     - EXTERNAL with no LOCATION drops EXTERNAL (Hive defaults the
       warehouse path; Spark refuses the combination);
     - CREATE VIEW ... PARTITIONED ON (Hive-only metadata) is dropped."""
@@ -1108,6 +1106,7 @@ def _rewrite_stored_as(stmt: str) -> str:
     # not inherit a previous table's recorded delimiter (scripts reuse
     # names like t1_n<k> freely; LOAD DATA would mis-parse otherwise)
     _TABLE_DELIMS.pop(name_m.group(1).lower(), None)
+    _TABLE_REGEX.pop(name_m.group(1).lower(), None)
     provider = None
     # Avro tables often carry NO column list — the schema lives in
     # avro.schema.literal/url; capture it before the serde/props
@@ -1149,14 +1148,22 @@ def _rewrite_stored_as(stmt: str) -> str:
         stmt = stmt[: io.start()] + stmt[io.end():]
     # ROW FORMAT SERDE '<class>' [WITH SERDEPROPERTIES (...)]: the serde
     # classes themselves are JVM Hive internals; record the delimiter
-    # OpenCSVSerde implies and store natively (RegexSerDe's pattern
-    # surface is served by the ddl.py API — tests/test_ddl.py)
+    # OpenCSVSerde implies, or RegexSerDe's input.regex, for LOAD DATA
+    # and store natively
     rs = _ROW_FORMAT_SERDE.search(stmt)
     serde_text = False
     if rs:
         _TABLE_DELIMS[name_m.group(1).lower()] = (
             "," if "opencsv" in rs.group(0).lower() else "\x01"
         )
+        rx = re.search(
+            r"""(?i)['"]input\.regex['"]\s*=\s*(['"])((?:\\.|(?!\1).)*)\1""",
+            rs.group(0),
+        )
+        if rx:
+            _TABLE_REGEX[name_m.group(1).lower()] = (
+                rx.group(2).encode().decode("unicode_escape")
+            )
         stmt = stmt[: rs.start()] + stmt[rs.end():]
         # JsonSerDe tables hold one JSON document per line — Spark's
         # json source IS that serde (LOAD DATA + SELECT both line up).
@@ -1679,6 +1686,9 @@ _TABLE_DELIMS: dict[str, str] = {}
 # table -> (collection items delim, map keys delim); Hive defaults
 # \x02/\x03, deeper nesting walks \x04.. (LazySimpleSerDe's separators)
 _TABLE_COLL_DELIMS: dict[str, tuple[str, str]] = {}
+# table -> RegexSerDe input.regex: group i of a line's full match is
+# column i (serde/.../RegexSerDe.java)
+_TABLE_REGEX: dict[str, str] = {}
 
 
 def _sql_quote_delim(d: str) -> str:
@@ -1833,9 +1843,31 @@ def _exec_load_data(spark, res, m, stmt):
         raw = spark.createDataFrame(rows, ddl_schema(files[0]))
     elif fmt in ("parquet", "orc"):
         raw = spark.read.format(fmt).load(path)
+    elif table.lower() in _TABLE_REGEX:
+        # RegexSerDe matches the WHOLE line (Matcher.matches); a line
+        # that does not match reads as an all-NULL row
+        full = f"^(?:{_TABLE_REGEX[table.lower()]})$"
+        line = F.col("value")
+        raw = spark.read.text(path).select(*[
+            F.when(line.rlike(full), F.regexp_extract(line, full, i + 1))
+            .alias(f"_c{i}")
+            for i in range(len(data_fields))
+        ])
     else:
         raw = spark.read.csv(
             path, sep=sep, header=False, inferSchema=False, quote="\x00"
+        )
+    if not parts and len(raw.columns) != len(schema.fields) and any(
+        c.isPartition for c in spark.catalog.listColumns(table)
+    ):
+        # Hive 3+ runs a LOAD into a partitioned table with no PARTITION
+        # clause as INSERT ... SELECT, the file's last columns being the
+        # partition columns; a file of another shape is rejected
+        # (LanguageManual DML, "Loading files into tables")
+        raise ValueError(
+            f"LOAD DATA into partitioned table {table} without PARTITION:"
+            f" the file has {len(raw.columns)} columns, the table"
+            f" {len(schema.fields)} (partition columns last)"
         )
     coll, mk = _TABLE_COLL_DELIMS.get(table.lower(), ("\x02", "\x03"))
     delims = [sep, coll, mk]
@@ -5496,8 +5528,8 @@ _EXCHANGE_PARTITION = re.compile(
 )
 
 # EXPORT/IMPORT (ref: ql/.../parse/ExportSemanticAnalyzer.java,
-# ImportSemanticAnalyzer.java; layout = data/ + metadata descriptor,
-# implemented by ddl.export_table/import_table)
+# ImportSemanticAnalyzer.java): ddl.export_table/import_table write and
+# read the data/ + _metadata.json layout
 _EXPORT_STMT = re.compile(
     r"^\s*EXPORT\s+TABLE\s+`?([\w.]+)`?"
     r"(?:\s+PARTITION\s*\(([^)]*)\))?\s+TO\s+['\"]([^'\"]+)['\"]"
@@ -5554,8 +5586,7 @@ def _exec_import(spark, res, m, stmt):
     from hive_spark import ddl
 
     name, src = m.group(1), _exim_path(m.group(2))
-    if not os.path.exists(os.path.join(src, "_metadata.json")) and \
-            os.path.exists(os.path.join(src, "_metadata")):
+    if os.path.exists(os.path.join(src, "_metadata")):
         # a dump written by HIVE's own EXPORT (import_exported_table.q;
         # ref: ql/.../parse/EximUtil.java writeMetaData — the table is a
         # thrift-JSON blob): recover name/columns/delimiter and load the
@@ -5582,19 +5613,6 @@ def _exec_import(spark, res, m, stmt):
         )
         df.write.insertInto(tname, overwrite=True)
         return
-    meta = json.load(open(os.path.join(src, "_metadata.json")))
-    if not name:
-        name = meta["table"].split(".")[-1]
-    if spark.catalog.tableExists(name):
-        # IMPORT into an existing table appends the exported rows
-        # (ImportSemanticAnalyzer's existing-table path)
-        staged = spark.read.format(meta.get("provider", "parquet")).load(
-            os.path.join(src, "data")
-        )
-        staged.select(*spark.table(name).columns).write.insertInto(
-            name, overwrite=False
-        )
-        return
     ddl.import_table(spark, src, name)
 
 
@@ -5603,44 +5621,14 @@ def _exec_import(spark, res, m, stmt):
 # informational (NOVALIDATE): recorded by name in
 # state(spark).constraints, which only DROP CONSTRAINT reads.
 _ADD_CONSTRAINT = re.compile(
-    r"^\s*ALTER\s+TABLE\s+`?([\w.]+)`?\s+ADD\s+CONSTRAINT\s+`?(\w+)`?\s+"
-    r"(PRIMARY\s+KEY|UNIQUE|FOREIGN\s+KEY|CHECK)\s*"
-    r"(?:\(((?:[^()]|\([^()]*\))*)\))?"
-    r"([\s\S]*)$",
+    r"^\s*ALTER\s+TABLE\s+`?[\w.]+`?\s+ADD\s+CONSTRAINT\s+`?(\w+)`?\s+"
+    r"(?:PRIMARY\s+KEY|UNIQUE|FOREIGN\s+KEY|CHECK)[\s\S]*$",
     re.I,
 )
 
 
 def _exec_add_constraint(spark, res, m, stmt):
-    from hive_spark.ddl import Constraint
-
-    table, cname, kind_txt, inner, tail = m.groups()
-    kind = {
-        "PRIMARY KEY": "primary_key",
-        "UNIQUE": "unique",
-        "FOREIGN KEY": "foreign_key",
-        "CHECK": "check",
-    }[re.sub(r"\s+", " ", kind_txt).upper()]
-    cols: tuple[str, ...] = ()
-    check_expr = None
-    ref_table = None
-    ref_cols: tuple[str, ...] = ()
-    if kind == "check":
-        check_expr = (inner or "").strip() or None
-    elif inner:
-        cols = tuple(c.strip().strip("`") for c in inner.split(","))
-    rm = re.search(
-        r"(?i)\bREFERENCES\s+`?([\w.]+)`?\s*\(([^)]*)\)", tail or ""
-    )
-    if rm:
-        ref_table = rm.group(1)
-        ref_cols = tuple(c.strip().strip("`") for c in rm.group(2).split(","))
-    rely = bool(re.search(r"(?i)(?<!NO)\bRELY\b", tail or ""))
-    c = Constraint(
-        kind=kind, table=table.split(".")[-1].lower(), cols=cols, rely=rely,
-        check_expr=check_expr, ref_table=ref_table, ref_cols=ref_cols,
-    )
-    state(spark).constraints[cname.lower()] = c
+    state(spark).constraints.add(m.group(1).lower())
 
 
 _CREATE_EXT_TEXT = re.compile(
@@ -6536,7 +6524,7 @@ _DROP_CONSTRAINT = re.compile(
 
 
 def _drop_constraint(spark, res, m, stmt):
-    state(spark).constraints.pop(m.group(1).lower(), None)
+    state(spark).constraints.discard(m.group(1).lower())
 
 
 def _transaction(spark, res, m, stmt):

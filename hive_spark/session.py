@@ -73,7 +73,6 @@ from pyspark.sql.types import StructType
 
 if TYPE_CHECKING:
     from hive_spark.authz import AuthState
-    from hive_spark.ddl import Constraint
     from hive_spark.plans import AggregateMV
 
 # Tables the driver materializes at /root/testdata/sf*/ (TESTDATA.md).
@@ -118,7 +117,7 @@ class SessionState:
     view_parts: dict[str, list[str]] = field(default_factory=dict)
     added_files: dict[str, str] = field(default_factory=dict)  # ADD FILE -> path
     mv_defs: dict[str, str] = field(default_factory=dict)  # MV -> its SQL
-    constraints: dict[str, Constraint] = field(default_factory=dict)
+    constraints: set[str] = field(default_factory=set)  # names; informational
     macros: dict[str, tuple[list[str], str]] = field(default_factory=dict)
     matchpath_fns: set[str] = field(default_factory=lambda: {"matchpath"})  # + aliases
     func_folds: dict[str, Callable] = field(default_factory=dict)  # alias -> fold

@@ -1,4 +1,5 @@
 import os
+import shutil
 import sys
 import tempfile
 
@@ -14,6 +15,20 @@ _PYTEST_TMP = os.path.expanduser("~/.hive_spark_scratch/pytest_tmp")
 os.makedirs(_PYTEST_TMP, exist_ok=True)
 os.environ["TMPDIR"] = _PYTEST_TMP
 tempfile.tempdir = None  # re-derive gettempdir() from the new TMPDIR
+
+# hqlscript's QTEST_TMP (read at import) defaults to one directory per
+# user, and the qtest-style fixtures rmtree fixed subdirectories of it;
+# a directory of this run's own keeps two runs on one host from deleting
+# each other's files
+_OWN_QTEST_TMP = None
+if "HIVE_SPARK_QTEST_TMP" not in os.environ:
+    _OWN_QTEST_TMP = tempfile.mkdtemp(prefix="qtest_tmp_")
+    os.environ["HIVE_SPARK_QTEST_TMP"] = _OWN_QTEST_TMP
+
+
+def pytest_sessionfinish(session):
+    if _OWN_QTEST_TMP:
+        shutil.rmtree(_OWN_QTEST_TMP, ignore_errors=True)
 
 SF_DIR = os.environ.get("HIVE_SPARK_TEST_SF", "/root/testdata/sf0.01")
 

@@ -1,14 +1,17 @@
-"""DDL/catalog + storage-format conformance (SURVEY §2.1/§2.14/§7.4)."""
+"""DDL/catalog + storage-format conformance (SURVEY §2.1/§2.14/§7.4),
+driven as HiveQL through ``hqlscript.run_script``."""
 
+import ast
 import os
-import shutil
+import pathlib
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
 from hive_spark import ddl
-
-SCRATCH = "/tmp/hive_spark_ddl"
+from hive_spark.hqlscript import run_script
+from hive_spark.operators import views
 
 
 @pytest.fixture(autouse=True)
@@ -19,62 +22,67 @@ def _clean_tables(spark):
             spark.sql(f"DROP TABLE IF EXISTS {t.name}")
 
 
-def test_create_insert_select_partitioned(spark, sf_dir):
-    loc = f"{SCRATCH}/part_tbl"
-    shutil.rmtree(loc, ignore_errors=True)
-    ddl.create_table(
-        spark,
-        "ddl_part",
-        "o_orderkey BIGINT, o_totalprice DOUBLE, o_year INT",
-        partition_by=("o_year",),
-        location=loc,
-    )
-    from hive_spark.operators import views
+def _location(spark, table):
+    return ddl._as_local(str(ddl._table_info(spark, table)["location"]))
 
+
+def test_create_insert_select_partitioned(spark, sf_dir, tmp_path):
+    loc = str(tmp_path / "part_tbl")
     views(spark, sf_dir)
-    spark.sql(
-        """
-        INSERT INTO ddl_part
-        SELECT o_orderkey, o_totalprice, year(o_orderdate) AS o_year FROM orders
-        """
+    run_script(
+        spark,
+        f"""CREATE TABLE ddl_part (o_orderkey BIGINT, o_totalprice DOUBLE)
+            PARTITIONED BY (o_year INT) STORED AS PARQUET LOCATION '{loc}';
+            INSERT INTO ddl_part
+            SELECT o_orderkey, o_totalprice, year(o_orderdate) AS o_year
+            FROM orders""",
     )
     # partition dirs exist on disk (Hive partition = one dir per value)
     years = {d for d in os.listdir(loc) if d.startswith("o_year=")}
     assert len(years) >= 5
     # partition pruning: scan of one year reads one partition
-    plan_df = spark.sql("SELECT count(*) FROM ddl_part WHERE o_year = 1997")
-    n_1997 = plan_df.collect()[0][0]
+    out = run_script(spark, "SELECT count(*) FROM ddl_part WHERE o_year = 1997")
+    n_1997 = out.results[-1].collect()[0][0]
     assert n_1997 == spark.sql(
         "SELECT count(*) FROM orders WHERE year(o_orderdate) = 1997"
     ).collect()[0][0]
 
 
 def test_ctas_and_analyze_feeds_cbo(spark, sf_dir):
-    from hive_spark.operators import views
-
     views(spark, sf_dir)
-    spark.sql("DROP TABLE IF EXISTS ddl_ctas")
-    ddl.ctas(spark, "ddl_ctas", "SELECT n_nationkey, n_name FROM nation")
+    out = run_script(
+        spark,
+        """DROP TABLE IF EXISTS ddl_ctas;
+           CREATE TABLE ddl_ctas STORED AS PARQUET
+           AS SELECT n_nationkey, n_name FROM nation;
+           ANALYZE TABLE ddl_ctas COMPUTE STATISTICS;
+           ANALYZE TABLE ddl_ctas COMPUTE STATISTICS FOR ALL COLUMNS;
+           DESCRIBE EXTENDED ddl_ctas""",
+    )
     assert spark.table("ddl_ctas").count() == 25
-    ddl.analyze(spark, "ddl_ctas")
-    stats = ddl.table_stats(spark, "ddl_ctas")
+    stats = {
+        r.col_name.strip(): str(r.data_type).strip()
+        for r in out.results[-1].collect()
+        if r.col_name and r.data_type
+    }
     assert "Statistics" in stats  # sizeInBytes + rowCount recorded
     assert "25 rows" in stats["Statistics"]
 
 
-def test_msck_partition_repair(spark):
+def test_msck_partition_repair(spark, tmp_path):
     """Partitions written out-of-band are invisible until MSCK repair
     (Hive: ql/.../ddl/misc/msck/)."""
-    loc = f"{SCRATCH}/msck_tbl"
-    shutil.rmtree(loc, ignore_errors=True)
+    loc = str(tmp_path / "msck_tbl")
     spark.sql("DROP TABLE IF EXISTS ddl_msck")
     df = spark.range(10).select(F.col("id"), F.lit(1).alias("p"))
     df.write.partitionBy("p").parquet(loc)  # out-of-band write
-    ddl.create_table(
-        spark, "ddl_msck", "id BIGINT, p INT", partition_by=("p",), location=loc
+    run_script(
+        spark,
+        f"""CREATE EXTERNAL TABLE ddl_msck (id BIGINT) PARTITIONED BY (p INT)
+            STORED AS PARQUET LOCATION '{loc}'""",
     )
     assert spark.table("ddl_msck").count() == 0  # catalog knows nothing
-    ddl.repair_partitions(spark, "ddl_msck")
+    run_script(spark, "MSCK REPAIR TABLE ddl_msck")
     assert spark.table("ddl_msck").count() == 10
 
 
@@ -117,23 +125,24 @@ def test_bucketed_join_elides_shuffle(spark, sf_dir):
 def test_format_round_trip(spark, sf_dir, fmt):
     """Storage-format matrix (Hive SerDes: ORC/Parquet/JSON/CSV/Text —
     SURVEY §2.1): write+read preserves values."""
-    from hive_spark.operators import views
-
     t = views(spark, sf_dir)
     src = t["nation"].orderBy("n_nationkey")
-    path = f"{SCRATCH}/fmt_{fmt}"
-    shutil.rmtree(path, ignore_errors=True)
-    back = ddl.round_trip(src, path, fmt).orderBy("n_nationkey")
+    out = run_script(
+        spark,
+        f"""DROP TABLE IF EXISTS ddl_fmt_{fmt};
+            CREATE TABLE ddl_fmt_{fmt} STORED AS {fmt.upper()}
+            AS SELECT * FROM nation;
+            SELECT * FROM ddl_fmt_{fmt} ORDER BY n_nationkey""",
+    )
+    assert ddl._table_info(spark, f"ddl_fmt_{fmt}")["provider"] == fmt
+    back = out.results[-1]
     assert [tuple(r) for r in back.collect()] == [tuple(r) for r in src.collect()]
 
 
-def test_text_format_with_regex_serde_pattern(spark, sf_dir):
+def test_text_format_with_regex_serde_pattern(spark, sf_dir, tmp_path):
     """Hive RegexSerDe analog: text format + regexp_extract projection."""
-    from hive_spark.operators import views
-
     t = views(spark, sf_dir)
-    path = f"{SCRATCH}/fmt_text"
-    shutil.rmtree(path, ignore_errors=True)
+    path = str(tmp_path / "fmt_text")
     t["nation"].select(
         F.concat_ws("|", "n_nationkey", "n_name", "n_regionkey").alias("value")
     ).write.mode("overwrite").text(path)
@@ -166,23 +175,6 @@ def test_show_describe_surface(spark, sf_dir):
     assert desc["n_nationkey"] == "int"
 
 
-def test_compaction_merges_small_files(spark, sf_dir):
-    """Hive compactor analog: 32 tiny files -> 1, data unchanged."""
-    from hive_spark.operators import views
-
-    t = views(spark, sf_dir)
-    path = f"{SCRATCH}/compact_tbl"
-    shutil.rmtree(path, ignore_errors=True)
-    t["orders"].repartition(32).write.parquet(path)
-    n_before = sum(1 for f in os.listdir(path) if f.endswith(".parquet"))
-    assert n_before == 32
-    before = t["orders"].count()
-    n_files = ddl.compact(spark, path)
-    n_after = sum(1 for f in os.listdir(path) if f.endswith(".parquet"))
-    assert n_after == n_files == 1
-    assert spark.read.parquet(path).count() == before
-
-
 def test_parameterized_sql(spark, sf_dir):
     """PREPARE/EXECUTE equivalent: named-parameter spark.sql (Hive
     PrepareStatementParser.g surface, SURVEY §2.14)."""
@@ -203,56 +195,100 @@ def test_analyze_stats_reach_cbo_costs(spark, sf_dir):
     """EXPLAIN COST must show real rowCount after ANALYZE — the signal
     Spark's CBO join reordering consumes (Hive: StatsRulesProcFactory
     selectivities over metastore column stats)."""
-    from hive_spark.operators import views
-
     views(spark, sf_dir)
-    spark.sql("DROP TABLE IF EXISTS ddl_stats")
-    ddl.ctas(spark, "ddl_stats", "SELECT * FROM nation")
-    ddl.analyze(spark, "ddl_stats")
-    cost = "\n".join(
-        r.plan for r in spark.sql(
-            "EXPLAIN COST SELECT n_regionkey, COUNT(*) FROM ddl_stats GROUP BY 1"
-        ).collect()
+    out = run_script(
+        spark,
+        """DROP TABLE IF EXISTS ddl_stats;
+           CREATE TABLE ddl_stats STORED AS PARQUET AS SELECT * FROM nation;
+           ANALYZE TABLE ddl_stats COMPUTE STATISTICS;
+           ANALYZE TABLE ddl_stats COMPUTE STATISTICS FOR ALL COLUMNS;
+           EXPLAIN COST SELECT n_regionkey, COUNT(*) FROM ddl_stats GROUP BY 1""",
     )
+    cost = "\n".join(r.plan for r in out.results[-1].collect())
     assert "rowCount=25" in cost.replace(" ", "").replace("25.0", "25"), cost[:500]
 
 
 def test_load_data_into_partition(spark, sf_dir, tmp_path):
     """LOAD DATA INPATH ... INTO TABLE ... PARTITION: files land in the
     partition directory, the partition registers, rows become queryable
-    (ref: LoadSemanticAnalyzer.java file-move contract)."""
-    from hive_spark.operators import views
-
+    (ref: LoadSemanticAnalyzer.java)."""
     views(spark, sf_dir)
-    spark.sql("DROP TABLE IF EXISTS ddl_load_t")
-    ddl.create_table(
+    run_script(
         spark,
-        "ddl_load_t",
-        "n_nationkey bigint, n_name string, region string",
-        partition_by=("region",),
+        """DROP TABLE IF EXISTS ddl_load_t;
+           CREATE TABLE ddl_load_t (n_nationkey bigint, n_name string)
+           PARTITIONED BY (region string) STORED AS PARQUET""",
     )
-    # stage files in the table's parquet format (LOAD DATA converts nothing)
     staged = str(tmp_path / "staged")
     spark.table("nation").selectExpr(
         "n_nationkey", "n_name"
     ).limit(5).coalesce(1).write.parquet(staged)
-    n = ddl.load_data(
-        spark, staged, "ddl_load_t", partition={"region": "emea"}
+    load = f"LOAD DATA LOCAL INPATH '{staged}' {{}}INTO TABLE ddl_load_t"
+    out = run_script(
+        spark,
+        load.format("") + " PARTITION (region='emea'); SHOW PARTITIONS ddl_load_t",
     )
-    assert n == 1
+    assert [r[0] for r in out.results[-1].collect()] == ["region=emea"]
+    part_dir = os.path.join(_location(spark, "ddl_load_t"), "region=emea")
+    assert len([f for f in os.listdir(part_dir) if f.endswith(".parquet")]) == 1
     got = spark.table("ddl_load_t")
     assert got.count() == 5
     assert got.select("region").distinct().collect()[0].region == "emea"
-    # OVERWRITE replaces the partition's files, not appends
-    ddl.load_data(
-        spark, staged, "ddl_load_t", partition={"region": "emea"}, overwrite=True
-    )
+    # OVERWRITE replaces the partition's rows, not appends
+    run_script(spark, load.format("OVERWRITE ") + " PARTITION (region='emea')")
     assert spark.table("ddl_load_t").count() == 5
-    # missing partition key in the spec is rejected
-    import pytest as _pytest
+    # an empty partition spec is no spec: the file lacks the partition
+    # column, so the load is rejected
+    with pytest.raises(ValueError, match="without PARTITION"):
+        run_script(spark, load.format("") + " PARTITION ()")
 
-    with _pytest.raises(ValueError, match="missing"):
-        ddl.load_data(spark, staged, "ddl_load_t", partition={})
+
+@pytest.mark.parametrize("carries_ds", [True, False])
+def test_load_data_partitioned_without_partition_clause(
+    spark, tmp_path, carries_ds
+):
+    """Hive 3+ rewrites a LOAD into a partitioned table with no PARTITION
+    clause as INSERT ... SELECT, the file's last columns being the
+    partition columns, and fails when the file lacks them (LanguageManual
+    DML, "Loading files into tables")."""
+    data = tmp_path / "rows.txt"
+    data.write_text(
+        "1,a,2024-01-01\n2,b,2024-01-02\n" if carries_ds else "1,a\n2,b\n"
+    )
+    script = f"""DROP TABLE IF EXISTS ddl_load_ds;
+        CREATE TABLE ddl_load_ds (k INT, v STRING) PARTITIONED BY (ds STRING)
+        ROW FORMAT DELIMITED FIELDS TERMINATED BY ',' STORED AS TEXTFILE;
+        LOAD DATA LOCAL INPATH '{data}' INTO TABLE ddl_load_ds;
+        SELECT k, v, ds FROM ddl_load_ds ORDER BY k"""
+    if not carries_ds:
+        with pytest.raises(ValueError, match="without PARTITION"):
+            run_script(spark, script)
+        assert spark.table("ddl_load_ds").count() == 0
+        return
+    out = run_script(spark, script)
+    assert [tuple(r) for r in out.results[-1].collect()] == [
+        (1, "a", "2024-01-01"), (2, "b", "2024-01-02"),
+    ]
+
+
+def test_regex_serde_load(spark, tmp_path):
+    """ROW FORMAT SERDE RegexSerDe: LOAD DATA splits each line by the
+    table's input.regex, group i to column i; a line the regex does not
+    match as a whole reads as all NULL (serde/.../RegexSerDe.java)."""
+    data = tmp_path / "rx.txt"
+    data.write_text("1|x\n2|y\nno match\n")
+    out = run_script(
+        spark,
+        f"""DROP TABLE IF EXISTS ddl_rx;
+            CREATE TABLE ddl_rx (a INT, b STRING)
+            ROW FORMAT SERDE 'org.apache.hadoop.hive.serde2.RegexSerDe'
+            WITH SERDEPROPERTIES ("input.regex"="([0-9]+)\\\\|(.*)");
+            LOAD DATA LOCAL INPATH '{data}' INTO TABLE ddl_rx;
+            SELECT a, b FROM ddl_rx""",
+    )
+    assert sorted(
+        (tuple(r) for r in out.results[-1].collect()), key=str
+    ) == [(1, "x"), (2, "y"), (None, None)]
 
 
 def test_export_import_round_trip(spark, sf_dir, tmp_path):
@@ -282,33 +318,62 @@ def test_export_import_round_trip(spark, sf_dir, tmp_path):
 def test_alter_table_family(spark, sf_dir):
     """ALTER TABLE rename / add columns / tblproperties / drop partition —
     the DDL dispatch surface (Hive ql/.../ddl/table analyzers)."""
-    from hive_spark.operators import views
-
     views(spark, sf_dir)
-    for t in ("ddl_alter_a", "ddl_alter_b"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    ddl.create_table(
-        spark, "ddl_alter_a", "k bigint, v string, p string", partition_by=("p",)
+    run_script(
+        spark,
+        """DROP TABLE IF EXISTS ddl_alter_a; DROP TABLE IF EXISTS ddl_alter_b;
+           CREATE TABLE ddl_alter_a (k bigint, v string)
+           PARTITIONED BY (p string) STORED AS PARQUET;
+           INSERT INTO ddl_alter_a PARTITION (p='x') VALUES (1, 'a'), (2, 'b');
+           INSERT INTO ddl_alter_a PARTITION (p='y') VALUES (3, 'c')""",
     )
-    spark.sql(
-        "INSERT INTO ddl_alter_a PARTITION (p='x') VALUES (1, 'a'), (2, 'b')"
+
+    out = run_script(
+        spark,
+        """ALTER TABLE ddl_alter_a SET TBLPROPERTIES ('comment.owner'='etl');
+           SHOW TBLPROPERTIES ddl_alter_a""",
     )
-    spark.sql("INSERT INTO ddl_alter_a PARTITION (p='y') VALUES (3, 'c')")
+    props = {r.key: r.value for r in out.results[-1].collect()}
+    assert props["comment.owner"] == "etl"
 
-    ddl.set_tblproperties(spark, "ddl_alter_a", {"comment.owner": "etl"})
-    assert ddl.tblproperties(spark, "ddl_alter_a")["comment.owner"] == "etl"
-
-    ddl.add_columns(spark, "ddl_alter_a", "extra int")
+    run_script(spark, "ALTER TABLE ddl_alter_a ADD COLUMNS (extra int)")
     # existing rows read the new column as NULL (schema evolution on read)
     assert (
         spark.table("ddl_alter_a").filter("extra IS NULL").count() == 3
     )
 
-    ddl.drop_partition(spark, "ddl_alter_a", {"p": "y"}, purge=True)
+    run_script(spark, "ALTER TABLE ddl_alter_a DROP PARTITION (p='y') PURGE")
     assert spark.table("ddl_alter_a").select("p").distinct().count() == 1
 
-    ddl.rename_table(spark, "ddl_alter_a", "ddl_alter_b")
+    run_script(spark, "ALTER TABLE ddl_alter_a RENAME TO ddl_alter_b")
     assert spark.table("ddl_alter_b").count() == 2
     assert "ddl_alter_a" not in [
         t.name for t in spark.catalog.listTables()
     ]
+
+
+def test_every_public_ddl_name_has_an_engine_caller():
+    """ddl.py holds what HiveQL's EXPORT/IMPORT run, and nothing only
+    tests call: each statement has one implementation, the one
+    ``run_script`` runs."""
+    pkg = pathlib.Path(ddl.__file__).parent
+    tree = ast.parse(pathlib.Path(ddl.__file__).read_text())
+    names = []
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            names.append(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names += [t.id for t in targets if isinstance(t, ast.Name)]
+    public = [n for n in names if not n.startswith("_")]
+    engine = "\n".join(
+        p.read_text() for p in sorted(pkg.rglob("*.py")) if p.name != "ddl.py"
+    )
+    uncalled = [
+        name for name in public
+        if not re.search(
+            rf"\bddl\.{name}\b|from hive_spark\.ddl import[^\n]*\b{name}\b",
+            engine,
+        )
+    ]
+    assert public and uncalled == []

@@ -11,9 +11,8 @@ subqueries). The non-ANSI session only relaxes EXPRESSION EVALUATION
 (NULL-on-error arithmetic, edge_div_by_zero); semantic analysis stays
 strict, as in Hive.
 
-The DML-layer negatives (MERGE cardinality violation, constraint
-violations, lock conflicts) live with their modules:
-tests/test_dml.py, test_constraints.py, test_txn.py.
+The DML-layer negatives (MERGE cardinality violation, lock conflicts)
+live with their modules: tests/test_dml.py, test_txn.py.
 """
 
 import pytest
