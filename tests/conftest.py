@@ -30,6 +30,7 @@ def pytest_sessionfinish(session):
     if _OWN_QTEST_TMP:
         shutil.rmtree(_OWN_QTEST_TMP, ignore_errors=True)
 
+
 SF_DIR = os.environ.get("HIVE_SPARK_TEST_SF", "/root/testdata/sf0.01")
 
 

@@ -22,10 +22,6 @@ def _clean_tables(spark):
             spark.sql(f"DROP TABLE IF EXISTS {t.name}")
 
 
-def _location(spark, table):
-    return ddl._as_local(str(ddl._table_info(spark, table)["location"]))
-
-
 def test_create_insert_select_partitioned(spark, sf_dir, tmp_path):
     loc = str(tmp_path / "part_tbl")
     views(spark, sf_dir)
@@ -229,7 +225,8 @@ def test_load_data_into_partition(spark, sf_dir, tmp_path):
         load.format("") + " PARTITION (region='emea'); SHOW PARTITIONS ddl_load_t",
     )
     assert [r[0] for r in out.results[-1].collect()] == ["region=emea"]
-    part_dir = os.path.join(_location(spark, "ddl_load_t"), "region=emea")
+    location = ddl._table_info(spark, "ddl_load_t")["location"]
+    part_dir = os.path.join(ddl._as_local(str(location)), "region=emea")
     assert len([f for f in os.listdir(part_dir) if f.endswith(".parquet")]) == 1
     got = spark.table("ddl_load_t")
     assert got.count() == 5
