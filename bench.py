@@ -3,16 +3,26 @@ $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
-Each query is fully materialized via a count-style action so the timing
-covers scan → shuffle → result, not just plan construction. A warm-up
-query absorbs JVM/codegen startup so numbers reflect steady-state
-throughput (what a long-lived cluster session sees).
+Every query is timed by ``profile_run``: its ``QuerySpec.fn`` plus a
+``noop`` write that runs the whole plan (scan → shuffle → result), three
+times, and the median is reported. The first rep pays one-time costs
+(plan compile, codegen, scratch writes); the median discards it. A
+warm-up touches every table and runs each headline query once first,
+so the numbers reflect what a long-lived session sees.
+
+Tiers: the HEADLINE queries and the TPC-DS extras at SF_DIR, then the
+same queries on a 10× multi-file copy of the fact tables ("sf1"), then
+one forced cold build of the star schema. ``bench_out.json`` adds each
+query's profile per tier: the quartiles of the reps, the last rep's
+seconds inside ``fn`` (``build_s``) and in the action (``run_s``), the
+Spark counters of both job ranges, and the Catalyst phases.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -48,24 +58,9 @@ HEADLINE = [
     "training_data_pipeline",
 ]
 
-
-# Scale sweep: the queries whose sf0.1 numbers are dominated by fixed
-# JVM/scheduler overhead (~0.5 s/query) rather than data volume. Re-run
-# them against a synthetically scaled copy of the fact tables to show
-# time grows far sub-linearly with data — the property that matters at
-# 100 TB, where fixed overhead amortizes to nothing.
-SCALE_SWEEP = [
-    "tpch_q1",
-    "tpch_q9",
-    "tpch_q18",
-    "tpch_q21",
-    "text_tfidf_topk",
-    "text_inverted_index",
-]
-SCALE_FACTOR = int(os.environ.get("SPARK_GRAFT_SCALE_FACTOR", "4"))
 # sf1 tier: 10x the sf0.1 facts ≈ TPC-H sf1 row counts (6M lineitem),
-# multi-file layout. 0 disables (e.g. when benching sf0.001 in tests).
-SF1_FACTOR = int(os.environ.get("SPARK_GRAFT_SF1_FACTOR", "10"))
+# multi-file layout
+SF1_FACTOR = 10
 
 # TPC-DS star-shape extras: reported separately so the headline total
 # stays comparable across rounds
@@ -80,7 +75,93 @@ TPCDS_EXTRA = (
     "tpcds_q75_prior_year_delta",
 )
 
-# fact tables unioned SCALE_FACTOR times with join keys shifted per copy
+
+def profile_run(spark, name: str, fn, sf_dir: str, reps: int = 3) -> dict:
+    """Time ``fn(spark, sf_dir)`` plus a noop write of its DataFrame
+    ``reps`` times, with every Spark job the query starts described as
+    ``name``. Returns the median and quartiles of the reps' seconds and,
+    for the last rep, the seconds inside ``fn`` (``build_s``: plan
+    building and any eager jobs) and in the action (``run_s``), the job
+    ids bounding both (``job_ids``: build jobs are [0]..[1], run jobs
+    [1]..[2]), the scheduler counters of each range (``build``,
+    ``run``) and the Catalyst phase seconds of the DataFrame's own plan.
+    Counters, then phases, are read after the timed interval."""
+    from perfbench import layers
+
+    stats = layers.SparkStats(spark)
+    sc = spark.sparkContext
+    walls = []
+    for _ in range(reps):
+        j0 = stats.next_job_id()
+        sc.setJobDescription(name)
+        try:
+            t0 = time.perf_counter()
+            df = fn(spark, sf_dir)
+            t1 = time.perf_counter()
+            j1 = stats.next_job_id()
+            t2 = time.perf_counter()
+            df.write.format("noop").mode("overwrite").save()
+            t3 = time.perf_counter()
+        finally:
+            sc.setJobDescription(None)
+        j2 = stats.next_job_id()
+        walls.append((t1 - t0) + (t3 - t2))
+    counters = {
+        part: {k: round(v, 3) for k, v in stats.jobs(a, b).items()}
+        for part, a, b in (("build", j0, j1), ("run", j1, j2))
+    }
+    # the noop write plans a fresh copy of the query; the phases are
+    # taken from the DataFrame's own plan
+    df._jdf.queryExecution().executedPlan()
+    q1, med, q3 = statistics.quantiles(walls, n=4, method="inclusive")
+    return {
+        "median_s": round(med, 3),
+        "q1_s": round(q1, 3),
+        "q3_s": round(q3, 3),
+        "reps_s": [round(w, 3) for w in walls],
+        "build_s": round(t1 - t0, 3),
+        "run_s": round(t3 - t2, 3),
+        "job_ids": [j0, j1, j2],
+        **counters,
+        "catalyst": {k: round(v, 3) for k, v in layers.catalyst_phases(df).items()},
+    }
+
+
+def _session(app_name: str):
+    """The benchmark's session on local[CPUS]. Its status store keeps
+    every stage of the run: past ``spark.ui.retainedStages`` stages
+    (1000 by default) Spark drops skipped ones first, and profile_run
+    reads every stage a job lists."""
+    from hive_spark.session import get_session
+
+    return get_session(
+        app_name=app_name,
+        master=f"local[{CPUS}]",
+        shuffle_partitions=int(CPUS),
+        extra_conf={"spark.ui.retainedStages": "100000"},
+    )
+
+
+def _warm_up(spark, registry) -> None:
+    """Touch every table once (file listing + footer reads), then run each
+    headline query once untimed (JIT, codegen, Python workers), so the
+    medians reflect what a long-lived session sees."""
+    from hive_spark.operators import views
+
+    for df in views(spark, SF_DIR).values():
+        df.limit(1).count()
+    for n in HEADLINE:
+        registry[n].fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+
+
+def _fixed_overhead(spark) -> float:
+    """Per-query fixed cost (scheduler + py4j + noop commit): the median
+    of a 1-row query, subtracted nowhere, reported so ratios can be read
+    net."""
+    return profile_run(spark, "fixed_overhead", lambda s, _d: s.range(1), SF_DIR)["median_s"]
+
+
+# fact tables unioned k times with join keys shifted per copy
 # (joins stay copy-local; dims keep their cardinality, so each dim row
 # simply matches k times — the realistic fact/dim growth asymmetry)
 _FACTS = {"lineitem": "l_orderkey", "orders": "o_orderkey",
@@ -89,7 +170,8 @@ _FACTS = {"lineitem": "l_orderkey", "orders": "o_orderkey",
 
 
 def _build_scaled_dir(spark, src: str, k: int) -> str:
-    """Materialize src scaled k× on the fact tables under /tmp (cached).
+    """Materialize src scaled k× on the fact tables in the engine
+    scratch (cached).
     Facts are written as multi-file parquet dirs — also undoing the
     single-row-group scan-parallelism cap of the source testdata files."""
     import shutil
@@ -175,148 +257,48 @@ def _build_scaled_dir(spark, src: str, k: int) -> str:
     return dst
 
 
-def _fixed_overhead(spark) -> float:
-    """Per-query fixed cost (scheduler + py4j + noop commit), best-of-3 on
-    a 1-row job — subtracted nowhere, reported so ratios can be read net."""
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        spark.range(1).write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 3)
-
-
 def main() -> None:
-    from hive_spark.session import get_session
     from hive_spark.operators import full_registry
+    from hive_spark.operators.tpcds import _register_star, measure_cold_star_build
 
-    spark = get_session(
-        app_name="hive_spark_bench",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=int(CPUS),
-    )
+    spark = _session("hive_spark_bench")
     registry = full_registry()
 
-    # Warm-up: touch every table once (file listing + footer reads + codegen).
-    from hive_spark.operators import views
+    def tier(names, sf_dir: str) -> dict[str, dict]:
+        return {n: profile_run(spark, n, registry[n].fn, sf_dir) for n in names}
 
-    for df in views(spark, SF_DIR).values():
-        df.limit(1).count()
-
-    # Two-point scaling table FIRST, right after warm-up: the sweep is
-    # the noise-sensitive measurement, and running it before the 19-query
-    # suite keeps heap/GC state comparable between base and scaled runs
-    # (measured: ratios match isolated runs; at the END of the session
-    # they inflate ~1.4x). Same queries, SCALE_FACTOR× the fact rows.
-    # time_ratio << data_ratio demonstrates the fixed overhead amortizing
-    # (the local[32] stand-in for the 1000-executor scale-up argument).
-    sweep: dict[str, dict[str, float]] = {}
-    if SCALE_FACTOR > 1:
-        scaled_dir = _build_scaled_dir(spark, SF_DIR, SCALE_FACTOR)
-
-        def _best2(spec, d: str) -> float:
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                spec.fn(spark, d).write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            return best
-
-        for name in SCALE_SWEEP:
-            spec = registry[name]
-            # re-measure the base back-to-back with the scaled run: the
-            # suite timing above was taken early in the session (lower
-            # heap/GC pressure), and a ratio of measurements taken under
-            # DIFFERENT session states overstated scaling by up to 1.6x
-            # (r3's q18 "2.05x" was 1.28x when base and scaled ran
-            # adjacently — the plan shape was never the cause)
-            base = _best2(spec, SF_DIR)
-            scaled = _best2(spec, scaled_dir)
-            sweep[name] = {
-                "t_base": round(base, 3),
-                "t_scaled": round(scaled, 3),
-                "data_ratio": float(SCALE_FACTOR),
-                "time_ratio": round(scaled / max(base, 1e-9), 2),
-            }
-
-    # best-of-2 per query: the first run pays one-time costs (plan
-    # compile, codegen, scratch writes); the min is the steady-state
-    # number a long-lived session sees, and damps co-tenant noise
-    timings: dict[str, float] = {}
-    breakdowns: dict[str, dict[str, float]] = {}
-    for name in HEADLINE:
-        spec = registry[name]
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            spec.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            elapsed = time.perf_counter() - t0
-            if elapsed < best:
-                best = elapsed
-                if name == "training_data_pipeline":
-                    # split the timing so a regression is attributable to
-                    # the write stage vs the query (VERDICT r3 #4)
-                    from hive_spark.operators import pipeline as _pl
-
-                    w = _pl.LAST_TIMINGS.get("write_sec", 0.0)
-                    breakdowns[name] = {
-                        "write_sec": w,
-                        "readback_sec": round(max(elapsed - w, 0.0), 3),
-                    }
-        timings[name] = round(best, 3)
-
+    _warm_up(spark, registry)
+    base = tier(HEADLINE, SF_DIR)
     overhead = _fixed_overhead(spark)
-
-    extra: dict[str, float] = {}
-    for name in TPCDS_EXTRA:
-        spec = registry[name]
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            spec.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        extra[name] = round(best, 3)
+    # the star is registered (built on a cache miss) before each tier
+    # that reads it, so no query's reps include the one-time build
+    star_build = _register_star(spark, SF_DIR)
+    base.update(tier(TPCDS_EXTRA, SF_DIR))
 
     # sf1 tier (r4 verdict #1): at sf0.1 the ~0.2-0.5 s/query session
     # constant dominates and the bench measures the constant, not the
     # engine. Run the full headline suite + TPC-DS extras against a
     # 10x-row multi-file copy so the data-dependent cost is the signal.
-    sf1: dict[str, object] = {}
-    if SF1_FACTOR > 1:
-        sf1_dir = _build_scaled_dir(spark, SF_DIR, SF1_FACTOR)
-        sf1_timings: dict[str, float] = {}
-        for name in HEADLINE + list(TPCDS_EXTRA):
-            spec = registry[name]
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                spec.fn(spark, sf1_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.perf_counter() - t0)
-            sf1_timings[name] = round(best, 3)
-        sf1 = {
-            "factor": SF1_FACTOR,
-            "total_sec": round(sum(sf1_timings.values()), 3),
-            "queries": sf1_timings,
-        }
+    sf1_dir = _build_scaled_dir(spark, SF_DIR, SF1_FACTOR)
+    star_build += _register_star(spark, sf1_dir)
+    sf1_profiles = tier(HEADLINE + list(TPCDS_EXTRA), sf1_dir)
+    sf1_timings = {n: p["median_s"] for n, p in sf1_profiles.items()}
+    sf1 = {
+        "factor": SF1_FACTOR,
+        "total_sec": round(sum(sf1_timings.values()), 3),
+        "queries": sf1_timings,
+    }
 
     # Cold star-ETL measurement (VERDICT r8 #2): the fingerprint cache
     # survives across rounds, so `star_build_sec` reads 0.0 on hits and
     # the one-time materialization cost vanishes from the record. Force
     # ONE cache-miss rebuild per bench run — AFTER the query timings, so
     # steady-state numbers are unperturbed — and report it separately.
-    # Disable with SPARK_GRAFT_STAR_COLD=0 (e.g. quick local iterations).
-    star_cold = 0.0
-    if os.environ.get("SPARK_GRAFT_STAR_COLD", "1") != "0":
-        from hive_spark.operators import tpcds as _tpcds_cold
+    star_cold = measure_cold_star_build(spark, sf1_dir)
 
-        cold_dir = sf1_dir if SF1_FACTOR > 1 else SF_DIR
-        star_cold = _tpcds_cold.measure_cold_star_build(spark, cold_dir)
-
+    timings = {n: base[n]["median_s"] for n in HEADLINE}
+    extra = {n: base[n]["median_s"] for n in TPCDS_EXTRA}
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    from hive_spark.operators import tpcds as _tpcds
-
     full = {
         "metric": "headline_query_suite_total",
         "value": round(sum(timings.values()), 3),
@@ -327,17 +309,15 @@ def main() -> None:
         "queries_net": {
             n: round(max(t - overhead, 0.0), 3) for n, t in timings.items()
         },
-        "scale_sweep": sweep,
-        "breakdowns": breakdowns,
         "extra_queries": extra,
-        # one-time star-ETL cost of the LAST materialization build this
-        # process triggered (0.0 = disk-cache hit) — reported so the
-        # per-query numbers can't silently hide the setup work
-        "star_build_sec": _tpcds.TOTAL_BUILD_SEC,
-        # forced cache-miss rebuild at the gate tier, measured after the
+        # seconds the star registrations before the two tiers spent
+        # building (0.0 on disk-cache hits)
+        "star_build_sec": round(star_build, 3),
+        # forced cache-miss rebuild at the sf1 tier, measured after the
         # query pass (VERDICT r8 #2) — the honest one-time ETL figure
         "star_build_cold_sec": star_cold,
         "sf1": sf1,
+        "profiles": {os.path.basename(SF_DIR.rstrip("/")): base, "sf1": sf1_profiles},
     }
     # full detail to a file: the r7 stdout line outgrew the driver's
     # capture (BENCH_r07 "parsed": null, tail truncated mid-key)
@@ -347,24 +327,11 @@ def main() -> None:
     # stdout gets a COMPACT single line (the driver contract): headline
     # keys + totals only, guaranteed to fit any reasonable capture
     compact = {
-        "metric": full["metric"],
-        "value": full["value"],
-        "unit": "sec",
-        "sf": full["sf"],
-        "queries": timings,
-        "fixed_overhead_sec": overhead,
-        "extra_queries": extra,
-        "star_build_sec": full["star_build_sec"],
-        "star_build_cold_sec": full["star_build_cold_sec"],
-        # r10 (VERDICT r9 #6): per-query sf1 timings in the compact line
-        # too (additions-only; headline keys untouched) so round-over-round
-        # comparison can read the data-dominated tier, not just the
-        # session-constant-dominated sf0.1 one
-        "sf1": {
-            k: sf1[k] for k in ("factor", "total_sec", "queries") if k in sf1
-        },
-        "details_file": out_path,
+        k: full[k]
+        for k in ("metric", "value", "unit", "sf", "queries", "fixed_overhead_sec",
+                  "extra_queries", "star_build_sec", "star_build_cold_sec", "sf1")
     }
+    compact["details_file"] = out_path
     print(json.dumps(compact))
 
 

@@ -31,11 +31,13 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 from bench import (
     HEADLINE,
-    SCALE_FACTOR,
-    SCALE_SWEEP,
     SF1_FACTOR,
     TPCDS_EXTRA,
     _build_scaled_dir,
+    _fixed_overhead,
+    _session,
+    _warm_up,
+    profile_run,
 )
 
 
@@ -61,8 +63,8 @@ def _duck_con(sf_dir: str, cpus: str):
 
 
 def _run_pair(spark, con, registry, names, sf_dir):
-    """Best-of-2 per engine (same protocol as bench.py: first run pays
-    codegen/plan caches; min is the steady-state number)."""
+    """Spark: the median of 3 from bench.profile_run. DuckDB: the min of
+    2-5 readings of the oracle SQL."""
     per_query: dict[str, dict[str, float]] = {}
     for name in names:
         spec = registry[name]
@@ -85,13 +87,8 @@ def _run_pair(spark, con, registry, names, sf_dir):
                 con.sql(spec.oracle).fetchall()
             return time.perf_counter() - t0
 
-        t_spark = float("inf")
-        duck_runs: list[float] = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            t_spark = min(t_spark, time.perf_counter() - t0)
-            duck_runs.append(_duck_once())
+        t_spark = profile_run(spark, name, spec.fn, sf_dir)["median_s"]
+        duck_runs = [_duck_once(), _duck_once()]
         # VERDICT r8: the committed 0.95x gate leaned on one outlier-slow
         # duck knn reading (19.2s vs the judge's 10.9s). When the two
         # oracle readings disagree by >25%, take a third — the reported
@@ -121,25 +118,16 @@ def _run_pair(spark, con, registry, names, sf_dir):
 
 
 def main() -> None:
-    from hive_spark.operators import full_registry, views
-    from hive_spark.session import get_session
+    from hive_spark.operators import full_registry
 
-    spark = get_session(
-        app_name="hive_spark_bench_compare",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=int(CPUS),
-    )
+    spark = _session("hive_spark_bench_compare")
     registry = full_registry()
     con = _duck_con(SF_DIR, CPUS)
 
-    for df in views(spark, SF_DIR).values():  # warm both engines
-        df.limit(1).count()
+    _warm_up(spark, registry)
     con.sql("SELECT count(*) FROM lineitem").fetchall()
 
-    # fixed per-query cost: a 1-row query through the same action path
-    t0 = time.perf_counter()
-    spark.range(1).write.format("noop").mode("overwrite").save()
-    overhead = round(time.perf_counter() - t0, 3)
+    overhead = _fixed_overhead(spark)
 
     per_query = _run_pair(spark, con, registry, HEADLINE, SF_DIR)
     # TPC-DS star shapes (r4): the same cross-engine protocol over the
@@ -156,37 +144,26 @@ def main() -> None:
     # sf1 tier (r4 verdict #1): the gross 2x gate is only meetable at a
     # scale where per-query fixed cost stops dominating. Same queries,
     # both engines on the same 10x multi-file parquet.
-    per_query_sf1: dict[str, dict[str, float]] = {}
-    if SF1_FACTOR > 1:
-        sf1_dir = _build_scaled_dir(spark, SF_DIR, SF1_FACTOR)
-        con_sf1 = _duck_con(sf1_dir, CPUS)
-        con_sf1.sql("SELECT count(*) FROM lineitem").fetchall()
-        per_query_sf1 = _run_pair(
-            spark, con_sf1, registry, HEADLINE + list(TPCDS_EXTRA), sf1_dir
-        )
+    suite = HEADLINE + list(TPCDS_EXTRA)
+    sf1_dir = _build_scaled_dir(spark, SF_DIR, SF1_FACTOR)
+    con_sf1 = _duck_con(sf1_dir, CPUS)
+    con_sf1.sql("SELECT count(*) FROM lineitem").fetchall()
+    per_query_sf1 = _run_pair(spark, con_sf1, registry, suite, sf1_dir)
 
     # Two-point ratio evidence: same queries, same multi-file layout, 1x
-    # vs SCALE_FACTOR x the fact rows. Layout is held constant on purpose:
+    # vs SF1_FACTOR x the fact rows. Layout is held constant on purpose:
     # the raw testdata files are single-row-group, which caps BOTH
     # engines' scan parallelism and would otherwise confound the trend.
     # The Spark/DuckDB ratio should shrink with volume as Spark's fixed
     # overhead amortizes — the trend that extrapolates to the design
     # point, where the embedded engine stops being runnable at all.
     base_dir = _build_scaled_dir(spark, SF_DIR, 1)
-    scaled_dir = _build_scaled_dir(spark, SF_DIR, SCALE_FACTOR)
     con_x1 = _duck_con(base_dir, CPUS)
     con_x1.sql("SELECT count(*) FROM lineitem").fetchall()
-    per_query_x1 = _run_pair(spark, con_x1, registry, SCALE_SWEEP, base_dir)
-    con_big = _duck_con(scaled_dir, CPUS)
-    con_big.sql("SELECT count(*) FROM lineitem").fetchall()
-    per_query_scaled = _run_pair(spark, con_big, registry, SCALE_SWEEP, scaled_dir)
+    per_query_x1 = _run_pair(spark, con_x1, registry, suite, base_dir)
     ratio_trend = {
-        n: {
-            "ratio_x1": per_query_x1[n]["ratio"],
-            "ratio_scaled": per_query_scaled[n]["ratio"],
-        }
-        for n in per_query_scaled
-        if n in per_query_x1
+        n: {"ratio_x1": per_query_x1[n]["ratio"], "ratio_sf1": per_query_sf1[n]["ratio"]}
+        for n in per_query_sf1
     }
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
@@ -203,9 +180,7 @@ def main() -> None:
                 "spark_fixed_overhead_sec": overhead,
                 "per_query": per_query,
                 "per_query_tpcds": per_query_tpcds,
-                "scale_factor": SCALE_FACTOR,
                 "per_query_x1_multifile": per_query_x1,
-                "per_query_scaled": per_query_scaled,
                 "ratio_trend": ratio_trend,
                 "sf1_factor": SF1_FACTOR,
                 "per_query_sf1": per_query_sf1,

@@ -50,6 +50,10 @@ _RUNTIME_CONFS = {
     # Hive map construction keeps the LAST value for duplicate keys
     "spark.sql.mapKeyDedupPolicy": "LAST_WIN",
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # TIMESTAMP columns as INT64 micros, which parquet writes with min/max
+    # statistics; the INT96 default has none, so no range predicate on an
+    # engine-written TIMESTAMP column could skip a row group
+    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",

@@ -32,7 +32,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,9 +47,6 @@ _STOPWORDS = ("the", "a", "of", "and", "to")
 # " stopword " bounded by start/space and lookahead space/end == the
 # count of split-on-space tokens equal to a stopword (see module doc)
 _STOP_RE = r"(^| )(" + "|".join(_STOPWORDS) + r")(?= |$)"
-
-# write/read-back seconds of the most recent run, for bench breakdown
-LAST_TIMINGS: dict[str, float] = {}
 
 
 def gated_documents(docs: DataFrame) -> DataFrame:
@@ -89,7 +85,6 @@ def training_data_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = os.path.join(_SCRATCH, f"out_{os.path.basename(sf_dir.rstrip('/'))}")
     shutil.rmtree(out, ignore_errors=True)
-    t0 = time.perf_counter()
     # r9 (guide §6): REBALANCE on the partition key before the write —
     # without it every shuffle partition emits a file per lang it holds
     # (18 scattered files at bench SF; shuffle-partitions x langs at
@@ -114,7 +109,6 @@ def training_data_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     if _input_bytes(spark.table("documents")) >= (1 << 30):
         sink = deduped.hint("rebalance", "lang")
     sink.write.partitionBy("lang").parquet(out)
-    LAST_TIMINGS["write_sec"] = round(time.perf_counter() - t0, 3)
 
     summary = (
         read_parquet(spark, out)

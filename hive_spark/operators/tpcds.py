@@ -393,13 +393,6 @@ FROM lineitem, orders WHERE l_orderkey = o_orderkey"""
     ]
 
 
-# wall-clock of the last star materialization build (0.0 on a disk-cache
-# hit) and the process-cumulative total across all dirs — bench.py
-# reports the total so the one-time ETL cost is visible instead of
-# silently amortized into the first query's best-of-2.
-LAST_BUILD_SEC: float = 0.0
-TOTAL_BUILD_SEC: float = 0.0
-
 # base tables the star SQL derives from — their file stats key the
 # materialization cache (a rebuilt sf_dir with the same path must miss)
 _STAR_BASES = ("lineitem", "orders", "part", "supplier", "customer")
@@ -480,13 +473,13 @@ def measure_cold_star_build(spark: SparkSession, sf_dir: str) -> float:
     _sqls, dst = _star_plan(spark, sf_dir)
     shutil.rmtree(dst, ignore_errors=True)
     state(spark).star_dir = None
-    _register_star(spark, sf_dir)
-    return LAST_BUILD_SEC
+    return _register_star(spark, sf_dir)
 
 
-def _register_star(spark: SparkSession, sf_dir: str) -> None:
+def _register_star(spark: SparkSession, sf_dir: str) -> float:
     """Materialize the derived star schema once per (data, definition)
-    and register the views as parquet reads.
+    and register the views as parquet reads. Returns the seconds spent
+    building (0.0 when the star is already registered or cached on disk).
 
     Two scale decisions live here (r7 verdict #1 — the sf1 2x-gate
     regression was a per-query constant over derived-view internals):
@@ -511,15 +504,14 @@ def _register_star(spark: SparkSession, sf_dir: str) -> None:
        the same tables per query from its WITH prelude (unused CTEs are
        pruned there), so cross-engine value equality is untouched.
     """
-    global LAST_BUILD_SEC, TOTAL_BUILD_SEC
     views(spark, sf_dir)
     # the star's view names are shared: only the last sf_dir is active
     if state(spark).star_dir == sf_dir:
-        return
+        return 0.0
 
     sqls, dst = _star_plan(spark, sf_dir)
     marker = os.path.join(dst, "_BUILT")
-    LAST_BUILD_SEC = 0.0
+    built = 0.0
     if not os.path.exists(marker):
         import shutil
         import time as _time
@@ -616,11 +608,11 @@ def _register_star(spark: SparkSession, sf_dir: str) -> None:
         except OSError:
             # concurrent builder won the rename — use theirs
             shutil.rmtree(build, ignore_errors=True)
-        LAST_BUILD_SEC = round(_time.perf_counter() - t0, 3)
-        TOTAL_BUILD_SEC = round(TOTAL_BUILD_SEC + LAST_BUILD_SEC, 3)
+        built = round(_time.perf_counter() - t0, 3)
     for name, _sql in sqls:
         read_parquet(spark, os.path.join(dst, name)).createOrReplaceTempView(name)
     state(spark).star_dir = sf_dir
+    return built
 
 
 def _oracle(body: str) -> str:

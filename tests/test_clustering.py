@@ -8,8 +8,9 @@ file, so every row group's min/max covers a narrow slice and a selective
 predicate prunes to the few row groups whose range intersects it. The
 cost is one range shuffle at write time, paid once.
 
-CTAS keeps the views' TIMESTAMP_NTZ ``ts`` type, which parquet stores with
-statistics; the session's INT96 TIMESTAMP output carries none."""
+CTAS keeps the views' TIMESTAMP_NTZ ``ts`` type; an INSERT into a declared
+``TIMESTAMP`` column writes INT64 micros. Parquet stores statistics for
+both (it has none for INT96, Spark's default TIMESTAMP output)."""
 
 import datetime
 
@@ -83,6 +84,34 @@ def test_clustered_layout_prunes_row_groups(spark, sf_dir, tmp_path):
     assert got == want > 0
     for t in ("clu_events", "clu_scattered"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_declared_timestamp_insert_prunes_row_groups(spark, sf_dir, tmp_path):
+    views(spark, sf_dir)
+    path = str(tmp_path / "ts_events")
+    run_script(
+        spark,
+        "DROP TABLE IF EXISTS clu_ts;"
+        " CREATE TABLE clu_ts (event_id BIGINT, ts TIMESTAMP, value DOUBLE)"
+        f" STORED AS PARQUET LOCATION '{path}';"
+        " INSERT INTO clu_ts SELECT /*+ REPARTITION_BY_RANGE(8, ts) */"
+        " event_id, ts, value FROM events SORT BY ts",
+    )
+    # the column is UTC-adjusted INT64 micros; the session zone is UTC
+    utc = datetime.timezone.utc
+    lo = datetime.datetime(2024, 1, 10, tzinfo=utc)
+    hi = datetime.datetime(2024, 1, 11, tzinfo=utc)
+    assert row_groups_matching(path, "ts", lo, hi) == (1, 8)
+
+    # the values read back are the ones written
+    out = run_script(
+        spark,
+        "SELECT event_id, CAST(ts AS STRING) AS ts FROM clu_ts;"
+        " SELECT event_id, CAST(ts AS STRING) AS ts FROM events",
+    )
+    got, want = (sorted(map(tuple, r.collect())) for r in out.results)
+    assert got == want
+    spark.sql("DROP TABLE IF EXISTS clu_ts")
 
 
 def test_clustered_files_have_disjoint_ranges(spark, sf_dir, tmp_path):

@@ -125,6 +125,9 @@ def test_parallel_star_build_cold(spark, sf_dir):
     rebuilt tables still match the DuckDB derivation."""
     t = tpcds.measure_cold_star_build(spark, sf_dir)
     assert t > 0.0  # really rebuilt, not a cache hit
+    assert tpcds._register_star(spark, sf_dir) == 0.0  # already registered
+    tpcds.state(spark).star_dir = None
+    assert tpcds._register_star(spark, sf_dir) == 0.0  # cached on disk
     for table in ("mss", "store_sales", "date_dim"):
         compare(
             spark.table(table),
