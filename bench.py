@@ -76,9 +76,9 @@ TPCDS_EXTRA = (
 )
 
 
-def profile_run(spark, name: str, fn, sf_dir: str, reps: int = 3) -> dict:
+def profile_run(spark, name: str, fn, sf_dir: str) -> dict:
     """Time ``fn(spark, sf_dir)`` plus a noop write of its DataFrame
-    ``reps`` times, with every Spark job the query starts described as
+    three times, with every Spark job the query starts described as
     ``name``. Returns the median and quartiles of the reps' seconds and,
     for the last rep, the seconds inside ``fn`` (``build_s``: plan
     building and any eager jobs) and in the action (``run_s``), the job
@@ -91,7 +91,7 @@ def profile_run(spark, name: str, fn, sf_dir: str, reps: int = 3) -> dict:
     stats = layers.SparkStats(spark)
     sc = spark.sparkContext
     walls = []
-    for _ in range(reps):
+    for _ in range(3):
         j0 = stats.next_job_id()
         sc.setJobDescription(name)
         try:

@@ -39,7 +39,15 @@ def spark():
     from hive_spark import get_session
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
-    s = get_session(app_name="hive_spark_tests", master=f"local[{cpus}]", shuffle_partitions=8)
+    # the status store keeps every stage, as in bench.py's session:
+    # past spark.ui.retainedStages it drops skipped stages first, and
+    # bench.profile_run reads every stage a job lists
+    s = get_session(
+        app_name="hive_spark_tests",
+        master=f"local[{cpus}]",
+        shuffle_partitions=8,
+        extra_conf={"spark.ui.retainedStages": "100000"},
+    )
     yield s
 
 

@@ -31,14 +31,8 @@ def _counts(p):
 
 
 def test_profile_run_tags_and_repeats(spark, tiny_dir):
-    sc = spark.sparkContext._jsc.sc()
-    if sc.dagScheduler().nextStageId() > 900:
-        # past spark.ui.retainedStages (1000 in this session) the status
-        # store drops skipped stages, which SparkStats.jobs reads;
-        # bench.py's own session keeps them all
-        pytest.skip("the session has run too many stages; run this file first")
     registry = full_registry()
-    store = sc.statusStore()
+    store = spark.sparkContext._jsc.sc().statusStore()
     profiles = {}
     for name in ("tpch_q6", "training_data_pipeline"):
         first = bench.profile_run(spark, name, registry[name].fn, tiny_dir)
