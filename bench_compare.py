@@ -39,6 +39,9 @@ from bench import (
     _warm_up,
     profile_run,
 )
+from hive_spark.scratch import process_dir
+
+_DUCKPIPE = process_dir("duckpipe")
 
 
 def _duck_con(sf_dir: str, cpus: str):
@@ -80,9 +83,7 @@ def _run_pair(spark, con, registry, names, sf_dir):
                     duck_pipeline_equivalent,
                 )
 
-                duck_pipeline_equivalent(
-                    con, f"/tmp/hive_spark_duckpipe_{os.getpid()}"
-                )
+                duck_pipeline_equivalent(con, _DUCKPIPE)
             else:
                 con.sql(spec.oracle).fetchall()
             return time.perf_counter() - t0

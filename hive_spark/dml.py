@@ -47,6 +47,7 @@ import shutil
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hive_spark.operators import spool
 from hive_spark.session import read_parquet
 
 
@@ -221,21 +222,14 @@ def merge_frame(
     return joined.filter(keep).select(*out_cols)
 
 
-def multi_insert(
-    df: DataFrame, sinks: list[tuple[Column, str]], cache: bool = True
-) -> None:
+def multi_insert(df: DataFrame, sinks: list[tuple[Column, str]]) -> None:
     """FROM src INSERT ... INSERT ... (Hive multi-insert, grammar
     HiveParser.g:2565, plan fan-out SemanticAnalyzer.genBodyPlan:11468):
     one scan fanned out to N filtered sinks. Spark has no single-statement
-    equivalent; we cache the scan once and run N writes against it."""
-    if cache:
-        df = df.cache()
-    try:
-        for condition, path in sinks:
-            df.filter(condition).write.mode("overwrite").parquet(path)
-    finally:
-        if cache:
-            df.unpersist()
+    equivalent; we spool the scan once and run N writes against it."""
+    df = spool(df)
+    for condition, path in sinks:
+        df.filter(condition).write.mode("overwrite").parquet(path)
 
 
 def _read_target(spark: SparkSession, path: str, fmt: str) -> DataFrame:

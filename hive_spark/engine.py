@@ -33,11 +33,7 @@ class Engine:
         spark: SparkSession,
         sf_dir: str | None = None,
         cache_root: str | None = None,
-        cte_materialize_threshold: int = 3,
     ):
-        # hive.optimize.cte.materialize.threshold analog (HiveConf.java:2686);
-        # <= 0 disables the spool rewrite
-        self.cte_materialize_threshold = cte_materialize_threshold
         self.spark = spark
         ensure_engine(spark)
         if sf_dir is not None:
@@ -66,6 +62,12 @@ class Engine:
         return df, False
 
     # -- statements --------------------------------------------------------
+    def _plan(self, text: str) -> DataFrame:
+        """The statement as Spark plans it after the HiveQL rewrites and
+        the CTE spool (Hive's default threshold of 3 references)."""
+        text = rewrite_statement(self.spark, text)
+        return self.spark.sql(spool_ctes(self.spark, text))
+
     def sql(self, text: str, use_cache: bool = False) -> DataFrame:
         """One statement. MV rewrite always consults the registry;
         `use_cache=True` additionally serves/stores by plan fingerprint
@@ -73,11 +75,7 @@ class Engine:
         from hive_spark import authz
 
         authz.check_statement(self.spark, text)
-        text = rewrite_statement(self.spark, text)
-        text = spool_ctes(
-            self.spark, text, threshold=self.cte_materialize_threshold
-        )
-        df = self.spark.sql(text)
+        df = self._plan(text)
         if not df.columns:  # DDL/DML — execute as-is, never cache
             return df
         df, mv_hit = self._rewrite(df)
@@ -91,11 +89,7 @@ class Engine:
 
     def explain_rewrite(self, text: str) -> bool:
         """True when the MV registry would serve this statement."""
-        text = rewrite_statement(self.spark, text)
-        text = spool_ctes(
-            self.spark, text, threshold=self.cte_materialize_threshold
-        )
-        df = self.spark.sql(text)
+        df = self._plan(text)
         return df.columns != [] and self._rewrite(df)[1]
 
     def script(self, text: str) -> ScriptResult:

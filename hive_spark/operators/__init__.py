@@ -61,47 +61,52 @@ _RUNTIME_CONFS = {
 }
 
 
+def spool(df: DataFrame) -> DataFrame:
+    """The engine's one way to materialise a within-query intermediate
+    (the CTE spool, the spooled terminal sorts, the multi-insert scan).
+
+    A lazy ``localCheckpoint``: the first job that reads the rows stores
+    them (MEMORY_AND_DISK), and every later read in the query — another
+    reference, the range sampler, the next sink — reads the stored rows.
+    It is keyed on RDD identity: a fresh RDD per call, freed with its
+    DataFrame and never entered in Spark's ``CacheManager``, so no later
+    query or rep reads it, unlike a plan-keyed ``persist()``/``cache()``
+    whose entry outlives the query and answers any plan that matches.
+
+    It is not lazy under AQE, despite ``eager=False``: the checkpoint's
+    RDD comes from the executed plan, which settles only after every
+    upstream shuffle stage has run, so those jobs run before this returns
+    and land outside the final action's plan and metrics (text_tfidf_topk:
+    5 of the 10 build-time jobs of a traced perfbench interactive_sf0.01
+    pass). The trade is lineage truncation: on executor loss the spooled
+    partitions are recomputed from the materialization point — the
+    localCheckpoint contract; a long-lived result on a real cluster wants
+    reliable checkpointing."""
+    return df.localCheckpoint(eager=False)
+
+
 def spool_sort(df: DataFrame, *cols) -> DataFrame:
     """Terminal bare ORDER BY (no LIMIT) over an expensive child pays the
     child TWICE: the range exchange's bound-sampling job executes the
     child RDD once before the real pass (shuffle stages below are reused
     by the DAG scheduler, but reduce-side compute — final aggregates,
-    windows, Python stages, un-shuffled scan chains — re-runs). Spooling
-    the finished rows through a localCheckpoint lets the sampler
-    and the range shuffle both read the spool, so everything upstream
-    runs exactly once (guide §1.2 "don't compute things you throw away",
-    §3.3 "materialising an intermediate truncates the plan").
-
-    The checkpoint is not lazy under AQE, despite ``eager=False``:
-    ``localCheckpoint`` builds its RDD from the executed physical plan,
-    and an adaptive plan only settles after it has materialised every
-    upstream shuffle stage, so all upstream shuffle jobs run before this
-    function returns. They belong to the query but land outside the
-    final action's plan and metrics (text_tfidf_topk: 5 of the 10
-    build-time jobs of a traced perfbench interactive_sf0.01 pass).
+    windows, Python stages, un-shuffled scan chains — re-runs). Sorting
+    the ``spool`` of the finished (post-aggregation, small) rows lets the
+    sampler and the range shuffle both read it, so everything upstream
+    runs exactly once (guide §1.2, §3.3).
 
     Measured r10 (interleaved, sf1 tier): text_tfidf_topk 1.98 -> 0.51s,
     events_session 1.34 -> 0.70s, mm_features 1.20 -> 0.81s,
     text_inverted_index 1.68 -> 1.24s (best-of-3, both alternation
-    rounds). Adoption is MEASUREMENT-GATED per query: when the doubled
-    child is cheap (a final aggregate over a reused shuffle), the
-    spool's extra job + block-manager write costs more than it saves —
-    tpch_q1/q5/q13, window_rank, agg_rollup, events_tumbling,
-    text_stats, dedup_minhash_lsh and knn_lsh_bucketed measured
-    neutral-to-worse with it and keep their direct ORDER BY.
-
-    Scale/correctness notes: the spool is RDD-identity-keyed — a fresh
-    checkpoint per call, recomputed from the parquet inputs on every
-    run (never reused across runs, unlike plan-keyed persist()). Storage
-    is MEMORY_AND_DISK of the query RESULT rows (post-aggregation /
-    post-filter — orders of magnitude smaller than the inputs). The
-    trade is lineage truncation: on executor loss the spooled partitions
-    are recomputed from the checkpoint's materialization point, not
-    replayed per-partition — the standard localCheckpoint contract; use
-    reliable checkpointing for long-lived results on a real cluster.
-    ORDER BY + LIMIT queries are NOT routed here (they plan as
-    TakeOrderedAndProject — no range exchange, no sampling pass)."""
-    return df.localCheckpoint(eager=False).orderBy(*cols)
+    rounds); mm_frame_sample 0.94 -> 0.49s at sf0.1. Adoption is
+    MEASUREMENT-GATED per query: when the doubled child is cheap (a final
+    aggregate over a reused shuffle), the spool's extra job + block-
+    manager write costs more than it saves — tpch_q1/q5/q13, window_rank,
+    agg_rollup, events_tumbling, text_stats, dedup_minhash_lsh and
+    knn_lsh_bucketed measured neutral-to-worse with it and keep their
+    direct ORDER BY. ORDER BY + LIMIT plans as TakeOrderedAndProject (no
+    range exchange, no sampling pass) and is NOT routed here."""
+    return spool(df).orderBy(*cols)
 
 
 def ensure_engine(spark: SparkSession) -> None:
@@ -135,8 +140,8 @@ def views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 #
 # The driver hash-compares PANDAS-converted frames (spark ``toPandas()`` vs
 # DuckDB ``.df()``), where physical types leak into the hashed strings even
-# when every value matches (CORRECTNESS_r01: 21/50 failed with zero value
-# differences):
+# when every value matches (round 1's driver run: 21/50 failed with zero
+# value differences; `git show ebbee1c:CORRECTNESS_r01.json`):
 #   - Spark DECIMAL -> object Decimals ('138014.00'); DuckDB DECIMAL ->
 #     float64 ('138014.0')
 #   - DuckDB SUM(int) -> HUGEINT -> float64 ('19525.0'); Spark -> int64

@@ -3,7 +3,7 @@ overwrite, each returning the post-DML table so DuckDB can verify the final
 state with an equivalent *declarative* expression (DuckDB never runs the
 write path — it recomputes what the table must contain).
 
-Each demo copies a testdata table to a scratch dir under /tmp, applies the
+Each demo copies a testdata table to a per-process scratch dir, applies the
 DML via hive_spark.dml, and returns the re-read result — so the parquet
 write/read round-trip is part of what's verified, not just the rewrite
 expression. Hive refs in hive_spark/dml.py docstrings.
@@ -19,9 +19,10 @@ from pyspark.sql import functions as F
 
 from hive_spark import dml
 from hive_spark.operators import QuerySpec, views
+from hive_spark.scratch import process_dir
 from hive_spark.session import read_parquet
 
-_SCRATCH = f"/tmp/hive_spark_dml_{os.getpid()}"  # pid-unique: concurrent sessions must not collide
+_SCRATCH = process_dir("dml")
 
 
 def _copy(spark: SparkSession, sf_dir: str, table: str, name: str) -> str:
@@ -139,7 +140,7 @@ ORDER BY c_custkey
 
 
 def dml_multi_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FROM lineitem INSERT high-value INSERT low-value: one cached scan,
+    """FROM lineitem INSERT high-value INSERT low-value: one spooled scan,
     two sinks; returns per-sink counts + revenue."""
     views(spark, sf_dir)
     base = os.path.join(_SCRATCH, f"mi_{os.path.basename(sf_dir.rstrip('/'))}")

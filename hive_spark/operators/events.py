@@ -105,7 +105,8 @@ def events_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical in order. (The structural alternatives are measured and
     # rejected: gaps-and-islands 2.63 vs 1.57s, raw-row repartition
     # loses, and pre-aggregation by (user, 30-min bucket) collapses only
-    # 1.02:1 on this corpus — bench_artifacts/events_density_r10.md.)
+    # 1.02:1 on this corpus —
+    # `git show ebbee1c:bench_artifacts/events_density_r10.md`.)
     out = (
         df.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(

@@ -13,7 +13,7 @@ read-back summary.
 Scale notes: the multi-insert fan-out re-reads the scan per sink in
 Spark (no shared-scan operator); for the 100 TB path the scan is a
 column-pruned, filter-pushed parquet read per sink, which AQE handles
-independently — or callers use dml.multi_insert (cached single scan).
+independently — or callers use dml.multi_insert (one spooled scan).
 TRANSFORM forks one external process per task, streaming rows through
 stdin/stdout exactly like Hive's ScriptOperator — throughput is bounded
 by the pipe, so it is a cold-path integration feature, never a hot-path

@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hive_spark.operators import QuerySpec, views
+from hive_spark.operators import QuerySpec, spool_sort, views
 
 FRAME_SIZE = 64  # bytes per pseudo-frame for the "video" sampler
 
@@ -170,25 +170,14 @@ def mm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                 names=["doc_id", "n_bytes", "head_byte", "byte_sum"],
             )
 
-    # r10 opt (guide §1.2/§7.2 — measured, bench_artifacts/probe_mm_r10.py):
-    # the final ORDER BY is an Exchange rangepartitioning whose bound-
-    # sampling job RE-EXECUTES the child RDD — and here the child is the
-    # whole scan -> encode -> Arrow -> python chain (no shuffle below it
-    # that the DAG scheduler could reuse), so every run paid the Python
-    # boundary twice. localCheckpoint(lazy) materializes the NARROW
-    # feature rows (4 small columns, ~28 B/row) on first touch; the
-    # sampler and the range shuffle then both read the checkpoint.
-    # Measured best-of-3: sf0.1 0.53 -> 0.13s, sf1 tier 1.92 -> 0.63s.
-    # This is a within-query intermediate keyed on RDD identity (a fresh
-    # RDD per call — no reuse across runs, unlike plan-keyed .persist()).
-    # At 100 TB the trade is strictly better: recompute = re-reading the
-    # payload bytes + re-running the kernel; checkpoint = 28 B/row.
-    return (
+    # the sort's range sampler would re-run the whole scan -> encode ->
+    # Arrow -> Python chain; the spool holds ~28 B/row of features
+    # (measured by `git show ebbee1c:bench_artifacts/probe_mm_r10.py`)
+    return spool_sort(
         docs.mapInArrow(
             extract, "doc_id bigint, n_bytes bigint, head_byte int, byte_sum bigint"
-        )
-        .localCheckpoint(eager=False)
-        .orderBy("doc_id")
+        ),
+        "doc_id",
     )
 
 
@@ -227,15 +216,12 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                     out["first_byte"].append(data[off])
             yield pd.DataFrame(out)
 
-    # same range-sampling double-execution fix as mm_features: checkpoint
-    # the narrow frame rows so the ORDER BY's bound sampler doesn't re-run
-    # the payload scan + Python stage (measured 0.94 -> 0.49s at sf0.1)
-    return (
+    return spool_sort(
         docs.mapInPandas(
             sample, "doc_id bigint, frame_idx int, offset int, first_byte int"
-        )
-        .localCheckpoint(eager=False)
-        .orderBy("doc_id", "frame_idx")
+        ),
+        "doc_id",
+        "frame_idx",
     )
 
 
@@ -299,13 +285,14 @@ def mm_decode_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(out)
 
     imgs = docs.mapInPandas(encode, "doc_id bigint, payload binary")
-    # checkpoint before the sort: otherwise the range sampler re-runs BOTH
-    # chained Python stages (encode + decode) a second time (see mm_features)
-    return imgs.mapInPandas(
-        decode,
-        "doc_id bigint, width int, height int, "
-        "sum_r bigint, sum_g bigint, sum_b bigint",
-    ).localCheckpoint(eager=False).orderBy("doc_id")
+    return spool_sort(
+        imgs.mapInPandas(
+            decode,
+            "doc_id bigint, width int, height int, "
+            "sum_r bigint, sum_g bigint, sum_b bigint",
+        ),
+        "doc_id",
+    )
 
 
 # closed-form twin of generate->encode->decode->sum: channel c's pixels
@@ -404,15 +391,12 @@ def mm_decode_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
                 out["sum_samples"].append(int(s.astype(np.int64).sum()))
             yield pd.DataFrame(out)
 
-    # checkpoint before the sort — same double-execution fix as mm_features
-    return (
-        docs.mapInPandas(encode, "doc_id bigint, payload binary")
-        .mapInPandas(
+    return spool_sort(
+        docs.mapInPandas(encode, "doc_id bigint, payload binary").mapInPandas(
             decode,
             "doc_id bigint, n_samples int, sample_rate int, sum_samples bigint",
-        )
-        .localCheckpoint(eager=False)
-        .orderBy("doc_id")
+        ),
+        "doc_id",
     )
 
 

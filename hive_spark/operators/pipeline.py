@@ -38,10 +38,10 @@ from pyspark.sql import functions as F
 
 from hive_spark.operators import QuerySpec, spool_sort, views
 
-from hive_spark.scratch import scratch_dir
+from hive_spark.scratch import process_dir
 from hive_spark.session import read_parquet
 
-_SCRATCH = scratch_dir(f"pipeline_{os.getpid()}")  # pid-unique: concurrent sessions must not collide
+_SCRATCH = process_dir("pipeline")
 
 _STOPWORDS = ("the", "a", "of", "and", "to")
 # " stopword " bounded by start/space and lookahead space/end == the

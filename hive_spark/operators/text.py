@@ -276,7 +276,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the old groupBy's bucket sizes (same key, same skew profile; MIN is
     a cheap bounded aggregate). Interleaved best-of-5, rows identical:
     sf0.1 0.75 -> 0.57s, sf1 tier 1.06 -> 0.99s (all reps faster;
-    bench_artifacts/dedup_ab_r10.py).
+    `git show ebbee1c:bench_artifacts/dedup_ab_r10.py`).
     """
     views(spark, sf_dir)
     mins = ", ".join(

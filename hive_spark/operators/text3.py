@@ -217,6 +217,8 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.union(
         pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
     ).toDF("src", "dst")
+    # eager, not operators.spool: these checkpoints bound the lineage an
+    # iterative loop grows each round, which a lazy spool would not
     edges = edges.localCheckpoint(eager=True)
 
     labels = (

@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from hive_spark.operators import QuerySpec
 from hive_spark.operators.tpcds import _oracle, _qsum, _register_star
+from hive_spark.plans.cte_spool import spool_ctes
 
 
 def _cents(col: str) -> str:
@@ -146,9 +147,11 @@ FROM ssci FULL OUTER JOIN csci
 # fact scans. Hive spools CTEs referenced >= 3 times
 # (ql/.../optimizer/calcite/rules/TableScanToSpoolRule.java,
 # hive.optimize.cte.materialize.threshold=3 — HiveConf.java:2686); the
-# engine mirrors that by persisting the aggregated (customer x year x
-# channel)-sized relation once and self-joining the cache.
-_Q74_CTE = f"""
+# engine runs the same rule (plans.cte_spool), so the aggregated
+# (customer x year x channel)-sized relation is computed once and the
+# self-joins read the spool.
+_Q74 = f"""
+WITH year_total AS (
   SELECT ss_customer_sk AS customer_sk, d_year AS yr,
          SUM({_cents("ss_ext_sales_price")}) AS year_total, 's' AS sale_type
   FROM store_sales, date_dim
@@ -159,11 +162,9 @@ _Q74_CTE = f"""
          SUM({_cents("ws_ext_sales_price")}), 'w'
   FROM web_sales, date_dim
   WHERE ws_sold_date_sk = d_date_sk AND d_year IN (1996, 1997)
-  GROUP BY ws_bill_customer_sk, d_year"""
-
-_Q74_OUTER = """
+  GROUP BY ws_bill_customer_sk, d_year)
 SELECT ts1.customer_sk
-FROM {yt} ts1, {yt} ts2, {yt} tw1, {yt} tw2
+FROM year_total ts1, year_total ts2, year_total tw1, year_total tw2
 WHERE ts1.customer_sk = ts2.customer_sk
   AND ts1.customer_sk = tw1.customer_sk
   AND ts1.customer_sk = tw2.customer_sk
@@ -176,10 +177,6 @@ WHERE ts1.customer_sk = ts2.customer_sk
       CAST(ts2.year_total AS DOUBLE) / ts1.year_total
 ORDER BY ts1.customer_sk
 LIMIT 100"""
-
-_Q74 = f"WITH year_total AS ({_Q74_CTE})" + _Q74_OUTER.format(
-    yt="year_total"
-)
 
 # ref: perf/query75.q — brands whose net sold quantity (sales minus
 # returns, all three channels) dropped >10% vs the prior year
@@ -835,18 +832,14 @@ REGISTRY["tpcds_q87_channel_except"] = QuerySpec(
 )
 
 
-def _q74_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q74 with the year_total CTE spooled once (Hive CTE
-    materialization analog — see the _Q74_CTE comment): one pass over
-    each channel fact, four reads of the cached aggregate."""
+def _q74_spooled(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """q74 with year_total spooled by Hive's CTE rule (see the _Q74
+    comment): one pass over each channel fact, four reads of the spool."""
     _register_star(spark, sf_dir)
-    yt = spark.sql(_Q74_CTE)
-    yt.persist()
-    yt.createOrReplaceTempView("yt74_spool")
-    return spark.sql(_Q74_OUTER.format(yt="yt74_spool"))
+    return spark.sql(spool_ctes(spark, _Q74))
 
 
-REGISTRY["tpcds_q74_yoy_growth"] = QuerySpec(_q74_materialized, _oracle(_Q74))
+REGISTRY["tpcds_q74_yoy_growth"] = QuerySpec(_q74_spooled, _oracle(_Q74))
 
 
 # r9 optimization (guide §2.4 "remove shuffles outright"): _Q75's

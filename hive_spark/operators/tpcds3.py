@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from hive_spark.operators import QuerySpec
 from hive_spark.operators.tpcds import _oracle, _register_star
+from hive_spark.plans.cte_spool import spool_ctes
 
 
 def _cents(col: str) -> str:
@@ -96,9 +97,10 @@ _PROFIT = {
 }
 # Spark recomputes a CTE per reference (six fact scans here); Hive
 # spools CTEs referenced >= 3 times (TableScanToSpoolRule,
-# hive.optimize.cte.materialize.threshold=3) — mirrored below by
-# persisting the aggregated relation once (see _q4_materialized).
-_Q4_CTE = f"""
+# hive.optimize.cte.materialize.threshold=3), and so does the engine
+# (plans.cte_spool; see _q4_spooled).
+_Q4 = f"""
+WITH year_total AS (
   SELECT ss_customer_sk AS customer_sk, d_year AS yr,
          SUM({_cents(_PROFIT["s"])}) AS year_total, 's' AS sale_type
   FROM store_sales, date_dim
@@ -115,13 +117,11 @@ _Q4_CTE = f"""
          SUM({_cents(_PROFIT["w"])}), 'w'
   FROM web_sales, date_dim
   WHERE ws_sold_date_sk = d_date_sk AND d_year IN (1996, 1997)
-  GROUP BY ws_bill_customer_sk, d_year"""
-
-_Q4_OUTER = """
+  GROUP BY ws_bill_customer_sk, d_year)
 SELECT ts2.customer_sk
-FROM {yt} ts1, {yt} ts2,
-     {yt} tc1, {yt} tc2,
-     {yt} tw1, {yt} tw2
+FROM year_total ts1, year_total ts2,
+     year_total tc1, year_total tc2,
+     year_total tw1, year_total tw2
 WHERE ts1.customer_sk = ts2.customer_sk
   AND ts1.customer_sk = tc1.customer_sk
   AND ts1.customer_sk = tc2.customer_sk
@@ -140,8 +140,6 @@ WHERE ts1.customer_sk = ts2.customer_sk
       CAST(tw2.year_total AS DOUBLE) / tw1.year_total
 ORDER BY ts2.customer_sk
 LIMIT 100"""
-
-_Q4 = f"WITH year_total AS ({_Q4_CTE})" + _Q4_OUTER.format(yt="year_total")
 
 # ref: perf/query17.q — items sold, returned, and re-bought via catalog
 # by the same customer: count/avg/stdev of the three quantity streams.
@@ -658,26 +656,22 @@ REGISTRY: dict[str, QuerySpec] = {
 # the ORACLE keeps the uninjected _Q4 (hash match re-proves equivalence
 # every round). With the date-clustered star layout the pushed range
 # skips ~5/7 of each fact's row groups.
-_Q4_CTE_SPARK = _Q4_CTE
+_Q4_SPARK = _Q4
 for _dc in ("ss_sold_date_sk", "cs_sold_date_sk", "ws_sold_date_sk"):
     _marker = f"WHERE {_dc} = d_date_sk AND d_year IN (1996, 1997)"
-    assert _Q4_CTE_SPARK.count(_marker) == 1, _marker
-    _Q4_CTE_SPARK = _Q4_CTE_SPARK.replace(
+    assert _Q4_SPARK.count(_marker) == 1, _marker
+    _Q4_SPARK = _Q4_SPARK.replace(
         _marker, _marker + f"\n    AND {_dc} BETWEEN 19960101 AND 19971231"
     )
 
 
-def _q4_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q4 with the year_total CTE spooled once (Hive CTE
-    materialization analog — see the _Q4_CTE comment): one pass over
-    each channel fact, six reads of the cached aggregate."""
+def _q4_spooled(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """q4 with year_total spooled by Hive's CTE rule (see the _Q4
+    comment): one pass over each channel fact, six reads of the spool."""
     _register_star(spark, sf_dir)
-    yt = spark.sql(_Q4_CTE_SPARK)
-    yt.persist()
-    yt.createOrReplaceTempView("yt4_spool")
-    return spark.sql(_Q4_OUTER.format(yt="yt4_spool"))
+    return spark.sql(spool_ctes(spark, _Q4_SPARK))
 
 
 REGISTRY["tpcds_q4_three_channel_growth"] = QuerySpec(
-    _q4_materialized, _oracle(_Q4)
+    _q4_spooled, _oracle(_Q4)
 )

@@ -12,11 +12,14 @@ TableScanToSpoolRule.java; threshold conf HiveConf.java:2686).
 it scans the statement's top-level WITH clause with a quote-, comment-
 and paren-aware tokenizer, counts word-boundary references to each CTE
 beyond its definition, and for every CTE at or above the threshold
-executes the CTE once (as its own WITH statement over the earlier
-definitions), persists it, registers a `<name>__spool` temp view, and
+plans the CTE once (as its own WITH statement over the earlier
+definitions), spools it (`operators.spool`: a per-query checkpoint that
+no later query reads), registers a `<name>__spool` temp view, and
 rewrites the remaining statement to read the view. References INSIDE
 later CTE bodies count and are rewritten too, so a spooled CTE feeds
-both the main body and downstream CTEs from the cache.
+both the main body and downstream CTEs from the one spool. Under AQE
+the spool runs the CTE's upstream shuffle jobs here, in the statement
+that spools it.
 
 Only plain `WITH name AS (...)` chains are handled; RECURSIVE,
 column-aliased CTEs (`name (a, b) AS`), and INSERT-leading statements
@@ -28,8 +31,9 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
+from hive_spark.operators import spool
 from hive_spark.sqltext import close_bracket, code_positions
 
 _WORD = r"[A-Za-z_][A-Za-z0-9_]*"
@@ -129,8 +133,9 @@ def reorder_ctes(stmt: str) -> str:
 
 def _ref_spans(name: str, sql: str) -> list[tuple[int, int]]:
     """Spans of word-boundary references to `name` in code (not
-    strings/comments)."""
-    pat = re.compile(rf"\b{re.escape(name)}\b", re.IGNORECASE)
+    strings/comments). A qualified `x.name` is a column, never a CTE
+    (q4/q74 select `ts1.year_total` from `year_total`)."""
+    pat = re.compile(rf"(?<!\.)\b{re.escape(name)}\b", re.IGNORECASE)
     return [
         m.span() for i, _ in code_positions(sql) if (m := pat.match(sql, i))
     ]
@@ -150,13 +155,8 @@ def _replace_refs(name: str, repl: str, sql: str) -> str:
     return "".join(out)
 
 
-def spool_ctes(
-    spark: SparkSession,
-    text: str,
-    threshold: int = 3,
-    _spooled: list[DataFrame] | None = None,
-) -> str:
-    """Materialize >= threshold-referenced CTEs; returns the rewritten
+def spool_ctes(spark: SparkSession, text: str, threshold: int = 3) -> str:
+    """Spool >= threshold-referenced CTEs; returns the rewritten
     statement (possibly unchanged). threshold <= 0 disables."""
     if threshold <= 0:
         return text
@@ -178,12 +178,8 @@ def spool_ctes(
                 f"{work[k][0]} AS ({work[k][1]})" for k in kept_idx
             )
             cte_sql = f"WITH {prior}\n{body}" if prior else body
-            df = spark.sql(cte_sql)
-            df.persist()
             view = f"{name}__spool"
-            df.createOrReplaceTempView(view)
-            if _spooled is not None:
-                _spooled.append(df)
+            spool(spark.sql(cte_sql)).createOrReplaceTempView(view)
             # rewrite every later body and the main statement
             for k in range(idx + 1, len(work)):
                 n2, b2 = work[k]

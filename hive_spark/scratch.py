@@ -15,14 +15,35 @@ harmless there.)
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 
 
-def scratch_dir(*parts: str) -> str:
-    root = os.environ.get(
+def _root() -> str:
+    return os.environ.get(
         "HIVE_SPARK_SCRATCH",
         os.path.join(os.path.expanduser("~"), ".hive_spark_scratch", "engine"),
     )
-    d = os.path.join(root, *parts)
+
+
+def scratch_dir(*parts: str) -> str:
+    d = os.path.join(_root(), *parts)
     os.makedirs(d, exist_ok=True)
+    return d
+
+
+def process_dir(name: str) -> str:
+    """`<root>/<name>_<pid>`: scratch private to this process, so that
+    concurrent sessions (tests, a replica sweep, the driver) never rmtree
+    each other's live files. It is not created here — its first writer
+    makes it — and it is removed when the process exits."""
+    pid = os.getpid()
+    d = os.path.join(_root(), f"{name}_{pid}")
+
+    def remove() -> None:
+        if os.getpid() == pid:  # not in a forked child
+            shutil.rmtree(d, ignore_errors=True)
+
+    atexit.register(remove)
     return d

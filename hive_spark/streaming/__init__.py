@@ -34,11 +34,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# pid-suffixed: concurrent sessions (pytest + replica sweep + the driver)
-# must not rmtree each other's live sources/sinks/checkpoints
-from hive_spark.scratch import scratch_dir
+from hive_spark.scratch import process_dir
 
-_SCRATCH = scratch_dir(f"stream_{os.getpid()}")
+_SCRATCH = process_dir("stream")
 
 # ts is TIMESTAMP (ltz): watermarks reject TIMESTAMP_NTZ; under the UTC
 # session the cast from the tables' NTZ values is epoch-preserving.

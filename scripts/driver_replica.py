@@ -5,11 +5,12 @@ Round-2 hardening: the driver hashes PANDAS-converted frames (duck
 ``.df()`` vs spark ``toPandas()``), not Python values — DuckDB renders
 DECIMAL / HUGEINT as float64 while Spark yields object-Decimals / int64,
 so string forms diverge even when every value is identical
-(CORRECTNESS_r01: 21/50 failed exactly this way). This replica therefore
-compares the *pandas string forms* after column-name sort + row sort —
-the representation the driver actually hashes. Calibrated against
-CORRECTNESS_r01.json: on the 50 driver-sampled queries it must reproduce
-the driver's pass/fail split exactly.
+(round 1's driver run: 21/50 failed exactly this way). This replica
+therefore compares the *pandas string forms* after column-name sort + row
+sort — the representation the driver actually hashes. Calibrated against
+that run's report (`git show ebbee1c:CORRECTNESS_r01.json`): on the 50
+driver-sampled queries it must reproduce the driver's pass/fail split
+exactly.
 
 Usage: python scripts/driver_replica.py [sf_dir] [query_prefix...]
 """

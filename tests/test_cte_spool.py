@@ -1,9 +1,10 @@
 """CTE spool rewrite: Hive's TableScanToSpoolRule analog for SQL text.
 
 A WITH-clause CTE referenced >= hive.optimize.cte.materialize.threshold
-(3) times is executed once, persisted, and the statement rewritten to
-read the cached view — results identical, base inputs scanned once
-instead of once per reference.
+(3) times is executed once, spooled (a per-query checkpoint), and the
+statement rewritten to read the spool's view — results identical, base
+inputs scanned once instead of once per reference, and nothing left in
+Spark's CacheManager for a later query to read.
 """
 
 import pytest
@@ -68,13 +69,44 @@ def test_spooled_results_match_direct(spark, engine):
     assert sorted(map(tuple, direct)) == sorted(map(tuple, spooled))
 
 
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_spooled_plan_reads_cache_once(spark, engine):
     df = engine.sql(_FOUR_REFS)
     df.write.format("noop").mode("overwrite").save()
     plan = df._jdf.queryExecution().executedPlan().toString()
-    # all four references hit the cache; the base table feeds only the
-    # (single) cache fill, not this plan's joins
-    assert plan.count("InMemoryTableScan") == 4
+    # all four references read the spool; the base table feeds only the
+    # (single) spool fill, not this plan's joins
+    assert plan.count("Scan ExistingRDD") == 4
+    assert "FileScan" not in plan and "lineitem" not in plan
+
+
+def test_spool_leaves_no_cache_entry(spark, engine):
+    """The spool is per query: no statement path leaves an entry in
+    Spark's CacheManager that a later plan could match."""
+    from hive_spark.hqlscript import run_script
+
+    spark.catalog.clearCache()  # entries other tests' statements left
+    engine.sql(_FOUR_REFS).collect()
+    assert _cache_empty(spark)
+    run_script(spark, _FOUR_REFS + ";")
+    assert _cache_empty(spark)
+    assert engine.explain_rewrite(_FOUR_REFS) is False
+    assert _cache_empty(spark)
+
+
+def test_qualified_column_named_like_cte_is_not_a_reference(spark):
+    # year_total is both the CTE and its column (q4, q74): `a.year_total`
+    # counts as no reference and is not rewritten
+    sql = ("WITH year_total AS (SELECT 1 AS year_total)"
+           " SELECT a.year_total, b.year_total, c.year_total"
+           " FROM year_total a, year_total b, year_total c")
+    out = spool_ctes(spark, sql)
+    assert out.count("year_total__spool") == 3
+    assert "a.year_total," in out
+    assert spark.sql(out).collect() == [(1, 1, 1)]
 
 
 def test_chained_ctes_spool_upstream(spark, engine):
@@ -113,11 +145,11 @@ SELECT a.k, a.c, b.c AS c2 FROM t a JOIN t b ON a.k = b.k ORDER BY a.k;
     res = run_script(spark, script)
     df = res.results[-1]
     # the spool fired at the lowered threshold: the view exists and is
-    # cache-backed (results themselves come back as CliDriver-style
+    # checkpoint-backed (results themselves come back as CliDriver-style
     # materialized rows, so the plan evidence lives on the view)
     assert spark.catalog.tableExists("t__spool")
     vplan = spark.table("t__spool")._jdf.queryExecution().optimizedPlan()
-    assert "InMemoryRelation" in vplan.toString()
+    assert vplan.toString().startswith("LogicalRDD")
     direct = spark.sql(
         "WITH t AS (SELECT n_regionkey AS k, COUNT(*) AS c FROM nation"
         " GROUP BY n_regionkey)"

@@ -53,7 +53,8 @@ def _ci_slice(rows):
     """The corpus grew 640 -> 2,791 (r7) -> 3,348 (r9) scripts at ~2.8 s
     each end-to-end; the full set is ~2.6 h and even the r9 40% slice
     (~1,340 scripts) timed out the driver's verify window
-    (VERIFY_r09.tests_ok=false at ~37% progress with zero failures —
+    (tests_ok=false at ~37% progress with zero failures in
+    `git show ebbee1c:VERIFY_r09.json` —
     VERDICT r9 #2). Default: a DETERMINISTIC stratified sample
     (crc32(name) — stable across runs/machines, no ordering bias) of
     ~12% ≈ 400 scripts (~20 min), sized so `python -m pytest tests/`

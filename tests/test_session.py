@@ -296,3 +296,27 @@ def test_real_conf_dir_is_kept_without_an_archive(tmp_path):
     assert _archive_args(probe) == []
     assert probe["classpath"].split(os.pathsep)[0].rstrip("/") == str(conf)
     assert not os.path.exists(scratch / "cds")
+
+
+def test_process_scratch_removed_at_exit(tmp_path):
+    """A process that imports the pipeline and streaming modules, writes
+    to one of their scratch directories and exits leaves neither
+    ``pipeline_<pid>`` nor ``stream_<pid>`` in the engine scratch."""
+    import subprocess
+    import sys
+
+    code = (
+        "import os\n"
+        "from hive_spark.operators import pipeline\n"
+        "import hive_spark.streaming\n"
+        "os.makedirs(pipeline._SCRATCH, exist_ok=True)\n"
+        "open(os.path.join(pipeline._SCRATCH, 'part'), 'w').close()\n"
+        "print(os.getpid())\n"
+    )
+    env = {**os.environ, "HIVE_SPARK_SCRATCH": str(tmp_path), "PYTHONPATH": _REPO}
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, timeout=300, env=env
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.strip().isdigit()
+    assert os.listdir(tmp_path) == []

@@ -7,9 +7,11 @@ tpcds2.py (channel set ops, growth self-joins, inventory, windowed
 deviation — the families needing the extended star).
 """
 
+import os
+
 import pytest
 
-from hive_spark.operators import tpcds, tpcds2, tpcds3, tpcds4, tpcds5
+from hive_spark.operators import tpcds, tpcds2, tpcds3, tpcds4, tpcds5, views
 from tests.oracle_check import compare
 
 _ALL = {**tpcds.REGISTRY, **tpcds2.REGISTRY, **tpcds3.REGISTRY,
@@ -25,6 +27,31 @@ def registry():
 def test_oracle_match(spark, sf_dir, registry, name):
     spec = registry[name]
     compare(spec.fn(spark, sf_dir), spec.oracle, sf_dir)
+
+
+def test_q4_spool_is_per_query(spark, sf_dir, registry):
+    """q4's year_total spool belongs to one call: two calls run the same
+    jobs and leave Spark's CacheManager empty. (A plan-keyed persist()
+    let the second call read the first call's cache: 16 jobs, then 6.)"""
+    tiny = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
+    if not os.path.isdir(tiny):
+        pytest.skip(f"no testdata at {tiny}")
+    fn = registry["tpcds_q4_three_channel_growth"].fn
+    jsc = spark.sparkContext._jsc.sc()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    tpcds._register_star(spark, tiny)  # a cold star build is not q4's
+    spark.catalog.clearCache()  # entries other tests' statements left
+    jobs, rows = [], []
+    try:
+        for _ in range(2):
+            j0 = int(jsc.dagScheduler().nextJobId())
+            rows.append(sorted(map(tuple, fn(spark, tiny).collect())))
+            jobs.append(int(jsc.dagScheduler().nextJobId()) - j0)
+            assert cache.isEmpty()
+    finally:
+        views(spark, sf_dir)
+    assert jobs[0] == jobs[1], jobs
+    assert rows[0] == rows[1]
 
 
 def _executed_plan(df) -> str:
