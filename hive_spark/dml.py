@@ -47,7 +47,7 @@ import shutil
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hive_spark.operators import spool
+from hive_spark.operators import spool, unspool
 from hive_spark.session import read_parquet
 
 
@@ -228,8 +228,11 @@ def multi_insert(df: DataFrame, sinks: list[tuple[Column, str]]) -> None:
     one scan fanned out to N filtered sinks. Spark has no single-statement
     equivalent; we spool the scan once and run N writes against it."""
     df = spool(df)
-    for condition, path in sinks:
-        df.filter(condition).write.mode("overwrite").parquet(path)
+    try:
+        for condition, path in sinks:
+            df.filter(condition).write.mode("overwrite").parquet(path)
+    finally:
+        unspool(df)
 
 
 def _read_target(spark: SparkSession, path: str, fmt: str) -> DataFrame:

@@ -10,7 +10,7 @@ in the same order Hive applies them —
     sql text -> spark.sql (parse/analyze)
              -> MV containment rewrite  (AggregateMV.try_rewrite)
              -> results cache           (plan-fingerprint lookup)
-             -> execute
+             -> CTE spool, execute      (cte_spool.spool_ctes)
 
 Multi-statement scripts route through `hqlscript.run_script`; DDL and
 DML statements execute directly (caching only reads is Hive's rule too:
@@ -62,34 +62,42 @@ class Engine:
         return df, False
 
     # -- statements --------------------------------------------------------
-    def _plan(self, text: str) -> DataFrame:
-        """The statement as Spark plans it after the HiveQL rewrites and
-        the CTE spool (Hive's default threshold of 3 references)."""
+    def _plan(self, text: str) -> tuple[str, DataFrame]:
+        """The statement after the HiveQL rewrites, and its plan with every
+        CTE inline: the MV registry and the results cache match on it (a
+        spooled CTE's checkpoint scan would hide the CTE's body)."""
         text = rewrite_statement(self.spark, text)
-        return self.spark.sql(spool_ctes(self.spark, text))
+        return text, self.spark.sql(text)
 
     def sql(self, text: str, use_cache: bool = False) -> DataFrame:
         """One statement. MV rewrite always consults the registry;
         `use_cache=True` additionally serves/stores by plan fingerprint
-        (reads only — statements without a result shape skip both)."""
+        (reads only — statements without a result shape skip both). The
+        CTE spool (3 references) runs only when base tables answer it."""
         from hive_spark import authz
 
         authz.check_statement(self.spark, text)
-        df = self._plan(text)
-        if not df.columns:  # DDL/DML — execute as-is, never cache
+        text, df = self._plan(text)
+        if not df.columns:  # DDL/DML — spark.sql ran it; never cache
             return df
         df, mv_hit = self._rewrite(df)
         self.stats["mv_hits"] += mv_hit
-        if use_cache:
-            # keyed on the POST-rewrite plan (Hive caches what it will
-            # actually execute, after its own compile-time rewrites)
-            df, cache_hit = self.cache.get_or_compute(df)
-            self.stats["cache_hits"] += cache_hit
+
+        def run() -> DataFrame:
+            spooled = text if mv_hit else spool_ctes(self.spark, text)
+            return df if spooled == text else self.spark.sql(spooled)
+
+        if not use_cache:
+            return run()
+        # keyed on the POST-rewrite plan (Hive caches what it will
+        # actually execute, after its own compile-time rewrites)
+        df, cache_hit = self.cache.get_or_compute(df, run)
+        self.stats["cache_hits"] += cache_hit
         return df
 
     def explain_rewrite(self, text: str) -> bool:
         """True when the MV registry would serve this statement."""
-        df = self._plan(text)
+        df = self._plan(text)[1]
         return df.columns != [] and self._rewrite(df)[1]
 
     def script(self, text: str) -> ScriptResult:

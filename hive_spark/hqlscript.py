@@ -86,6 +86,7 @@ from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession
 
 from hive_spark import authz
+from hive_spark.plans.cte_spool import reorder_ctes, spool_ctes
 from hive_spark.session import read_parquet, state
 from hive_spark.sqltext import (
     close_bracket,
@@ -3468,8 +3469,6 @@ def _reorder_ctes(spark, stmt: str) -> str:
     m = re.match(r"(?is)(\s*(?:EXPLAIN\s+(?:\w+\s+)?)?)(WITH\b.*)", stmt)
     if not m:
         return stmt
-    from hive_spark.plans.cte_spool import reorder_ctes
-
     return m.group(1) + reorder_ctes(m.group(2))
 
 
@@ -7110,10 +7109,7 @@ def _exec_sql(spark, res, m, stmt):
         ))
     except ValueError:
         cte_thresh = 3
-    if cte_thresh > 0:
-        from hive_spark.plans.cte_spool import spool_ctes
-
-        rewritten = spool_ctes(spark, rewritten, cte_thresh)
+    rewritten = spool_ctes(spark, rewritten, cte_thresh)
     # scope dynamic partition overwrite to the statement
     dm = _DYNAMIC_OVERWRITE.match(rewritten)
     prev_mode = None

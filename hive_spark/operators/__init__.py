@@ -85,6 +85,12 @@ def spool(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=False)
 
 
+def unspool(df: DataFrame) -> None:
+    """Free a ``spool``'s stored rows once nothing reads them again, not
+    at the later JVM GC that lets Spark's ContextCleaner drop them."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def spool_sort(df: DataFrame, *cols) -> DataFrame:
     """Terminal bare ORDER BY (no LIMIT) over an expensive child pays the
     child TWICE: the range exchange's bound-sampling job executes the

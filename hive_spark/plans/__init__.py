@@ -89,13 +89,15 @@ class ResultsCache:
             return read_parquet(self.spark, p)
         return None
 
-    def get_or_compute(self, df: DataFrame) -> tuple[DataFrame, bool]:
-        """Returns (result, was_hit)."""
+    def get_or_compute(self, df: DataFrame, compute=None) -> tuple[DataFrame, bool]:
+        """Returns (result, was_hit). On a miss it stores `compute()`
+        (default `df`), a plan of the same rows; `Engine.sql` passes the
+        CTE-spooled plan so the spool runs only on a miss."""
         hit = self.lookup(df)
         if hit is not None:
             return hit, True
         p = self._path(plan_fingerprint(df))
-        df.write.mode("overwrite").parquet(p)
+        (compute() if compute else df).write.mode("overwrite").parquet(p)
         return read_parquet(self.spark, p), False
 
     def clear(self) -> None:

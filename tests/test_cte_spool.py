@@ -97,6 +97,36 @@ def test_spool_leaves_no_cache_entry(spark, engine):
     assert _cache_empty(spark)
 
 
+def test_explain_rewrite_runs_no_job(spark, engine):
+    """Asking whether an MV would serve a statement plans it with its
+    CTEs inline: no spool, so none of the CTE's upstream jobs run."""
+    jsc = spark.sparkContext._jsc.sc()
+    j0 = int(jsc.dagScheduler().nextJobId())
+    assert engine.explain_rewrite(_FOUR_REFS) is False
+    assert int(jsc.dagScheduler().nextJobId()) == j0
+
+
+def test_results_cache_keys_on_cte_bodies(spark, sf_dir, tmp_path):
+    """Two spooled statements that differ only inside the CTE body get
+    different results-cache entries: the key is the plan with the CTE
+    inline, not the spool's bare checkpoint scan."""
+    views(spark, sf_dir)
+    eng = Engine(spark, cache_root=str(tmp_path / "qc"))
+    texts = [
+        _FOUR_REFS.replace("FROM lineitem", f"FROM lineitem WHERE {w}")
+        for w in ("l_quantity < 25", "l_quantity >= 25")
+    ]
+    got = [sorted(map(tuple, eng.sql(t, use_cache=True).collect()))
+           for t in texts]
+    assert eng.stats["cache_hits"] == 0
+    for text, rows in zip(texts, got):
+        assert rows == sorted(map(tuple, spark.sql(text).collect()))
+    assert got[0] != got[1]
+    again = eng.sql(texts[1], use_cache=True).collect()
+    assert eng.stats["cache_hits"] == 1
+    assert sorted(map(tuple, again)) == got[1]
+
+
 def test_qualified_column_named_like_cte_is_not_a_reference(spark):
     # year_total is both the CTE and its column (q4, q74): `a.year_total`
     # counts as no reference and is not rewritten

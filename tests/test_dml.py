@@ -80,3 +80,17 @@ def test_dynamic_overwrite_leaves_session_static(spark, tmp_path):
 
     dml.overwrite_table(spark.createDataFrame([(4, "d")], "k int, v string"), path, ["k"])
     assert _partitions(path) == ["k=4"]
+
+
+def test_multi_insert_frees_its_spool(spark, tmp_path):
+    """The spooled scan's blocks are released when the writes finish,
+    not left for a later JVM GC."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    df = spark.range(100).withColumn("odd", F.col("id") % 2 == 1)
+    sinks = [(F.col("odd"), str(tmp_path / "odd")),
+             (~F.col("odd"), str(tmp_path / "even"))]
+    dml.multi_insert(df, sinks)
+    assert jsc.getPersistentRDDs().size() == before
+    assert spark.read.parquet(str(tmp_path / "odd")).count() == 50
+    assert spark.read.parquet(str(tmp_path / "even")).count() == 50
